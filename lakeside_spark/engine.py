@@ -61,6 +61,16 @@ def _agg_column(
     raise ValueError(f"Invalid aggregation {aggregation}")
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` computed now and held on the driver: one Arrow collect, then
+    a frame over the collected table — a LocalRelation below Arrow's
+    local-relation threshold, so consumers re-read the rows without
+    recomputing them and a collect runs no job. For results, not inputs:
+    the rows live in driver memory. The explicit schema keeps column
+    types and nullability, also for zero rows."""
+    return df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
+
+
 class QueryEngine:
     """Runs BaseExprs / tag queries over a canonical telemetry DataFrame."""
 
@@ -368,14 +378,14 @@ class QueryEngine:
             aggs.append(
                 F.count(F.when(conds[label], F.lit(1))).alias(f"__n{i}")
             )
-        # materialized once (eager localCheckpoint): every label (and each
-        # formula referencing it) consumes this frame, and exchange reuse
-        # does not reliably dedupe the subtrees across union branches —
-        # without it N consumers mean N scans of the fact table. The frame
-        # is post-aggregation (steps × names rows, KBs); checkpoint blocks
-        # are context-cleaned once the DataFrames become unreachable
-        # (persist leaked a CacheManager entry per call, r13).
-        agged = df.groupBy(*keys).agg(*aggs).localCheckpoint(eager=True)
+        # materialized once on the driver (_materialized): every label (and
+        # each formula referencing it) consumes this frame, and exchange
+        # reuse does not reliably dedupe the subtrees across union branches
+        # — without it N consumers mean N scans of the fact table. The
+        # frame is post-aggregation (steps × names rows, KBs), so the
+        # per-label filter/select folds into the local relation and a
+        # label's collect runs no job.
+        agged = _materialized(df.groupBy(*keys).agg(*aggs))
         return {
             label: agged.filter(F.col(f"__n{i}") > 0).select(
                 *sel_keys, F.col(f"__v{i}").alias(S.VALUE)
@@ -413,7 +423,13 @@ class QueryEngine:
         combines the labeled results). Returns {label_or_formula: DataFrame};
         formula inputs are the per-step global aggregation of each labeled
         series (reference: globalAgg over per-tag datapoint streams before
-        formula evaluation)."""
+        formula evaluation).
+
+        Each label's result is computed here, once, and held on the driver
+        (:func:`_materialized`), the way the reference's query-api node
+        holds the per-label streams it serves: collecting a label frame
+        runs no Spark job, and formulae evaluate over the held results
+        instead of re-scanning the lake once per label they reference."""
         from lakeside_spark.ast.formula import (
             eval_formula,
             formula_labels,
@@ -447,7 +463,7 @@ class QueryEngine:
                 solo[batch[0][0]] = batch[0][1]
         out.update(
             {
-                label: self.run(e, scoped, step_ms=step_ms)
+                label: _materialized(self.run(e, scoped, step_ms=step_ms))
                 for label, e in solo.items()
             }
         )

@@ -77,7 +77,10 @@ def ingest_files(
     tag_columns: tuple[str, ...] = (),
 ) -> int:
     """End-to-end ingest: read → normalize → seal into the partitioned
-    segment lake. Returns the ingested row count (one extra action — the
+    segment lake. Ingesting into an existing lake adds the batch's hours
+    and keeps every other hour; an hour already in the lake is replaced
+    by the batch's rows for it (write_segments overwrites dynamically,
+    per partition). Returns the ingested row count (one extra action — the
     write itself is the only full pass at scale when the count is not
     needed; callers that don't want it use the readers + write_segments
     directly)."""

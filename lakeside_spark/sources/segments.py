@@ -27,8 +27,11 @@ def write_segments(
     """Seal a telemetry frame into the partitioned lake layout.
 
     Partition columns derive from the timestamp: dateint=YYYYMMDD, hour=HH
-    (reference dateint/hour path parity). Writers at scale should aim for
-    ~100-500 MB files per partition (repartition by the partition key first).
+    (reference dateint/hour path parity). Writing into an existing lake
+    replaces only the (dataset, dateint, hour) partitions the frame has
+    rows for: an hour already in the lake is replaced, every other hour
+    stays. Writers at scale should aim for ~100-500 MB files per partition
+    (repartition by the partition key first).
     """
     # timezone-INDEPENDENT partition derivation: pure integer math on epoch
     # millis plus DateType arithmetic (dates carry no timezone), so written
@@ -51,7 +54,13 @@ def write_segments(
         # free pruning on every query against the lake
         .sortWithinPartitions(S.TIMESTAMP, S.NAME)
     )
-    writer = df.write.mode("overwrite").partitionBy("dataset", "dateint", "hour")
+    # dynamic per write, whatever the session sets: under Spark's default
+    # STATIC mode an overwrite first deletes the whole lake
+    writer = (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("dataset", "dateint", "hour")
+    )
     for col in bloom_columns:
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
     writer.parquet(path)
@@ -72,26 +81,30 @@ def compact_segments(
     row-count-verified against the source, and only then swapped into place
     with two renames — a failure at any earlier point leaves the original
     lake untouched (on an object store the same two-phase shape applies
-    with the store's atomic-rename/committer primitive).
+    with the store's atomic-rename/committer primitive). Source schema,
+    row count and bytes, and the verification count, come from parquet
+    footers (``sources.footers.lake_footers``): the same row counts a Spark
+    ``count()`` of a bare scan reads, without its job.
     """
     import os
     import shutil
 
+    from lakeside_spark.sources.footers import lake_footers
+
+    source = lake_footers(spark, path)
+    if source.rows is None:
+        raise ValueError(f"compact_segments rewrites a local lake in place, not {path!r}")
     base = path.rstrip("/")
     tmp, old = base + ".compact.tmp", base + ".compact.old"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        total_rows = df.count() or 1
-        total_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        df = spark.read.schema(source.schema).parquet(path)
+        total_rows = source.rows or 1
         # estimate rows per target file from overall average row width;
         # skewed hours get ceil(rows/rows_per_file) files, never one giant
-        rows_per_file = max(1, int(target_file_bytes / max(total_bytes / total_rows, 1)))
+        rows_per_file = max(
+            1, int(target_file_bytes / max(source.data_bytes / total_rows, 1))
+        )
         sort_cols = [c for c in (S.TIMESTAMP, S.NAME) if c in df.columns]
         shaped = df.repartition("dataset", "dateint", "hour")
         if sort_cols:
@@ -102,11 +115,11 @@ def compact_segments(
             .partitionBy("dataset", "dateint", "hour")
             .parquet(tmp)
         )
-        compacted_rows = spark.read.option("mergeSchema", "true").parquet(tmp).count()
-        if compacted_rows != total_rows:
+        compacted_rows = lake_footers(spark, tmp).rows
+        if compacted_rows != source.rows:
             raise RuntimeError(
                 f"compact_segments: row count changed during compaction "
-                f"({total_rows} -> {compacted_rows}); source left untouched"
+                f"({source.rows} -> {compacted_rows}); source left untouched"
             )
         os.rename(base, old)
         os.rename(tmp, base)
@@ -126,8 +139,15 @@ def read_segments(
     """Read with partition pruning: the dataset/dateint/hour predicates are
     partition filters (check .explain() → PartitionFilters), so out-of-range
     segments cost nothing. The residual precise timestamp bounds remain as
-    pushed row-group filters."""
-    df = spark.read.option("mergeSchema", "true").parquet(path)
+    pushed row-group filters.
+
+    The schema is the union over the whole lake, read from parquet footers
+    on the driver (``sources.footers.lake_footers``) and handed to Spark,
+    so planning runs no schema-inference job; a column some hours lack
+    reads as null there."""
+    from lakeside_spark.sources.footers import lake_footers
+
+    df = spark.read.schema(lake_footers(spark, path).schema).parquet(path)
     if dataset is not None:
         df = df.filter(F.col("dataset") == dataset)
     if start_ts is not None:

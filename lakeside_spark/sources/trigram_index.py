@@ -254,7 +254,10 @@ def build_trigram_index(
     set (exists + full-value + trigram), stored as xxhash64 longs in the
     ``_trigram_index`` sidecar. Incremental production ingest would append
     one small index file per sealed segment instead of rebuilding."""
-    lake = spark.read.option("mergeSchema", "true").parquet(path)
+    from lakeside_spark.sources.footers import lake_footers
+
+    schema = lake_footers(spark, path).schema
+    lake = spark.read.schema(schema).parquet(path)
     # input_file_name() yields a file: URI; store the path relative to the
     # lake root so the lake (and its sidecar) can move together
     base = os.path.abspath(path).rstrip("/")
@@ -310,18 +313,18 @@ def build_trigram_index(
         .parquet(os.path.join(path, INDEX_DIR))
     )
     # Persist the lake's merged schema beside the index: the pruned read
-    # can then hand Spark an explicit schema instead of mergeSchema, which
-    # re-reads EVERY surviving segment footer at plan-build time (~2ms per
-    # file — fatal at a million segments). The index build is the natural
-    # place: it already merge-read the lake, and a segment added without
-    # reindexing is stale for pruning anyway, so schema staleness has the
-    # same remedy (rebuild).
+    # can then hand Spark an explicit schema without re-reading EVERY
+    # segment footer at plan-build time (~2ms per file through Spark's
+    # schema merge — fatal at a million segments). The index build is the
+    # natural place: it already read the lake's footers, and a segment
+    # added without reindexing is stale for pruning anyway, so schema
+    # staleness has the same remedy (rebuild).
     # atomic (tmp+rename): a reader racing a rebuild must see either the
     # old complete schema or the new one, never a truncated file
     schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
     tmp_path = schema_path + ".tmp"
     with open(tmp_path, "w") as fh:
-        fh.write(lake.schema.json())
+        fh.write(schema.json())
     os.replace(tmp_path, schema_path)
 
 
@@ -451,18 +454,20 @@ def read_segments_indexed(
     )
 
     # explicit schema (persisted at index-build time) skips the per-file
-    # footer reads mergeSchema pays at plan time; absent (pre-existing
-    # lake, index built by an older version) fall back to merging
+    # footer reads at plan time; absent (pre-existing lake, index built by
+    # an older version) read the lake's footers like read_segments does
     def reader():
-        r = spark.read
         schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
         try:
             with open(schema_path) as fh:
-                return r.schema(T.StructType.fromJson(json.load(fh)))
+                schema = T.StructType.fromJson(json.load(fh))
         except (OSError, ValueError, KeyError):
             # missing, corrupt, or wrong-shape sidecar — degrade to the
-            # footer-merging read rather than failing the query
-            return r.option("mergeSchema", "true")
+            # footer-merged schema rather than failing the query
+            from lakeside_spark.sources.footers import lake_footers
+
+            schema = lake_footers(spark, path).schema
+        return spark.read.schema(schema)
 
     if files is None:
         # nothing pruned: one directory listing, no driver-side file

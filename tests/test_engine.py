@@ -402,3 +402,71 @@ def test_run_graph_fused_matches_unfused_exactly(spark):
         tele,
     )["a"])
     assert {r[0] for r in got_a} == {0, 20_000}
+
+
+def _graph_request():
+    """Two labels (p95 + ces, neither fusable) and a formula over both."""
+    exprs = {
+        "a": BaseExpr(
+            filter=Filter(k=S.NAME, v=("error",), op=S.EQ),
+            chart=ChartOptions(aggregation="p95", group_bys=("user_id",)),
+        ),
+        "b": BaseExpr(
+            filter=Filter(k=S.NAME, op=S.EXISTS),
+            chart=ChartOptions(aggregation="ces", group_bys=("user_id",)),
+        ),
+    }
+    return exprs, ["a / b", "a + b"]
+
+
+def test_run_graph_label_frames_collect_without_jobs(spark, sf_dir):
+    """run_graph computes each label once: collecting every label frame
+    afterwards starts no Spark job (status-store count), and every output
+    equals per-label run() and eval_formula over lazy frames."""
+    from lakeside_spark.ast.formula import eval_formula, parse_formula
+
+    tele = load_telemetry(spark, sf_dir)
+    exprs, formulae = _graph_request()
+    eng = QueryEngine(spark, step_ms=3_600_000)
+    out = eng.run_graph(exprs, formulae, tele)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_graph_labels", "collect label frames")
+    try:
+        labels = {label: out[label].collect() for label in exprs}
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("run_graph_labels")) == []
+    lazy = {label: eng.run(e, tele) for label, e in exprs.items()}
+    for label in exprs:
+        assert labels[label], label
+        assert {tuple(r) for r in labels[label]} == rows_set(lazy[label]), label
+        assert out[label].schema == lazy[label].schema, label
+    series = {
+        label: s.groupBy(S.STEP_TS).agg(F.sum(S.VALUE).alias(S.VALUE))
+        for label, s in lazy.items()
+    }
+    for f in formulae:
+        assert rows_set(out[f]) == rows_set(eval_formula(parse_formula(f), series)), f
+
+
+def test_run_graph_empty_window_keeps_columns(spark, sf_dir):
+    """A window with no rows yields empty frames with the lazy plan's
+    columns and types (the driver-held result round-trips zero rows)."""
+    tele = load_telemetry(spark, sf_dir)
+    exprs, formulae = _graph_request()
+    exprs["c"] = BaseExpr(
+        filter=Filter(k=S.NAME, v=("error",), op=S.EQ),
+        chart=ChartOptions(aggregation="sum"),
+    )
+    exprs["d"] = BaseExpr(
+        filter=Filter(k=S.NAME, v=("ok",), op=S.EQ),
+        chart=ChartOptions(aggregation="count"),
+    )
+    eng = QueryEngine(spark, step_ms=3_600_000)
+    out = eng.run_graph(exprs, formulae, tele, start_ts=0, end_ts=1)
+    for label, e in exprs.items():
+        lazy = eng.run(e, tele, start_ts=0, end_ts=1)
+        assert out[label].collect() == [], label
+        assert out[label].schema == lazy.schema, label
+    for f in formulae:
+        assert out[f].collect() == [] and S.VALUE in out[f].columns, f
