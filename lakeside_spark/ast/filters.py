@@ -17,7 +17,7 @@ resulting predicates into the parquet scan (no Python in the row path).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
@@ -88,7 +88,3 @@ def filter_to_column(clause: QueryClause, existing: set[str] | None = None) -> C
     if f.op == S.LE:
         return c <= v
     raise ValueError(f"Invalid operator {f.op}")
-
-
-def existing_columns(df: DataFrame) -> set[str]:
-    return set(df.columns)

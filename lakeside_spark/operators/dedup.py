@@ -82,16 +82,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def _shingled(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    # NOTE: no filter below this projection — a predicate referencing the
-    # shingle expression gets pushed beneath the repartition exchange and
-    # forces the (interpreted) HOF to evaluate in the single scan task.
-    # The shingle array is never empty (sequence(0, greatest(·,0)) ≥ 1 elem).
-    return _parallelize(docs).select(
-        F.col(id_col).alias("doc_id"), shingles(text_col, n).alias("sh")
-    )
-
-
 def _shingled_rows(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Exploded distinct word-n-gram shingles (doc_id, shingle).
 

@@ -49,21 +49,6 @@ def _normalize_py(text: str) -> str:
     return _WS.sub(" ", (text or "").strip(" \t\n\x0b\f\r\x00")).lower()
 
 
-def _word_ngrams(w: Column, n: int) -> Column:
-    """Word n-grams as array<string>; empty array for docs shorter than n.
-    (Column-expression form, used by the decontamination operators where
-    the gram strings themselves flow into a join.)"""
-    if n == 1:
-        return w
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _gram_masses(words: list[str], n: int) -> tuple[int, int, int]:
     """(top_chars, dup_chars, tot_chars) over word n-grams: char mass of
     the most character-covering gram, of grams occurring >1 time, and of

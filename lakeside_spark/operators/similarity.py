@@ -455,24 +455,6 @@ def _hyperplane_matrix(num_planes: int, dim: int, salt: int = 0) -> np.ndarray:
     return comps
 
 
-def lsh_bucket_col(vec: F.Column, planes: np.ndarray) -> F.Column:
-    """Bit-string bucket id: sign pattern of <v, plane_p> (column expr,
-    evaluated JVM-side; planes folded in as literals)."""
-    bits = []
-    for p in range(planes.shape[0]):
-        dotp = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in planes[p]]),
-                lambda x, c: x * c,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bits.append((dotp > 0).cast("int").cast("string"))
-    return F.concat(*bits)
-
-
 def _train_mat_sample(
     corpus: DataFrame,
     id_col: str,

@@ -148,13 +148,6 @@ def fingerprints(
     )
 
 
-def shingle_profile(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc shingle counts — building block reused by dedup tests."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.size(shingles(text_col, n)).alias("n_shingles")
-    )
-
-
 def ngram_novelty(
     docs: DataFrame,
     n: int = 3,

@@ -5,7 +5,7 @@ under-parallel repartition gate (operators/similarity.
 _effective_input_parallelism caps achievable scan parallelism by row-
 group count) and BM25's strategy gate (operators/bm25._metadata_count
 answers "how many rows" for a bare file scan with zero jobs). The
-segment lake reads its merged schema, row count and data bytes the same
+segment lake reads its merged schema, row counts and data bytes the same
 way (:func:`lake_footers`). All encode the same policy — LOCAL
 plain-parquet files only, anything else falls back to the caller's
 Spark-side path — so the policy lives here once.
@@ -43,16 +43,22 @@ def local_parquet_meta(uri: str):
 class LakeFooters:
     """A parquet lake's metadata. ``schema`` is the union of every data
     file's columns (partition columns come from the directory names, as
-    Spark infers them); ``rows`` and ``data_bytes`` are None when the lake
-    is not local, where only a Spark job could answer them."""
+    Spark infers them); ``file_rows`` maps each data file's path to its
+    footer row count and ``rows`` is their sum. ``rows``, ``data_bytes``
+    and ``file_rows`` are None when the lake is not local, where only a
+    Spark job could answer them."""
 
     schema: T.StructType
-    rows: int | None
     data_bytes: int | None
+    file_rows: dict[str, int] | None
+
+    @property
+    def rows(self) -> int | None:
+        return None if self.file_rows is None else sum(self.file_rows.values())
 
 
 def lake_footers(spark, path: str) -> LakeFooters:
-    """Merged schema, row count and data bytes of the parquet lake at
+    """Merged schema, row counts and data bytes of the parquet lake at
     ``path``, read from the data files' footers on the driver — no Spark
     job. Data files are those a Spark scan of ``path`` reads: names
     starting with ``_`` or ``.`` are skipped (``_trigram_index/``,
@@ -74,7 +80,9 @@ def lake_footers(spark, path: str) -> LakeFooters:
     if schema is None:
         schema = _spark_merged_schema(spark, path)
     return LakeFooters(
-        schema, sum(m.num_rows for m in metas), sum(os.path.getsize(f) for f in files)
+        schema,
+        sum(os.path.getsize(f) for f in files),
+        {f: m.num_rows for f, m in zip(files, metas)},
     )
 
 

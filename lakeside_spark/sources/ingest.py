@@ -16,7 +16,7 @@ pruning into the source.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -77,16 +77,19 @@ def ingest_files(
     tag_columns: tuple[str, ...] = (),
 ) -> int:
     """End-to-end ingest: read → normalize → seal into the partitioned
-    segment lake. Ingesting into an existing lake adds the batch's hours
-    and keeps every other hour; an hour already in the lake is replaced
-    by the batch's rows for it (write_segments overwrites dynamically,
-    per partition). Returns the ingested row count (one extra action — the
-    write itself is the only full pass at scale when the count is not
-    needed; callers that don't want it use the readers + write_segments
-    directly)."""
+    segment lake, in one pass over the source. Ingesting into an existing
+    lake adds the batch's hours and keeps every other hour; an hour already
+    in the lake is replaced by the batch's rows for it (write_segments
+    overwrites dynamically, per partition). Returns the number of rows
+    written — after malformed lines and rows without timestamp or name
+    drop — counted by an observed metric of the write itself, so the
+    source is read once."""
     from lakeside_spark.sources.segments import write_segments
 
     reader = {"jsonl": read_jsonl_telemetry, "csv": read_csv_telemetry}[fmt]
-    telemetry = reader(spark, src_path, tag_columns)
+    written = Observation()
+    telemetry = reader(spark, src_path, tag_columns).observe(
+        written, F.count(F.lit(1)).alias("rows")
+    )
     write_segments(telemetry, lake_path, dataset=dataset)
-    return telemetry.count()
+    return written.get["rows"]

@@ -71,39 +71,64 @@ def compact_segments(
     path: str,
     target_file_bytes: int = 256 * 1024 * 1024,
 ) -> None:
-    """Rewrite each (dataset, dateint, hour) partition with right-sized
-    files. Streaming ingest seals many small segments (the reference seals
-    every ~20 min per collector); at lake scale the file-count, not the
-    byte-count, dominates scan planning time — compaction batches them to
-    ~target_file_bytes.
+    """Rewrite the (dataset, dateint, hour) partitions whose files are not
+    right-sized. Streaming ingest seals many small segments (the reference
+    seals every ~20 min per collector); at lake scale the file-count, not
+    the byte-count, dominates scan planning time — compaction batches them
+    to ~target_file_bytes.
 
-    Crash-safe: the compacted lake is written to a sibling temp directory,
-    row-count-verified against the source, and only then swapped into place
-    with two renames — a failure at any earlier point leaves the original
-    lake untouched (on an object store the same two-phase shape applies
-    with the store's atomic-rename/committer primitive). Source schema,
-    row count and bytes, and the verification count, come from parquet
-    footers (``sources.footers.lake_footers``): the same row counts a Spark
-    ``count()`` of a bare scan reads, without its job.
+    Partition-scoped: a partition is rewritten only when its file count
+    differs from the ``max(1, ceil(rows / rows_per_file))`` files a rewrite
+    would give it (``rows_per_file`` from the lake's average row width), so
+    settled hours are never re-merged and a lake with nothing to rewrite
+    costs one footer read and no Spark job. Schema, row counts and bytes
+    come from parquet footers (``sources.footers.lake_footers``).
+
+    Crash-safe per partition: rewritten partitions are written to a
+    sibling temp directory and each is verified by footer row count
+    against its source partition; only then is each swapped into place
+    with two renames (``lake/p`` → ``<lake>.compact.old/p``, temp →
+    ``lake/p``). A failure before the swap leaves the lake untouched; a
+    failure during it moves every partition already swapped back before
+    re-raising. A rewrite drops the lake's trigram index, whose entries
+    name the replaced files (rebuild it after compacting).
     """
+    import math
     import os
     import shutil
 
     from lakeside_spark.sources.footers import lake_footers
+    from lakeside_spark.sources.trigram_index import INDEX_DIR
 
     source = lake_footers(spark, path)
     if source.rows is None:
         raise ValueError(f"compact_segments rewrites a local lake in place, not {path!r}")
     base = path.rstrip("/")
     tmp, old = base + ".compact.tmp", base + ".compact.old"
+    if os.path.exists(old):
+        raise RuntimeError(
+            f"compact_segments: {old} is left from an interrupted swap and may "
+            f"hold the only copy of some partitions; move them back into {base}"
+        )
+    # rows per target file from the overall average row width; skewed
+    # hours get ceil(rows/rows_per_file) files, never one giant
+    rows_per_file = max(
+        1, int(target_file_bytes / max(source.data_bytes / (source.rows or 1), 1))
+    )
+    dirty = {
+        part: rows
+        for part, (files, rows) in _partitions(base, source.file_rows).items()
+        if files != max(1, math.ceil(rows / rows_per_file))
+    }
+    if not dirty:
+        return
     shutil.rmtree(tmp, ignore_errors=True)
+    moved: list[str] = []
     try:
-        df = spark.read.schema(source.schema).parquet(path)
-        total_rows = source.rows or 1
-        # estimate rows per target file from overall average row width;
-        # skewed hours get ceil(rows/rows_per_file) files, never one giant
-        rows_per_file = max(
-            1, int(target_file_bytes / max(source.data_bytes / total_rows, 1))
+        df = (
+            spark.read.schema(source.schema)
+            .option("basePath", base)
+            .parquet(*(os.path.join(base, part) for part in dirty))
         )
         sort_cols = [c for c in (S.TIMESTAMP, S.NAME) if c in df.columns]
         shaped = df.repartition("dataset", "dateint", "hour")
@@ -115,18 +140,51 @@ def compact_segments(
             .partitionBy("dataset", "dateint", "hour")
             .parquet(tmp)
         )
-        compacted_rows = lake_footers(spark, tmp).rows
-        if compacted_rows != source.rows:
+        written = {
+            part: rows
+            for part, (_, rows) in _partitions(tmp, lake_footers(spark, tmp).file_rows).items()
+        }
+        changed = sorted(
+            p for p in dirty.keys() | written.keys() if dirty.get(p) != written.get(p)
+        )
+        if changed:
             raise RuntimeError(
-                f"compact_segments: row count changed during compaction "
-                f"({source.rows} -> {compacted_rows}); source left untouched"
+                f"compact_segments: row count changed during compaction in "
+                f"{len(changed)} partition(s), first {changed[0]} "
+                f"({dirty.get(changed[0], 0)} -> {written.get(changed[0], 0)}); "
+                f"source left untouched"
             )
-        os.rename(base, old)
-        os.rename(tmp, base)
-        shutil.rmtree(old)
+        shutil.rmtree(os.path.join(base, INDEX_DIR), ignore_errors=True)
+        for part in dirty:
+            os.makedirs(os.path.dirname(os.path.join(old, part)), exist_ok=True)
+            os.rename(os.path.join(base, part), os.path.join(old, part))
+            moved.append(part)
+            os.rename(os.path.join(tmp, part), os.path.join(base, part))
     except BaseException:
+        for part in reversed(moved):
+            if os.path.exists(os.path.join(base, part)):
+                os.rename(os.path.join(base, part), os.path.join(tmp, part))
+            os.rename(os.path.join(old, part), os.path.join(base, part))
+        shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
         raise
+    shutil.rmtree(old)
+    shutil.rmtree(tmp)
+
+
+def _partitions(root: str, file_rows: dict[str, int]) -> dict[str, tuple[int, int]]:
+    """(file count, row count) per partition directory, keyed by its path
+    relative to the lake ``root``."""
+    import os
+
+    out: dict[str, tuple[int, int]] = {}
+    for f, rows in file_rows.items():
+        part = os.path.dirname(os.path.relpath(f, root))
+        if not part:
+            raise ValueError(f"compact_segments: {f} is not inside a partition directory")
+        files, total = out.get(part, (0, 0))
+        out[part] = (files + 1, total + rows)
+    return out
 
 
 def read_segments(

@@ -97,7 +97,3 @@ def load_table(
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     _PLAN_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in ALL_TABLES}

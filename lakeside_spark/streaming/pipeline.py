@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
 
 from lakeside_spark import schema as S
 
@@ -75,20 +74,6 @@ def streaming_sessions(
             F.unix_millis(F.col("session_window.end")).alias("session_end"),
             "n_events",
         )
-    )
-
-
-def seal_to_parquet(
-    df: DataFrame, path: str, checkpoint: str, trigger_seconds: int = 5
-) -> DataStreamWriter:
-    """Seal the aggregated stream to parquet segments (append mode emits
-    only watermark-finalized windows, like sealed segments)."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_seconds} seconds")
     )
 
 

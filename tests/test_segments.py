@@ -1,5 +1,7 @@
 """Segment lake layout: round-trip + partition pruning verification."""
 
+import glob
+import os
 import shutil
 import tempfile
 
@@ -110,6 +112,8 @@ def test_compaction_failure_leaves_source_intact(spark, sf_dir, tmp_path, monkey
     lake = str(tmp_path / "crashlake")
     tele = load_telemetry(spark, sf_dir).limit(500)
     write_segments(tele, lake, dataset="logs")
+    # one hour with several small files, so compaction has work to do
+    _add_small_file(spark, sorted(glob.glob(f"{lake}/dataset=*/dateint=*/hour=*"))[0])
     before = read_segments(spark, lake, dataset="logs").count()
 
     import os as os_mod
@@ -124,10 +128,10 @@ def test_compaction_failure_leaves_source_intact(spark, sf_dir, tmp_path, monkey
     assert read_segments(spark, lake, dataset="logs").count() == before
 
 
-def test_jsonl_ingest_roundtrip(spark, tmp_path):
+def _malformed_jsonl(tmp_path):
+    """Six good telemetry lines, one malformed line and one line without
+    timestamp or name."""
     import json
-
-    from lakeside_spark.sources.ingest import ingest_files, read_jsonl_telemetry
 
     src = tmp_path / "in.jsonl"
     rows = [
@@ -139,7 +143,13 @@ def test_jsonl_ingest_roundtrip(spark, tmp_path):
     lines.insert(3, "{not json at all")          # malformed line drops
     lines.append(json.dumps({"value": 1.0}))      # missing ts+name drops
     src.write_text("\n".join(lines))
+    return src
 
+
+def test_jsonl_ingest_roundtrip(spark, tmp_path):
+    from lakeside_spark.sources.ingest import ingest_files, read_jsonl_telemetry
+
+    src = _malformed_jsonl(tmp_path)
     tele = read_jsonl_telemetry(spark, str(src), tag_columns=("host",))
     assert tele.count() == 6
     assert tele.columns == ["timestamp_ms", "name", "value", "message", "host"]
@@ -167,6 +177,36 @@ def test_csv_ingest(spark, tmp_path):
     tele = read_csv_telemetry(spark, str(src), tag_columns=("region",))
     got = {(r["name"], r["region"]) for r in tele.collect()}
     assert got == {("error", "us"), ("info", "eu")}
+
+
+def _sql_executions(spark, description: str) -> int:
+    """SQL executions the session's status store holds under a job
+    description, once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        store.executionsList()
+    )
+    return sum(e.description() == description for e in executions)
+
+
+def test_ingest_counts_rows_in_its_write_pass(spark, tmp_path):
+    """ingest_files counts the rows it writes in the write itself: one SQL
+    execution, and the count excludes the malformed and ts/name-less lines."""
+    from lakeside_spark.sources.ingest import ingest_files
+
+    src = _malformed_jsonl(tmp_path)
+    desc = f"ingest one pass {tmp_path}"
+    sc = spark.sparkContext
+    sc.setJobDescription(desc)
+    try:
+        n = ingest_files(spark, str(src), str(tmp_path / "lake"), tag_columns=("host",))
+    finally:
+        sc.setJobDescription(None)
+    assert n == 6
+    assert _sql_executions(spark, desc) == 1
+    assert read_segments(spark, str(tmp_path / "lake")).count() == 6
 
 
 def test_ingest_into_existing_lake_keeps_other_hours(spark, tmp_path):
@@ -320,8 +360,7 @@ def test_footer_schema_falls_back_to_spark_for_unmapped_types(spark, tmp_path):
 
 
 def test_compaction_aborts_when_footer_rows_disagree(spark, evolved_lake, monkeypatch):
-    import glob
-    import os
+    import dataclasses
 
     import lakeside_spark.sources.footers as footers
     from lakeside_spark.sources.segments import compact_segments
@@ -329,6 +368,7 @@ def test_compaction_aborts_when_footer_rows_disagree(spark, evolved_lake, monkey
     def files():
         return sorted(glob.glob(f"{evolved_lake}/**/*.parquet", recursive=True))
 
+    _add_small_file(spark, _hour_dir(evolved_lake, 0))
     before_files = files()
     before = sorted(tuple(r) for r in read_segments(spark, evolved_lake).collect())
     real = footers.lake_footers
@@ -336,7 +376,9 @@ def test_compaction_aborts_when_footer_rows_disagree(spark, evolved_lake, monkey
     def short_tmp(spark_, path):
         meta = real(spark_, path)
         if path.endswith(".compact.tmp"):
-            return footers.LakeFooters(meta.schema, meta.rows - 1, meta.data_bytes)
+            file_rows = dict(meta.file_rows)
+            file_rows[next(iter(file_rows))] -= 1
+            return dataclasses.replace(meta, file_rows=file_rows)
         return meta
 
     monkeypatch.setattr(footers, "lake_footers", short_tmp)
@@ -351,3 +393,150 @@ def test_compaction_aborts_when_footer_rows_disagree(spark, evolved_lake, monkey
     after = read_segments(spark, evolved_lake)
     assert {"host", "event_id"} <= set(after.columns)
     assert after.count() == len(before)
+    assert len(glob.glob(f"{_hour_dir(evolved_lake, 0)}/*.parquet")) == 1
+    # the rewrite replaced indexed files, so the stale index is gone
+    assert not os.path.exists(os.path.join(evolved_lake, "_trigram_index"))
+
+
+# ---------------------------------------------------------------------------
+# partition-scoped compaction
+
+TELE_DDL = f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, {S.MESSAGE} string"
+
+
+def _hour_rows(spark, hours, per_hour):
+    """``per_hour`` distinct telemetry rows in each of ``hours`` (hours
+    after EVO_T0)."""
+    return spark.createDataFrame(
+        [(EVO_T0 + h * HOUR + i, "error", float(i), f"row {h} {i}")
+         for h in hours for i in range(per_hour)],
+        TELE_DDL,
+    )
+
+
+def _hour_dir(lake, hour):
+    return os.path.join(lake, "dataset=logs", "dateint=20240105", f"hour={hour}")
+
+
+def _add_small_file(spark, hour_dir, rows=3):
+    """Append one small file of copies of the first rows already in
+    ``hour_dir``, so that hour holds several files."""
+    df = spark.read.parquet(hour_dir)
+    spark.createDataFrame(df.limit(rows).collect(), df.schema).write.mode(
+        "append"
+    ).parquet(hour_dir)
+
+
+def _file_mtimes(lake):
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(lake)
+        for f in fs
+    }
+
+
+def _rows_by_hour(spark, lake):
+    return {
+        r["hour"]: r["count"]
+        for r in read_segments(spark, lake).groupBy("hour").count().collect()
+    }
+
+
+def test_compaction_of_clean_lake_runs_no_job(spark, tmp_path):
+    """Every hour already holds its one right-sized file: compaction reads
+    footers only, starts no Spark job and touches no file."""
+    from lakeside_spark.sources.segments import compact_segments
+
+    lake = str(tmp_path / "clean")
+    write_segments(_hour_rows(spark, range(4), 5), lake, dataset="logs")
+    before = _file_mtimes(lake)
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_clean_lake", "compact a lake with nothing to rewrite")
+    try:
+        compact_segments(spark, lake)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("compact_clean_lake")) == []
+    assert _file_mtimes(lake) == before
+
+
+def test_compaction_rewrites_only_dirty_hours(spark, tmp_path):
+    """One hour of 16 small files among clean hours: only that hour's files
+    change; rows per hour, the rows themselves and the columns do not."""
+    from lakeside_spark.sources.segments import compact_segments
+
+    lake = str(tmp_path / "mixed")
+    write_segments(_hour_rows(spark, (1, 2, 3), 5), lake, dataset="logs")
+    _hour_rows(spark, (0,), 64).repartition(16).write.parquet(_hour_dir(lake, 0))
+    dirty = _hour_dir(lake, 0)
+    before = _file_mtimes(lake)
+    assert len(glob.glob(f"{dirty}/*.parquet")) == 16
+    hours_before = _rows_by_hour(spark, lake)
+    rows_before = sorted(tuple(r) for r in read_segments(spark, lake).collect())
+    columns_before = read_segments(spark, lake).columns
+
+    compact_segments(spark, lake)
+
+    after = _file_mtimes(lake)
+    clean = {p: t for p, t in before.items() if not p.startswith(dirty + os.sep)}
+    assert {p: t for p, t in after.items() if not p.startswith(dirty + os.sep)} == clean
+    new_dirty = [p for p in after if p.startswith(dirty + os.sep) and p.endswith(".parquet")]
+    assert len(new_dirty) == 1 and new_dirty[0] not in before
+    assert _rows_by_hour(spark, lake) == hours_before
+    assert sorted(tuple(r) for r in read_segments(spark, lake).collect()) == rows_before
+    assert read_segments(spark, lake).columns == columns_before
+    assert glob.glob(lake + ".compact.*") == []
+
+
+def test_compaction_splits_file_over_target_size(spark, tmp_path):
+    """A single file larger than target_file_bytes is dirty too: it is
+    split into files of at most rows_per_file rows."""
+    import pyarrow.parquet as pq
+
+    from lakeside_spark.sources.segments import compact_segments
+
+    lake = str(tmp_path / "big")
+    write_segments(_hour_rows(spark, (0,), 2000), lake, dataset="logs")
+    (src,) = glob.glob(f"{_hour_dir(lake, 0)}/*.parquet")
+    rows_before = sorted(tuple(r) for r in read_segments(spark, lake).collect())
+
+    compact_segments(spark, lake, target_file_bytes=os.path.getsize(src) // 4)
+
+    files = glob.glob(f"{_hour_dir(lake, 0)}/*.parquet")
+    assert len(files) >= 4 and src not in files
+    assert max(pq.read_metadata(f).num_rows for f in files) < 2000 // 3
+    assert sorted(tuple(r) for r in read_segments(spark, lake).collect()) == rows_before
+
+
+@pytest.mark.parametrize("fail_on", [2, 3])
+def test_compaction_swap_failure_restores_lake(spark, tmp_path, monkeypatch, fail_on):
+    """A rename failing mid-swap — 2nd call: the first hour's compacted copy
+    cannot move in; 3rd call: the second hour cannot move out after the
+    first was swapped — moves every swapped hour back: every row reads
+    back, no ``.compact.*`` directory remains and compaction then succeeds."""
+    from lakeside_spark.sources.segments import compact_segments
+
+    lake = str(tmp_path / "swap")
+    write_segments(_hour_rows(spark, range(3), 4), lake, dataset="logs")
+    for h in (0, 1):
+        _add_small_file(spark, _hour_dir(lake, h))
+    before = sorted(tuple(r) for r in read_segments(spark, lake).collect())
+
+    real_rename, calls = os.rename, []
+
+    def flaky_rename(src, dst):
+        calls.append(src)
+        if len(calls) == fail_on:
+            raise OSError("simulated rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky_rename)
+    with pytest.raises(OSError, match="simulated rename failure"):
+        compact_segments(spark, lake)
+    monkeypatch.undo()
+    assert sorted(tuple(r) for r in read_segments(spark, lake).collect()) == before
+    assert glob.glob(lake + ".compact.*") == []
+
+    compact_segments(spark, lake)
+    assert sorted(tuple(r) for r in read_segments(spark, lake).collect()) == before
+    assert [len(glob.glob(f"{_hour_dir(lake, h)}/*.parquet")) for h in range(3)] == [1, 1, 1]
