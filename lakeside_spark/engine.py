@@ -26,6 +26,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark import schema as S
 from lakeside_spark.ast.compute import compute_labels, function_call_to_column
 from lakeside_spark.ast.filters import filter_to_column
@@ -59,16 +60,6 @@ def _agg_column(
     if aggregation in (S.SUM, S.AVG, S.MIN, S.MAX):
         return getattr(F, aggregation if aggregation != S.AVG else "avg")(target)
     raise ValueError(f"Invalid aggregation {aggregation}")
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """``df`` computed now and held on the driver: one Arrow collect, then
-    a frame over the collected table — a LocalRelation below Arrow's
-    local-relation threshold, so consumers re-read the rows without
-    recomputing them and a collect runs no job. For results, not inputs:
-    the rows live in driver memory. The explicit schema keeps column
-    types and nullability, also for zero rows."""
-    return df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
 
 
 class QueryEngine:
@@ -138,13 +129,17 @@ class QueryEngine:
                 df = df.filter(F.col(lbl.name).isNotNull())
         return df.withColumn(comp.label_name, function_call_to_column(comp.function_call))
 
-    def _existing(self, df: DataFrame, expr: BaseExpr) -> set[str]:
-        names = set(df.columns)
+    def _prepared(self, expr: BaseExpr, df: DataFrame) -> DataFrame:
+        """Extract, compute, then the expr's filter — the shared prologue
+        of every query shape. The filter may name extracted and computed
+        columns, so the set it resolves against is taken up front."""
+        existing = set(df.columns)
         if expr.extractor:
-            names |= {f.name for f in expr.extractor.fields}
+            existing |= {f.name for f in expr.extractor.fields}
         if expr.compute:
-            names.add(expr.compute.label_name)
-        return names
+            existing.add(expr.compute.label_name)
+        df = self._apply_compute(self._apply_extract(df, expr), expr)
+        return df.filter(filter_to_column(expr.filter, existing))
 
     def _chart_value_column(self, expr: BaseExpr) -> Column:
         """Aggregation target (reference: getChartSql calc, BaseExpr.scala:
@@ -194,10 +189,7 @@ class QueryEngine:
         if end_ts is not None:
             df = df.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
 
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
 
         if expr.chart:
             return self._run_chart(expr, df, step_ms)
@@ -288,10 +280,7 @@ class QueryEngine:
         come out as ``{agg}_value``; partial aggregation computes every
         measure map-side in the same buffer."""
         step_ms = step_ms or self.step_ms
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         chart = expr.chart
         group_bys = tuple(g for g in chart.group_bys if g in df.columns)
         step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
@@ -378,14 +367,14 @@ class QueryEngine:
             aggs.append(
                 F.count(F.when(conds[label], F.lit(1))).alias(f"__n{i}")
             )
-        # materialized once on the driver (_materialized): every label (and
+        # materialized once on the driver (M.on_driver): every label (and
         # each formula referencing it) consumes this frame, and exchange
         # reuse does not reliably dedupe the subtrees across union branches
         # — without it N consumers mean N scans of the fact table. The
         # frame is post-aggregation (steps × names rows, KBs), so the
         # per-label filter/select folds into the local relation and a
         # label's collect runs no job.
-        agged = _materialized(df.groupBy(*keys).agg(*aggs))
+        agged = M.on_driver(df.groupBy(*keys).agg(*aggs))
         return {
             label: agged.filter(F.col(f"__n{i}") > 0).select(
                 *sel_keys, F.col(f"__v{i}").alias(S.VALUE)
@@ -426,10 +415,11 @@ class QueryEngine:
         formula evaluation).
 
         Each label's result is computed here, once, and held on the driver
-        (:func:`_materialized`), the way the reference's query-api node
-        holds the per-label streams it serves: collecting a label frame
-        runs no Spark job, and formulae evaluate over the held results
-        instead of re-scanning the lake once per label they reference."""
+        (:func:`lakeside_spark.materialize.on_driver`), the way the
+        reference's query-api node holds the per-label streams it serves:
+        collecting a label frame runs no Spark job, and formulae evaluate
+        over the held results instead of re-scanning the lake once per
+        label they reference."""
         from lakeside_spark.ast.formula import (
             eval_formula,
             formula_labels,
@@ -463,7 +453,7 @@ class QueryEngine:
                 solo[batch[0][0]] = batch[0][1]
         out.update(
             {
-                label: _materialized(self.run(e, scoped, step_ms=step_ms))
+                label: M.on_driver(self.run(e, scoped, step_ms=step_ms))
                 for label, e in solo.items()
             }
         )
@@ -500,10 +490,7 @@ class QueryEngine:
             df = df.filter(F.col(S.TIMESTAMP) >= F.lit(start_ts))
         if end_ts is not None:
             df = df.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         group_bys = tuple(g for g in (expr.chart.group_bys if expr.chart else ()) if g in df.columns)
         key = F.concat_ws("|", *[F.col(g) for g in group_bys]) if group_bys else F.col(S.NAME)
         agg = F.approx_count_distinct(key) if self.approx else F.countDistinct(key)
@@ -524,10 +511,7 @@ class QueryEngine:
         hll_sketch_estimate at query_step. At 100 TB the ingest sketches
         are tiny pre-aggregated state (bytes per series-hour), so the
         query-time shuffle moves sketches, never raw rows."""
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         group_bys = tuple(
             g for g in (expr.chart.group_bys if expr.chart else ()) if g in df.columns
         )
@@ -566,10 +550,7 @@ class QueryEngine:
         kll_sketch_agg at ingest grain, kll_merge_agg at query grain, then
         one quantile read per step. Sketch bytes, not raw values, cross
         the query-time shuffle."""
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         ingest_step = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(ingest_step_ms)
         keys = [F.col(S.NAME)] if S.NAME in df.columns else []
         sealed = df.groupBy(ingest_step.alias("ingest_ts"), *keys).agg(
@@ -597,10 +578,7 @@ class QueryEngine:
         drop_noisy applies NoisyTagsDropper semantics (reference
         NoisyTagsDropper.scala via Commons.scala:414): internal/bookkeeping
         tag names and rollup_* columns never reach the response."""
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         canonical = {S.TIMESTAMP, S.VALUE, S.MESSAGE, S.STEP_TS}
         tags = [c for c in df.columns if c not in canonical]
         if drop_noisy:
@@ -626,10 +604,7 @@ class QueryEngine:
         """Distinct tag values + counts (reference: generateSql isTagQuery
         path, BaseExpr.scala:127-143). drop_noisy removes null/empty/'null'
         values the way NoisyTagsDropper strips them from datapoint tags."""
-        existing = self._existing(df, expr)
-        df = self._apply_extract(df, expr)
-        df = self._apply_compute(df, expr)
-        df = df.filter(filter_to_column(expr.filter, existing))
+        df = self._prepared(expr, df)
         if drop_noisy:
             from lakeside_spark.functions.noisytags import displayable_value
 

@@ -35,6 +35,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
+
 
 def funnel(
     events: DataFrame,
@@ -878,19 +880,18 @@ def interval_concurrency(
     )
     wk_order = Window.partitionBy("k").orderBy("b")
     wk = wk_order.rowsBetween(Window.unboundedPreceding, -1)
-    # materialized once (eager localCheckpoint): consumed twice (the head
-    # branch below and the broadcast side of the body join) — without it
-    # the whole tot subtree (a source scan + chunk aggregation + this
-    # window) is duplicated in the plan. keys x active chunks rows, i.e.
-    # the same bounded size the broadcast already assumes. Not persist
-    # (r13): the persisted frame was never unpersisted, so CacheManager
-    # kept it for the session and warm-served later identical calls —
-    # checkpoint blocks are context-cleaned once the result is dropped.
-    carry = tot.select(
-        "k", "b", "first_t",
-        F.coalesce(F.sum("tot").over(wk), F.lit(0)).alias("carry"),
-        F.lag("b").over(wk_order).alias("prev_b"),
-    ).localCheckpoint(eager=True)
+    # checkpointed: consumed twice (the head branch below and the
+    # broadcast side of the body join) — without it the whole tot subtree
+    # (a source scan + chunk aggregation + this window) is duplicated in
+    # the plan. keys x active chunks rows, i.e. the same bounded size the
+    # broadcast already assumes.
+    carry = M.checkpointed(
+        tot.select(
+            "k", "b", "first_t",
+            F.coalesce(F.sum("tot").over(wk), F.lit(0)).alias("carry"),
+            F.lag("b").over(wk_order).alias("prev_b"),
+        )
+    )
 
     # head segment of each active chunk (chunk start -> first event) +
     # the whole empty gap since the previous active chunk, both at the

@@ -30,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import words
+from lakeside_spark.sources.footers import footer_row_count
 
 
 def bm25_topk(
@@ -86,64 +88,11 @@ def bm25_topk(
     )
 
 
-_GATE_COUNTS: dict = {}
-_GATE_COUNTS_CAP = 64
-
-
-def _metadata_count(corpus: DataFrame) -> int | None:
-    """Row count straight from parquet footers when the plan cannot drop
-    rows (only Project/Relation nodes): the gate then costs zero Spark
-    jobs on a first call against a 100 TB table. Local files only —
-    anything else (filters, joins, non-file relations, remote storage)
-    returns None and the caller falls back to a real count()."""
-    try:
-        plan = corpus._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            node = line.lstrip(" +-:").split(" ", 1)[0]
-            if node and node not in ("Project", "Relation", "LogicalRelation"):
-                return None
-        files = corpus.inputFiles()
-        if not files or len(files) > 4096:
-            return None
-        from lakeside_spark.sources.footers import local_parquet_meta
-
-        total = 0
-        for uri in files:
-            meta = local_parquet_meta(uri)
-            if meta is None:
-                return None
-            total += meta.num_rows
-        return total
-    except Exception:
-        return None
-
-
 def _gate_count(corpus: DataFrame) -> int:
-    """Corpus row count for the strategy gate, memoized per (application,
-    analyzed-plan semantic hash) with LRU eviction so repeated calls
-    (hybrid + eval + bench reruns over the same table) pay the count
-    once — and the count itself is footer metadata when the plan is a
-    bare file scan (no count() job at all). A hash collision can only
-    flip the gate between two PARITY-IDENTICAL plans — the cache affects
-    plan choice, never results — so no sameResult verify is needed
-    (unlike the span-dedup result cache). Keyed by applicationId (not
-    id(spark)) so a session restart in one Python process can never
-    serve a stale count."""
-    try:
-        key = (
-            corpus.sparkSession.sparkContext.applicationId,
-            corpus._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # non-JVM-backed frame: just count
-        return corpus.count()
-    if key in _GATE_COUNTS:
-        _GATE_COUNTS[key] = _GATE_COUNTS.pop(key)  # LRU touch
-    else:
-        while len(_GATE_COUNTS) >= _GATE_COUNTS_CAP:
-            _GATE_COUNTS.pop(next(iter(_GATE_COUNTS)))
-        meta = _metadata_count(corpus)
-        _GATE_COUNTS[key] = corpus.count() if meta is None else meta
-    return _GATE_COUNTS[key]
+    """Corpus row count for the strategy gate: parquet footers when the
+    plan is a bare file scan (no Spark job), else ``count()``."""
+    n = footer_row_count(corpus)
+    return corpus.count() if n is None else n
 
 
 def _qterms(queries: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -169,8 +118,7 @@ def _bm25_scored_full(
     query-term set (broadcast qterms into the df table, never the
     reverse).
 
-    The per-doc token ARRAY is materialized once (eager localCheckpoint)
-    and everything downstream derives from it (tf/df re-explode the
+    The per-doc token ARRAY is checkpointed once and everything downstream derives from it (tf/df re-explode the
     arrays; doclen is the array size; stats come off doclen) — so the
     regexp tokenize, the dominant per-task cost, runs exactly once where
     the former shape re-tokenized the corpus four times (tf, df, per-doc
@@ -179,13 +127,8 @@ def _bm25_scored_full(
     array grain is deliberate: caching the aggregated tf table instead
     serializes the broadcast job behind a full postings materialization
     (measured 1.2→2.0s at sf0.1), while re-exploding a cached array is
-    cheap. localCheckpoint, not persist (r13): a persisted frame here
-    was never unpersisted, so CacheManager kept it for the session
-    lifetime and plan-matched it on every later call over the same
-    corpus — the checkpoint's blocks are owned by the returned frame and
-    reclaimed by the context cleaner once it is dropped. Bounded by the
-    full-plan gate (≤ scale_threshold docs; the matched plan covers
-    large corpora)."""
+    cheap. Bounded by the full-plan gate (≤ scale_threshold docs; the
+    matched plan covers large corpora)."""
     from lakeside_spark.operators.textstats import _parallelize_sized
 
     # under-parallel gate, same as the matched plan: a single-file
@@ -193,10 +136,12 @@ def _bm25_scored_full(
     # core (the r8 probe bug class)
     corpus = _parallelize_sized(corpus)
     w = words(text_col)
-    toks = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(w, lambda x: x != F.lit("")).alias("ws"),
-    ).localCheckpoint(eager=True)
+    toks = M.checkpointed(
+        corpus.select(
+            F.col(id_col).alias("doc_id"),
+            F.filter(w, lambda x: x != F.lit("")).alias("ws"),
+        )
+    )
     qt = _qterms(queries, text_col, id_col)
     # cut the exploded token stream to QUERY terms before the (doc, term)
     # shuffle (r13): a query term's df is its full posting-list doc count,

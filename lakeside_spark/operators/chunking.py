@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import words
 
 
@@ -112,17 +113,16 @@ def span_dedup(
     # the anti-join probe side, and the per-doc tile count are SEPARATE
     # subtrees, so without it the corpus was tiled+hashed twice and
     # tokenized a third time for the tile count (hashing "once at tiling
-    # time" shared the expression, not the pass). Eager localCheckpoint,
-    # not persist (r13): the persisted frame was never unpersisted, so
-    # CacheManager kept it alive for the session — checkpoint blocks are
-    # ≈ corpus-text-sized plus one md5 per span, spill to disk, and are
-    # context-cleaned once the result frame is dropped.
-    tarr = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tiles.alias("sp"),
-        F.transform(tiles, F.md5).alias("sph"),
-        n_tiles.cast("long").alias("n_spans"),
-    ).localCheckpoint(eager=True)
+    # time" shared the expression, not the pass). Checkpoint blocks are
+    # ≈ corpus-text-sized plus one md5 per span and spill to disk.
+    tarr = M.checkpointed(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            tiles.alias("sp"),
+            F.transform(tiles, F.md5).alias("sph"),
+            n_tiles.cast("long").alias("n_spans"),
+        )
+    )
     tiled = tarr.select(
         "doc_id",
         F.posexplode(F.arrays_zip("sp", "sph")).alias("span_idx", "z"),
@@ -134,20 +134,15 @@ def span_dedup(
     )
     # global document-frequency per span hash: one map-side-combined
     # aggregation; the result is boilerplate-sized (distinct spans), far
-    # smaller than the corpus, and joins back on the hash. Materialized
-    # with an eager localCheckpoint so the count probe below and the
-    # anti-join share ONE aggregation pass. The r5-era LRU that memoized
-    # the persisted table across CALLS keyed on the input plan is gone
-    # (r13): it served later identical calls — including a bench's second
-    # timed iteration — a warm table, and pinned up to 4 persisted frames
-    # for the session. The table is cheap to rebuild per call now that it
-    # reads the checkpointed tile arrays, not the raw corpus.
-    span_df = (
+    # smaller than the corpus, and joins back on the hash. Checkpointed
+    # so the count probe below and the anti-join share ONE aggregation
+    # pass; cheap to rebuild per call, since it reads the checkpointed
+    # tile arrays, not the raw corpus.
+    span_df = M.checkpointed(
         tiled.groupBy("span_hash")
         .agg(F.count_distinct("doc_id").alias("df"))
         .filter(F.col("df") > max_df)
         .select("span_hash")
-        .localCheckpoint(eager=True)
     )
     if span_df.count() <= broadcast_limit:
         span_df = span_df.hint("broadcast")
@@ -189,12 +184,9 @@ def _tok_gram_arrays(
     idiom). Without it the gram subtree was computed twice (the
     duplicated-gram aggregation and the anchor-join probe side are
     different plans, so ReusedExchange never fires) and the scrub
-    re-tokenized twice more (token stream + per-doc length). Eager
-    localCheckpoint, not persist (r13): the persisted frame was never
-    unpersisted, so CacheManager kept it for the session and warm-served
-    later identical calls. Blocks are ≈ corpus-text-sized plus 32 hex
-    chars per token position, spill to disk, and are context-cleaned
-    once the result frame is dropped."""
+    re-tokenized twice more (token stream + per-doc length). Blocks are
+    ≈ corpus-text-sized plus 32 hex chars per token position and spill
+    to disk."""
     from lakeside_spark.operators.similarity import _parallelize
 
     base = _parallelize(docs).select(
@@ -209,14 +201,14 @@ def _tok_gram_arrays(
         ),
     ).otherwise(F.array().cast("array<string>"))
     cols = (["ws"] if with_ws else []) + [gr.alias("gr")]
-    return base.select("doc_id", *cols).localCheckpoint(eager=True)
+    return M.checkpointed(base.select("doc_id", *cols))
 
 
 def _dup_anchors_from(tg: DataFrame, min_count: int) -> DataFrame:
     """(doc_id, pos) of every sliding k-token gram whose md5 occurs at
     least ``min_count`` times corpus-wide — the duplicated-anchor table
     shared by exact_substr_spans (interval-merge report) and
-    exact_substr_scrub (token removal), derived from the persisted
+    exact_substr_scrub (token removal), derived from the checkpointed
     per-doc gram arrays (``_tok_gram_arrays``). One cheap re-explode per
     consumer, one gram-count aggregation (map-side combined), one
     equi-join of the gram stream against the duplicated-gram table (AQE
@@ -263,7 +255,7 @@ def exact_substr_spans(
     alignment cannot hide a duplicate.
 
     Shape: ONE map-only sliding-gram hashing pass (codegen: transform +
-    slice + md5), persisted as per-doc arrays (``_tok_gram_arrays`` —
+    slice + md5), checkpointed as per-doc arrays (``_tok_gram_arrays`` —
     the aggregation and join-probe consumers re-explode the cache
     instead of recomputing the hashes) → one gram-count aggregation
     (map-side combined) → shuffle join of anchors against the
@@ -328,7 +320,7 @@ def exact_substr_scrub(
     is covered survive with empty clean_text (never silently dropped —
     the span_dedup contract).
 
-    Shape: the shared duplicated-anchor plan over the persisted per-doc
+    Shape: the shared duplicated-anchor plan over the checkpointed per-doc
     token+gram arrays (``_tok_gram_arrays`` with tokens kept — the
     token stream and the per-doc length both re-explode the cache, so
     the normalize/tokenize regexp runs once instead of four times),

@@ -22,6 +22,7 @@ Cross-engine determinism: every hash derives from md5 (first 15 hex chars →
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import nullcontext
 from functools import reduce
 
 import numpy as np
@@ -29,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import md5_long, normalized, shingles
 
 #: MinHash hash family: h_i(s) = (A_i * h31(s) + B_i) mod P where h31 is the
@@ -292,7 +294,6 @@ def ngram_jaccard_pairs(
     strategy: str = "auto",
     kernel_max_docs: int = 50_000,
     kernel_max_nnz: int = GRAM_KERNEL_MAX_NNZ,
-    eager: bool = True,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -305,33 +306,15 @@ def ngram_jaccard_pairs(
     the path for anything over the kernel's collect gate. "auto" probes
     (n_docs, nnz) with one small agg over the cached shingle rows and
     picks. Neither is the 100 TB answer — that's minhash_lsh_pairs,
-    which bounds candidates before verifying.
+    which bounds candidates before verifying. The shingle rows are held
+    for the call; the pair-sized result is checkpointed.
     """
-    ex = _shingled_rows(docs, text_col, id_col, n).persist()
-    out = _jaccard_pairs_from_shingles(
-        ex, threshold, strategy, kernel_max_docs, kernel_max_nnz
-    )
-    if not eager:
-        # lazy plan, the shingle cache stays owned by the caller — the
-        # plan tests inspect this (localCheckpoint would truncate the
-        # lineage they assert on)
-        return out
-    # materialize the (pair-sized) result eagerly so the corpus-sized
-    # shingle cache is released NOW instead of leaking one persisted
-    # frame per call for the session lifetime (same pattern as
-    # minhash_lsh_match below — the r8 advice item, previously applied
-    # only to the incremental path).
-    # CLUSTER CAVEAT (r11 advice): localCheckpoint blocks are
-    # NON-REPLICATED executor-local state — on a real cluster, losing
-    # an executor (failure, dynamic-allocation decommission) after this
-    # call makes the truncated-lineage result unrecoverable mid-job.
-    # eager=True is the right default for this repo's single-JVM bench
-    # harness; a long-lived cluster job should pass eager=False and own
-    # the shingle cache's lifetime (or checkpoint to reliable storage
-    # via spark.sparkContext.setCheckpointDir + .checkpoint()).
-    out = out.localCheckpoint(eager=True)
-    ex.unpersist()
-    return out
+    with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
+        return M.checkpointed(
+            _jaccard_pairs_from_shingles(
+                ex, threshold, strategy, kernel_max_docs, kernel_max_nnz
+            )
+        )
 
 
 def _jaccard_pairs_from_shingles(
@@ -453,63 +436,60 @@ def minhash_lsh_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """MinHash→banded-LSH candidates, verified with exact Jaccard.
 
     rows-per-band = num_hashes/bands; a pair collides if any band's slice of
     the signature matches exactly. Candidates are then verified, so output ⊆
     ngram_jaccard_pairs(threshold) (LSH may miss pairs — that is the
-    documented recall trade-off of the scale path).
+    documented recall trade-off of the scale path). The corpus-sized
+    intermediates are held for the call; the pair-sized result is
+    checkpointed.
     """
     rows = num_hashes // bands
     # shingle ONCE: the signature pass and the verification stage share
     # these rows (previously verification re-shingled every candidate doc)
-    ex = _shingled_rows(docs, text_col, id_col, n).persist()
-    sig = minhash_signatures(docs, num_hashes, n, text_col, id_col, shingle_rows=ex)
-    banded = sig.select(
-        "doc_id", F.explode(_band_keys(F.col("sig"), bands, rows)).alias("band")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    # persisted: consumed three times (candidate ids, verification feed, the
-    # final semi-join) — without this the whole signature pipeline re-runs
-    candidates = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-        .persist()
-    )
-    # verify ONLY the candidate pairs (this bounded verification is the whole
-    # point of LSH at scale — never the all-pairs join). The candidate doc
-    # set grows with the corpus, so verification goes through
-    # ngram_jaccard_pairs' auto strategy probe: small candidate sets take the
-    # dense Gram kernel, large ones the distributed explode-join — never an
-    # unconditional single task.
-    cand_ids = (
-        candidates.select(F.col("id_a").alias("__cand_id"))
-        .union(candidates.select(F.col("id_b").alias("__cand_id")))
-        .distinct()
-    )
-    # persisted: the strategy probe and the kernel feed would otherwise each
-    # re-scan the full corpus shingle cache through the semi-join
-    cand_sh = ex.join(
-        F.broadcast(cand_ids), F.col("doc_id") == F.col("__cand_id"), "leftsemi"
-    ).persist()
-    exact = _jaccard_pairs_from_shingles(cand_sh, threshold)
-    out = exact.join(candidates, ["id_a", "id_b"], "leftsemi")
-    if not eager:
-        # lazy plan, caches stay owned by the caller (plan inspection)
-        return out
-    # materialize the (pair-sized) result eagerly and release the three
-    # (cluster caveat: non-replicated blocks — see ngram_jaccard_pairs)
-    # corpus-sized caches (shingles, candidate pairs, candidate
-    # shingles) — repeated API calls in one session previously leaked
-    # all three per call for the session lifetime
-    out = out.localCheckpoint(eager=True)
-    ex.unpersist()
-    candidates.unpersist()
-    cand_sh.unpersist()
-    return out
+    with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
+        sig = minhash_signatures(
+            docs, num_hashes, n, text_col, id_col, shingle_rows=ex
+        )
+        banded = sig.select(
+            "doc_id", F.explode(_band_keys(F.col("sig"), bands, rows)).alias("band")
+        )
+        a, b = banded.alias("a"), banded.alias("b")
+        # held: consumed three times (candidate ids, verification feed, the
+        # final semi-join) — without this the whole signature pipeline re-runs
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+            .distinct()
+        )
+        with M.held(candidates) as candidates:
+            # verify ONLY the candidate pairs (this bounded verification is
+            # the whole point of LSH at scale — never the all-pairs join).
+            # The candidate doc set grows with the corpus, so verification
+            # goes through ngram_jaccard_pairs' auto strategy probe: small
+            # candidate sets take the dense Gram kernel, large ones the
+            # distributed explode-join — never an unconditional single task.
+            cand_ids = (
+                candidates.select(F.col("id_a").alias("__cand_id"))
+                .union(candidates.select(F.col("id_b").alias("__cand_id")))
+                .distinct()
+            )
+            # held: the strategy probe and the kernel feed would otherwise
+            # each re-scan the full corpus shingle cache through the semi-join
+            cand_sh = ex.join(
+                F.broadcast(cand_ids), F.col("doc_id") == F.col("__cand_id"), "leftsemi"
+            )
+            with M.held(cand_sh) as cand_sh:
+                exact = _jaccard_pairs_from_shingles(cand_sh, threshold)
+                return M.checkpointed(
+                    exact.join(candidates, ["id_a", "id_b"], "leftsemi")
+                )
 
 
 def minhash_lsh_match(
@@ -522,7 +502,6 @@ def minhash_lsh_match(
     text_col: str = "text",
     id_col: str = "doc_id",
     best_only: bool = True,
-    eager: bool = True,
     shingle_rows_incoming: DataFrame | None = None,
     shingle_rows_index: DataFrame | None = None,
 ) -> DataFrame:
@@ -549,20 +528,15 @@ def minhash_lsh_match(
     side — per the r13 profile the two per-side kernels cost 1.32s where
     one whole-table pass costs 0.57s at sf0.1. The caller owns the
     supplied frames' cache lifetime; each side's rows must cover exactly
-    that side's docs."""
+    that side's docs. Shingle rows this call computes are held for the
+    call; the match-sized result is checkpointed."""
+
+    def shingled(docs: DataFrame, supplied: DataFrame | None):
+        if supplied is not None:
+            return nullcontext(supplied)
+        return M.held(_shingled_rows(docs, text_col, id_col, n))
+
     rows = num_hashes // bands
-    own_in = shingle_rows_incoming is None
-    own_ix = shingle_rows_index is None
-    ex_in = (
-        _shingled_rows(incoming_docs, text_col, id_col, n).persist()
-        if own_in
-        else shingle_rows_incoming
-    )
-    ex_ix = (
-        _shingled_rows(index_docs, text_col, id_col, n).persist()
-        if own_ix
-        else shingle_rows_index
-    )
 
     def _banded(docs: DataFrame, ex: DataFrame) -> DataFrame:
         sig = minhash_signatures(
@@ -572,83 +546,125 @@ def minhash_lsh_match(
             "doc_id", F.explode(_band_keys(F.col("sig"), bands, rows)).alias("band")
         )
 
-    cand = (
-        _banded(incoming_docs, ex_in)
-        .alias("a")
-        .join(
-            _banded(index_docs, ex_ix).alias("b"),
-            F.col("a.band") == F.col("b.band"),
-        )
-        .select(
-            F.col("a.doc_id").alias("in_id"), F.col("b.doc_id").alias("ix_id")
-        )
-        .distinct()
-    )
-    # cand has a single consumer (the verification join chain below), so it
-    # stays lazy; only the twice-read shingle caches are persisted — in
-    # production the index-side cache is replaced by the persisted index
-    # table, whose lifetime the ingest pipeline owns
-    common = (
-        cand.join(
-            ex_in.select(F.col("doc_id").alias("in_id"), "shingle"), "in_id"
-        )
-        .join(
-            ex_ix.select(F.col("doc_id").alias("ix_id"), "shingle"),
-            ["ix_id", "shingle"],
-        )
-        .groupBy("in_id", "ix_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    n_in = ex_in.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in"))
-    n_ix = ex_ix.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_ix"))
-    jac = F.col("n_common") / (F.col("n_in") + F.col("n_ix") - F.col("n_common"))
-    scored = (
-        common.join(n_in, common["in_id"] == n_in["doc_id"])
-        .drop("doc_id")
-        .join(n_ix, common["ix_id"] == n_ix["doc_id"])
-        .withColumn("j", jac)
-        .filter(F.col("j") >= threshold)
-    )
-    if not best_only:
-        out = scored.select(
-            F.col("in_id").alias("doc_id"),
-            F.col("ix_id").alias("match_id"),
-            F.round("j", 6).alias("jaccard"),
-        )
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("in_id").orderBy(
-            F.col("j").desc(), F.col("ix_id")
-        )
-        out = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    with shingled(incoming_docs, shingle_rows_incoming) as ex_in, shingled(
+        index_docs, shingle_rows_index
+    ) as ex_ix:
+        cand = (
+            _banded(incoming_docs, ex_in)
+            .alias("a")
+            .join(
+                _banded(index_docs, ex_ix).alias("b"),
+                F.col("a.band") == F.col("b.band"),
+            )
             .select(
+                F.col("a.doc_id").alias("in_id"), F.col("b.doc_id").alias("ix_id")
+            )
+            .distinct()
+        )
+        # cand has a single consumer (the verification join chain below), so it
+        # stays lazy; only the twice-read shingle rows are held — in
+        # production the index-side cache is replaced by the persisted index
+        # table, whose lifetime the ingest pipeline owns
+        common = (
+            cand.join(
+                ex_in.select(F.col("doc_id").alias("in_id"), "shingle"), "in_id"
+            )
+            .join(
+                ex_ix.select(F.col("doc_id").alias("ix_id"), "shingle"),
+                ["ix_id", "shingle"],
+            )
+            .groupBy("in_id", "ix_id")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        n_in = ex_in.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_in"))
+        n_ix = ex_ix.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_ix"))
+        jac = F.col("n_common") / (F.col("n_in") + F.col("n_ix") - F.col("n_common"))
+        scored = (
+            common.join(n_in, common["in_id"] == n_in["doc_id"])
+            .drop("doc_id")
+            .join(n_ix, common["ix_id"] == n_ix["doc_id"])
+            .withColumn("j", jac)
+            .filter(F.col("j") >= threshold)
+        )
+        if best_only:
+            w = Window.partitionBy("in_id").orderBy(
+                F.col("j").desc(), F.col("ix_id")
+            )
+            scored = scored.withColumn("rn", F.row_number().over(w)).filter(
+                F.col("rn") == 1
+            )
+        return M.checkpointed(
+            scored.select(
                 F.col("in_id").alias("doc_id"),
                 F.col("ix_id").alias("match_id"),
                 F.round("j", 6).alias("jaccard"),
             )
         )
-    if not eager:
-        # lazy plan, caches stay owned by the caller — the path plan
-        # tests inspect (localCheckpoint below would truncate the
-        # lineage they assert on) and the hook for a production ingest
-        # that persists the index side itself
-        return out
-    # materialize the (match-sized) result eagerly so the two
-    # (cluster caveat: non-replicated blocks — see ngram_jaccard_pairs)
-    # corpus-sized shingle caches can be released NOW — a daily-ingest
-    # API gets called repeatedly, and leaving them persisted leaked two
-    # cached tables per call for the session lifetime. The checkpoint
-    # blocks are match-sized (not corpus-sized) and reclaimed by
-    # Spark's ContextCleaner once the returned DataFrame is dropped.
-    out = out.localCheckpoint(eager=True)
-    if own_in:
-        ex_in.unpersist()
-    if own_ix:
-        ex_ix.unpersist()
-    return out
+
+
+def _edge_sig(e: DataFrame) -> tuple:
+    """Order-insensitive signature (count, Σ xxhash64) of an edge list:
+    detects the fixed point in one tiny agg job per round instead of an
+    anti-join diff."""
+    r = e.agg(
+        F.count(F.lit(1)).alias("n"),
+        # decimal accumulator: ANSI mode makes a long Σ of 64-bit
+        # hashes an overflow error, not a wrap
+        F.coalesce(
+            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("h"),
+    ).collect()[0]
+    return (r["n"], r["h"])
+
+
+def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
+    """Alternating large-star / small-star rounds over a (hi, lo) edge
+    list until its signature stops changing: (final edges, converged).
+    The input edges and each round's large-star frame are held; each
+    round's small-star result is checkpointed."""
+    with M.held(edges) as first:
+        sig = _edge_sig(first)  # also materializes: input runs exactly once
+        edges = first
+        for _ in range(max_iter):
+            # large-star: for every node u, rewire each STRICTLY LARGER
+            # neighbor x to m(u) = min(closed neighborhood of u)
+            adj = edges.select(F.col("hi").alias("u"), F.col("lo").alias("x")).union(
+                edges.select(F.col("lo").alias("u"), F.col("hi").alias("x"))
+            )
+            mins = (
+                adj.groupBy("u")
+                .agg(F.min("x").alias("mn"))
+                .select("u", F.least("mn", "u").alias("m"))
+            )
+            large = (
+                adj.join(mins, "u")
+                .filter(F.col("x") > F.col("u"))
+                .select(F.col("x").alias("hi"), F.col("m").alias("lo"))
+                .distinct()
+            )
+            with M.held(large) as large:
+                large.count()
+                # small-star: key by the larger endpoint; rewire u and all
+                # its smaller neighbors to the minimum among them
+                smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
+                joined = large.join(smins, "hi")
+                # CRITICAL: truncate lineage every round. Each round's plan
+                # embeds ~12 copies of the previous round's tree (two adj
+                # unions + self-joins), so without a checkpoint the LOGICAL
+                # plan — and Catalyst analysis time — grows exponentially
+                # and kills the driver by round ~3.
+                edges = M.checkpointed(
+                    joined.select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+                    .union(joined.select("hi", F.col("m").alias("lo")))
+                    .filter(F.col("hi") != F.col("lo"))
+                    .distinct()
+                )
+                new_sig = _edge_sig(edges)
+            if new_sig == sig:
+                return edges, True
+            sig = new_sig
+    return edges, False
 
 
 def connected_components(
@@ -672,20 +688,27 @@ def connected_components(
     DataFrame ops, no driver state.
     Singletons are not emitted — absent ids are their own cluster.
     """
-    # persisted: the size probe and the collect/edge-build below would
+    # held: the size probe and the collect/edge-build below would
     # otherwise each re-run the (possibly expensive) pair pipeline.
     # Self-pairs are dropped HERE so both paths agree: they carry no
     # connectivity information, and "Singletons are not emitted" must
     # hold regardless of which side of the local_max_edges gate runs.
-    pairs = (
-        pairs.select("id_a", "id_b")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .persist()
-    )
-    n_pairs = pairs.limit(local_max_edges + 1).count()
-    if n_pairs <= local_max_edges:
-        rows = pairs.collect()
-        pairs.unpersist()
+    spark = pairs.sparkSession
+    src = pairs.select("id_a", "id_b").filter(F.col("id_a") != F.col("id_b"))
+    with M.held(src) as pairs:
+        local = pairs.limit(local_max_edges + 1).count() <= local_max_edges
+        if local:
+            rows = pairs.collect()
+        else:
+            # canonical (hi, lo) undirected edge list
+            edges, converged = _star_contract(
+                pairs.select(
+                    F.greatest("id_a", "id_b").alias("hi"),
+                    F.least("id_a", "id_b").alias("lo"),
+                ).distinct(),
+                max_iter,
+            )
+    if local:
         parent: dict = {}
 
         def find(x):
@@ -701,84 +724,9 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         out = sorted((node, find(node)) for node in parent)
-        return pairs.sparkSession.createDataFrame(
+        return spark.createDataFrame(
             out or [(None, None)], schema="doc_id bigint, cluster_id bigint"
         ).filter("doc_id is not null")
-    # canonical (hi, lo) undirected edge list
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("hi"),
-            F.least("id_a", "id_b").alias("lo"),
-        )
-        .distinct()
-        .persist()
-    )
-    # order-insensitive signature (count, Σ xxhash64) detects the fixed
-    # point in one tiny agg job per round instead of an anti-join diff
-    def _sig(e: DataFrame):
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: ANSI mode makes a long Σ of 64-bit
-            # hashes an overflow error, not a wrap
-            F.coalesce(
-                F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    sig = _sig(edges)  # also materializes: pair pipeline runs exactly once
-    pairs.unpersist()
-    converged = False
-    for _ in range(max_iter):
-        # large-star: for every node u, rewire each STRICTLY LARGER
-        # neighbor x to m(u) = min(closed neighborhood of u)
-        adj = edges.select(F.col("hi").alias("u"), F.col("lo").alias("x")).union(
-            edges.select(F.col("lo").alias("u"), F.col("hi").alias("x"))
-        )
-        mins = (
-            adj.groupBy("u")
-            .agg(F.min("x").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        large = (
-            adj.join(mins, "u")
-            .filter(F.col("x") > F.col("u"))
-            .select(F.col("x").alias("hi"), F.col("m").alias("lo"))
-            .distinct()
-            .persist()
-        )
-        large.count()
-        edges.unpersist()
-        # small-star: key by the larger endpoint; rewire u and all its
-        # smaller neighbors to the minimum among them
-        smins = (
-            large.groupBy("hi")
-            .agg(F.min("lo").alias("m"))
-        )
-        joined = large.join(smins, "hi")
-        small = (
-            joined.select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-            .union(joined.select("hi", F.col("m").alias("lo")))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-            # CRITICAL: truncate lineage every round. Each round's plan
-            # embeds ~12 copies of the previous round's tree (two adj
-            # unions + self-joins), so without a checkpoint the LOGICAL
-            # plan — and Catalyst analysis time — grows exponentially
-            # and kills the driver by round ~3. Eager localCheckpoint
-            # materializes to executor-local blocks and restarts the
-            # lineage; on a fault-tolerant cluster run, swap for
-            # .checkpoint() with a reliable checkpoint dir.
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _sig(small)
-        large.unpersist()
-        edges = small
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
     if not converged:
         import warnings
 
@@ -876,18 +824,14 @@ def hamming_pairs(
     to be small): at corpus scale the caller must tighten the budget (so
     bits // (max_hamming+1) >= 8) or widen the signature.
     """
-    # materialized once (eager localCheckpoint): the self-join below
-    # references this frame on BOTH sides, and without it the whole
-    # upstream signature subtree (often a Python fingerprint kernel —
-    # simhash md5 tally, image pHash DCT, audio FFT) is duplicated per
-    # side. Two thin columns (id + one int64), so the blocks are
-    # corpus-count × ~16B. Not persist (r13): the persisted frame was
-    # never unpersisted, so CacheManager kept it for the session and
-    # warm-served later identical calls — checkpoint blocks are
-    # context-cleaned once the result frame is dropped.
-    sh = hashes.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h")
-    ).localCheckpoint(eager=True)
+    # checkpointed: the self-join below references this frame on BOTH
+    # sides, and without it the whole upstream signature subtree (often a
+    # Python fingerprint kernel — simhash md5 tally, image pHash DCT,
+    # audio FFT) is duplicated per side. Two thin columns (id + one
+    # int64), so the blocks are corpus-count × ~16B.
+    sh = M.checkpointed(
+        hashes.select(F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h"))
+    )
     bands = max_hamming + 1
     band_bits = bits // bands
     hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
@@ -1153,7 +1097,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     strategy: str = "auto",
     exact_max_docs: int = 50_000,
-    eager: bool = True,
 ) -> DataFrame:
     """n-gram CONTAINMENT pairs: containment(a,b) =
     |A∩B| / min(|A|, |B|) ≥ threshold (id_a < id_b).
@@ -1184,28 +1127,27 @@ def ngram_containment_pairs(
     "auto" probes the corpus size with one agg over the cached shingle
     rows and takes "prefix" above ``exact_max_docs``.
 
-    Shingle rows are persisted for the duration of the call only (the
-    ngram_jaccard_pairs idiom, r13): the pair-sized result is
-    materialized with an eager localCheckpoint and the corpus-sized
-    shingle cache released before returning — previously it leaked one
-    CacheManager entry per call for the session lifetime. ``eager=False``
-    returns the lazy plan with the shingle cache left to the caller
-    (plan-inspection tests). The candidate frame is NOT persisted: both
-    of its consumers sit in one final plan, where Catalyst reuses the
-    candidate exchange, and recomputation starts from the persisted
-    shingles anyway.
+    Shingle rows are held for the call and the pair-sized result is
+    checkpointed (the ngram_jaccard_pairs idiom). The candidate frame is
+    not held: both of its consumers sit in one final plan, where Catalyst
+    reuses the candidate exchange, and recomputation starts from the
+    held shingles anyway.
     """
-    ex = _shingled_rows(docs, text_col, id_col, n).persist()
+    with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
+        return M.checkpointed(
+            _containment_pairs_gated(ex, threshold, strategy, exact_max_docs)
+        )
+
+
+def _containment_pairs_gated(
+    ex: DataFrame, threshold: float, strategy: str, exact_max_docs: int
+) -> DataFrame:
+    """ngram_containment_pairs' lazy plan over (doc_id, shingle) rows."""
     if strategy == "auto":
         n_docs = ex.agg(F.approx_count_distinct("doc_id")).first()[0]
         strategy = "exact" if n_docs <= exact_max_docs else "prefix"
     if strategy == "exact":
-        out = _containment_pairs_from_shingles(ex, threshold)
-        if not eager:
-            return out
-        out = out.localCheckpoint(eager=True)
-        ex.unpersist()
-        return out
+        return _containment_pairs_from_shingles(ex, threshold)
     if strategy != "prefix":
         raise ValueError(
             f"ngram_containment_pairs: unknown strategy {strategy!r} "
@@ -1237,9 +1179,4 @@ def ngram_containment_pairs(
         )
         .distinct()
     )
-    out = _containment_pairs_from_shingles(ex, threshold, candidates=candidates)
-    if not eager:
-        return out
-    out = out.localCheckpoint(eager=True)
-    ex.unpersist()
-    return out
+    return _containment_pairs_from_shingles(ex, threshold, candidates=candidates)

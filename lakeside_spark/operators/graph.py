@@ -45,6 +45,8 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
+
 # above this many (vocab²) edges the collected table is no longer
 # "bounded-side" and the join-based loop takes over
 LOCAL_EDGE_GATE = 200_000
@@ -188,56 +190,45 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # the try/finally below is not reached on this path — release
-        # the cache here or the empty frame pins storage for the session
-        nodes.unpersist()
-        return spark.createDataFrame([], "node string, rank double")
-
-    outw = e.groupBy("src").agg(F.sum("w").alias("wsum"))
-    trans = e.join(outw, "src").select(
-        "src", "dst", (F.col("w") / F.col("wsum")).alias("p")
-    ).persist()
-    # Dangling nodes: NOT completed as explicit |dangling| x |nodes|
-    # uniform edges (quadratic on a dangling-heavy graph — the exact
-    # regime the distributed path exists for). Each dst receives the
-    # IDENTICAL snapped per-u term round(r_u * (1/n) * 1e9) from every
-    # dangling u, so the whole completion collapses to one scalar per
-    # iteration — the sum of those snapped terms — broadcast to every
-    # node via a single-row hash join. Bit-identical to the local
-    # path's explicit-edge form (pytest-pinned).
-    dangling = nodes.join(
-        outw.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-
-    d = float(damping)
-    teleport = (1.0 - d) / n_nodes
-    inv_n = 1.0 / n_nodes
-    ranks = nodes.select("node", F.round(F.lit(inv_n), 9).alias("r"))
-
-    # graphs with no dangling nodes (every node has an out-edge) skip
-    # the per-iteration scalar job entirely
-    has_dangling = bool(dangling.take(1))
-    try:
-        for it in range(iterations):
-            dang9 = (
-                _dangling_mass9(dangling, ranks, inv_n) if has_dangling else 0
-            )
-            ranks = _dist_step(nodes, trans, ranks, dang9, d, teleport)
-            # truncate lineage every 3rd round — every round when the
-            # per-iteration dangling collect re-reads ranks anyway —
-            # per-round eager checkpoints only multiply the job count,
-            # but unbounded nesting blows up Catalyst analysis (the
-            # round-6 lesson)
-            if has_dangling or it % 3 == 2 or it == iterations - 1:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.select("node", F.round(F.col("r"), 6).alias("rank"))
-    finally:
-        # the final eager localCheckpoint severs the returned frame from
-        # these caches — release them (they otherwise leak for the
-        # session lifetime, the minhash_lsh_match lesson)
-        for cached in (nodes, trans, dangling):
-            cached.unpersist()
+    with M.held(nodes) as nodes:
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return spark.createDataFrame([], "node string, rank double")
+        outw = e.groupBy("src").agg(F.sum("w").alias("wsum"))
+        trans = e.join(outw, "src").select(
+            "src", "dst", (F.col("w") / F.col("wsum")).alias("p")
+        )
+        # Dangling nodes: NOT completed as explicit |dangling| x |nodes|
+        # uniform edges (quadratic on a dangling-heavy graph — the exact
+        # regime the distributed path exists for). Each dst receives the
+        # IDENTICAL snapped per-u term round(r_u * (1/n) * 1e9) from every
+        # dangling u, so the whole completion collapses to one scalar per
+        # iteration — the sum of those snapped terms — broadcast to every
+        # node via a single-row hash join. Bit-identical to the local
+        # path's explicit-edge form (pytest-pinned).
+        dangling = nodes.join(
+            outw.select(F.col("src").alias("node")), "node", "left_anti"
+        )
+        with M.held(trans) as trans, M.held(dangling) as dangling:
+            d = float(damping)
+            teleport = (1.0 - d) / n_nodes
+            inv_n = 1.0 / n_nodes
+            ranks = nodes.select("node", F.round(F.lit(inv_n), 9).alias("r"))
+            # graphs with no dangling nodes (every node has an out-edge)
+            # skip the per-iteration scalar job entirely
+            has_dangling = bool(dangling.take(1))
+            for it in range(iterations):
+                dang9 = (
+                    _dangling_mass9(dangling, ranks, inv_n) if has_dangling else 0
+                )
+                ranks = _dist_step(nodes, trans, ranks, dang9, d, teleport)
+                # truncate lineage every 3rd round — every round when the
+                # per-iteration dangling collect re-reads ranks anyway —
+                # per-round checkpoints only multiply the job count, but
+                # unbounded nesting blows up Catalyst analysis (the
+                # round-6 lesson). The last round's checkpoint also cuts
+                # the returned frame loose from the held frames.
+                if has_dangling or it % 3 == 2 or it == iterations - 1:
+                    ranks = M.checkpointed(ranks)
+            return ranks.select("node", F.round(F.col("r"), 6).alias("rank"))

@@ -456,62 +456,25 @@ def _hyperplane_matrix(num_planes: int, dim: int, salt: int = 0) -> np.ndarray:
 
 
 def _train_mat_sample(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    train_sample: int,
-    cache_key: str | None,
+    corpus: DataFrame, id_col: str, vec_col: str, train_sample: int
 ) -> np.ndarray | None:
     """id-ORDERED raw training matrix (float64) — the replayable sample
     convention shared by every snapped quantizer (operators/kmeans_replay):
     ORDER BY id LIMIT n means both engines train on the identical rows in
     the identical order (a bare limit() is partition-order-dependent).
-    Cached under ("msample", ...) so sibling index builds over the same
-    corpus pay the collect once; never corpus-sized. None on empty."""
-    ck = (
-        None
-        if cache_key is None
-        else ("msample", cache_key, id_col, vec_col, train_sample)
-    )
-    mat = _CODEBOOK_CACHE.get(ck) if ck is not None else None
-    if mat is None:
-        rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(train_sample)
-            .collect()
-        )
-        if not rows:
-            return None
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        if ck is not None:
-            _CODEBOOK_CACHE[ck] = mat
-    return mat
+    Never corpus-sized. None on empty."""
+    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(train_sample).collect()
+    if not rows:
+        return None
+    return np.array([r[1] for r in rows], dtype=np.float64)
 
 
-def _ivf_centroids9(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int,
-    train_sample: int,
-    cache_key: str | None,
-) -> np.ndarray | None:
-    """The trained (snapped) IVF coarse quantizer, cached under
-    ("ivf", cache_key, n_cells, train_sample) — split out of ann_ivf so
-    a caller submitting ivf variants from CONCURRENT driver threads
-    (ann_recall_report) can pre-train it once synchronously instead of
-    serializing one variant behind the other. None on an empty corpus."""
-    ck = None if cache_key is None else ("ivf", cache_key, n_cells, train_sample)
-    cents9 = _CODEBOOK_CACHE.get(ck) if ck is not None else None
-    if cents9 is None:
-        mat = _train_mat_sample(corpus, id_col, vec_col, train_sample, cache_key)
-        if mat is None:
-            return None
-        cents9 = spherical_kmeans_snapped(unit9(mat), n_cells)
-        if ck is not None:
-            _CODEBOOK_CACHE[ck] = cents9
-    return cents9
+def ivf_quantizer(train_mat: np.ndarray, n_cells: int) -> np.ndarray:
+    """The trained (snapped) IVF coarse quantizer over an id-ordered
+    training sample (see ann_ivf). Split out so a caller running several
+    ivf variants over one corpus — from concurrent driver threads, as
+    ann_recall_report does — trains it once and passes it in."""
+    return spherical_kmeans_snapped(unit9(train_mat), n_cells)
 
 
 def ann_ivf(
@@ -524,7 +487,7 @@ def ann_ivf(
     n_assign: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache_key: str | None = None,
+    centroids9: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus vectors are assigned to
     their nearest spherical-kmeans centroid; each query scores only the
@@ -542,9 +505,9 @@ def ann_ivf(
     id is just argmax of a [block × n_cells] integer-dot matrix), then
     hash-partition the corpus by cell so a query's n_probe cells touch
     n_probe partitions instead of the full corpus. Recall < 1 by design —
-    brute-force cosine_topk is the exact baseline. ``cache_key`` (a stable
-    corpus name) reuses the trained coarse quantizer across calls — see
-    _CODEBOOK_CACHE.
+    brute-force cosine_topk is the exact baseline. ``centroids9`` is a
+    coarse quantizer already trained for this corpus, ``n_cells`` and
+    ``train_sample`` (:func:`ivf_quantizer`); None trains one per call.
 
     ORACLE-EXACT since r10: the coarse quantizer is the REPLAYABLE snapped
     spherical k-means (operators/kmeans_replay — id-ordered sample, strided
@@ -556,11 +519,12 @@ def ann_ivf(
     (ann_recall_report) pins this quantizer's recall floors."""
     spark = corpus.sparkSession
     empty = "q_id bigint, n_id bigint, cos double, rank int"
-    cents9 = _ivf_centroids9(
-        corpus, id_col, vec_col, n_cells, train_sample, cache_key
-    )
+    cents9 = centroids9
     if cents9 is None:
-        return spark.createDataFrame([], schema=empty)
+        mat = _train_mat_sample(corpus, id_col, vec_col, train_sample)
+        if mat is None:
+            return spark.createDataFrame([], schema=empty)
+        cents9 = ivf_quantizer(mat, n_cells)
     bc = spark.sparkContext.broadcast(cents9)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -863,45 +827,19 @@ def _opq_rotation(unit_sample: np.ndarray, m_subs: int) -> np.ndarray:
     return v[:, order].T  # rows are the new basis: x_rot = x @ R.T
 
 
-# Trained quantizers keyed by (cache_key, params). Training runs Lloyd/
-# spherical k-means on a bounded driver-side sample — correct but the
-# dominant cost of a repeated ann_pq/ann_ivf call (the codebook is a pure
-# function of the corpus sample and params, so retraining per call is
-# waste). A long-lived production job that can name its corpus stably may
-# pass cache_key to amortize training across calls; None (the default)
-# keeps the uncached per-call behavior. The REGISTRY keys pass None — or,
-# for ann_recall_report's within-call sibling sharing, a per-call uuid
-# purged before returning (r13): a testdata-path key let the bench's
-# second timed iteration skip training, warm-biasing its min-of-2.
-# Cache values are small numpy arrays (m_subs × n_codes × sub floats),
-# never corpus-sized.
-_CODEBOOK_CACHE: dict[tuple, np.ndarray] = {}
-
-
 def _train_unit_sample(
-    corpus: DataFrame,
-    vec_col: str,
-    train_sample: int,
-    cache_key: str | None,
+    corpus: DataFrame, vec_col: str, train_sample: int
 ) -> np.ndarray | None:
-    """Bounded driver-side training sample, L2-normalized. Cached under
-    ("sample", cache_key, ...) so sibling index builds over the same
-    corpus (ivf/ivf_ma, pq/pq_opq) pay the collect once — the sample is
-    a pure function of the corpus head, never corpus-sized. Returns None
-    for an empty corpus."""
-    ck = None if cache_key is None else ("sample", cache_key, vec_col, train_sample)
-    unit = _CODEBOOK_CACHE.get(ck) if ck is not None else None
-    if unit is None:
-        sample = corpus.select(vec_col).limit(train_sample).collect()
-        if not sample:
-            return None
-        mat = np.array([r[0] for r in sample], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = mat / norms
-        if ck is not None:
-            _CODEBOOK_CACHE[ck] = unit
-    return unit
+    """Bounded driver-side training sample, L2-normalized — a function of
+    the corpus head, never corpus-sized. Returns None for an empty
+    corpus."""
+    sample = corpus.select(vec_col).limit(train_sample).collect()
+    if not sample:
+        return None
+    mat = np.array([r[0] for r in sample], dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return mat / norms
 
 
 def ann_pq(
@@ -915,7 +853,7 @@ def ann_pq(
     rotation: str = "none",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache_key: str | None = None,
+    train_mat: np.ndarray | None = None,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011, the FAISS `PQ` index):
     unit vectors are chopped into m_subs subspaces, each encoded as the id
@@ -949,15 +887,20 @@ def ann_pq(
     are ALL order-free int64 arithmetic with (score desc, id asc) ties —
     so ANN_PQ_SQL (registry/_pq_sql) replays the entire pipeline
     bit-for-bit. The OPQ variant keeps the float eigh rotation and stays
-    panel-pinned only."""
+    panel-pinned only.
+
+    ``train_mat`` is the snapped codebooks' id-ordered training sample
+    (the first ``train_sample`` rows by ``id_col``), already collected by
+    a caller that shares it between index builds; None collects it per
+    call. The OPQ variant trains on its own sample."""
     if rotation == "none":
         return _ann_pq_snapped(
             corpus, queries, k, m_subs, n_codes, train_sample, rerank,
-            vec_col, id_col, cache_key,
+            vec_col, id_col, train_mat,
         )
     return _ann_pq_opq(
         corpus, queries, k, m_subs, n_codes, train_sample, rerank,
-        rotation, vec_col, id_col, cache_key,
+        rotation, vec_col, id_col,
     )
 
 
@@ -971,7 +914,7 @@ def _ann_pq_snapped(
     rerank: int,
     vec_col: str,
     id_col: str,
-    cache_key: str | None,
+    train_mat: np.ndarray | None,
 ) -> DataFrame:
     """The replayable PQ pipeline (see ann_pq). Everything after unit6
     snapping is exact int64: codebooks, codes, ADC lookup sums, the
@@ -984,17 +927,12 @@ def _ann_pq_snapped(
 
     spark = corpus.sparkSession
     empty = "q_id bigint, n_id bigint, cos_pq double, rank int"
-    ck = None if cache_key is None else (
-        "pq", cache_key, m_subs, n_codes, train_sample, "none"
-    )
-    books6 = _CODEBOOK_CACHE.get(ck) if ck is not None else None
-    if books6 is None:
-        mat = _train_mat_sample(corpus, id_col, vec_col, train_sample, cache_key)
+    mat = train_mat
+    if mat is None:
+        mat = _train_mat_sample(corpus, id_col, vec_col, train_sample)
         if mat is None:
             return spark.createDataFrame([], schema=empty)
-        books6 = pq_train_snapped(unit6(mat), m_subs, n_codes)
-        if ck is not None:
-            _CODEBOOK_CACHE[ck] = books6
+    books6 = pq_train_snapped(unit6(mat), m_subs, n_codes)
     bc_books = spark.sparkContext.broadcast(books6)
 
     q_rows = queries.select(id_col, vec_col).collect()
@@ -1107,7 +1045,6 @@ def _ann_pq_opq(
     rotation: str = "opq",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache_key: str | None = None,
 ) -> DataFrame:
     """The float OPQ-rotated PQ variant (see ann_pq's docstring) — kept on
     the original per-task-refine path; its recall sits in the
@@ -1115,31 +1052,21 @@ def _ann_pq_opq(
     float-valued by nature)."""
     spark = corpus.sparkSession
     empty = "q_id bigint, n_id bigint, cos_pq double, rank int"
-    ck = None if cache_key is None else (
-        "pq", cache_key, m_subs, n_codes, train_sample, rotation
-    )
-    trained = _CODEBOOK_CACHE.get(ck) if ck is not None else None
-    if trained is None:
-        unit = _train_unit_sample(corpus, vec_col, train_sample, cache_key)
-        if unit is None:
-            return spark.createDataFrame([], schema=empty)
-        dim = unit.shape[1]
-        if dim % m_subs:
-            raise ValueError(f"dim {dim} not divisible by m_subs {m_subs}")
-        sub = dim // m_subs
-        rot = _opq_rotation(unit, m_subs) if rotation == "opq" else None
-        xs = unit @ rot.T if rot is not None else unit
-        books = np.stack(
-            [
-                _lloyd_kmeans(xs[:, j * sub : (j + 1) * sub], n_codes)
-                for j in range(m_subs)
-            ]
-        )  # [m_subs, n_codes, sub]
-        trained = (books, rot)
-        if ck is not None:
-            _CODEBOOK_CACHE[ck] = trained
-    books, rot = trained
-    sub = books.shape[2]
+    unit = _train_unit_sample(corpus, vec_col, train_sample)
+    if unit is None:
+        return spark.createDataFrame([], schema=empty)
+    dim = unit.shape[1]
+    if dim % m_subs:
+        raise ValueError(f"dim {dim} not divisible by m_subs {m_subs}")
+    sub = dim // m_subs
+    rot = _opq_rotation(unit, m_subs) if rotation == "opq" else None
+    xs = unit @ rot.T if rot is not None else unit
+    books = np.stack(
+        [
+            _lloyd_kmeans(xs[:, j * sub : (j + 1) * sub], n_codes)
+            for j in range(m_subs)
+        ]
+    )  # [m_subs, n_codes, sub]
     bc_books = spark.sparkContext.broadcast((books, rot))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1469,6 +1396,18 @@ def _reduce_packed9(
     return packed
 
 
+def _first_vector_dim(df: DataFrame, vec_col: str) -> int | None:
+    """The first row's vector length, so a moment pass's collect gate can
+    be byte-bound: a one-row probe of one column — microseconds next to
+    the pass it guards. None on an empty frame or a null first vector
+    (``size(NULL)`` is NULL with ANSI on and -1 with it off); the gate
+    then falls back to its parts bound."""
+    head = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    if head is None or head["d"] is None or head["d"] < 0:
+        return None
+    return head["d"]
+
+
 def _moment_pass9(
     df: DataFrame, vec_col: str, label_col: str
 ) -> tuple | None:
@@ -1512,12 +1451,8 @@ def _moment_pass9(
         if acc is not None:
             yield pd.DataFrame({"p": [acc]})
 
-    # one-row dim probe so the collect gate can be byte-bound: scans a
-    # single parquet row of one column — microseconds next to the moment
-    # pass it guards (None on an empty frame: the gate falls back to the
-    # parts bound and the collect is trivially empty)
-    head = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    da_probe = None if head is None or head["d"] is None else head["d"] + 1
+    d_probe = _first_vector_dim(df, vec_col)
+    da_probe = None if d_probe is None else d_probe + 1
     packed = _reduce_packed9(
         _parallelize(
             df.select(vec_col, label_col).filter(
@@ -1569,9 +1504,7 @@ def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
         if acc is not None:
             yield pd.DataFrame({"p": [acc]})
 
-    # one-row dim probe for the byte-bound collect gate (see _moment_pass9)
-    head = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    d_probe = None if head is None or head["d"] is None else head["d"]
+    d_probe = _first_vector_dim(df, vec_col)
     packed = _reduce_packed9(
         _parallelize(df.select(vec_col)).mapInPandas(
             partials, schema="p array<long>"
@@ -1813,27 +1746,17 @@ def embedding_cluster_stats(
     integer dot itself, so EMB_CLUSTER_STATS_SQL replays training AND
     assignment bit-for-bit. ann_ivf shares this quantizer since r10 (its
     recall panel pins the floors); invariants remain pytest-pinned."""
-    from lakeside_spark.operators.kmeans_replay import (
-        _snap9i,
-        spherical_kmeans_snapped,
-        unit9,
-    )
+    from lakeside_spark.operators.kmeans_replay import _snap9i, unit9
 
     spark = emb.sparkSession
     out_schema = (
         "cell int, n_vectors bigint, mean_cos double, min_cos double, "
         "keep_rate double"
     )
-    sample = (
-        emb.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(train_sample)
-        .collect()
-    )
-    if not sample:
+    mat = _train_mat_sample(emb, id_col, vec_col, train_sample)
+    if mat is None:
         return spark.createDataFrame([], schema=out_schema)
-    mat = np.array([r[1] for r in sample], dtype=np.float64)
-    cents9 = spherical_kmeans_snapped(unit9(mat), n_cells)
+    cents9 = ivf_quantizer(mat, n_cells)
     bc = spark.sparkContext.broadcast(cents9.astype(np.float64) / 1e9)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1907,23 +1830,13 @@ def semdedup(
     test is an integer compare against round(threshold·1e9) — so
     SEMDEDUP_SQL replays training, assignment AND the per-cell greedy
     scan (a lockstep recursive CTE) bit-for-bit."""
-    from lakeside_spark.operators.kmeans_replay import (
-        _snap9i,
-        spherical_kmeans_snapped,
-        unit9,
-    )
+    from lakeside_spark.operators.kmeans_replay import _snap9i, unit9
 
     spark = emb.sparkSession
-    sample = (
-        emb.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(train_sample)
-        .collect()
-    )
-    if not sample:
+    mat = _train_mat_sample(emb, id_col, vec_col, train_sample)
+    if mat is None:
         return spark.createDataFrame([], schema="vec_id bigint, cell int, max_kept_cos double")
-    mat = np.array([r[1] for r in sample], dtype=np.float64)
-    cents9 = spherical_kmeans_snapped(unit9(mat), n_cells)
+    cents9 = ivf_quantizer(mat, n_cells)
     thr9 = int(_snap9i(np.array([threshold]))[0])
     bc = spark.sparkContext.broadcast(cents9.astype(np.float64) / 1e9)
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import normalized, shingles, words
 
 # marker stopwords per language; priority order breaks score ties
@@ -184,16 +185,12 @@ def ngram_novelty(
         ),
         bytes_per_task=64 << 10,
     )
-    # materialized once at the per-doc shingle-ARRAY grain (eager
-    # localCheckpoint): the exploded stream has two consumers (the
-    # DF-count shuffle and the scoring join), and without it each re-runs
-    # the shingle-building codegen — the dominant cost — from the scan.
-    # Re-exploding the array is cheap; blocks ≈ corpus text sized, spill
-    # to disk, and are context-cleaned once the result frame is dropped
-    # (persist leaked a CacheManager entry per call, r13).
-    arrs = src.select(
-        "doc_id", shingles("__t", n).alias("__ngs")
-    ).localCheckpoint(eager=True)
+    # checkpointed at the per-doc shingle-ARRAY grain: the exploded
+    # stream has two consumers (the DF-count shuffle and the scoring
+    # join), and without it each re-runs the shingle-building codegen —
+    # the dominant cost — from the scan. Re-exploding the array is cheap;
+    # blocks ≈ corpus text sized, spill to disk.
+    arrs = M.checkpointed(src.select("doc_id", shingles("__t", n).alias("__ngs")))
     pairs = arrs.select("doc_id", F.explode("__ngs").alias("ng"))
     common = (
         pairs.groupBy("ng")
@@ -347,16 +344,12 @@ def bigram_nll(
         bytes_per_task=64 << 10,
     )
     ws = F.filter(words("__t"), lambda w: w.isNotNull() & (w != F.lit("")))
-    # materialized once (eager localCheckpoint): five consumers below
-    # (firsts x2, pairs-derived uni/big/ctx/scoring) would each re-run
-    # the regexp tokenize — the dominant per-task cost — where
-    # re-exploding the token array is cheap. Token-array-sized (≈ corpus
-    # text), spills to disk; context-cleaned once the result frame is
-    # dropped (persist leaked a CacheManager entry per call, r13).
-    seqs = (
-        raw.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") > 0)
-        .localCheckpoint(eager=True)
+    # checkpointed: five consumers below (firsts x2, pairs-derived
+    # uni/big/ctx/scoring) would each re-run the regexp tokenize — the
+    # dominant per-task cost — where re-exploding the token array is
+    # cheap. Token-array-sized (≈ corpus text), spills to disk.
+    seqs = M.checkpointed(
+        raw.select("doc_id", ws.alias("ws")).filter(F.size("ws") > 0)
     )
     firsts = seqs.select(
         "doc_id", F.try_element_at("ws", F.lit(1)).alias("w")
@@ -571,14 +564,14 @@ def collocations(
     explode was a 65× outlier) counts unigrams AND bigrams per batch and
     emits pre-aggregated (a, b, c) partials — unigram rows carry b=NULL —
     so the single shuffle moves batch-vocabulary-sized partials, not one
-    row per token. The merged count table is persisted (it is
+    row per token. The merged count table is held for the call (it is
     vocabulary-sized, not corpus-sized), N derives from sum(c_ab) over
     the unfiltered bigram counts (no extra corpus pass), and the final
-    top-k (k rows) is localized so the cache can be unpersisted before
-    returning — no cache handle escapes. Counts are exact integers; each
-    PMI is a single ln rounded to 6 (the c_a·c_b denominator multiplies
-    in DOUBLE — at ~1e11-count stopwords a long product would wrap), so
-    the oracle compare is safe (no float summation anywhere).
+    top-k (k rows) is localized so no read of the released cache
+    escapes. Counts are exact integers; each PMI is a single ln rounded
+    to 6 (the c_a·c_b denominator multiplies in DOUBLE — at ~1e11-count
+    stopwords a long product would wrap), so the oracle compare is safe
+    (no float summation anywhere).
 
     Output: (a, b, c_ab, pmi) — the k highest-PMI pairs with
     c_ab ≥ min_count, ties broken lexicographically.
@@ -588,10 +581,9 @@ def collocations(
     import numpy as np
     import pandas as pd
 
-    counts = _pmi_count_table(docs, text_col).persist()
     spark = docs.sparkSession
     out_schema = "a string, b string, c_ab bigint, pmi double"
-    try:
+    with M.held(_pmi_count_table(docs, text_col)) as counts:
         # Fast path: the SCORED table is vocabulary-sized (bigram types
         # with c ≥ min_count), not corpus-sized — when it fits under the
         # gate, ONE take() both decides and delivers (unigrams, sentinel
@@ -681,8 +673,6 @@ def collocations(
             .withColumn("pmi", F.round("pmi", 6))
         )
         top = scored.orderBy(F.col("pmi").desc(), "a", "b").limit(k).collect()
-    finally:
-        counts.unpersist()
     return spark.createDataFrame(
         top, schema="a string, b string, c_ab bigint, pmi double"
     )

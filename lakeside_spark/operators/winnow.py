@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark.operators.repetition import _normalize_py
 
 
@@ -114,18 +115,13 @@ def winnow_overlap(
     are dropped before pairing (boilerplate guard; a print shared by
     thousands of docs identifies a template, not a pair — the df-cut is
     the published practice in MOSS-scale deployments)."""
-    # materialize the thin (doc_id, fp) frame once (eager localCheckpoint):
-    # the df-cut aggregation and BOTH sides of the fp self-join reference
-    # it, and without it each consumer re-runs the Python winnow kernel
-    # from the text scan (4 MapInPandas nodes in the r12 before-plan).
-    # Fingerprint density is ~2/(w+1) of the gram stream, so the blocks
-    # are a small fraction of corpus text. localCheckpoint, not persist
-    # (r13): the persisted frame was never unpersisted, so CacheManager
-    # held it for the session and served it to every later identical plan
-    # — the checkpoint is owned by the returned frame and context-cleaned.
-    fps = winnow_fingerprints(docs, k, w, text_col, id_col).localCheckpoint(
-        eager=True
-    )
+    # checkpoint the thin (doc_id, fp) frame: the df-cut aggregation and
+    # BOTH sides of the fp self-join reference it, and without it each
+    # consumer re-runs the Python winnow kernel from the text scan (4
+    # MapInPandas nodes in the r12 before-plan). Fingerprint density is
+    # ~2/(w+1) of the gram stream, so the blocks are a small fraction of
+    # corpus text.
+    fps = M.checkpointed(winnow_fingerprints(docs, k, w, text_col, id_col))
     # r12: the df-cut + fp self-join + pair groupBy collapse into the
     # shared sparse Gram kernel (operators/dedup._gram_pair_counts,
     # measure="count": |shared prints| ≥ min_shared, max_df applied to

@@ -200,10 +200,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeside_spark.operators.similarity import ann_ivf as _ann_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # no cache_key (r13): a single call trains its quantizer once anyway;
-    # the sf_dir-keyed module cache only served RETRAINING-FREE repeat
-    # calls — including the bench's second timed iteration, which must
-    # pay the full cost from the parquet inputs
     return _ann_ivf(
         emb, emb.filter(F.col("vec_id") < 5), k=5, n_cells=16, n_probe=6,
     )
@@ -221,7 +217,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeside_spark.operators.similarity import ann_pq as _ann_pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # no cache_key (r13): see ann_ivf — repeat calls must retrain
     return _ann_pq(
         emb, emb.filter(F.col("vec_id") < 5), k=5, m_subs=16, n_codes=64,
     )
@@ -841,40 +836,40 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from lakeside_spark.operators.similarity import (
+        _train_mat_sample,
         ann_ivf as _ivf,
         ann_lsh as _lsh,
         ann_pq as _pq,
         ann_sq8 as _sq8,
         cosine_topk,
+        ivf_quantizer,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 20)
-    # per-CALL cache scope (r13): the key is a fresh uuid so the panel's
-    # siblings (ivf↔ivf_ma quantizer, pq↔pq_opq training sample) still
-    # train exactly once WITHIN this call, but a later call — the bench's
-    # second timed iteration — retrains from the parquet inputs instead
-    # of reading a module-level memo keyed on the testdata path; the
-    # entries are purged before returning
-    import uuid as _uuid
-
-    ck = f"recall-panel-{_uuid.uuid4()}"
+    # train the shared state SYNCHRONOUSLY, once per call, so every
+    # builder below is independent and the pool runs all seven jobs truly
+    # concurrently: the id-ordered training sample (fed to the snapped
+    # ivf quantizer and the pq codebooks) and the ivf coarse quantizer
+    # that ivf and ivf_ma share. Chaining ivf_ma behind ivf (the r11
+    # shape) put ~2s of index build on the critical path to protect a
+    # 0.5s driver-side k-means (r13 profile: ivf+ivf_ma serial 3.6s was
+    # the longest chain ≈ the whole key's 4.5s quiet floor).
+    mat = _train_mat_sample(emb, "vec_id", "embedding", 10_000)
+    cents9 = None if mat is None else ivf_quantizer(mat, 16)
     # The panel rows are independent Spark jobs over the same corpus —
     # submit them from driver threads so local/cluster task slots stay
-    # saturated instead of paying seven serial job latencies. The IVF
-    # pair shares one trained coarse quantizer and the PQ pair one
-    # training sample via cache_key (trained on first use; the two
-    # phases below order the cache writer before its reader).
+    # saturated instead of paying seven serial job latencies.
     builders = {
         "lsh": lambda: _lsh(emb, qs, k=5),
-        "ivf": lambda: _ivf(emb, qs, k=5, cache_key=ck),
+        "ivf": lambda: _ivf(emb, qs, k=5, centroids9=cents9),
         # SPANN-style boundary replication: x2 index, same probe fan-out
-        "ivf_ma": lambda: _ivf(emb, qs, k=5, n_assign=2, cache_key=ck),
-        "pq": lambda: _pq(emb, qs, k=5, cache_key=ck),
+        "ivf_ma": lambda: _ivf(emb, qs, k=5, n_assign=2, centroids9=cents9),
+        "pq": lambda: _pq(emb, qs, k=5, train_mat=mat),
         # the OPQ pre-rotation variant, reported side-by-side so the
         # rotation's (non-)benefit on this corpus is a measured row, not
         # a docstring claim (isotropic panels: ±0.05; anisotropic: wins)
-        "pq_opq": lambda: _pq(emb, qs, k=5, rotation="opq", cache_key=ck),
+        "pq_opq": lambda: _pq(emb, qs, k=5, rotation="opq"),
         "sq8": lambda: _sq8(emb, qs, k=5),
     }
 
@@ -882,38 +877,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = builders[name]()
         return df.columns, df.collect()
 
-    # warm the shared training state SYNCHRONOUSLY so every builder below
-    # is independent and the pool runs all seven jobs truly concurrently:
-    # the two sample collects (fed to the snapped ivf/pq quantizers and
-    # the float OPQ variant) AND the ivf coarse quantizer itself — ivf and
-    # ivf_ma share its cache entry, and chaining ivf_ma behind ivf (the
-    # r11 shape) put ~2s of index build on the critical path to protect a
-    # 0.5s driver-side k-means (r13 profile: ivf+ivf_ma serial 3.6s was
-    # the longest chain ≈ the whole key's 4.5s quiet floor). pq and
-    # pq_opq cache under DIFFERENT keys (rotation is in the key), so they
-    # never shared training and their chain was pure serialization.
-    from lakeside_spark.operators.similarity import (
-        _ivf_centroids9,
-        _train_mat_sample,
-        _train_unit_sample,
-    )
-
-    _train_mat_sample(emb, "vec_id", "embedding", 10_000, ck)
-    _train_unit_sample(emb, "embedding", 10_000, ck)
-    _ivf_centroids9(emb, "vec_id", "embedding", 16, 10_000, ck)
-
     with ThreadPoolExecutor(max_workers=7) as pool:
         f_exact = pool.submit(lambda: cosine_topk(emb, qs, k=5).collect())
         futs = {m: pool.submit(run, m) for m in builders}
         exact = {(r["q_id"], r["n_id"]): r["cos"] for r in f_exact.result()}
         results = {m: f.result() for m, f in futs.items()}
-
-    # drop this call's training entries (small numpy arrays, but a
-    # per-call uuid key would otherwise accumulate one set per call)
-    from lakeside_spark.operators.similarity import _CODEBOOK_CACHE
-
-    for k in [k for k in _CODEBOOK_CACHE if ck in k]:
-        _CODEBOOK_CACHE.pop(k, None)
 
     rows = []
     for method in sorted(results):

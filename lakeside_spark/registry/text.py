@@ -9,6 +9,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark import schema as S
 from lakeside_spark.ast.formula import eval_formula, parse_formula
 from lakeside_spark.ast.model import (
@@ -164,9 +165,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize+shingle pass over the whole table (r13): both sides
     # split one table, so shingling per side ran the kernel twice (1.32s
     # vs 0.57s for the single pass at sf0.1 — tools/incremental_profile).
-    # The checkpointed thin (doc_id, shingle) frame is filtered per side;
-    # its blocks are context-cleaned once the result frame is dropped.
-    ex_all = _shingled_rows(docs, "text", "doc_id", 3).localCheckpoint(eager=True)
+    # The checkpointed thin (doc_id, shingle) frame is filtered per side.
+    ex_all = M.checkpointed(_shingled_rows(docs, "text", "doc_id", 3))
     return minhash_lsh_match(
         index,
         incoming,
@@ -1834,9 +1834,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM drop_ids)""",
 )
 
 
-def corpus_curate(
-    spark: SparkSession, sf_dir: str, eager: bool = True
-) -> DataFrame:
+def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full training-data curation pipeline in one query: quality gate
     (score ≥ 0.5, length band) → Gopher repetition/shape gate → benchmark
     decontamination (eval split = doc_id % 20 == 0) → near-dup removal
@@ -1861,35 +1859,23 @@ def corpus_curate(
         & (F.col("doc_id") % 20 != 0)
         & (quality_expr("text") >= 0.5)
     )
-    # materialize the gate-survivor frame once (eager localCheckpoint):
-    # it feeds THREE consumers — the decontamination hits build (via
-    # _overlap_hits), the jaccard shingle materialization, and the final
-    # anti-join's left side — and without it each one re-runs the Gopher
-    # Arrow kernel from the scan (3 MapInPandas chains in the r12
-    # before-plan). Gate survivors only (quality+length+split already
-    # applied at the scan), a corpus fraction. localCheckpoint, not
-    # persist (r13): the persisted frame was never unpersisted, so
-    # CacheManager kept it for the session lifetime — checkpoint blocks
-    # are owned by the returned frame and context-cleaned once dropped.
-    gated = gopher_filter(pre, keep=("lang", "source", "n_chars", "text"))
-    if eager:
-        gated = gated.localCheckpoint(eager=True)
-    else:
-        # plan-inspection escape hatch (the dedup eager=False convention):
-        # the lazy plan keeps the gate filters and the single Gopher
-        # kernel visible; the duplicate subtrees it would execute with
-        # are exactly what the eager checkpoint exists to avoid
-        gated = gated.persist()
+    # checkpoint the gate-survivor frame: it feeds THREE consumers — the
+    # decontamination hits build (via _overlap_hits), the jaccard shingle
+    # materialization, and the final anti-join's left side — and without
+    # it each one re-runs the Gopher Arrow kernel from the scan (3
+    # MapInPandas chains in the r12 before-plan). Gate survivors only
+    # (quality+length+split already applied at the scan), a corpus
+    # fraction.
+    gated = M.checkpointed(
+        gopher_filter(pre, keep=("lang", "source", "n_chars", "text"))
+    )
     ev = docs.filter(F.col("doc_id") % 20 == 0)
-    kept = decontaminate(gated, ev, n=5)
-    # materialize the decontaminated survivors once (r13): kept feeds TWO
+    # checkpoint the decontaminated survivors (r13): kept feeds TWO
     # consumers — the jaccard shingle materialization and the final
     # anti-join's left side — and without the barrier the decontamination
     # stage (gram kernel over the gated corpus + eval grams + broadcast
     # anti-join, ~1.4s of the key's 6.4s profile) runs once per consumer.
-    # Same eager/lazy contract as `gated` above.
-    if eager:
-        kept = kept.localCheckpoint(eager=True)
+    kept = M.checkpointed(decontaminate(gated, ev, n=5))
     pairs = ngram_jaccard_pairs(kept, threshold=0.12)
     clusters = connected_components(pairs)
     drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")

@@ -3,8 +3,9 @@
 Two gates read footers instead of running Spark jobs: the
 under-parallel repartition gate (operators/similarity.
 _effective_input_parallelism caps achievable scan parallelism by row-
-group count) and BM25's strategy gate (operators/bm25._metadata_count
-answers "how many rows" for a bare file scan with zero jobs). The
+group count) and the row counts of bare file scans
+(:func:`footer_row_count`: BM25's strategy gate, the derived partsupp
+table's supplier count). The
 segment lake reads its merged schema, row counts and data bytes the same
 way (:func:`lake_footers`). All encode the same policy — LOCAL
 plain-parquet files only, anything else falls back to the caller's
@@ -37,6 +38,32 @@ def local_parquet_meta(uri: str):
     if parsed.scheme not in ("file", "") or not uri.endswith(".parquet"):
         return None
     return pq.read_metadata(unquote(parsed.path) if parsed.path else uri)
+
+
+def footer_row_count(df) -> int | None:
+    """Row count of ``df`` from parquet footers, with no Spark job, when
+    its optimized plan cannot drop rows (only Project/Relation nodes) and
+    every input file is local parquet. None otherwise (filters, joins,
+    non-file relations, remote storage, more than 4096 files): the caller
+    then runs ``count()``."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for line in plan.splitlines():
+            node = line.lstrip(" +-:").split(" ", 1)[0]
+            if node and node not in ("Project", "Relation", "LogicalRelation"):
+                return None
+        files = df.inputFiles()
+        if not files or len(files) > 4096:
+            return None
+        total = 0
+        for uri in files:
+            meta = local_parquet_meta(uri)
+            if meta is None:
+                return None
+            total += meta.num_rows
+        return total
+    except Exception:  # any metadata failure: the caller counts instead
+        return None
 
 
 @dataclass(frozen=True)

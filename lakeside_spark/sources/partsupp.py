@@ -20,28 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .footers import footer_row_count
 from .tables import load_table
 
 __all__ = ["derived_partsupp", "PARTSUPP_CTE"]
 
 
-# supplier row count per (session, sf_dir): a deterministic scalar the
-# derivation needs as a literal. Folding it into the plan as a
-# single-row broadcast cross join stacked three blocking stages
-# (count → SinglePartition exchange → broadcast) in FRONT of every
-# broadcast build that consumes partsupp — ~0.8s of pure stage latency
-# on each of q2/q9/q11/q16/q20 at sf0.1. One tiny cached count job
-# replaces all of it.
-_S_COUNT: dict[tuple[str, str], int] = {}
-
-
 def _supplier_count(spark: SparkSession, sf_dir: str) -> int:
-    # keyed by applicationId, not id(spark): a GC'd session's id can be
-    # reused and would serve a stale count for a regenerated sf_dir
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _S_COUNT:
-        _S_COUNT[key] = load_table(spark, sf_dir, "supplier").count()
-    return _S_COUNT[key]
+    """The supplier row count the derivation needs as a literal, from
+    parquet footers (no Spark job). Folding it into the plan as a
+    single-row broadcast cross join stacked three blocking stages
+    (count → SinglePartition exchange → broadcast) in FRONT of every
+    broadcast build that consumes partsupp — ~0.8s of pure stage latency
+    on each of q2/q9/q11/q16/q20 at sf0.1."""
+    supplier = load_table(spark, sf_dir, "supplier")
+    n = footer_row_count(supplier)
+    return supplier.count() if n is None else n
 
 
 def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeside_spark import materialize as M
 from lakeside_spark import schema as S
 
 
@@ -257,19 +258,19 @@ def streaming_index_match(
     rows = num_hashes // bands
 
     # static index: same kernel/groupBy path as the batch op, built once
+    # here — checkpointed, because every micro-batch of the returned
+    # stream reads it for as long as the query runs
     ex_ix = _shingled_rows(index_docs, text_col, id_col, n)
     ix_sets = ex_ix.groupBy("doc_id").agg(F.collect_set("shingle").alias("ix_shs"))
     sig_ix = minhash_signatures(
         index_docs, num_hashes, n, text_col, id_col, shingle_rows=ex_ix
     )
-    index_bands = (
-        sig_ix.join(ix_sets, "doc_id")
-        .select(
+    index_bands = M.checkpointed(
+        sig_ix.join(ix_sets, "doc_id").select(
             F.col("doc_id").alias("ix_id"),
             "ix_shs",
             F.explode(_band_keys(F.col("sig"), bands, rows)).alias("band"),
         )
-        .persist()
     )
 
     def mh(a: int, b: int):

@@ -701,22 +701,37 @@ def test_bm25_strategies_agree(spark, sf_dir):
     )
 
 
-def test_bm25_gate_metadata_count(spark, sf_dir):
-    """The strategy gate's first call on a bare file-backed scan reads
-    parquet footers — zero Spark jobs — and agrees with count(); any
-    row-dropping plan (a filter) falls back to a real count."""
-    from lakeside_spark.operators.bm25 import _gate_count, _metadata_count
+def test_bm25_gate_metadata_count(spark, sf_dir, tmp_path):
+    """The strategy gate on a bare file-backed scan reads parquet
+    footers — zero Spark jobs, also for a zero-row table — and agrees
+    with count(); any row-dropping plan (a filter) falls back to a real
+    count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeside_spark.operators.bm25 import _gate_count
+    from lakeside_spark.sources.footers import footer_row_count
     from lakeside_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    meta = _metadata_count(docs)
     true = docs.count()
-    assert meta == true
-    assert _gate_count(docs) == true
+    pq.write_table(
+        pa.table({"doc_id": pa.array([], pa.int64()), "text": pa.array([], pa.string())}),
+        tmp_path / "empty.parquet",
+    )
+    empty = spark.read.parquet(str(tmp_path / "empty.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-gate", "footer row count")
+    try:
+        counts = (footer_row_count(docs), _gate_count(docs), _gate_count(empty))
+    finally:
+        sc.setJobGroup(None, None)
+    assert counts == (true, true, 0)
+    assert list(sc.statusTracker().getJobIdsForGroup("bm25-gate")) == []
     # a filtered plan can drop rows: footers can't answer it
-    assert _metadata_count(docs.filter("doc_id >= 5")) is None
-    # LRU memo keyed by (applicationId, semanticHash): repeat hit
-    assert _gate_count(docs) == true
+    filtered = docs.filter("doc_id >= 5")
+    assert footer_row_count(filtered) is None
+    assert _gate_count(filtered) == filtered.count()
 
 
 def test_retrieval_eval_dense_anchor_and_bounds(spark, sf_dir):
@@ -972,43 +987,31 @@ def test_ann_pq_recall_and_determinism(spark, sf_dir):
     assert all(v == 5 for v in per_q.values())
 
 
-def test_ann_codebook_cache_skips_retraining(spark, sf_dir, monkeypatch):
-    """With cache_key set, a second ann_pq/ann_ivf call must reuse the
-    trained quantizer: same answer, zero k-means calls (the per-call
-    training was the bench's slowest single cost)."""
+def test_ann_trained_state_skips_retraining(spark, sf_dir, monkeypatch):
+    """ann_pq/ann_ivf given their trained state (the id-ordered training
+    sample, the coarse quantizer) must not train again and must answer
+    exactly as a call that trains for itself."""
     from lakeside_spark.operators import similarity as sim
 
-    sim._CODEBOOK_CACHE.clear()
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    key = "test:embeddings"
-    cold = sorted(
-        tuple(r)
-        for r in sim.ann_pq(emb, q, k=5, m_subs=16, n_codes=64, cache_key=key).collect()
-    )
-    sim.ann_ivf(emb, q, k=5, n_cells=8, cache_key=key).collect()
-    kinds = sorted(k[0] for k in sim._CODEBOOK_CACHE)
-    # two trained quantizers + ONE ordered training sample shared
-    # between the snapped trainers
-    assert kinds == ["ivf", "msample", "pq"], kinds
 
-    def boom(*a, **kw):  # training must not run again on a warm cache
-        raise AssertionError("k-means retrained despite warm codebook cache")
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
 
-    monkeypatch.setattr(sim, "pq_train_snapped", boom)
+    cold_pq = rows(sim.ann_pq(emb, q, k=5, m_subs=16, n_codes=64))
+    cold_ivf = rows(sim.ann_ivf(emb, q, k=5, n_cells=8))
+    mat = sim._train_mat_sample(emb, "vec_id", "embedding", 10_000)
+    cents9 = sim.ivf_quantizer(mat, 8)
+
+    def boom(*a, **kw):
+        raise AssertionError("quantizer retrained despite trained state")
+
     monkeypatch.setattr(sim, "spherical_kmeans_snapped", boom)
-    warm = sorted(
-        tuple(r)
-        for r in sim.ann_pq(emb, q, k=5, m_subs=16, n_codes=64, cache_key=key).collect()
-    )
-    assert warm == cold
-    sim.ann_ivf(emb, q, k=5, n_cells=8, cache_key=key).collect()
-    # a different corpus name is a cache miss and would retrain
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError, match="retrained"):
-        sim.ann_pq(emb, q, k=5, m_subs=16, n_codes=64, cache_key="other").collect()
-    sim._CODEBOOK_CACHE.clear()
+    monkeypatch.setattr(sim, "_train_mat_sample", boom)
+    assert rows(sim.ann_ivf(emb, q, k=5, n_cells=8, centroids9=cents9)) == cold_ivf
+    # the pq codebooks train from the passed sample; no sample collect
+    assert rows(sim.ann_pq(emb, q, k=5, m_subs=16, n_codes=64, train_mat=mat)) == cold_pq
 
 
 def test_source_cap_invariants(spark, sf_dir):
@@ -2665,7 +2668,7 @@ def test_containment_catches_doc_inside_doc(spark):
     assert jac.get((1, 2), 0.0) < 0.12  # below the dedup threshold
 
 
-def test_containment_prefix_gate(spark):
+def test_containment_prefix_gate(spark, monkeypatch):
     """Above the corpus-size gate the auto strategy flips to prefix-
     filter candidates + bounded verify: output ⊆ exact, the planted
     contained-doc pair is recovered with the identical containment
@@ -2688,13 +2691,15 @@ def test_containment_prefix_gate(spark):
             df, threshold=0.5, strategy="exact"
         ).collect()
     }
-    # exact_max_docs=0 forces the auto probe over the gate; eager=False
-    # keeps the lazy plan inspectable (the eager localCheckpoint would
-    # truncate it to a checkpoint scan, r13)
-    gated = ngram_containment_pairs(
-        df, threshold=0.5, exact_max_docs=0, eager=False
-    )
-    plan = gated._jdf.queryExecution().executedPlan().toString()
+    # exact_max_docs=0 forces the auto probe over the gate; an identity
+    # checkpoint keeps the lazy plan inspectable (the checkpoint would
+    # truncate it to a checkpoint scan)
+    from lakeside_spark import materialize
+
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "checkpointed", lambda df: df)
+        gated = ngram_containment_pairs(df, threshold=0.5, exact_max_docs=0)
+        plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
     got = {
         (r["id_a"], r["id_b"]): r["containment"] for r in gated.collect()

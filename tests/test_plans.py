@@ -67,14 +67,23 @@ def test_asof_nearest_single_shuffle_no_join(spark, sf_dir):
     assert plan.count("Sort ") == 1, plan
 
 
-def test_jaccard_join_path_no_cartesian(spark, sf_dir):
+def _lazy_checkpoints(monkeypatch):
+    """Plan tests inspect the lineage a checkpoint would cut: swap
+    materialize.checkpointed for the identity."""
+    from lakeside_spark import materialize
+
+    monkeypatch.setattr(materialize, "checkpointed", lambda df: df)
+
+
+def test_jaccard_join_path_no_cartesian(spark, sf_dir, monkeypatch):
     from lakeside_spark.operators.dedup import ngram_jaccard_pairs
     from lakeside_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    # eager=False: inspect the real join plan (eager localCheckpoint
-    # would truncate the lineage to a checkpoint scan)
-    df = ngram_jaccard_pairs(docs, 0.12, strategy="join", eager=False)
+    # inspect the real join plan (the checkpoint would truncate the
+    # lineage to a checkpoint scan)
+    _lazy_checkpoints(monkeypatch)
+    df = ngram_jaccard_pairs(docs, 0.12, strategy="join")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
@@ -238,15 +247,32 @@ def test_parallelize_passthrough_when_already_parallel(spark, sf_dir):
     assert plan.count("Exchange") == 1, plan[:1500]
 
 
-def test_corpus_curate_single_scan_gates(spark, sf_dir):
+def test_corpus_curate_single_scan_gates(spark, sf_dir, monkeypatch):
     """The quality/length/split gates must be filters at the documents
     scan (no semi-joins against derived projections), and decontamination
-    must broadcast its dirty-id side. eager=False keeps the gate subtree
-    inspectable (the default eager localCheckpoint truncates it, r13)."""
+    must broadcast its dirty-id side. A checkpoint truncates the gate
+    subtree, so the first two are swapped out: the gate survivors are
+    persisted instead (the plan still shows them shared) and the
+    decontaminated survivors stay lazy; later checkpoints (the dedup
+    pairs) run as in production."""
+    from lakeside_spark import materialize
     from lakeside_spark.registry.text import corpus_curate
 
-    df = corpus_curate(spark, sf_dir, eager=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    real, calls = materialize.checkpointed, []
+
+    def inspectable(df):
+        calls.append(df)
+        if len(calls) == 1:
+            return df.persist()
+        return df if len(calls) == 2 else real(df)
+
+    monkeypatch.setattr(materialize, "checkpointed", inspectable)
+    try:
+        df = corpus_curate(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        calls[0].unpersist()
+    monkeypatch.undo()
     assert "LeftSemi" not in plan, plan
     scan_lines = [l for l in plan.splitlines() if "FileScan" in l and "documents" in l]
     assert scan_lines, plan
@@ -482,11 +508,11 @@ def test_text_quality_classifier_plan(spark, sf_dir):
     assert "Sort" not in body, "no global sort above the top-k"
 
 
-def test_dedup_incremental_no_cartesian(spark, sf_dir):
+def test_dedup_incremental_no_cartesian(spark, sf_dir, monkeypatch):
     """Incremental shard-vs-index dedup must candidate-bound everything:
     banded equi-join for candidates (no cartesian / BNLJ anywhere) and
-    verification joined through the candidate list. Built with
-    eager=False: the production path's localCheckpoint truncates the
+    verification joined through the candidate list. Built with lazy
+    checkpoints: the production path's checkpoint truncates the
     lineage to a Scan ExistingRDD, which would make this guard
     unfalsifiable — the lazy plan is the same logical shape minus the
     checkpoint."""
@@ -498,7 +524,8 @@ def test_dedup_incremental_no_cartesian(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     index = docs.filter(F.col("doc_id") % 10 != 0)
     incoming = docs.filter(F.col("doc_id") % 10 == 0)
-    df = minhash_lsh_match(index, incoming, threshold=0.12, eager=False)
+    _lazy_checkpoints(monkeypatch)
+    df = minhash_lsh_match(index, incoming, threshold=0.12)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" not in plan, "checkpoint leaked into lazy path"
     assert "CartesianProduct" not in plan, plan
