@@ -17,7 +17,6 @@ from lakeside_spark.session import get_spark
 
 HEADLINE = [
     "ts_count",
-    "ts_count_salted",
     "ts_multi_agg",
     "ts_groupby",
     "ts_percentile",

@@ -14,9 +14,16 @@ plan: Catalyst pushes the timestamp + tag predicates into the parquet scan
 Scale notes: every stage is built-in Column expressions (whole-stage
 codegen); the only shuffle is the chart groupBy on (step_ts, name, groups) —
 the natural key, already well distributed because step_ts has high
-cardinality. Percentile/cardinality default to exact (for oracle parity) and
-switch to sketch-based approx (``approx=True``) for the 100 TB path, which
-also unlocks partial aggregation for them.
+cardinality. A hot (step, name) key needs no salting: count/sum/min/max/avg
+aggregate partially map-side, so each input partition ships at most one
+row per key into the one Exchange. Like the reference, which hands each
+segment's SQL to DuckDB with no plan hints, the engine takes no plan
+options: the only choice left to callers is answer semantics —
+percentile/cardinality default to exact (for oracle parity) and switch to
+sketch-based approx (``approx=True``) for the 100 TB path, which also
+unlocks partial aggregation for them. Results come back unordered; the
+reference's time-ordered delivery is a presentation concern (consumers
+that need order sort within their own window specs).
 """
 
 from __future__ import annotations
@@ -65,41 +72,12 @@ def _agg_column(
 class QueryEngine:
     """Runs BaseExprs / tag queries over a canonical telemetry DataFrame."""
 
-    #: session-wide default for chart-aggregation salting — set it once
-    #: (spark.conf.set) and every QueryEngine constructed without an
-    #: explicit salt_partitions picks it up. AQE's skew handling covers
-    #: shuffle JOINS only, not aggregations, so a deployment that knows its
-    #: telemetry has dominant hot (step, name) keys opts the whole fleet in
-    #: here instead of threading a parameter through every call site.
-    SALT_CONF = "spark.lakeside.chart.saltPartitions"
-
     def __init__(
-        self,
-        spark,
-        step_ms: int = S.DEFAULT_STEP_MS,
-        approx: bool = False,
-        salt_partitions: int | None = None,
-        order_by_step: bool = False,
+        self, spark, step_ms: int = S.DEFAULT_STEP_MS, approx: bool = False
     ):
         self.spark = spark
         self.step_ms = step_ms
         self.approx = approx
-        #: >1 enables salted two-phase chart aggregation for hot-key skew
-        #: (a single dominant metric name lands on one reducer otherwise);
-        #: exact for count/sum/avg/min/max, ignored for sketch aggs.
-        #: None (default) defers to the SALT_CONF session conf.
-        if salt_partitions is None:
-            try:
-                salt_partitions = int(spark.conf.get(self.SALT_CONF, "1"))
-            except (ValueError, TypeError):
-                salt_partitions = 1
-        self.salt = salt_partitions
-        #: opt-in time-ordered chart delivery, restoring the reference's
-        #: SegmentSequencer/SequencingStrategy contract (results streamed to
-        #: the consumer in step order, core SegmentSequencer.scala). Default
-        #: off: a global sort is a rangepartitioning Exchange on every chart
-        #: query, and ordering is a presentation concern for most callers.
-        self.order_by_step = order_by_step
 
     # -- pipeline stages ----------------------------------------------------
 
@@ -170,6 +148,30 @@ class QueryEngine:
             return value / step_seconds
         return value
 
+    @staticmethod
+    def _windowed(
+        df: DataFrame, start_ts: int | None, end_ts: int | None
+    ) -> DataFrame:
+        """The request's [start_ts, end_ts) timestamp window."""
+        if start_ts is not None:
+            df = df.filter(F.col(S.TIMESTAMP) >= F.lit(start_ts))
+        if end_ts is not None:
+            df = df.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
+        return df
+
+    @staticmethod
+    def _chart_keys(
+        df: DataFrame, group_bys: tuple[str, ...], step_ms: int
+    ) -> tuple[tuple[str, ...], list[Column]]:
+        """The chart groupBy keys (step_ts, name, *group_bys), with the
+        group-bys cut to the columns ``df`` has."""
+        group_bys = tuple(g for g in group_bys if g in df.columns)
+        step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
+        keys = [step_col.alias(S.STEP_TS)]
+        if S.NAME in df.columns:
+            keys.append(F.col(S.NAME))
+        return group_bys, keys + [F.col(g) for g in group_bys]
+
     # -- public API ----------------------------------------------------------
 
     def run(
@@ -184,12 +186,7 @@ class QueryEngine:
         (step_ts, value, name, *group_bys); exemplar exprs yield ordered
         limited raw rows."""
         step_ms = step_ms or self.step_ms
-        if start_ts is not None:
-            df = df.filter(F.col(S.TIMESTAMP) >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
-
-        df = self._prepared(expr, df)
+        df = self._prepared(expr, self._windowed(df, start_ts, end_ts))
 
         if expr.chart:
             return self._run_chart(expr, df, step_ms)
@@ -197,8 +194,7 @@ class QueryEngine:
 
     def _run_chart(self, expr: BaseExpr, df: DataFrame, step_ms: int) -> DataFrame:
         chart = expr.chart
-        group_bys = tuple(g for g in chart.group_bys if g in df.columns)
-        step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
+        group_bys, keys = self._chart_keys(df, chart.group_bys, step_ms)
         if expr.dataset == S.DATASET_METRICS and chart.rollup:
             # metrics arrive pre-rolled-up per ingest step (rollup_sum,
             # rollup_avg, ...); the chart re-aggregates the rollup column at
@@ -211,59 +207,12 @@ class QueryEngine:
 
         agg = _agg_column(chart.aggregation, target, group_bys, self.approx)
         value = self._chart_transform(expr, agg.cast("double"), step_ms)
-
-        keys = [step_col.alias(S.STEP_TS)]
         if chart.aggregation == S.CARDINALITY_ESTIMATE_AGGREGATION:
             # ces consumes the groupBys as the distinct key; the estimate is
             # global per step (reference: HLLAggregator emits empty tags,
             # PushDownAggregatorStage keys only on moduloTs)
-            pass
-        else:
-            if S.NAME in df.columns:
-                keys.append(F.col(S.NAME))
-            keys += [F.col(g) for g in group_bys]
-        if self.salt > 1 and chart.aggregation in (S.COUNT, S.SUM, S.AVG, S.MIN, S.MAX):
-            # two-phase with a salt key: partial aggregates spread a hot
-            # (step_ts, name) key over `salt` reducers, the merge phase is
-            # tiny. Exact: count/sum/min/max re-aggregate losslessly; avg
-            # carries (sum, count). Sketch aggs (pNN, ces) skip salting —
-            # their partial buffers already combine map-side.
-            salt_col = F.pmod(F.monotonically_increasing_id(), F.lit(self.salt)).alias(
-                "__salt"
-            )
-            partials = {
-                S.COUNT: [F.count(target).alias("__c")],
-                S.SUM: [F.sum(target).alias("__s")],
-                S.MIN: [F.min(target).alias("__s")],
-                S.MAX: [F.max(target).alias("__s")],
-                S.AVG: [F.sum(target).alias("__s"), F.count(target).alias("__c")],
-            }[chart.aggregation]
-            merged = {
-                S.COUNT: F.sum("__c"),
-                S.SUM: F.sum("__s"),
-                S.MIN: F.min("__s"),
-                S.MAX: F.max("__s"),
-                S.AVG: F.sum("__s") / F.sum("__c"),
-            }[chart.aggregation]
-            value = self._chart_transform(expr, merged.cast("double"), step_ms)
-            part = df.groupBy(*keys, salt_col).agg(*partials)
-            final_keys = [S.STEP_TS] + [
-                c for c in part.columns if c not in ("__salt", "__s", "__c", S.STEP_TS)
-            ]
-            return self._sequenced(part.groupBy(*final_keys).agg(value.alias(S.VALUE)))
-        # no ORDER BY by default: series ordering is presentation-layer
-        # concern (the reference sorts for SSE emission); a global sort here
-        # costs a rangepartitioning exchange on every chart query. Consumers
-        # that need order (moving windows, fill) sort within their own window
-        # specs; result comparison is order-insensitive. order_by_step=True
-        # opts back into the reference's sequenced-delivery contract.
-        return self._sequenced(df.groupBy(*keys).agg(value.alias(S.VALUE)))
-
-    def _sequenced(self, out: DataFrame) -> DataFrame:
-        """SegmentSequencer-style ordered delivery when opted in (reference:
-        core SegmentSequencer.scala / SequencingStrategy.scala — per-segment
-        results are released to the consumer in time order)."""
-        return out.orderBy(S.STEP_TS) if self.order_by_step else out
+            keys = keys[:1]
+        return df.groupBy(*keys).agg(value.alias(S.VALUE))
 
     def multi_agg(
         self,
@@ -281,14 +230,8 @@ class QueryEngine:
         measure map-side in the same buffer."""
         step_ms = step_ms or self.step_ms
         df = self._prepared(expr, df)
-        chart = expr.chart
-        group_bys = tuple(g for g in chart.group_bys if g in df.columns)
-        step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
+        group_bys, keys = self._chart_keys(df, expr.chart.group_bys, step_ms)
         target = self._chart_value_column(expr)
-        keys = [step_col.alias(S.STEP_TS)]
-        if S.NAME in df.columns:
-            keys.append(F.col(S.NAME))
-        keys += [F.col(g) for g in group_bys]
         measures = [
             self._chart_transform(
                 expr, _agg_column(a, target, group_bys, self.approx).cast("double"), step_ms
@@ -302,7 +245,7 @@ class QueryEngine:
     def _fusable(self, e: BaseExpr) -> bool:
         """A branch can join a single-scan fused aggregation when it is a
         plain simple-agg chart over the raw value column (no extractor/
-        compute/rollup/sketch agg) and salting is off."""
+        compute/rollup/sketch agg)."""
         return (
             e.chart is not None
             and e.chart.aggregation in self._FUSABLE_AGGS
@@ -310,7 +253,6 @@ class QueryEngine:
             and e.compute is None
             and e.chart.rollup is None
             and (e.chart.field_name in (None, S.VALUE))
-            and self.salt == 1
         )
 
     def _run_chart_fused(
@@ -337,17 +279,7 @@ class QueryEngine:
         for label, _ in branches[1:]:
             combined = combined | conds[label]
         df = df.filter(combined)
-        group_bys = tuple(
-            g for g in branches[0][1].chart.group_bys if g in df.columns
-        )
-        step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
-        keys = [step_col.alias(S.STEP_TS)]
-        sel_keys = [S.STEP_TS]
-        if S.NAME in df.columns:
-            keys.append(F.col(S.NAME))
-            sel_keys.append(S.NAME)
-        keys += [F.col(g) for g in group_bys]
-        sel_keys += list(group_bys)
+        _, keys = self._chart_keys(df, branches[0][1].chart.group_bys, step_ms)
         aggs = []
         for i, (label, e) in enumerate(branches):
             target = self._chart_value_column(e)
@@ -375,6 +307,7 @@ class QueryEngine:
         # per-label filter/select folds into the local relation and a
         # label's collect runs no job.
         agged = M.on_driver(df.groupBy(*keys).agg(*aggs))
+        sel_keys = agged.columns[: len(keys)]
         return {
             label: agged.filter(F.col(f"__n{i}") > 0).select(
                 *sel_keys, F.col(f"__v{i}").alias(S.VALUE)
@@ -427,11 +360,7 @@ class QueryEngine:
         )
 
         step_ms = step_ms or self.step_ms
-        scoped = df
-        if start_ts is not None:
-            scoped = scoped.filter(F.col(S.TIMESTAMP) >= F.lit(start_ts))
-        if end_ts is not None:
-            scoped = scoped.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
+        scoped = self._windowed(df, start_ts, end_ts)
 
         # single-scan fusion: same-dataset same-group-by simple-agg branches
         # aggregate together (one pass over the fact table instead of one
@@ -486,11 +415,7 @@ class QueryEngine:
         approx_count_distinct aggregation, whose partial sketches merge
         map-side exactly like the reference's union, or exact countDistinct
         for the oracle gate). Output: a single (value) row."""
-        if start_ts is not None:
-            df = df.filter(F.col(S.TIMESTAMP) >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.filter(F.col(S.TIMESTAMP) < F.lit(end_ts))
-        df = self._prepared(expr, df)
+        df = self._prepared(expr, self._windowed(df, start_ts, end_ts))
         group_bys = tuple(g for g in (expr.chart.group_bys if expr.chart else ()) if g in df.columns)
         key = F.concat_ws("|", *[F.col(g) for g in group_bys]) if group_bys else F.col(S.NAME)
         agg = F.approx_count_distinct(key) if self.approx else F.countDistinct(key)

@@ -24,7 +24,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from lakeside_spark.operators import codecs
 from lakeside_spark.operators.similarity import _parallelize
@@ -96,24 +95,6 @@ def audio_fingerprint(
             )
 
     return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
-
-
-def audio_pairs(
-    df: DataFrame,
-    max_hamming: int = 5,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Audio near-dup pairs via the shared banded hamming join."""
-    from lakeside_spark.operators.dedup import hamming_pairs
-
-    return hamming_pairs(
-        audio_fingerprint(df, binary_col, id_col),
-        max_hamming,
-        bits=BITS,
-        hash_col="afp",
-        id_col=id_col,
-    )
 
 
 def synthesize_audio(

@@ -11,12 +11,9 @@ All three are expressed as declarative DataFrame plans:
   user's first matching event; step i completes at the first matching
   event within ``window_ms`` AFTER the previous step's completion
   (cascading windows — the standard "strict funnel" definition). Shape:
-  one name-filtered scan + one user-keyed aggregation per step, chained
-  by equi-joins on the user key. Every join is user-cardinality ×
-  user-cardinality on the same key, so at 100 TB the chain is k
-  co-partitioned shuffles over *distinct-user-sized* tables — the fact
-  table is scanned once per step with the step's name predicate pushed
-  to parquet (never materialized unfiltered).
+  one step-name-IN scan (predicate pushed to parquet) + one user-keyed
+  conditional aggregation, so at 100 TB the fact table is read once and
+  the one shuffle is *distinct-user-sized*.
 - ``next_event_edges``: adjacent-event transition edges per key
   ((prev event → event) counts + mean gap). One keyed window over
   (key, ts, tiebreak) — a single shuffle; the edge table is
@@ -45,115 +42,31 @@ def funnel(
     user_col: str = "user_id",
     ts_col: str = "timestamp_ms",
     name_col: str = "name",
-    strategy: str = "agg",
 ) -> DataFrame:
     """(step, step_name, users): distinct users completing each funnel
     step in order, each step within ``window_ms`` of the previous one.
 
-    strategy="agg" (default): ONE name-filtered scan + ONE user-keyed
-    conditional aggregation collecting each step's sorted timestamps,
-    then a JVM-side HOF min-chain over the per-user arrays — all k step
-    counters come out of a single pass (measured 0.38s vs join's 0.89s
-    at sf0.1; the fold's Python workers measured 2.7s). Caveat: a
-    pathological per-user event volume (bot users) concentrates that
-    user's step timestamps in one aggregation buffer — "join" is the
-    skew-safe fallback. strategy="join": one name-filtered scan +
-    distinct-user min-agg per step, chained by user-key equi-joins —
-    each scan reads only its step's rows via parquet pushdown, nothing
-    per-user ever materializes beyond a scalar. strategy="fold": the
-    applyInPandas event-time fold (the batch twin of
-    streaming.stateful.streaming_funnel). All three implement the
-    identical min-ts-chaining semantics (property-tested equal). Every
-    step emits a row even when zero users complete it (users=0) —
-    consumers and the oracle count k rows for a k-step funnel. Step
-    names must be distinct: a repeated name is ambiguous under min-ts
-    chaining (the fold's name→step map and the join chain would
-    silently disagree), so it is rejected."""
-    if not steps:
-        raise ValueError("funnel needs at least one step")
-    if len(set(steps)) != len(steps):
-        raise ValueError(f"funnel step names must be distinct: {steps}")
-    if strategy not in ("agg", "join", "fold"):
-        raise ValueError(f"unknown funnel strategy: {strategy!r}")
-    # a NULL user id is not a user: groupBy would pool all NULL rows into
-    # one phantom "user" under agg/fold while the join chain drops them at
-    # the first equi-join — excluding them up front keeps the three
-    # strategies identical (and matches the distinct-users contract)
-    events = events.filter(F.col(user_col).isNotNull())
-    if strategy == "fold":
-        counts = _funnel_fold(events, steps, window_ms, user_col, ts_col, name_col)
-        return _zero_fill_steps(events.sparkSession, steps, counts)
-    if strategy == "agg":
-        # no zero-fill join: the melt already emits every step (zeros
-        # included) with its name as a literal — one fewer job
-        return _funnel_agg(events, steps, window_ms, user_col, ts_col, name_col)
-    per_step: list[DataFrame] = []
-    cur = (
-        events.filter(F.col(name_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t"))
-    )
-    per_step.append(cur)
-    for step_name in steps[1:]:
-        cur = (
-            events.filter(F.col(name_col) == step_name)
-            .join(cur.select(user_col, "t"), user_col)
-            .filter(
-                (F.col(ts_col) > F.col("t"))
-                & (F.col(ts_col) <= F.col("t") + F.lit(window_ms))
-            )
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("t"))
-        )
-        per_step.append(cur)
-    labeled = [
-        df.select(
-            F.lit(i + 1).cast("bigint").alias("step"),
-            F.col(user_col),
-        )
-        for i, df in enumerate(per_step)
-    ]
-    counts = (
-        reduce(DataFrame.unionAll, labeled)
-        .groupBy("step")
-        .agg(F.count("*").alias("users"))
-    )
-    return _zero_fill_steps(events.sparkSession, steps, counts)
-
-
-def _zero_fill_steps(spark, steps: list[str], counts: DataFrame) -> DataFrame:
-    """Left-join per-step user counts onto the literal step table so a
-    step nobody completes still emits (step, step_name, users=0) — the
-    funnel contract (and the oracle's UNION-of-scalars shape). The step
-    table is k rows; the join broadcasts trivially."""
-    base = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(steps)],
-        "step bigint, step_name string",
-    )
-    return base.join(counts.select("step", "users"), "step", "left").select(
-        "step",
-        "step_name",
-        F.coalesce(F.col("users"), F.lit(0)).cast("bigint").alias("users"),
-    )
-
-
-def _funnel_agg(
-    events: DataFrame,
-    steps: list[str],
-    window_ms: int,
-    user_col: str,
-    ts_col: str,
-    name_col: str,
-) -> DataFrame:
-    """Single-pass declarative funnel: one conditional aggregation
-    collects each step's sorted timestamps per user, then the strict
-    min-ts chain runs as array HOFs on the user-sized table —
+    Single pass: ONE name-filtered scan + ONE user-keyed conditional
+    aggregation collects each step's sorted timestamps per user, then
+    the strict min-ts chain runs as array HOFs on the user-sized table —
     t₁ = a₁[0], tᵢ = min{t ∈ aᵢ : tᵢ₋₁ < t ≤ tᵢ₋₁+W}. The HOFs are
     interpreted, but they run over user-count rows with per-user-sized
     arrays — the corpus-sized work is all in the codegen'd scan and the
     map-side-combined collect. A NULL previous step propagates through
     the filter to NULL, so count(tᵢ) is exactly the step-i completion
-    count."""
+    count. Limit: a pathological per-user event volume (bot users)
+    concentrates all of that user's step timestamps in one aggregation
+    buffer. Every step emits a row even when zero users complete it
+    (users=0) — consumers and the oracle count k rows for a k-step
+    funnel. Step names must be distinct: a repeated name is ambiguous
+    under min-ts chaining, so it is rejected."""
+    if not steps:
+        raise ValueError("funnel needs at least one step")
+    if len(set(steps)) != len(steps):
+        raise ValueError(f"funnel step names must be distinct: {steps}")
+    # a NULL user id is not a user: groupBy would pool all NULL rows into
+    # one phantom "user" (the distinct-users contract excludes them)
+    events = events.filter(F.col(user_col).isNotNull())
     k = len(steps)
     src = events.filter(F.col(name_col).isin(list(steps))).select(
         user_col, name_col, ts_col
@@ -198,50 +111,6 @@ def _funnel_agg(
             )
         ).alias("s")
     ).select("s.step", "s.step_name", "s.users")
-
-
-def _funnel_fold(
-    events: DataFrame,
-    steps: list[str],
-    window_ms: int,
-    user_col: str,
-    ts_col: str,
-    name_col: str,
-) -> DataFrame:
-    """One-scan funnel: filter to step-relevant rows, fold per user in
-    event-time order (greedy advance == min-ts chaining when events are
-    processed in time order — the same argument the streaming twin's
-    equivalence test pins)."""
-    step_of = {s: i + 1 for i, s in enumerate(steps)}
-    k = len(steps)
-    src = events.filter(F.col(name_col).isin(list(steps))).select(
-        user_col, ts_col, name_col
-    )
-
-    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col)
-        cur, cur_t = 0, 0
-        for name, ts in zip(pdf[name_col], pdf[ts_col]):
-            if step_of.get(name) != cur + 1:
-                continue
-            ts = int(ts)
-            if cur == 0 or (cur_t < ts <= cur_t + window_ms):
-                cur, cur_t = cur + 1, ts
-                if cur == k:
-                    break
-        return pd.DataFrame({"max_step": [cur]})
-
-    per_user = src.groupBy(user_col).applyInPandas(fold, schema="max_step long")
-    return (
-        per_user.filter(F.col("max_step") > 0)
-        .select(
-            F.explode(F.sequence(F.lit(1), F.col("max_step"))).alias("step")
-        )
-        .groupBy(F.col("step").cast("bigint").alias("step"))
-        .agg(F.count("*").alias("users"))
-    )
 
 
 def next_event_edges(

@@ -34,6 +34,16 @@ from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import words
 from lakeside_spark.sources.footers import footer_row_count
 
+#: bm25_topk takes the matched-postings plan above this many corpus docs
+#: and the full-postings plan at or below it. Read at call time, so a test
+#: forces either side by patching the module attribute.
+SCALE_THRESHOLD = 1_000_000
+
+#: The matched plan inlines up to this many distinct query terms as a
+#: literal in-set; past it (or at 0) it falls back to a lazy broadcast
+#: semi-join.
+QTERM_INLINE_LIMIT = 20_000
+
 
 def bm25_topk(
     corpus: DataFrame,
@@ -43,9 +53,6 @@ def bm25_topk(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    scale_threshold: int = 1_000_000,
-    qterm_inline_limit: int = 20_000,
 ) -> DataFrame:
     """Top-``k`` corpus docs per query by BM25. Returns
     (q_id, doc_id, score, rank); score rounded to 6 decimals and rank
@@ -54,7 +61,7 @@ def bm25_topk(
     Two parity-identical plans behind an auto gate (the dedup-family
     pattern — pick by a metadata-only corpus count):
 
-    - ``full`` (≤ ``scale_threshold`` docs): build the full (doc, term)
+    - ``full`` (≤ ``SCALE_THRESHOLD`` docs): build the full (doc, term)
       tf table in one shuffle and resolve idf on the bounded query-term
       set. Fewest stages — fastest when the corpus shuffle is cheap.
     - ``matched`` (above the gate): everything the score needs is
@@ -65,19 +72,11 @@ def bm25_topk(
       inline (no corpus-sized doclen join). The panel-bounded query
       terms and the two stat scalars resolve as a concurrent two-job
       driver prologue (falling back to a lazy broadcast semi-join past
-      ``qterm_inline_limit`` terms). At 100 TB this is the only viable
+      ``QTERM_INLINE_LIMIT`` terms). At 100 TB this is the only viable
       shape: shuffling every token to score five queries is not.
     """
-    if strategy == "auto":
-        strategy = (
-            "matched"
-            if _gate_count(corpus) > scale_threshold
-            else "full"
-        )
-    if strategy == "matched":
-        scored = _bm25_scored_matched(
-            corpus, queries, k1, b, text_col, id_col, qterm_inline_limit
-        )
+    if _gate_count(corpus) > SCALE_THRESHOLD:
+        scored = _bm25_scored_matched(corpus, queries, k1, b, text_col, id_col)
     else:
         scored = _bm25_scored_full(corpus, queries, k1, b, text_col, id_col)
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("doc_id"))
@@ -89,7 +88,7 @@ def bm25_topk(
 
 
 def _gate_count(corpus: DataFrame) -> int:
-    """Corpus row count for the strategy gate: parquet footers when the
+    """Corpus row count for the full/matched gate: parquet footers when the
     plan is a bare file scan (no Spark job), else ``count()``."""
     n = footer_row_count(corpus)
     return corpus.count() if n is None else n
@@ -127,7 +126,7 @@ def _bm25_scored_full(
     array grain is deliberate: caching the aggregated tf table instead
     serializes the broadcast job behind a full postings materialization
     (measured 1.2→2.0s at sf0.1), while re-exploding a cached array is
-    cheap. Bounded by the full-plan gate (≤ scale_threshold docs; the
+    cheap. Bounded by the full-plan gate (≤ SCALE_THRESHOLD docs; the
     matched plan covers large corpora)."""
     from lakeside_spark.operators.textstats import _parallelize_sized
 
@@ -215,7 +214,6 @@ def _bm25_scored_matched(
     b: float,
     text_col: str,
     id_col: str,
-    qterm_inline_limit: int,
 ) -> DataFrame:
     """(q_id, doc_id, score): matched-postings plan — the corpus token
     stream is cut to query-term matches BEFORE any aggregation, so the
@@ -242,14 +240,14 @@ def _bm25_scored_matched(
     # Past the gate (huge programmatic query sets) everything falls
     # back to the fully lazy distributed broadcast semi-join.
     term_filter = n_docs = avgdl = None
-    if qterm_inline_limit:
+    if QTERM_INLINE_LIMIT:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(2) as ex:
-            fq = ex.submit(qterms.limit(qterm_inline_limit + 1).collect)
+            fq = ex.submit(qterms.limit(QTERM_INLINE_LIMIT + 1).collect)
             fs = ex.submit(stats_df.collect)
             q_rows, stats_rows = fq.result(), fs.result()
-        if len(q_rows) <= qterm_inline_limit:
+        if len(q_rows) <= QTERM_INLINE_LIMIT:
             n_docs = stats_rows[0]["n_docs"]
             avgdl = stats_rows[0]["avgdl"]
             if not q_rows or not n_docs:

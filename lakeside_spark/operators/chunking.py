@@ -28,6 +28,11 @@ from pyspark.sql import functions as F
 from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import words
 
+#: span_dedup broadcasts its boilerplate-span table up to this many rows
+#: and falls back to a shuffled anti-join above it. Read at call time, so
+#: a test forces either side by patching the module attribute.
+SPAN_BROADCAST_LIMIT = 100_000
+
 
 def chunk_documents(
     docs: DataFrame,
@@ -74,7 +79,6 @@ def span_dedup(
     max_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_limit: int = 100_000,
 ) -> DataFrame:
     """Remove spans repeated across more than ``max_df`` documents.
 
@@ -88,7 +92,7 @@ def span_dedup(
     100 TB crawl with heavy boilerplate can push it past executor memory,
     where a forced broadcast hint means OOM instead of degradation. So the
     hint is gated on a count probe (the same pattern as
-    similarity.embedding_dup_pairs): ≤ ``broadcast_limit`` distinct
+    similarity.embedding_dup_pairs): ≤ ``SPAN_BROADCAST_LIMIT`` distinct
     over-represented spans → broadcast anti-join (map-only, no corpus
     shuffle); above it → plain shuffled anti-join and let AQE pick the
     strategy. The span-hash table is checkpointed before the probe so the
@@ -144,7 +148,7 @@ def span_dedup(
         .filter(F.col("df") > max_df)
         .select("span_hash")
     )
-    if span_df.count() <= broadcast_limit:
+    if span_df.count() <= SPAN_BROADCAST_LIMIT:
         span_df = span_df.hint("broadcast")
     kept = tiled.join(span_df, "span_hash", "left_anti")
     surv = kept.groupBy("doc_id").agg(

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
-from lakeside_spark.functions.text import md5_long, normalized, shingles
+from lakeside_spark.functions.text import md5_long, normalized
 
 #: MinHash hash family: h_i(s) = (A_i * h31(s) + B_i) mod P where h31 is the
 #: 60-bit md5 integer of the shingle reduced mod P. One md5 per shingle
@@ -64,6 +64,19 @@ MINHASH_AB = [
 #: (jaccard auto-probe, containment exact path, winnow pair stage) so a
 #: retune cannot leave the sites disagreeing (r12 ADVICE).
 GRAM_KERNEL_MAX_NNZ = 4 * 1024 * 1024
+
+#: Doc-count half of the jaccard kernel gate (the nnz half is
+#: GRAM_KERNEL_MAX_NNZ). Gate constants in this module are read at call
+#: time, so a test forces either side by patching the module attribute.
+JACCARD_KERNEL_MAX_DOCS = 50_000
+
+#: ngram_containment_pairs runs the exact pair join up to this many docs
+#: and lossless prefix filtering above it.
+CONTAINMENT_EXACT_MAX_DOCS = 50_000
+
+#: connected_components answers with one collect + union-find up to this
+#: many edges and with distributed star-contraction rounds above it.
+CC_LOCAL_MAX_EDGES = 1_000_000
 
 
 # Single shared under-parallel gate: one implementation (the kernels in
@@ -291,41 +304,28 @@ def ngram_jaccard_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    kernel_max_docs: int = 50_000,
-    kernel_max_nnz: int = GRAM_KERNEL_MAX_NNZ,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs (id_a < id_b, jaccard ≥ threshold).
 
-    strategy="kernel": row-block-parallel sparse Gram (see
-    _gram_pair_counts) — the in-task numpy merge-join whose work is the
-    true product count Σ_shingle f², gated by what must be collected and
-    broadcast (n_docs ≤ kernel_max_docs, shingle rows ≤ kernel_max_nnz)
-    and self-capped on Σf² with a join fallback.
-    strategy="join": explode → join on shingle → count — distributed,
-    the path for anything over the kernel's collect gate. "auto" probes
-    (n_docs, nnz) with one small agg over the cached shingle rows and
-    picks. Neither is the 100 TB answer — that's minhash_lsh_pairs,
-    which bounds candidates before verifying. The shingle rows are held
-    for the call; the pair-sized result is checkpointed.
+    Kernel side: row-block-parallel sparse Gram (see _gram_pair_counts)
+    — the in-task numpy merge-join whose work is the true product count
+    Σ_shingle f², gated by what must be collected and broadcast
+    (n_docs ≤ JACCARD_KERNEL_MAX_DOCS, shingle rows ≤
+    GRAM_KERNEL_MAX_NNZ) and self-capped on Σf² with a join fallback.
+    Join side: explode → join on shingle → count — distributed, the
+    path for anything over the kernel's collect gate. One small agg over
+    the held shingle rows probes (n_docs, nnz) and picks. Neither is
+    the 100 TB answer — that's minhash_lsh_pairs, which bounds
+    candidates before verifying. The shingle rows are held for the
+    call; the pair-sized result is checkpointed.
     """
     with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
-        return M.checkpointed(
-            _jaccard_pairs_from_shingles(
-                ex, threshold, strategy, kernel_max_docs, kernel_max_nnz
-            )
-        )
+        return M.checkpointed(_jaccard_pairs_from_shingles(ex, threshold))
 
 
-def _jaccard_pairs_from_shingles(
-    ex: DataFrame,
-    threshold: float,
-    strategy: str = "auto",
-    kernel_max_docs: int = 50_000,
-    kernel_max_nnz: int = GRAM_KERNEL_MAX_NNZ,
-) -> DataFrame:
+def _jaccard_pairs_from_shingles(ex: DataFrame, threshold: float) -> DataFrame:
     """Exact jaccard pairs from pre-computed (doc_id, shingle) rows — the
-    strategy probe + kernel/join split shared by ngram_jaccard_pairs and
+    size probe + kernel/join split shared by ngram_jaccard_pairs and
     the MinHash-LSH verification stage (which already owns shingle rows
     from the signature pass and must not re-shingle).
 
@@ -337,16 +337,10 @@ def _jaccard_pairs_from_shingles(
     dense gate bounded n_docs·n_dict cells instead, which kept the
     kernel off every real-vocabulary corpus regardless of how sparse it
     was."""
-    if strategy == "auto":
-        n_docs, nnz = ex.agg(
-            F.approx_count_distinct("doc_id"), F.count(F.lit(1))
-        ).first()
-        strategy = (
-            "kernel"
-            if n_docs <= kernel_max_docs and nnz <= kernel_max_nnz
-            else "join"
-        )
-    if strategy == "kernel":
+    n_docs, nnz = ex.agg(
+        F.approx_count_distinct("doc_id"), F.count(F.lit(1))
+    ).first()
+    if n_docs <= JACCARD_KERNEL_MAX_DOCS and nnz <= GRAM_KERNEL_MAX_NNZ:
         counts = _gram_pair_counts(ex, threshold)
         if counts is not None:
             return _jaccard_from_counts(counts, threshold)
@@ -472,7 +466,7 @@ def minhash_lsh_pairs(
             # verify ONLY the candidate pairs (this bounded verification is
             # the whole point of LSH at scale — never the all-pairs join).
             # The candidate doc set grows with the corpus, so verification
-            # goes through ngram_jaccard_pairs' auto strategy probe: small
+            # goes through ngram_jaccard_pairs' size gate: small
             # candidate sets take the dense Gram kernel, large ones the
             # distributed explode-join — never an unconditional single task.
             cand_ids = (
@@ -480,7 +474,7 @@ def minhash_lsh_pairs(
                 .union(candidates.select(F.col("id_b").alias("__cand_id")))
                 .distinct()
             )
-            # held: the strategy probe and the kernel feed would otherwise
+            # held: the size probe and the kernel feed would otherwise
             # each re-scan the full corpus shingle cache through the semi-join
             cand_sh = ex.join(
                 F.broadcast(cand_ids), F.col("doc_id") == F.col("__cand_id"), "leftsemi"
@@ -667,15 +661,13 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
     return edges, False
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 25, local_max_edges: int = 1_000_000
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Duplicate-cluster assignment: (doc_id, cluster_id) where cluster_id
     is the minimum doc id reachable through the near-dup pair graph.
 
     Near-dup graphs are tiny relative to the corpus (they only contain
     docs with at least one duplicate), so when the edge list fits the
-    driver (≤ local_max_edges) a single collect + union-find answers in
+    driver (≤ CC_LOCAL_MAX_EDGES) a single collect + union-find answers in
     one job instead of multi-round joins. Past that, alternating
     large-star / small-star rounds (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC 2014): each round rewires
@@ -692,11 +684,11 @@ def connected_components(
     # otherwise each re-run the (possibly expensive) pair pipeline.
     # Self-pairs are dropped HERE so both paths agree: they carry no
     # connectivity information, and "Singletons are not emitted" must
-    # hold regardless of which side of the local_max_edges gate runs.
+    # hold regardless of which side of the CC_LOCAL_MAX_EDGES gate runs.
     spark = pairs.sparkSession
     src = pairs.select("id_a", "id_b").filter(F.col("id_a") != F.col("id_b"))
     with M.held(src) as pairs:
-        local = pairs.limit(local_max_edges + 1).count() <= local_max_edges
+        local = pairs.limit(CC_LOCAL_MAX_EDGES + 1).count() <= CC_LOCAL_MAX_EDGES
         if local:
             rows = pairs.collect()
         else:
@@ -1095,8 +1087,6 @@ def ngram_containment_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    exact_max_docs: int = 50_000,
 ) -> DataFrame:
     """n-gram CONTAINMENT pairs: containment(a,b) =
     |A∩B| / min(|A|, |B|) ≥ threshold (id_a < id_b).
@@ -1107,10 +1097,10 @@ def ngram_containment_pairs(
     misses (Broder 1997 distinguishes resemblance from containment for
     exactly this case).
 
-    strategy="exact": the full shingle-keyed pair join — exact, but its
+    Exact side: the full shingle-keyed pair join — exact, but its
     cost is bounded only by true containment-pair volume, which on a
     boilerplate-heavy corpus is quadratic in the duplicate mass.
-    strategy="prefix": frequency-ordered PREFIX FILTERING (the lossless
+    Prefix side: frequency-ordered PREFIX FILTERING (the lossless
     set-similarity-join candidate scheme of Chaudhuri/Ganti/Kaushik,
     ICDE 2006, and Bayardo et al., WWW 2007). For a true pair with
     sizes sa ≤ sb, the overlap is ≥ ⌈t·sa⌉, so at most ⌊(1-t)·sa⌋ of
@@ -1124,8 +1114,8 @@ def ngram_containment_pairs(
     so high-df boilerplate shingles almost never enter a prefix and the
     join volume is Σ_s df_prefix(s)·df(s), collapsing toward true-pair
     volume. Candidates then feed the same bounded exact verify.
-    "auto" probes the corpus size with one agg over the cached shingle
-    rows and takes "prefix" above ``exact_max_docs``.
+    One agg over the held shingle rows probes the corpus size and takes
+    the prefix side above ``CONTAINMENT_EXACT_MAX_DOCS``.
 
     Shingle rows are held for the call and the pair-sized result is
     checkpointed (the ngram_jaccard_pairs idiom). The candidate frame is
@@ -1134,26 +1124,14 @@ def ngram_containment_pairs(
     held shingles anyway.
     """
     with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
-        return M.checkpointed(
-            _containment_pairs_gated(ex, threshold, strategy, exact_max_docs)
-        )
+        return M.checkpointed(_containment_pairs_gated(ex, threshold))
 
 
-def _containment_pairs_gated(
-    ex: DataFrame, threshold: float, strategy: str, exact_max_docs: int
-) -> DataFrame:
+def _containment_pairs_gated(ex: DataFrame, threshold: float) -> DataFrame:
     """ngram_containment_pairs' lazy plan over (doc_id, shingle) rows."""
-    if strategy == "auto":
-        n_docs = ex.agg(F.approx_count_distinct("doc_id")).first()[0]
-        strategy = "exact" if n_docs <= exact_max_docs else "prefix"
-    if strategy == "exact":
+    n_docs = ex.agg(F.approx_count_distinct("doc_id")).first()[0]
+    if n_docs <= CONTAINMENT_EXACT_MAX_DOCS:
         return _containment_pairs_from_shingles(ex, threshold)
-    if strategy != "prefix":
-        raise ValueError(
-            f"ngram_containment_pairs: unknown strategy {strategy!r} "
-            "(one of 'auto', 'exact', 'prefix'; the one-row-band MinHash "
-            "path was replaced by lossless prefix filtering)"
-        )
     df_counts = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     w_rank = Window.partitionBy("doc_id").orderBy("__df", "shingle")
     w_doc = Window.partitionBy("doc_id")

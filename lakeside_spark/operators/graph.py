@@ -2,10 +2,11 @@
 
 The reference's service map (span-adjacency edges) answers "who calls
 whom"; PageRank answers the follow-up — which service is structurally
-central, weighted by traffic. Two strategies behind one fixed-point
-contract (Page et al. 1999):
+central, weighted by traffic. Two sides of one auto-gate (at most
+``LOCAL_EDGE_GATE`` edges runs local) behind one fixed-point contract
+(Page et al. 1999):
 
-- ``local`` (the default for vocabulary-sized graphs): the edge table of
+- ``local`` (vocabulary-sized graphs): the edge table of
   a service graph is span-vocabulary² — bounded at ANY corpus size — so
   after the one distributed aggregation that builds it, the 10 power
   iterations run driver-side on the collected table (the same
@@ -149,7 +150,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "n",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Weighted PageRank over ``(src, dst, weight)`` edges for a fixed
     iteration count. Returns (node, rank) with rank rounded to 6dp;
@@ -157,7 +157,7 @@ def pagerank(
     spark = edges.sparkSession
     # zero/NULL-weight edges carry no transition mass and would divide a
     # zero out-weight (local raises, Spark yields NULL p) — drop them up
-    # front so both strategies see the identical graph
+    # front so both sides of the gate see the identical graph
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -166,21 +166,12 @@ def pagerank(
         F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("w") > 0)
     )
 
-    if strategy == "auto":
-        # single-pass gate: take(gate+1) both decides AND delivers the
-        # rows when the graph is bounded — the edge build (the dominant
-        # cost) never runs twice
-        head = e.take(LOCAL_EDGE_GATE + 1)
-        if len(head) <= LOCAL_EDGE_GATE:
-            rows = [(r["src"], r["dst"], r["w"]) for r in head]
-            if not rows:
-                return spark.createDataFrame([], "node string, rank double")
-            out = _pagerank_local(rows, iterations, float(damping))
-            return spark.createDataFrame(out, "node string, rank double")
-        strategy = "distributed"
-
-    if strategy == "local":
-        rows = [(r["src"], r["dst"], r["w"]) for r in e.collect()]
+    # single-pass gate: take(gate+1) both decides AND delivers the rows
+    # when the graph is bounded — the edge build (the dominant cost)
+    # never runs twice
+    head = e.take(LOCAL_EDGE_GATE + 1)
+    if len(head) <= LOCAL_EDGE_GATE:
+        rows = [(r["src"], r["dst"], r["w"]) for r in head]
         if not rows:
             return spark.createDataFrame([], "node string, rank double")
         out = _pagerank_local(rows, iterations, float(damping))

@@ -12,9 +12,7 @@ and (r12) AVI video: RIFF chunk walk + uncompressed-DIB frame decode
 (operators/codecs.py) — so ``decode_features`` / ``resize_media`` /
 ``sample_frames`` / ``video_phash`` do genuine pixel/sample math with no
 external libs. Formats needing entropy decoders we don't have (JPEG
-pixels inside MJPEG) fall back to raw frame bytes + header dims;
-``fake=True`` keeps the md5-derived deterministic path on the older
-kernels for plumbing tests.
+pixels inside MJPEG) fall back to raw frame bytes + header dims.
 """
 
 from __future__ import annotations
@@ -113,7 +111,6 @@ def decode_features(
     binary_col: str = "media",
     id_col: str = "doc_id",
     dim: int = 8,
-    fake: bool = False,
 ) -> DataFrame:
     """binary → feature vector via Arrow-batched mapInPandas.
 
@@ -123,17 +120,9 @@ def decode_features(
     rms, zero-cross, p25, p50, p75] (audio), padded/trimmed to ``dim``.
     Formats without a stdlib decoder (jpeg pixels, ogg, unknown) get
     header dims where parseable plus byte-level statistics — decode never
-    throws mid-batch. ``fake=True`` keeps the md5 plumbing-test path.
+    throws mid-batch.
     """
     schema = f"{id_col} bigint, features array<double>"
-
-    def fake_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [
-                [b / 255.0 for b in hashlib.md5(buf).digest()[:dim]]
-                for buf in pdf[binary_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
     def _fit(vals: list[float]) -> list[float]:
         return (vals + [0.0] * dim)[:dim]
@@ -181,9 +170,8 @@ def decode_features(
             feats = [real_features(buf) for buf in pdf[binary_col]]
             yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
-    kernel = fake_batches if fake else batches
     return _parallelize(df.select(id_col, binary_col)).mapInPandas(
-        kernel, schema=schema
+        batches, schema=schema
     )
 
 
@@ -193,41 +181,17 @@ def resize_media(
     height: int,
     binary_col: str = "media",
     id_col: str = "doc_id",
-    fake: bool = False,
 ) -> DataFrame:
     """binary → resized binary + output dims, Arrow-batched.
 
-    Real path: PNG/BMP pixels are decoded with the stdlib codecs, resampled
-    with nearest-neighbor index math in numpy, and re-encoded as PNG; items
-    in formats without a stdlib pixel decoder come back with empty media
-    (callers filter on octet_length). The fake path emits a deterministic
-    byte buffer of exactly width*height bytes so batch shape, schema, and
-    size accounting stay testable without codecs.
+    PNG/BMP pixels are decoded with the stdlib codecs, resampled with
+    nearest-neighbor index math in numpy, and re-encoded as PNG; items in
+    formats without a stdlib pixel decoder come back with empty media
+    (callers filter on octet_length).
     """
     schema = f"{id_col} bigint, media binary, width int, height int"
 
-    def fake_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = width * height
-        for pdf in it:
-            out = [
-                bytes(
-                    hashlib.md5(buf + bytes([i % 251])).digest()[0]
-                    for i in range(n)
-                )
-                if len(buf)
-                else b""
-                for buf in pdf[binary_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media": out,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                }
-            )
-
-    def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
             for buf in pdf[binary_col]:
@@ -251,9 +215,8 @@ def resize_media(
                 }
             )
 
-    kernel = fake_batches if fake else real_batches
     return _parallelize(df.select(id_col, binary_col)).mapInPandas(
-        kernel, schema=schema
+        batches, schema=schema
     )
 
 
@@ -405,29 +368,6 @@ def perturb_images(
             )
 
     return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
-
-
-def phash_pairs(
-    df: DataFrame,
-    max_hamming: int = 6,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
-    allow_quadratic: bool = False,
-) -> DataFrame:
-    """Image near-dup pairs: pHash signatures into the shared pigeonhole-
-    banded hamming join (exact at the given budget, no all-pairs scan).
-    Budgets beyond 6 leave <8-bit bands on the 63-bit signature and need
-    ``allow_quadratic=True`` (forwarded to hamming_pairs)."""
-    from lakeside_spark.operators.dedup import hamming_pairs
-
-    return hamming_pairs(
-        phash64(df, binary_col, id_col),
-        max_hamming,
-        bits=63,
-        hash_col="phash",
-        id_col=id_col,
-        allow_quadratic=allow_quadratic,
-    )
 
 
 def sample_frames(
@@ -689,25 +629,3 @@ def perturb_videos(
             )
 
     return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
-
-
-def video_pairs(
-    df: DataFrame,
-    max_hamming: int = 6,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
-    allow_quadratic: bool = False,
-) -> DataFrame:
-    """Video near-dup pairs: temporally-pooled pHash signatures through
-    the SAME pigeonhole-banded hamming join the text-SimHash and
-    image-pHash paths use (dedup.hamming_pairs) — never all-pairs."""
-    from lakeside_spark.operators.dedup import hamming_pairs
-
-    return hamming_pairs(
-        video_phash(df, binary_col=binary_col, id_col=id_col),
-        max_hamming,
-        bits=63,
-        hash_col="phash",
-        id_col=id_col,
-        allow_quadratic=allow_quadratic,
-    )

@@ -38,6 +38,12 @@ from lakeside_spark.operators.kmeans_replay import (
 )
 from lakeside_spark.operators.pq_replay import pq_train_snapped
 
+#: self_knn and embedding_dup_pairs take their exact broadcast side up to
+#: this many vectors and their bucketed / LSH scale side above it. Read at
+#: call time, so a test forces either side by patching the module
+#: attribute.
+BROADCAST_LIMIT = 100_000
+
 
 def _effective_input_parallelism(df: DataFrame) -> int:
     """Achievable scan parallelism — NOT just the split count.
@@ -260,28 +266,24 @@ def self_knn(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    strategy: str = "auto",
-    broadcast_limit: int = 100_000,
     dim: int | None = None,
 ) -> DataFrame:
     """(q_id, n_id, cos, rank): every vector's top-k neighbors in its own
     corpus (the feed for kNN label-noise / neighborhood-density scoring).
 
-    strategy="exact": the corpus doubles as the broadcast query matrix —
+    Exact side: the corpus doubles as the broadcast query matrix —
     right answer while n·d doubles fit a broadcast, a driver-sized
-    collect past that. strategy="bucket" (the scale path): one
+    collect past that. Bucket side (the scale path): one
     hyperplane-bucket pass, then a bucket SELF-join — no broadcast, no
     driver collect; candidates are bucket-bounded (the plane count
     scales as log2(n/256), so expected bucket size stays ~256 and pair
     volume ~256·n, never n²). Approximate: neighbors outside the
     query's bucket are missed, which for label-noise scoring biases
     toward the densest (most informative) neighborhood.
-    strategy="auto" gates on a count probe, the same pattern as
-    embedding_dup_pairs."""
-    n = emb.count() if strategy in ("auto", "bucket") else 0
-    if strategy == "auto":
-        strategy = "exact" if n <= broadcast_limit else "bucket"
-    if strategy == "exact":
+    A count probe picks the side at ``BROADCAST_LIMIT``, the same
+    pattern as embedding_dup_pairs."""
+    n = emb.count()
+    if n <= BROADCAST_LIMIT:
         return cosine_topk(emb, emb, k, vec_col, id_col)
 
     if dim is None:
@@ -333,17 +335,15 @@ def embedding_dup_pairs(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    strategy: str = "auto",
-    broadcast_limit: int = 100_000,
     bands: int = 8,
     planes_per_band: int = 8,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine ≥ threshold.
 
-    strategy="broadcast" (exact): the corpus is collected once as the
+    Broadcast side (exact): the corpus is collected once as the
     broadcast gram-block operand — right answer while n·d doubles fit a
     broadcast, wrong answer at 100 TB (driver OOM).
-    strategy="lsh" (the scale path): banded hyperplane-LSH candidate
+    LSH side (the scale path): banded hyperplane-LSH candidate
     generation — each vector lands in `bands` buckets keyed by the sign
     pattern of `planes_per_band` hyperplane projections; a pair is a
     candidate if ANY band key collides — followed by an EXACT cosine verify
@@ -352,12 +352,10 @@ def embedding_dup_pairs(
     P(miss) = (1 - p^planes_per_band)^bands for p = 1 - arccos(cos)/π,
     which for near-dup thresholds (≥0.9) and the defaults is a few percent
     and drops geometrically with `bands`.
-    strategy="auto": one count() decides at `broadcast_limit`.
+    One count() decides at ``BROADCAST_LIMIT``.
     """
     emb = emb.withColumn(vec_col, as_double_array(vec_col))
-    if strategy == "auto":
-        strategy = "broadcast" if emb.count() <= broadcast_limit else "lsh"
-    if strategy == "broadcast":
+    if emb.count() <= BROADCAST_LIMIT:
         ids, unit = _collect_unit_matrix(emb, vec_col, id_col)
         if not len(ids):
             return emb.sparkSession.createDataFrame(

@@ -27,6 +27,11 @@ BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 _EN_STOPWORDS = ("the", "and", "of", "is", "a", "to", "in")
 
+#: collocations scores on the driver when its filtered count table has at
+#: most this many rows, and with a distributed pass above it. Read at call
+#: time, so a test forces either side by patching the module attribute.
+COLLOCATION_DRIVER_GATE = 2_000_000
+
 
 def _marker_count(text_col: str, markers: tuple[str, ...]) -> F.Column:
     pattern = r"\b(" + "|".join(markers) + r")\b"
@@ -551,7 +556,6 @@ def collocations(
     k: int = 100,
     text_col: str = "text",
     id_col: str = "doc_id",
-    driver_gate: int = 2_000_000,
 ) -> DataFrame:
     """Top-k word collocations by pointwise mutual information:
     PMI(a,b) = ln(c_ab · N / (c_a · c_b)) over adjacent word pairs —
@@ -595,8 +599,8 @@ def collocations(
         # vocabularies) the distributed path below keeps the exact same
         # expression shape.
         rel = counts.filter(F.col("b").isNull() | (F.col("c") >= min_count))
-        rows = rel.take(driver_gate + 1)
-        if len(rows) <= driver_gate:
+        rows = rel.take(COLLOCATION_DRIVER_GATE + 1)
+        if len(rows) <= COLLOCATION_DRIVER_GATE:
             import math
             from decimal import ROUND_HALF_UP, Decimal
 

@@ -1,33 +1,15 @@
 """Shared registry plumbing: DuckDB-side canonical projections, time
 constants, fixed-point money helpers, and cross-family utilities."""
 
-
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
-from lakeside_spark.ast.formula import eval_formula, parse_formula
-from lakeside_spark.ast.model import (
-    BaseExpr,
-    BinaryClause,
-    ChartOptions,
-    Compute,
-    ExtractedField,
-    Extractor,
-    Filter,
-    FunctionCall,
-    Label,
-    Literal,
-    NotClause,
-)
+from lakeside_spark.ast.model import BaseExpr, ChartOptions
 from lakeside_spark.engine import QueryEngine
 from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.partsupp import PARTSUPP_CTE
-from lakeside_spark.sources.tables import load_table
 
 DAY = 86_400_000
 

@@ -1,32 +1,15 @@
 """Registry keys: traces, funnels, attribution, retention and other
 behavior analytics (SURVEY §2 E behavior + F2)."""
 
-
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
-from lakeside_spark.ast.formula import eval_formula, parse_formula
-from lakeside_spark.ast.model import (
-    BaseExpr,
-    BinaryClause,
-    ChartOptions,
-    Compute,
-    ExtractedField,
-    Extractor,
-    Filter,
-    FunctionCall,
-    Label,
-    Literal,
-    NotClause,
-)
+from lakeside_spark.ast.model import BaseExpr, BinaryClause, ChartOptions, Filter
 from lakeside_spark.engine import QueryEngine
 from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.partsupp import PARTSUPP_CTE
 from lakeside_spark.sources.tables import load_table
 
 from lakeside_spark.registry._shared import (
@@ -480,11 +463,10 @@ FROM {_TR} GROUP BY 1
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict-order conversion funnel view → click → purchase, each step
     within 7 days of the previous step's first completion (cascading
-    windows). Default "agg" strategy: ONE step-name-IN scan (predicate
-    pushed to parquet) + ONE user-keyed conditional aggregation, then
-    the min-ts chain as array HOFs over the user-sized table — at 100 TB
-    one fact pass and one distinct-user-sized shuffle (strategy="join"
-    remains the per-user-skew-safe chain; see operators/behavior.funnel)."""
+    windows). ONE step-name-IN scan (predicate pushed to parquet) + ONE
+    user-keyed conditional aggregation, then the min-ts chain as array
+    HOFs over the user-sized table — at 100 TB one fact pass and one
+    distinct-user-sized shuffle (see operators/behavior.funnel)."""
     from lakeside_spark.operators.behavior import funnel
 
     tele = load_telemetry(spark, sf_dir)

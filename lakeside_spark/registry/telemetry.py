@@ -2,16 +2,12 @@
 engine, time-series analytics and the streaming replay artifacts
 (SURVEY §2 A-D + C time-series + G replay)."""
 
-
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
-from lakeside_spark.ast.formula import eval_formula, parse_formula
 from lakeside_spark.ast.model import (
     BaseExpr,
     BinaryClause,
@@ -27,7 +23,6 @@ from lakeside_spark.ast.model import (
 )
 from lakeside_spark.engine import QueryEngine
 from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.partsupp import PARTSUPP_CTE
 from lakeside_spark.sources.tables import load_table
 
 from lakeside_spark.registry._shared import (
@@ -58,22 +53,6 @@ SELECT timestamp_ms - timestamp_ms % {HOUR} AS step_ts, name,
        CAST(count(value) AS DOUBLE) AS value
 FROM {_T} WHERE name IS NOT NULL GROUP BY 1, 2
 """
-
-
-def ts_count_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ts_count through the two-phase SALTED chart aggregation
-    (engine.py salt_partitions=8): partial aggregates spread each hot
-    (step_ts, name) key over 8 reducers before the step-keyed merge —
-    the hot-key skew plan, kept in the bench HEADLINE so the salted
-    path stays green under the same DuckDB oracle as the unsalted
-    ts_count (identical results, different physical shape)."""
-    expr = BaseExpr(
-        filter=Filter(k=S.NAME, op=S.EXISTS),
-        chart=ChartOptions(aggregation="count"),
-    )
-    return QueryEngine(spark, step_ms=HOUR, salt_partitions=8).run(
-        expr, load_telemetry(spark, sf_dir)
-    )
 
 
 def ts_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

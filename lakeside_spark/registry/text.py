@@ -1,39 +1,17 @@
 """Registry keys: LLM-data-pipeline text/corpus operators — dedup,
 decontamination, quality, curation, retrieval (SURVEY §2 F)."""
 
-
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
-from lakeside_spark import schema as S
-from lakeside_spark.ast.formula import eval_formula, parse_formula
-from lakeside_spark.ast.model import (
-    BaseExpr,
-    BinaryClause,
-    ChartOptions,
-    Compute,
-    ExtractedField,
-    Extractor,
-    Filter,
-    FunctionCall,
-    Label,
-    Literal,
-    NotClause,
-)
-from lakeside_spark.engine import QueryEngine
-from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.partsupp import PARTSUPP_CTE
 from lakeside_spark.sources.tables import load_table
 
 from lakeside_spark.registry._shared import (
     _NORM,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +142,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = docs.filter(F.col("doc_id") % 5 != 0)
     # ONE tokenize+shingle pass over the whole table (r13): both sides
     # split one table, so shingling per side ran the kernel twice (1.32s
-    # vs 0.57s for the single pass at sf0.1 — tools/incremental_profile).
+    # vs 0.57s for the single pass at sf0.1, r13 measurement).
     # The checkpointed thin (doc_id, shingle) frame is filtered per side.
     ex_all = M.checkpointed(_shingled_rows(docs, "text", "doc_id", 3))
     return minhash_lsh_match(

@@ -1,36 +1,15 @@
 """Registry keys: TPC-H-style lake analytics (SURVEY §2 E)."""
 
-
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeside_spark import schema as S
-from lakeside_spark.ast.formula import eval_formula, parse_formula
-from lakeside_spark.ast.model import (
-    BaseExpr,
-    BinaryClause,
-    ChartOptions,
-    Compute,
-    ExtractedField,
-    Extractor,
-    Filter,
-    FunctionCall,
-    Label,
-    Literal,
-    NotClause,
-)
-from lakeside_spark.engine import QueryEngine
-from lakeside_spark.schema import load_telemetry
 from lakeside_spark.sources.partsupp import PARTSUPP_CTE
 from lakeside_spark.sources.tables import load_table
 
 # q9 broadcast-gate memo: filtered-part count per (applicationId, sf_dir)
 _Q9_PART_COUNT: dict[tuple[str, str], int] = {}
-
 
 
 # ---------------------------------------------------------------------------

@@ -16,3 +16,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def gate_sides():
+    """``gate_sides(module, const, call)`` runs ``call()`` on both sides of
+    an auto-gate: with ``module.const`` at 0 (the scale side), then very
+    large (the small side), and returns the two results. Gates read their
+    constant at call time, so ``call`` must evaluate inside."""
+
+    def run(module, const, call):
+        out = []
+        for value in (0, 1 << 30):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(module, const, value)
+                out.append(call())
+        return out
+
+    return run

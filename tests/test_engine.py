@@ -91,22 +91,29 @@ def test_exemplars_limit_and_order(spark, sf_dir):
     assert all(r[S.NAME] == "error" for r in rows)
 
 
-def test_order_by_step_opt_in(spark, sf_dir):
-    """order_by_step=True restores the SegmentSequencer ordered-delivery
-    contract; the default plan must stay sort-free (no rangepartitioning
-    Exchange on every chart query)."""
+def test_chart_count_one_exchange_over_partial_count(spark, sf_dir):
+    """A chart count is one Exchange over a map-side partial_count: each
+    input partition ships at most one row per (step, name) key, so a hot
+    key needs no salting. The plan stays sort-free (no rangepartitioning
+    Exchange on every chart query); ordering is a consumer concern."""
     tele = load_telemetry(spark, sf_dir)
     expr = BaseExpr(
         filter=Filter(k=S.NAME, op=S.EXISTS),
         chart=ChartOptions(aggregation="count"),
     )
-    default = QueryEngine(spark, step_ms=3_600_000).run(expr, tele)
-    assert "Sort" not in default._jdf.queryExecution().executedPlan().toString()
-    ordered = QueryEngine(spark, step_ms=3_600_000, order_by_step=True).run(expr, tele)
-    steps = [r[S.STEP_TS] for r in ordered.collect()]
-    assert steps == sorted(steps)
-    # same rows either way — ordering is delivery, not semantics
-    assert sorted(map(tuple, default.collect())) == sorted(map(tuple, ordered.collect()))
+    plan = (
+        QueryEngine(spark, step_ms=86_400_000)
+        .run(expr, tele)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .splitlines()
+    )
+    exchanges = [i for i, line in enumerate(plan) if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    partial = [i for i, line in enumerate(plan) if "partial_count(" in line]
+    assert partial and all(i > exchanges[0] for i in partial), plan
+    assert not any("Sort" in line for line in plan), plan
 
 
 def test_traces_dataset_projection_and_dispatch(spark, sf_dir):
@@ -147,63 +154,6 @@ def test_tag_values(spark, sf_dir, ddb):
     got = QueryEngine(spark).tag_values(expr, tele, S.NAME)
     exp = ddb.sql("SELECT event_type, count(*) FROM events GROUP BY 1").fetchall()
     assert rows_set(got) == {tuple(r) for r in exp}
-
-
-def test_salt_conf_session_default(spark, sf_dir):
-    """The SALT_CONF session conf opts every default-constructed engine
-    into salted aggregation (AQE does not handle aggregation skew);
-    explicit salt_partitions still wins, and the salted result is
-    identical to unsalted."""
-    tele = load_telemetry(spark, sf_dir)
-    expr = BaseExpr(
-        filter=Filter(k=S.NAME, op=S.EXISTS),
-        chart=ChartOptions(aggregation="sum"),
-    )
-    baseline = QueryEngine(spark, step_ms=86_400_000).run(expr, tele)
-    assert QueryEngine(spark).salt == 1
-    spark.conf.set(QueryEngine.SALT_CONF, "8")
-    try:
-        eng = QueryEngine(spark, step_ms=86_400_000)
-        assert eng.salt == 8
-        assert QueryEngine(spark, salt_partitions=2).salt == 2  # explicit wins
-        salted = eng.run(expr, tele)
-        assert "__salt" not in salted.columns
-
-        def normalized(df):
-            # float sums are order-sensitive in the last ulps; round like
-            # the oracle compare does
-            return sorted(
-                (r[S.STEP_TS], r[S.NAME], round(r[S.VALUE], 6)) for r in df.collect()
-            )
-
-        assert normalized(salted) == normalized(baseline)
-    finally:
-        spark.conf.unset(QueryEngine.SALT_CONF)
-    assert QueryEngine(spark).salt == 1
-
-
-def test_salted_aggregation_matches_unsalted(spark, sf_dir):
-    """Salted two-phase chart agg (hot-key skew path) is exact for
-    count/sum/avg/min/max."""
-    from lakeside_spark import schema as S
-    from lakeside_spark.ast.model import BaseExpr, ChartOptions, Filter
-    from lakeside_spark.engine import QueryEngine
-    from lakeside_spark.schema import load_telemetry
-
-    tele = load_telemetry(spark, sf_dir)
-    for agg in ("count", "sum", "avg", "min", "max"):
-        expr = BaseExpr(
-            filter=Filter(k=S.NAME, op=S.EXISTS),
-            chart=ChartOptions(aggregation=agg, group_bys=("user_id",)),
-        )
-        plain = QueryEngine(spark, step_ms=86_400_000).run(expr, tele)
-        salted = QueryEngine(spark, step_ms=86_400_000, salt_partitions=8).run(expr, tele)
-        a = sorted(map(tuple, plain.collect()))
-        b = sorted(map(tuple, salted.collect()))
-        assert len(a) == len(b), agg
-        for ra, rb in zip(a, b):
-            assert ra[:-1] == rb[:-1], agg
-            assert abs(ra[-1] - rb[-1]) < 1e-9 * max(1.0, abs(ra[-1])), (agg, ra, rb)
 
 
 def test_cardinality_sketch_rollup_accuracy(spark, sf_dir):

@@ -10,7 +10,16 @@ from pyspark.sql import functions as F
 
 from lakeside_spark.sources.tables import load_table
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "lakeside_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "lakeside_spark"
+
+#: plan-forcing parameter names no production function may take: every
+#: auto-gate decides from its own input probe against a module constant
+PLAN_FORCING_PARAMS = {
+    "strategy", "salt_partitions", "order_by_step", "fake",
+    "kernel_max_docs", "kernel_max_nnz", "exact_max_docs", "scale_threshold",
+    "qterm_inline_limit", "broadcast_limit", "local_max_edges", "driver_gate",
+}
 
 
 def _sources():
@@ -19,9 +28,9 @@ def _sources():
 
 def test_only_materialize_module_persists_or_checkpoints():
     offenders = [
-        f"{p.relative_to(PKG)}:{i}"
-        for p in _sources()
-        if p.name != "materialize.py" or p.parent != PKG
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in _sources() + sorted((ROOT / "tools").rglob("*.py"))
+        if p != PKG / "materialize.py"
         for i, line in enumerate(p.read_text().splitlines(), start=1)
         if any(m in line for m in (".persist(", ".localCheckpoint(", ".cache()"))
     ]
@@ -44,6 +53,21 @@ def test_no_eager_or_cache_key_parameters_and_no_memos():
                 memos.append(f"{p.relative_to(PKG)}:{node.lineno}:{node.id}")
     assert not params, params
     assert not memos, memos
+
+
+def test_no_plan_forcing_parameters():
+    from lakeside_spark.engine import QueryEngine
+
+    params = [
+        f"{p.relative_to(PKG)}:{node.name}({arg.arg})"
+        for p in _sources()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for arg in node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+        if arg.arg in PLAN_FORCING_PARAMS
+    ]
+    assert not params, params
+    assert not hasattr(QueryEngine, "SALT_CONF")
 
 
 class Boom(RuntimeError):
@@ -102,8 +126,7 @@ def _components(spark, sf_dir):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7), (7, 9)], "id_a bigint, id_b bigint"
     )
-    # local_max_edges=0 forces the distributed star rounds
-    return connected_components(pairs, local_max_edges=0)
+    return connected_components(pairs)
 
 
 def _pagerank(spark, sf_dir):
@@ -113,7 +136,7 @@ def _pagerank(spark, sf_dir):
         [("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("c", "d", 1)],
         "src string, dst string, n long",
     )
-    return pagerank(edges, iterations=3, strategy="distributed")
+    return pagerank(edges, iterations=3)
 
 
 def _pmi(spark, sf_dir):
@@ -128,27 +151,36 @@ def _curate(spark, sf_dir):
     return corpus_curate(spark, sf_dir)
 
 
-# (call, DataFrame method that raises, which call of it): each raise
-# lands while the call holds at least one frame
+# (call, DataFrame method that raises, which call of it, gate constant
+# forced to 0): each raise lands while the call holds at least one frame
 RAISING = {
-    "ngram_jaccard_pairs": (_jaccard, "localCheckpoint", 1),
-    "minhash_lsh_pairs": (_lsh_pairs, "localCheckpoint", 1),
-    "minhash_lsh_match": (_lsh_match, "localCheckpoint", 1),
-    "ngram_containment_pairs": (_containment, "localCheckpoint", 1),
-    "connected_components": (_components, "localCheckpoint", 1),
-    "pagerank_distributed": (_pagerank, "take", 1),
-    "collocations_pmi": (_pmi, "take", 1),
+    "ngram_jaccard_pairs": (_jaccard, "localCheckpoint", 1, None),
+    "minhash_lsh_pairs": (_lsh_pairs, "localCheckpoint", 1, None),
+    "minhash_lsh_match": (_lsh_match, "localCheckpoint", 1, None),
+    "ngram_containment_pairs": (_containment, "localCheckpoint", 1, None),
+    # the distributed star rounds
+    "connected_components": (
+        _components, "localCheckpoint", 1, ("dedup", "CC_LOCAL_MAX_EDGES"),
+    ),
+    # take 1 is the gate's edge probe, take 2 the held dangling probe
+    "pagerank_distributed": (_pagerank, "take", 2, ("graph", "LOCAL_EDGE_GATE")),
+    "collocations_pmi": (_pmi, "take", 1, None),
     # the 3rd checkpoint is the jaccard pair result, inside its shingle hold
-    "corpus_curate": (_curate, "localCheckpoint", 3),
+    "corpus_curate": (_curate, "localCheckpoint", 3, None),
 }
 
 
 @pytest.mark.parametrize("name", sorted(RAISING))
 def test_raising_call_leaves_no_cached_frame(spark, sf_dir, monkeypatch, name):
-    call, method, nth = RAISING[name]
+    import importlib
+
+    call, method, nth, gate = RAISING[name]
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cache.isEmpty()
+    if gate:
+        module = importlib.import_module(f"lakeside_spark.operators.{gate[0]}")
+        monkeypatch.setattr(module, gate[1], 0)
     _raise_on(spark, monkeypatch, method, nth)
     with pytest.raises(Boom):
         call(spark, sf_dir)

@@ -26,6 +26,7 @@ def test_ema_matches_reference_recurrence(spark):
 def test_multimodal_fake_decode(spark, sf_dir):
     from lakeside_spark.operators.multimodal import (
         decode_features,
+        synthesize_images,
         synthesize_media,
         with_media_metadata,
     )
@@ -35,11 +36,17 @@ def test_multimodal_fake_decode(spark, sf_dir):
     meta = media.select("doc_id", "media_meta.*").collect()
     assert all(r["byte_size"] > 0 for r in meta)
     assert all(r["format"] == "unknown" for r in meta)  # text bytes, no magic
+    # no stdlib decoder for text bytes: byte statistics, never a throw
+    blind = decode_features(media, dim=8).collect()
+    assert len(blind) == 20 and all(len(r["features"]) == 8 for r in blind)
 
-    feats = decode_features(media, fake=True, dim=8).collect()
+    pngs = with_media_metadata(synthesize_images(docs))
+    assert {r["format"] for r in pngs.select("media_meta.*").collect()} == {"png"}
+    feats = decode_features(pngs, dim=8).collect()
     assert len(feats) == 20
-    assert all(len(r["features"]) == 8 for r in feats)
-    assert all(0 <= x <= 1 for r in feats for x in r["features"])
+    # [width, height, channels, mean, std, p25, p50, p75] of a 16x16 gray
+    assert all(r["features"][:3] == [16.0, 16.0, 1.0] for r in feats)
+    assert all(0 <= x <= 1 for r in feats for x in r["features"][3:])
 
 
 def test_multimodal_real_png_decode(spark, sf_dir):
@@ -384,19 +391,27 @@ def test_range_join_bucketed_equi(spark):
 
 
 def test_multimodal_resize_and_frames_plumbing(spark, sf_dir):
+    from lakeside_spark.operators import codecs
     from lakeside_spark.operators.multimodal import (
         resize_media,
         sample_frames,
+        synthesize_images,
         synthesize_media,
     )
 
-    media = synthesize_media(load_table(spark, sf_dir, "documents").limit(10))
-    resized = resize_media(media, width=4, height=3, fake=True).collect()
+    docs = load_table(spark, sf_dir, "documents").limit(10)
+    imgs = synthesize_images(docs, width=16, height=12)
+    resized = resize_media(imgs, width=4, height=3).collect()
     assert len(resized) == 10
-    assert all(len(r["media"]) == 12 and r["width"] == 4 and r["height"] == 3 for r in resized)
+    assert all(r["width"] == 4 and r["height"] == 3 for r in resized)
+    assert all(
+        codecs.png_decode(bytes(r["media"])).shape == (3, 4, 1) for r in resized
+    )
     # deterministic
-    again = resize_media(media, width=4, height=3, fake=True).collect()
+    again = resize_media(imgs, width=4, height=3).collect()
     assert sorted(r["media"] for r in resized) == sorted(r["media"] for r in again)
+
+    media = synthesize_media(docs)
 
     # real resize of non-image bytes yields empty media (caller filters)
     real = resize_media(media, 2, 2).collect()
@@ -473,36 +488,37 @@ def test_stratified_sample_superset_property(spark, sf_dir):
     assert len(hi) > len(lo)
 
 
-def test_embedding_lsh_path_subset_and_recall(spark, sf_dir):
+def test_embedding_lsh_path_subset_and_recall(spark, sf_dir, gate_sides):
     """The 100 TB path for dedup_embedding: LSH-bucketed candidates + exact
     verify must emit a subset of the exact broadcast result (no false
     positives) with near-total recall at generous band counts — and never
     collect the corpus (no broadcast-Gram in the plan)."""
-    from lakeside_spark.operators.similarity import embedding_dup_pairs
+    from lakeside_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in embedding_dup_pairs(emb, 0.9, strategy="broadcast").collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in embedding_dup_pairs(
-            emb, 0.9, strategy="lsh", bands=24, planes_per_band=6
-        ).collect()
-    }
+    lsh, exact = gate_sides(
+        similarity,
+        "BROADCAST_LIMIT",
+        lambda: {
+            (r["id_a"], r["id_b"]): r["cos"]
+            for r in similarity.embedding_dup_pairs(
+                emb, 0.9, bands=24, planes_per_band=6
+            ).collect()
+        },
+    )
     assert set(lsh) <= set(exact), "verify stage must kill false positives"
     assert len(lsh) >= 0.9 * len(exact), (len(lsh), len(exact))
     for pair, cos in lsh.items():
         assert cos == pytest.approx(exact[pair], abs=1e-6)
 
 
-def test_embedding_lsh_no_cartesian(spark, sf_dir):
-    from lakeside_spark.operators.similarity import embedding_dup_pairs
+def test_embedding_lsh_no_cartesian(spark, sf_dir, monkeypatch):
+    from lakeside_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
+    monkeypatch.setattr(similarity, "BROADCAST_LIMIT", 0)
     plan = (
-        embedding_dup_pairs(emb, 0.9, strategy="lsh")
+        similarity.embedding_dup_pairs(emb, 0.9)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -680,29 +696,8 @@ def test_hybrid_rrf_fuses_both_legs(spark, sf_dir):
             assert 0 < r["rrf"] <= round(2 / 61, 6) + 1e-9, r
 
 
-def test_bm25_strategies_agree(spark, sf_dir):
-    """The auto-gated full-postings and matched-postings plans are the
-    same operator: identical (q_id, doc_id, score, rank) rows on the
-    driver tables, including when the query-term inline gate is forced
-    down the lazy broadcast semi-join fallback."""
-    from lakeside_spark.operators.bm25 import bm25_topk
-    from lakeside_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    c, q = docs.filter("doc_id >= 5"), docs.filter("doc_id < 5")
-
-    def canon(df):
-        return sorted(map(tuple, df.collect()))
-
-    full = canon(bm25_topk(c, q, k=10, strategy="full"))
-    assert full == canon(bm25_topk(c, q, k=10, strategy="matched"))
-    assert full == canon(
-        bm25_topk(c, q, k=10, strategy="matched", qterm_inline_limit=0)
-    )
-
-
 def test_bm25_gate_metadata_count(spark, sf_dir, tmp_path):
-    """The strategy gate on a bare file-backed scan reads parquet
+    """The full/matched gate on a bare file-backed scan reads parquet
     footers — zero Spark jobs, also for a zero-row table — and agrees
     with count(); any row-dropping plan (a filter) falls back to a real
     count."""
@@ -1362,54 +1357,35 @@ def test_pagerank_closed_forms(spark):
     assert gw["b"] > gw["c"]
     # empty graph
     assert pagerank(e2.filter("n < 0")).count() == 0
-    # the bounded-side local path and the join-based distributed loop run
-    # the identical fixed-point pipeline — bit-for-bit equal
-    import random
-
-    rng = random.Random(11)
-    redges = [
-        ("n%d" % rng.randint(0, 9), "n%d" % rng.randint(0, 9),
-         rng.randint(1, 20))
-        for _ in range(60)
-    ]
-    rdf = spark.createDataFrame(redges, "src string, dst string, n long")
-    loc = {r["node"]: r["rank"] for r in pagerank(rdf, strategy="local").collect()}
-    dist = {r["node"]: r["rank"] for r in pagerank(rdf, strategy="distributed").collect()}
-    assert loc == dist
     # zero/NULL-weight edges carry no mass and must not divide a zero
-    # out-weight (local raised, distributed NULLed) — dropped up front,
-    # identically in both strategies
+    # out-weight — dropped up front (both sides of the local/distributed
+    # gate agree: tests/test_gate_parity.py)
     ez = spark.createDataFrame(
         [("a", "b", 1.0), ("a", "c", 0.0), ("b", "a", None)],
         "src string, dst string, n double",
     )
-    gz_l = {r["node"]: r["rank"] for r in pagerank(ez, strategy="local").collect()}
-    gz_d = {r["node"]: r["rank"] for r in pagerank(ez, strategy="distributed").collect()}
-    assert gz_l == gz_d and set(gz_l) == {"a", "b"}
+    assert {r["node"] for r in pagerank(ez).collect()} == {"a", "b"}
 
 
-def test_pagerank_dangling_heavy_scalar_completion(spark):
+def test_pagerank_dangling_heavy_scalar_completion(spark, gate_sides):
     # dangling-heavy graph (20 sinks, 4 sources): the distributed path
     # must redistribute the sinks' mass as ONE scalar per iteration —
     # never |dangling| x |nodes| explicit uniform edges — and still be
     # bit-equal to the local explicit-edge pipeline.
     from pyspark.sql import functions as F
 
-    from lakeside_spark.operators.graph import (
-        _dangling_mass9,
-        _dist_step,
-        pagerank,
-    )
+    from lakeside_spark.operators import graph
+    from lakeside_spark.operators.graph import _dangling_mass9, _dist_step
 
     edges = [("h%d" % i, "hub", 1) for i in range(3)] + [
         ("hub", "d%d" % i, 1) for i in range(20)
     ]
     df = spark.createDataFrame(edges, "src string, dst string, n long")
-    loc = {r["node"]: r["rank"] for r in pagerank(df, strategy="local").collect()}
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, strategy="distributed").collect()
-    }
+    dist, loc = gate_sides(
+        graph,
+        "LOCAL_EDGE_GATE",
+        lambda: {r["node"]: r["rank"] for r in graph.pagerank(df).collect()},
+    )
     assert loc == dist and len(dist) == 24
     assert abs(sum(dist.values()) - 1.0) < 1e-3
 
@@ -1639,7 +1615,8 @@ def test_phash_image_near_dup(spark):
     import numpy as np
 
     from lakeside_spark.operators import codecs
-    from lakeside_spark.operators.multimodal import phash64, phash_pairs
+    from lakeside_spark.operators.dedup import hamming_pairs
+    from lakeside_spark.operators.multimodal import phash64
 
     rng = np.random.default_rng(11)
     base = rng.integers(0, 256, size=(40, 40), dtype=np.uint8)
@@ -1665,7 +1642,9 @@ def test_phash_image_near_dup(spark):
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in phash_pairs(df, max_hamming=10, allow_quadratic=True).collect()
+        for r in hamming_pairs(
+            phash64(df), 10, bits=63, hash_col="phash", allow_quadratic=True
+        ).collect()
     }
     assert pairs[(1, 2)] == 0
     assert (1, 3) in pairs and 0 < pairs[(1, 3)] <= 10
@@ -1730,11 +1709,12 @@ def test_hamming_pairs_allow_quadratic_warns_and_is_correct(spark):
 
 def test_audio_fingerprint_dedup(spark):
     from lakeside_spark.operators.audiofp import (
+        BITS,
         audio_fingerprint,
-        audio_pairs,
         perturb_audio,
         synthesize_audio,
     )
+    from lakeside_spark.operators.dedup import hamming_pairs
 
     docs = spark.createDataFrame(
         [(i, f"text number {i} with words") for i in range(20)],
@@ -1751,7 +1731,9 @@ def test_audio_fingerprint_dedup(spark):
     allc = base.unionByName(variants)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_pairs(allc, max_hamming=5).collect()
+        for r in hamming_pairs(
+            audio_fingerprint(allc), max_hamming=5, bits=BITS, hash_col="afp"
+        ).collect()
     }
     # every gain+noise variant pairs with its original within the budget
     recovered = [(i, i + 1_000_000) in pairs for i in range(10)]
@@ -2180,18 +2162,11 @@ class TestFunnelEdgeCases:
         df = spark.createDataFrame(
             rows, "user_id long, timestamp_ms long, name string"
         )
-        for strategy in ("join", "fold"):
-            got = {
-                (r["step"], r["step_name"]): r["users"]
-                for r in funnel(
-                    df, ["view", "click", "purchase"], 10_000, strategy=strategy
-                ).collect()
-            }
-            assert got == {
-                (1, "view"): 2,
-                (2, "click"): 1,
-                (3, "purchase"): 0,
-            }, strategy
+        got = {
+            (r["step"], r["step_name"]): r["users"]
+            for r in funnel(df, ["view", "click", "purchase"], 10_000).collect()
+        }
+        assert got == {(1, "view"): 2, (2, "click"): 1, (3, "purchase"): 0}
 
     def test_duplicate_step_names_rejected(self, spark):
         import pytest as _pytest
@@ -2201,9 +2176,8 @@ class TestFunnelEdgeCases:
         df = spark.createDataFrame(
             [(1, 1000, "view")], "user_id long, timestamp_ms long, name string"
         )
-        for strategy in ("join", "fold"):
-            with _pytest.raises(ValueError, match="distinct"):
-                funnel(df, ["view", "view", "purchase"], 10_000, strategy=strategy)
+        with _pytest.raises(ValueError, match="distinct"):
+            funnel(df, ["view", "view", "purchase"], 10_000)
 
 
 class TestLttbTinyBudget:
@@ -2360,10 +2334,9 @@ class TestDsirCrossShard:
 
 
 def test_funnel_null_users_excluded_all_strategies(spark):
-    """A NULL user id is not a user: without the up-front filter, agg/fold
-    pool NULL rows into one phantom group (completing steps) while the
-    join chain drops them at the first equi-join — the strategies would
-    silently disagree. All three must exclude NULLs and agree."""
+    """A NULL user id is not a user: without the up-front filter, the
+    user-keyed aggregation pools NULL rows into one phantom group that
+    completes steps."""
     from lakeside_spark.operators.behavior import funnel
 
     rows = [
@@ -2372,20 +2345,14 @@ def test_funnel_null_users_excluded_all_strategies(spark):
     ]
     df = spark.createDataFrame(rows, "user_id long, ts long, name string")
     expected = {1: 1, 2: 1, 3: 0}
-    for strat in ("agg", "join", "fold"):
-        got = {
-            r["step"]: r["users"]
-            for r in funnel(
-                df, ["view", "click", "purchase"], window_ms=500,
-                user_col="user_id", ts_col="ts", name_col="name",
-                strategy=strat,
-            ).collect()
-        }
-        assert got == expected, strat
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown funnel strategy"):
-        funnel(df, ["view"], window_ms=1, strategy="aggs")
+    got = {
+        r["step"]: r["users"]
+        for r in funnel(
+            df, ["view", "click", "purchase"], window_ms=500,
+            user_col="user_id", ts_col="ts", name_col="name",
+        ).collect()
+    }
+    assert got == expected
 
 
 def test_stickiness_sketch_tracks_exact(spark, sf_dir):
@@ -2490,46 +2457,7 @@ def test_pca_reduce_invariants(spark, sf_dir):
             assert abs(d0 - d1) < 1e-6
 
 
-def test_connected_components_star_fallback_matches_union_find(spark):
-    """The >local_max_edges distributed path (alternating large-star /
-    small-star, Kiveris et al. SoCC'14) must produce the identical
-    (doc_id, cluster_id) assignment as the driver union-find — including
-    on a 300-node chain, whose diameter (299) would defeat any
-    diameter-bound propagation within the default 25-round budget."""
-    import random
-
-    from lakeside_spark.operators.dedup import connected_components
-
-    cases = []
-    # chain: 0-1-2-...-299 (single component, worst-case diameter)
-    cases.append([(i, i + 1) for i in range(299)])
-    # self-pairs are singletons: dropped identically by BOTH paths
-    cases.append([(5, 5), (1, 2), (2, 3), (9, 9)])
-    # random sparse multi-component graphs, shuffled endpoint order
-    for seed in range(3):
-        rng = random.Random(seed)
-        n = 120
-        es = [
-            tuple(rng.sample(range(n), 2))
-            for _ in range(rng.randint(30, 90))
-        ]
-        cases.append(es)
-    for es in cases:
-        df = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in es], "id_a bigint, id_b bigint"
-        )
-        exact = {
-            (r["doc_id"], r["cluster_id"])
-            for r in connected_components(df).collect()
-        }
-        dist = {
-            (r["doc_id"], r["cluster_id"])
-            for r in connected_components(df, local_max_edges=0).collect()
-        }
-        assert dist == exact, f"mismatch on {len(es)}-edge graph"
-
-
-def test_connected_components_degraded_one_label_per_node(spark):
+def test_connected_components_degraded_one_label_per_node(spark, monkeypatch):
     """If the star contraction is stopped before its fixed point
     (max_iter exhausted), the output must still be a FUNCTION: exactly
     one cluster_id per doc_id (a possibly-unmerged superset clustering,
@@ -2537,14 +2465,15 @@ def test_connected_components_degraded_one_label_per_node(spark):
     conflicting labels."""
     import warnings
 
-    from lakeside_spark.operators.dedup import connected_components
+    from lakeside_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a bigint, id_b bigint"
     )
+    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 0)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", RuntimeWarning)
-        out = connected_components(df, max_iter=1, local_max_edges=0).collect()
+        out = dedup.connected_components(df, max_iter=1).collect()
     ids = [r["doc_id"] for r in out]
     assert len(ids) == len(set(ids)) == 64
     assert all(r["cluster_id"] <= r["doc_id"] for r in out)
@@ -2669,12 +2598,12 @@ def test_containment_catches_doc_inside_doc(spark):
 
 
 def test_containment_prefix_gate(spark, monkeypatch):
-    """Above the corpus-size gate the auto strategy flips to prefix-
-    filter candidates + bounded verify: output ⊆ exact, the planted
-    contained-doc pair is recovered with the identical containment
-    value, and the verify's pair join is candidate-bounded (LeftSemi in
-    the plan) — no full shingle-pair join at scale."""
-    from lakeside_spark.operators.dedup import ngram_containment_pairs
+    """Above the corpus-size gate the prefix-filter candidates feed a
+    bounded verify: the verify's pair join is candidate-bounded (LeftSemi
+    in the plan) — no full shingle-pair join at scale. Its rows stay
+    inside the exact side's: tests/test_gate_parity.py."""
+    from lakeside_spark import materialize
+    from lakeside_spark.operators import dedup
 
     filler = " ".join(f"word{i} item{i} thing{i}" for i in range(40))
     short = " ".join(f"quote{i} body{i}" for i in range(25))
@@ -2685,27 +2614,13 @@ def test_containment_prefix_gate(spark, monkeypatch):
         (4, " ".join(f"decoy{i} filler{i}" for i in range(30))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in ngram_containment_pairs(
-            df, threshold=0.5, strategy="exact"
-        ).collect()
-    }
-    # exact_max_docs=0 forces the auto probe over the gate; an identity
-    # checkpoint keeps the lazy plan inspectable (the checkpoint would
-    # truncate it to a checkpoint scan)
-    from lakeside_spark import materialize
-
-    with monkeypatch.context() as m:
-        m.setattr(materialize, "checkpointed", lambda df: df)
-        gated = ngram_containment_pairs(df, threshold=0.5, exact_max_docs=0)
-        plan = gated._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(dedup, "CONTAINMENT_EXACT_MAX_DOCS", 0)
+    # an identity checkpoint keeps the lazy plan inspectable (the
+    # checkpoint would truncate it to a checkpoint scan)
+    monkeypatch.setattr(materialize, "checkpointed", lambda df: df)
+    gated = dedup.ngram_containment_pairs(df, threshold=0.5)
+    plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
-    got = {
-        (r["id_a"], r["id_b"]): r["containment"] for r in gated.collect()
-    }
-    assert set(got) <= set(exact)
-    assert (1, 2) in got and got[(1, 2)] == exact[(1, 2)]
 
 
 def test_ts_autocorrelation_matches_pandas(spark, sf_dir):
@@ -2842,13 +2757,13 @@ def test_text_msttr_hand_computed(spark, sf_dir):
     assert len(got) == expected
 
 
-def test_containment_prefix_recalls_extreme_size_ratio(spark):
+def test_containment_prefix_recalls_extreme_size_ratio(spark, gate_sides):
     """The headline case the one-row-band MinHash candidates missed: a
     paragraph contained in a ~100x larger document (size ratio ρ≈0.01,
     where band-collision recall was ~15%). Prefix filtering is lossless
     at ANY ratio — the planted pair must surface with the containment
     value the exact path computes."""
-    from lakeside_spark.operators.dedup import ngram_containment_pairs
+    from lakeside_spark.operators import dedup
 
     para = " ".join(f"needle{i} token{i}" for i in range(15))  # ~28 shingles
     book = " ".join(f"page{i} word{i} body{i}" for i in range(1000))
@@ -2859,32 +2774,16 @@ def test_containment_prefix_recalls_extreme_size_ratio(spark):
         (4, " ".join(f"decoy{i} filler{i}" for i in range(400))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in ngram_containment_pairs(df, 0.8, strategy="exact").collect()
-    }
+    pref, exact = gate_sides(
+        dedup,
+        "CONTAINMENT_EXACT_MAX_DOCS",
+        lambda: {
+            (r["id_a"], r["id_b"]): r["containment"]
+            for r in dedup.ngram_containment_pairs(df, 0.8).collect()
+        },
+    )
     assert (1, 2) in exact and exact[(1, 2)] >= 0.9  # the planted pair
-    pref = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in ngram_containment_pairs(df, 0.8, strategy="prefix").collect()
-    }
     assert pref == exact  # lossless: identical pairs AND values
-
-
-def test_collocations_driver_path_equals_distributed(spark, sf_dir):
-    """The vocabulary-sized fast path (driver-side scoring, one Spark
-    job) must be value-identical to the distributed scoring path —
-    including the HALF_UP 6dp rounding and the (pmi desc, a, b) tie
-    order."""
-    from lakeside_spark.operators.textstats import collocations
-
-    docs = load_table(spark, sf_dir, "documents")
-    fast = [tuple(r) for r in collocations(docs, min_count=2, k=50).collect()]
-    slow = [
-        tuple(r)
-        for r in collocations(docs, min_count=2, k=50, driver_gate=0).collect()
-    ]
-    assert fast == slow and len(fast) > 0
 
 
 def test_jacobi_eigh_snapped_accuracy_and_schedule():
@@ -3029,10 +2928,11 @@ def test_video_phash_dedup_recovers_planted_variants(spark, sf_dir):
     ≥80% recall on the planted pairs and ZERO false pairs between
     unrelated noise videos (63-bit signatures of independent videos sit
     ~31 bits apart; P(≤6) per pair ≈ 1e-11)."""
+    from lakeside_spark.operators.dedup import hamming_pairs
     from lakeside_spark.operators.multimodal import (
         perturb_videos,
         synthesize_videos,
-        video_pairs,
+        video_phash,
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(30)
@@ -3040,8 +2940,9 @@ def test_video_phash_dedup_recovers_planted_variants(spark, sf_dir):
     planted = perturb_videos(base.filter(F.col("doc_id") % 5 == 0))
     n_planted = planted.count()
     assert n_planted >= 3
-    pairs = video_pairs(
-        base.unionByName(planted), max_hamming=6
+    pairs = hamming_pairs(
+        video_phash(base.unionByName(planted)), max_hamming=6, bits=63,
+        hash_col="phash",
     ).collect()
     # every found pair must be a planted (x, x+1e6) pair — no cross talk
     assert all(r["id_b"] == r["id_a"] + 1_000_000 for r in pairs), pairs
@@ -3071,12 +2972,13 @@ def test_avi_frames_extracts_mjpeg_chunks():
     assert frames[0][1] == payload
 
 
-def test_jaccard_sparse_kernel_parity_and_products_cap(spark):
-    """r12 sparse Gram kernel: (a) kernel and join strategies agree
-    exactly on pairs AND jaccard values, (b) the kernel computes exact
-    Σf² driver-side and declines (returns None → auto/kernel falls back
+def test_jaccard_sparse_kernel_parity_and_products_cap(spark, gate_sides):
+    """r12 sparse Gram kernel: (a) kernel and join sides agree exactly on
+    pairs AND jaccard values, (b) the kernel computes exact Σf²
+    driver-side and declines (returns None → the kernel side falls back
     to the join) when a hot shingle blows the products cap, still
     producing identical results."""
+    import lakeside_spark.operators.dedup as _D
     from lakeside_spark.operators.dedup import (
         _gram_pair_counts,
         _shingled_rows,
@@ -3091,32 +2993,26 @@ def test_jaccard_sparse_kernel_parity_and_products_cap(spark):
         (5, "alpha beta gamma delta epsilon zeta eta theta"),  # dup of 1
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    k = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, 0.1, strategy="kernel").collect()
-    }
-    j = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, 0.1, strategy="join").collect()
-    }
+    def jac():
+        return {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(df, 0.1).collect()
+        }
+
+    j, k = gate_sides(_D, "JACCARD_KERNEL_MAX_DOCS", jac)
     assert k == j and (1, 5) in k and k[(1, 5)] == 1.0
     # hot-shingle corpus: every doc shares one shingle -> Σf² = n² blows
     # a tiny cap; the kernel must decline rather than absorb the blow-up
     ex = _shingled_rows(df, "text", "doc_id", 3)
     assert _gram_pair_counts(ex, 0.1, products_cap=1) is None
-    # and when the kernel declines, the strategy="kernel" public path
+    # and when the kernel declines, the kernel side of the public path
     # falls back to the join and still answers identically
-    import lakeside_spark.operators.dedup as _D
-
     orig = _D._gram_pair_counts
     _D._gram_pair_counts = lambda ex, t, products_cap=0: orig(
         ex, t, products_cap=1
     )
     try:
-        via_fallback = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(df, 0.1, strategy="kernel").collect()
-        }
+        via_fallback = jac()
     finally:
         _D._gram_pair_counts = orig
     assert via_fallback == j
@@ -3126,15 +3022,13 @@ def test_jaccard_sparse_kernel_parity_and_products_cap(spark):
 
     ck = {
         (r["id_a"], r["id_b"]): (r["n_common"], r["containment"])
-        for r in ngram_containment_pairs(df, 0.5, strategy="exact").collect()
+        for r in ngram_containment_pairs(df, 0.5).collect()
     }
     _D._gram_pair_counts = lambda *a, **kw: None
     try:
         cj = {
             (r["id_a"], r["id_b"]): (r["n_common"], r["containment"])
-            for r in ngram_containment_pairs(
-                df, 0.5, strategy="exact"
-            ).collect()
+            for r in ngram_containment_pairs(df, 0.5).collect()
         }
     finally:
         _D._gram_pair_counts = orig
@@ -3159,13 +3053,14 @@ def test_jaccard_sparse_kernel_parity_and_products_cap(spark):
     assert wk == wj
 
 
-def test_jaccard_sparse_kernel_mass_balanced_blocks(spark):
+def test_jaccard_sparse_kernel_mass_balanced_blocks(spark, monkeypatch):
     """r13 (ADVICE): kernel block boundaries follow cumulative per-doc
     PRODUCT MASS, not equal doc counts. A corpus where the low-id docs
     carry all the hot-shingle mass and the high-id docs are near-unique
     must still produce join-identical pairs — the boundary math (prefix
     sum + searchsorted, empty-block skip) is what this pins, with
     products_per_task shrunk so the boundaries really cut many blocks."""
+    from lakeside_spark.operators import dedup
     from lakeside_spark.operators.dedup import (
         _gram_pair_counts,
         _jaccard_from_counts,
@@ -3186,8 +3081,9 @@ def test_jaccard_sparse_kernel_mass_balanced_blocks(spark):
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in _jaccard_from_counts(counts, 0.2).collect()
     }
+    monkeypatch.setattr(dedup, "JACCARD_KERNEL_MAX_DOCS", 0)  # the join side
     j = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, 0.2, strategy="join").collect()
+        for r in ngram_jaccard_pairs(df, 0.2).collect()
     }
     assert k == j and len(k) > 0

@@ -9,8 +9,8 @@ zero, true pair volume grows linearly, and wall-clock growth isolates
 the candidate/verify plan.
 
 Usage: python tools/containment_probe.py [N ...]   # default 10 100
-Prints per-N wall seconds + output rows + growth vs 1x for the forced
-"prefix" strategy (the 100 TB path). Replicas build under
+Prints per-N wall seconds + output rows + growth vs 1x with the size gate
+forced to the prefix-filtering side (the 100 TB path). Replicas build under
 /tmp/lakeside_containment_sf<N>x and are reused.
 """
 from __future__ import annotations
@@ -58,10 +58,12 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from lakeside_spark.operators.dedup import ngram_containment_pairs
+    from lakeside_spark.operators import dedup
     from lakeside_spark.session import get_spark
     from lakeside_spark.sources.tables import load_table
 
+    # every corpus size takes the prefix side
+    dedup.CONTAINMENT_EXACT_MAX_DOCS = 0
     spark = get_spark("containment-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(64).repartition(32).mapInPandas(
@@ -72,11 +74,8 @@ def main() -> int:
         best, rows = float("inf"), 0
         for _ in range(2):
             t0 = time.perf_counter()
-            rows = ngram_containment_pairs(
-                docs, threshold=0.5, strategy="prefix"
-            ).count()
+            rows = dedup.ngram_containment_pairs(docs, threshold=0.5).count()
             best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()  # drop the per-call shingle pin
         return best, rows
 
     base_docs = load_table(spark, SRC, "documents").select("doc_id", "text")

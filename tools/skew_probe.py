@@ -77,6 +77,7 @@ def behavior_skew(src: str) -> int:
     """
     from pyspark.sql import functions as F
 
+    from lakeside_spark import materialize as M
     from lakeside_spark.operators.behavior import (
         attribution,
         interval_concurrency,
@@ -87,7 +88,7 @@ def behavior_skew(src: str) -> int:
     spark = get_spark("behavior-skew-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    ev = (
+    events = (
         load_table(spark, src, "events")
         .select(
             "event_id",
@@ -96,55 +97,55 @@ def behavior_skew(src: str) -> int:
             F.col("event_type").alias("name"),
             "value",
         )
-        .persist()
     )
-    n = ev.count()
-    hot_user = ev.withColumn(
-        "user_id",
-        F.when(F.pmod(F.col("event_id"), 100) < 95, F.lit(1)).otherwise(
-            F.col("user_id")
-        ),
-    )
-    hot_span = ev.withColumn(
-        "name",
-        F.when(F.pmod(F.col("event_id"), 100) < 95, F.lit("hotsvc")).otherwise(
-            F.col("name")
-        ),
-    )
-    # a hot span name alone doesn't stress attribution (it keys on user),
-    # and a hot user doesn't stress concurrency (it keys on span name) —
-    # probe each operator under ITS hot key
-    for label, frame, op in (
-        ("uniform", ev, "attribution"),
-        ("hot-user 95%", hot_user, "attribution"),
-        ("hot-user cap5", hot_user, "attribution-capped"),
-        ("uniform", ev, "concurrency"),
-        ("hot-span 95%", hot_span, "concurrency"),
-    ):
-        t0 = time.time()
-        if op == "attribution-capped":
-            # max_touches=5: the touch-per-conversion cap — post-join
-            # volume bounded at 5 rows/conversion regardless of how hot
-            # the user is; the remaining cost is the range join itself
-            cnt = attribution(
-                frame, lookback_ms=3_600_000, max_touches=5
-            ).count()
-        elif op == "attribution":
-            # 1h lookback: a 95%-hot user with the default 7-day window is
-            # SEMANTICALLY quadratic (every conversion × every in-window
-            # touch is real output the linear model must credit) — the
-            # probe isolates reducer skew, not that fan-out; the fan-out
-            # mitigation is a touch cap, measured/discussed in SURVEY §6
-            cnt = attribution(frame, lookback_ms=3_600_000).count()
-        else:
-            cnt = interval_concurrency(
-                frame, key_col="name", ts_col="timestamp_ms", dur_col="value"
-            ).count()
-        print(
-            f"{op:12s} {label:14s} {time.time() - t0:6.2f}s"
-            f" ({cnt} rows, {n} events)",
-            flush=True,
+    with M.held(events) as ev:
+        n = ev.count()
+        hot_user = ev.withColumn(
+            "user_id",
+            F.when(F.pmod(F.col("event_id"), 100) < 95, F.lit(1)).otherwise(
+                F.col("user_id")
+            ),
         )
+        hot_span = ev.withColumn(
+            "name",
+            F.when(F.pmod(F.col("event_id"), 100) < 95, F.lit("hotsvc")).otherwise(
+                F.col("name")
+            ),
+        )
+        # a hot span name alone doesn't stress attribution (it keys on user),
+        # and a hot user doesn't stress concurrency (it keys on span name) —
+        # probe each operator under ITS hot key
+        for label, frame, op in (
+            ("uniform", ev, "attribution"),
+            ("hot-user 95%", hot_user, "attribution"),
+            ("hot-user cap5", hot_user, "attribution-capped"),
+            ("uniform", ev, "concurrency"),
+            ("hot-span 95%", hot_span, "concurrency"),
+        ):
+            t0 = time.time()
+            if op == "attribution-capped":
+                # max_touches=5: the touch-per-conversion cap — post-join
+                # volume bounded at 5 rows/conversion regardless of how hot
+                # the user is; the remaining cost is the range join itself
+                cnt = attribution(
+                    frame, lookback_ms=3_600_000, max_touches=5
+                ).count()
+            elif op == "attribution":
+                # 1h lookback: a 95%-hot user with the default 7-day window is
+                # SEMANTICALLY quadratic (every conversion × every in-window
+                # touch is real output the linear model must credit) — the
+                # probe isolates reducer skew, not that fan-out; the fan-out
+                # mitigation is a touch cap, measured/discussed in SURVEY §6
+                cnt = attribution(frame, lookback_ms=3_600_000).count()
+            else:
+                cnt = interval_concurrency(
+                    frame, key_col="name", ts_col="timestamp_ms", dur_col="value"
+                ).count()
+            print(
+                f"{op:12s} {label:14s} {time.time() - t0:6.2f}s"
+                f" ({cnt} rows, {n} events)",
+                flush=True,
+            )
     return 0
 
 
