@@ -12,25 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
-from lakeside_spark.ast.model import FunctionCall, Label, Literal
-
-
-#: /api/v1/functionSpecs payload (reference: ComputeFunction.getSpecs,
-#: ComputeFunction.scala:108-180). num_arguments None = variadic.
-FUNCTION_SPECS: dict[str, dict] = {
-    "mul": {"num_arguments": None, "return_type": S.NUMBER_TYPE,
-            "arguments": [("multiplier", S.NUMBER_TYPE)]},
-    "div": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
-            "arguments": [("numerator", S.NUMBER_TYPE), ("denominator", S.NUMBER_TYPE)]},
-    "add": {"num_arguments": None, "return_type": S.NUMBER_TYPE,
-            "arguments": [("addend", S.NUMBER_TYPE)]},
-    "sub": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
-            "arguments": [("number1", S.NUMBER_TYPE), ("number2", S.NUMBER_TYPE)]},
-    "concat": {"num_arguments": None, "return_type": S.STRING_TYPE,
-               "arguments": [("string", S.STRING_TYPE)]},
-    "strpos": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
-               "arguments": [("search_string", S.STRING_TYPE), ("string", S.STRING_TYPE)]},
-}
+from lakeside_spark.ast.model import FUNCTION_SPECS, FunctionCall, Label, Literal
 
 
 def function_specs() -> dict[str, dict]:

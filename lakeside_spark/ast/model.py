@@ -88,6 +88,25 @@ class Literal:
     data_type: str = S.STRING_TYPE
 
 
+#: The compute-function catalog, /api/v1/functionSpecs payload (reference:
+#: ComputeFunction.getSpecs, ComputeFunction.scala:108-180). FunctionCall
+#: validates names and arity against it; num_arguments None = variadic.
+FUNCTION_SPECS: dict[str, dict] = {
+    "mul": {"num_arguments": None, "return_type": S.NUMBER_TYPE,
+            "arguments": [("multiplier", S.NUMBER_TYPE)]},
+    "div": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
+            "arguments": [("numerator", S.NUMBER_TYPE), ("denominator", S.NUMBER_TYPE)]},
+    "add": {"num_arguments": None, "return_type": S.NUMBER_TYPE,
+            "arguments": [("addend", S.NUMBER_TYPE)]},
+    "sub": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
+            "arguments": [("number1", S.NUMBER_TYPE), ("number2", S.NUMBER_TYPE)]},
+    "concat": {"num_arguments": None, "return_type": S.STRING_TYPE,
+               "arguments": [("string", S.STRING_TYPE)]},
+    "strpos": {"num_arguments": 2, "return_type": S.NUMBER_TYPE,
+               "arguments": [("search_string", S.STRING_TYPE), ("string", S.STRING_TYPE)]},
+}
+
+
 @dataclass(frozen=True)
 class FunctionCall:
     """Scalar fn-call DAG (reference: pipeline ComputeFunction.scala:62-98).
@@ -98,28 +117,15 @@ class FunctionCall:
     name: str
     arguments: tuple[Union[Label, Literal, "FunctionCall"], ...]
 
-    _REGISTRY = {
-        "mul": (None, S.NUMBER_TYPE),
-        "div": (2, S.NUMBER_TYPE),
-        "add": (None, S.NUMBER_TYPE),
-        "sub": (2, S.NUMBER_TYPE),
-        "concat": (None, S.STRING_TYPE),
-        "strpos": (2, S.NUMBER_TYPE),
-    }
-
     def __post_init__(self) -> None:
-        if self.name not in self._REGISTRY:
+        if self.name not in FUNCTION_SPECS:
             raise ValueError(f"Unknown function {self.name}!")
-        arity = self._REGISTRY[self.name][0]
+        arity = FUNCTION_SPECS[self.name]["num_arguments"]
         if arity is not None and len(self.arguments) != arity:
             raise ValueError(
                 f"Invalid number of arguments for function {self.name}, "
                 f"passed {len(self.arguments)}, allowed {arity}"
             )
-
-    @property
-    def return_type(self) -> str:
-        return self._REGISTRY[self.name][1]
 
 
 @dataclass(frozen=True)
@@ -156,20 +162,6 @@ class BaseExpr:
     limit: int = 1000
     order: str = "DESC"
     metric_type: str = "gauge"
-
-    def field_set(self) -> set[str]:
-        out = _filter_field_set(self.filter)
-        if self.chart:
-            out |= set(self.chart.group_bys)
-        return out
-
-
-def _filter_field_set(q: QueryClause) -> set[str]:
-    if isinstance(q, Filter):
-        return {q.k}
-    if isinstance(q, BinaryClause):
-        return _filter_field_set(q.q1) | _filter_field_set(q.q2)
-    return _filter_field_set(q.clause)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,7 @@
 """Vector expression helpers for embedding columns (array<float|double>).
 
-Dot products / norms via zip_with + aggregate: built-in higher-order
-functions, evaluated JVM-side per row — no UDF, no Python. At 100 TB scale
-these are the per-row kernels under brute-force or LSH-bucketed ANN; the
-distribution strategy lives in operators/similarity.py.
+Scoring runs as blocked numpy kernels in operators/similarity.py; this
+module only normalizes the column type those kernels read.
 """
 
 from __future__ import annotations
@@ -16,16 +14,3 @@ def as_double_array(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return c.cast("array<double>")
 
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

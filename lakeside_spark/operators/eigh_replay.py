@@ -35,7 +35,7 @@ SWEEPS = 8
 ITERS = SWEEPS * (D - 1)
 
 
-from lakeside_spark.operators.kmeans_replay import snap_away_int
+from lakeside_spark.operators.kmeans_replay import _snap9i, snap_away_int
 
 
 def _snap12_arr(a: np.ndarray) -> np.ndarray:
@@ -44,11 +44,6 @@ def _snap12_arr(a: np.ndarray) -> np.ndarray:
     Magnitudes here stay far below 2^53/1e12, so the int64 round-trip
     through the shared snap is exact."""
     return snap_away_int(a, 1e12).astype(np.float64) / 1e12
-
-
-def _snap9_int_arr(a: np.ndarray) -> np.ndarray:
-    """snap_away_int at 1e-9 (the shared engine convention)."""
-    return snap_away_int(a, 1e9)
 
 
 def _partner(i: int, rr: int) -> int:
@@ -107,7 +102,7 @@ def cov9_from_moments(n: int, s9: np.ndarray, g9: np.ndarray) -> np.ndarray:
     nf = float(n)
     gm = g9.astype(np.float64) / 1e9 / nf
     mu = s9.astype(np.float64) / 1e9 / nf
-    return _snap9_int_arr(gm - mu[:, None] * mu[None, :])
+    return _snap9i(gm - mu[:, None] * mu[None, :])
 
 
 def scale_exp(c9: np.ndarray) -> float:

@@ -30,8 +30,8 @@ def snap_away_int(a: np.ndarray, scale: float) -> np.ndarray:
     np.rint is half-EVEN, so exact .5 ties are adjusted explicitly —
     the comparison is on exact float values, no epsilon games). The
     scale-specific wrappers (_snap9i here, pq_replay._snap6i,
-    similarity._snap9_arr, eigh_replay's pair) all delegate here so the
-    tie convention lives in ONE place."""
+    eigh_replay._snap12_arr) all delegate here so the tie convention
+    lives in ONE place."""
     v = a * scale
     f = np.floor(v)
     tie = (v - f) == 0.5

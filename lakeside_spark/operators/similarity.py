@@ -15,8 +15,7 @@ Execution strategy (the part that matters at 100 TB):
   "small side" no longer fits a broadcast — the scale path (recall < 1 by
   design).
 
-Column-expression cosine (functions/vectors.py) remains for single-pair
-use; the operators here never evaluate vectors row-at-a-time.
+The operators here never evaluate vectors row-at-a-time.
 """
 
 from __future__ import annotations
@@ -1320,16 +1319,8 @@ def label_centroid_outliers(
     )
 
 
-def _snap9_arr(a: np.ndarray) -> np.ndarray:
-    """Vectorized round-half-away-from-zero of ``a * 1e9`` to int64 —
-    the engine-portable fixed-point snap (delegates to the shared
-    kmeans_replay.snap_away_int so the tie convention lives in one
-    place)."""
-    return _snap9i(a)
-
-
 def _snap9_scalar(x: float) -> int:
-    """Scalar twin of _snap9_arr for driver-side recursions."""
+    """Scalar twin of kmeans_replay._snap9i for driver-side recursions."""
     v = x * 1e9
     f = math.floor(v)
     if v - f == 0.5:
@@ -1409,13 +1400,14 @@ def _first_vector_dim(df: DataFrame, vec_col: str) -> int | None:
 def _moment_pass9(
     df: DataFrame, vec_col: str, label_col: str
 ) -> tuple | None:
-    """Fixed-point twin of _moment_pass for the ORACLE-EXACT linear
-    probe: every per-row moment contribution is snapped to 1e-9
-    fixed-point int64 BEFORE summation, so the reduced moments are
-    integers — summation-order-proof across tasks, engines and retries
-    (the same recipe as the TPC-H fixed-sum money aggregates).
+    """Packed per-task moment pass for the ORACLE-EXACT linear probe:
+    every per-row moment contribution is snapped to 1e-9 fixed-point
+    int64 BEFORE summation, so the reduced moments are integers —
+    summation-order-proof across tasks, engines and retries (the same
+    recipe as the TPC-H fixed-sum money aggregates).
 
-    Same 100 TB shape as _moment_pass: one packed per-TASK partial
+    Each task yields ONE partial over all its Arrow batches, so the
+    reduce grows with task count, not corpus size:
     [n, Σy, yᵀy, Xᵀy (d+1), XᵀX ((d+1)²)] over bias-augmented rows,
     int64 in the kernel (safe to ~9e10 rows/task at these magnitudes),
     reduced as decimal(38,0) so the global sums never overflow.
@@ -1433,16 +1425,16 @@ def _moment_pass9(
             if acc is None:
                 acc = np.zeros(3 + da + da * da, dtype=np.int64)
             acc[0] += len(x)
-            acc[1] += int(_snap9_arr(y).sum())
-            acc[2] += int(_snap9_arr(y * y).sum())
+            acc[1] += int(_snap9i(y).sum())
+            acc[2] += int(_snap9i(y * y).sum())
             # chunk the per-row outer products: rows x (d+1)² doubles
             # would be GBs on a full Arrow batch
             for lo in range(0, len(x), 256):
                 xb = x[lo : lo + 256]
                 yb = y[lo : lo + 256]
-                acc[3 : 3 + da] += _snap9_arr(xb * yb[:, None]).sum(axis=0)
+                acc[3 : 3 + da] += _snap9i(xb * yb[:, None]).sum(axis=0)
                 acc[3 + da :] += (
-                    _snap9_arr(xb[:, :, None] * xb[:, None, :])
+                    _snap9i(xb[:, :, None] * xb[:, None, :])
                     .sum(axis=0)
                     .ravel()
                 )
@@ -1477,7 +1469,7 @@ def _moment_pass9(
 def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
     """Fixed-point covariance moments for the ORACLE-EXACT eigensolve
     keys (PCA/whitening): per-row contributions snapped to 1e-9 int64
-    BEFORE summation (round-half-away, _snap9_arr), reduced as
+    BEFORE summation (round-half-away, kmeans_replay._snap9i), reduced as
     decimal(38,0) — summation-order-proof, the same recipe as
     _moment_pass9 minus the label/bias. Returns (n, s9[d], g9[d,d])."""
 
@@ -1491,11 +1483,11 @@ def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
             if acc is None:
                 acc = np.zeros(1 + d + d * d, dtype=np.int64)
             acc[0] += len(m)
-            acc[1 : 1 + d] += _snap9_arr(m).sum(axis=0)
+            acc[1 : 1 + d] += _snap9i(m).sum(axis=0)
             for lo in range(0, len(m), 256):
                 mb = m[lo : lo + 256]
                 acc[1 + d :] += (
-                    _snap9_arr(mb[:, :, None] * mb[:, None, :])
+                    _snap9i(mb[:, :, None] * mb[:, None, :])
                     .sum(axis=0)
                     .ravel()
                 )
@@ -1550,89 +1542,6 @@ def _ge_solve_det(a: list[list[float]], b: list[float]) -> list[float]:
     return w
 
 
-def _moment_pass(
-    df: DataFrame, vec_col: str, label_col: str | None = None
-) -> tuple | None:
-    """ONE packed per-task moment pass over a vector column — the shared
-    engine behind embedding_whitening / embedding_pca_reduce /
-    embedding_linear_probe.
-
-    Each task accumulates across ALL its Arrow batches and yields exactly
-    ONE partial (the round-5 per-batch version made the reduce grow with
-    corpus size — ~1e7 batch partials at 1e11 rows; per-task keeps it at
-    tasks-count, and every count packs exactly as a double below 2^53).
-    Partials reduce element-wise (posexplode + sum, map-side combined), so
-    no single task ever materializes a tasks-count list.
-
-    Without ``label_col``: packed [n, Σx (d), XᵀX (d²)] →
-    returns (n, s, g) with g as the (d,d) Gram matrix.
-    With ``label_col``: packed [n, Σy, yᵀy, Xᵀy (d+1), XᵀX ((d+1)²)]
-    over bias-augmented rows [x, 1] → returns (n, sy, yy, xty, xtx).
-    Returns None for an empty input."""
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        sy = 0.0
-        yy = 0.0
-        vec_acc: np.ndarray | None = None
-        mat_acc: np.ndarray | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n += len(m)
-            if label_col is not None:
-                x = np.hstack([m, np.ones((len(m), 1))])
-                y = pdf[label_col].to_numpy(dtype=np.float64)
-                sy += float(y.sum())
-                yy += float((y * y).sum())
-                v, g = x.T @ y, x.T @ x
-            else:
-                v, g = m.sum(axis=0), m.T @ m
-            if vec_acc is None:
-                vec_acc, mat_acc = v, g
-            else:
-                vec_acc += v
-                mat_acc += g
-        if vec_acc is not None:
-            head = (
-                [float(n), sy, yy] if label_col is not None else [float(n)]
-            )
-            yield pd.DataFrame(
-                {"p": [np.concatenate((head, vec_acc, mat_acc.ravel()))]}
-            )
-
-    if label_col is not None:
-        # a single NULL label would become NaN in to_numpy(float64) and
-        # silently poison every accumulated moment (all-NaN predictions
-        # and R² with no error) — drop unlabeled rows up front
-        df = df.filter(F.col(label_col).isNotNull())
-    cols = [vec_col] if label_col is None else [vec_col, label_col]
-    red = (
-        _parallelize(df.select(*cols))
-        .mapInPandas(partials, schema="p array<double>")
-        .select(F.posexplode("p").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
-    if not red:
-        return None
-    packed = np.zeros(len(red), dtype=np.float64)
-    for r in red:
-        packed[r["i"]] = r["v"]
-    h = 1 if label_col is None else 3
-    # L = h + d + d²  →  d = (√(4(L−h)+1) − 1) / 2
-    d = int((np.sqrt(4 * (len(packed) - h) + 1) - 1) // 2)
-    assert h + d + d * d == len(packed), len(packed)
-    n = int(packed[0])
-    vec = packed[h : h + d]
-    mat = packed[h + d :].reshape(d, d)
-    if label_col is None:
-        return n, vec, mat
-    return n, float(packed[1]), float(packed[2]), vec, mat
-
-
 def embedding_whitening(
     emb: DataFrame,
     eps: float = 1e-6,
@@ -1683,7 +1592,7 @@ def embedding_whitening(
     dk = 1.0 / np.sqrt(np.maximum(lam, 0.0) + eps)
     dm = _snap12_arr(v * dk[None, :])
     w9 = (
-        _snap9_arr(dm[:, None, :] * v[None, :, :]).sum(axis=2, dtype=np.int64)
+        _snap9i(dm[:, None, :] * v[None, :, :]).sum(axis=2, dtype=np.int64)
     )
     w = w9.astype(np.float64) / 1e9
     bc = spark.sparkContext.broadcast((mu, w))
@@ -1699,7 +1608,7 @@ def embedding_whitening(
             for lo in range(0, len(t), 256):
                 tb = t[lo : lo + 256]
                 outs.append(
-                    _snap9_arr(tb[:, None, :] * w_[None, :, :]).sum(
+                    _snap9i(tb[:, None, :] * w_[None, :, :]).sum(
                         axis=2, dtype=np.int64
                     )
                     / 1e9
@@ -1979,7 +1888,7 @@ def embedding_linear_probe(
             if not len(pdf):
                 continue
             m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            pred9 = _snap9_arr(m * w_[None, :-1]).sum(
+            pred9 = _snap9i(m * w_[None, :-1]).sum(
                 axis=1, dtype=np.int64
             ) + np.int64(bias9_)
             pred = pred9 / 1e9
@@ -2069,7 +1978,7 @@ def embedding_pca_reduce(
             for lo in range(0, len(t), 256):
                 tb = t[lo : lo + 256]
                 outs.append(
-                    _snap9_arr(tb[:, :, None] * uk_[None, :, :]).sum(
+                    _snap9i(tb[:, :, None] * uk_[None, :, :]).sum(
                         axis=1, dtype=np.int64
                     )
                     / 1e9

@@ -75,31 +75,3 @@ def test_vanilla_session_reads_nanos_parquet():
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-4000:]}"
     assert "entry OK" in proc.stdout
 
-
-def test_every_key_survives_driver_canonicalizer(spark, sf_dir):
-    """Round-6 killer #2: the driver canonicalizes every result with
-    ``pandas.sort_values`` over all columns followed by an md5 of the CSV —
-    which raises ``TypeError: unhashable type: 'list'`` on any array-typed
-    output column (multimodal_decode and embedding_whitening crashed r6 this
-    way). Run the driver's exact recipe against EVERY ``queries()`` key so no
-    output schema can ever crash the harness again.
-    """
-    import hashlib
-
-    import __spark_entry__ as e
-
-    failures = []
-    for key, fn in e.queries().items():
-        try:
-            pdf = fn(spark, sf_dir).toPandas()
-            # the driver's _canon, verbatim shape: column-sorted,
-            # row-sorted over all columns, rounded, hashed
-            canon = (
-                pdf[sorted(pdf.columns)]
-                .sort_values(sorted(pdf.columns))
-                .reset_index(drop=True)
-            )
-            hashlib.md5(canon.round(6).to_csv(index=False).encode()).hexdigest()
-        except Exception as exc:  # noqa: BLE001 - collect all offenders
-            failures.append(f"{key}: {type(exc).__name__}: {exc}")
-    assert not failures, "driver-canonicalizer crashes:\n" + "\n".join(failures)

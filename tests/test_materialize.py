@@ -27,12 +27,17 @@ def _sources():
 
 
 def test_only_materialize_module_persists_or_checkpoints():
+    scanned = _sources() + [
+        p for d in ("tools", "tests") for p in sorted((ROOT / d).rglob("*.py"))
+    ]
     offenders = [
-        f"{p.relative_to(ROOT)}:{i}"
-        for p in _sources() + sorted((ROOT / "tools").rglob("*.py"))
+        f"{p.relative_to(ROOT)}:{node.lineno}"
+        for p in scanned
         if p != PKG / "materialize.py"
-        for i, line in enumerate(p.read_text().splitlines(), start=1)
-        if any(m in line for m in (".persist(", ".localCheckpoint(", ".cache()"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "localCheckpoint", "cache")
     ]
     assert not offenders, offenders
 

@@ -1755,6 +1755,7 @@ def test_minhash_lsh_match_supplied_shingles_parity(spark):
     and the supplied frames' cache lifetime stays with the caller."""
     from pyspark.sql import functions as F
 
+    from lakeside_spark import materialize
     from lakeside_spark.operators.dedup import _shingled_rows, minhash_lsh_match
 
     body = "the quick brown fox jumps over the lazy dog again and again"
@@ -1767,7 +1768,7 @@ def test_minhash_lsh_match_supplied_shingles_parity(spark):
         tuple(r)
         for r in minhash_lsh_match(index, incoming, threshold=0.3).collect()
     )
-    ex = _shingled_rows(docs, "text", "doc_id", 3).localCheckpoint(eager=True)
+    ex = materialize.checkpointed(_shingled_rows(docs, "text", "doc_id", 3))
     supplied = sorted(
         tuple(r)
         for r in minhash_lsh_match(
@@ -2928,6 +2929,7 @@ def test_video_phash_dedup_recovers_planted_variants(spark, sf_dir):
     ≥80% recall on the planted pairs and ZERO false pairs between
     unrelated noise videos (63-bit signatures of independent videos sit
     ~31 bits apart; P(≤6) per pair ≈ 1e-11)."""
+    from lakeside_spark import materialize
     from lakeside_spark.operators.dedup import hamming_pairs
     from lakeside_spark.operators.multimodal import (
         perturb_videos,
@@ -2936,18 +2938,17 @@ def test_video_phash_dedup_recovers_planted_variants(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(30)
-    base = synthesize_videos(docs, n_frames=6, size=16).persist()
-    planted = perturb_videos(base.filter(F.col("doc_id") % 5 == 0))
-    n_planted = planted.count()
-    assert n_planted >= 3
-    pairs = hamming_pairs(
-        video_phash(base.unionByName(planted)), max_hamming=6, bits=63,
-        hash_col="phash",
-    ).collect()
+    with materialize.held(synthesize_videos(docs, n_frames=6, size=16)) as base:
+        planted = perturb_videos(base.filter(F.col("doc_id") % 5 == 0))
+        n_planted = planted.count()
+        assert n_planted >= 3
+        pairs = hamming_pairs(
+            video_phash(base.unionByName(planted)), max_hamming=6, bits=63,
+            hash_col="phash",
+        ).collect()
     # every found pair must be a planted (x, x+1e6) pair — no cross talk
     assert all(r["id_b"] == r["id_a"] + 1_000_000 for r in pairs), pairs
     assert len(pairs) >= 0.8 * n_planted, (len(pairs), n_planted)
-    base.unpersist()
 
 
 def test_avi_frames_extracts_mjpeg_chunks():

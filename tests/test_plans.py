@@ -255,15 +255,17 @@ def test_corpus_curate_single_scan_gates(spark, sf_dir, monkeypatch):
     persisted instead (the plan still shows them shared) and the
     decontaminated survivors stay lazy; later checkpoints (the dedup
     pairs) run as in production."""
+    from contextlib import ExitStack
+
     from lakeside_spark import materialize
     from lakeside_spark.registry.text import corpus_curate
 
-    real, calls = materialize.checkpointed, []
+    real, calls, holds = materialize.checkpointed, [], ExitStack()
 
     def inspectable(df):
         calls.append(df)
         if len(calls) == 1:
-            return df.persist()
+            return holds.enter_context(materialize.held(df))
         return df if len(calls) == 2 else real(df)
 
     monkeypatch.setattr(materialize, "checkpointed", inspectable)
@@ -271,7 +273,7 @@ def test_corpus_curate_single_scan_gates(spark, sf_dir, monkeypatch):
         df = corpus_curate(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
-        calls[0].unpersist()
+        holds.close()
     monkeypatch.undo()
     assert "LeftSemi" not in plan, plan
     scan_lines = [l for l in plan.splitlines() if "FileScan" in l and "documents" in l]
