@@ -208,9 +208,10 @@ TRIPWIRE_EXEMPT_VS_ORACLE = {
     # scan, ONE sort, ZERO joins — N chained last(...) window passes
     # hand each conversion its N most recent touches directly): the
     # remaining wall is local-mode stage latency against a ~0.1s DuckDB
-    # in-memory equi-join. At 10x data (tools/sf1_ratio.py --n 5, quiet
-    # host, r12 chain plan): 1.78s vs 0.71s = **2.50x** and converging;
-    # the sf0.1 ratio is pure fixed-cost accounting.
+    # in-memory equi-join. At 10x data (`tools/profile.py
+    # event_attribution --scale 10 --runs 5`, quiet host, r12 chain
+    # plan): 1.78s vs 0.71s = **2.50x** and converging; the sf0.1 ratio
+    # is pure fixed-cost accounting.
     "event_attribution": "stage-latency floor at sf0.1; 2.50x at 10x (r12 chain)",
     # r13: the cache-lifetime fix made these two keys' rows HONEST for
     # the first time (the r9-era pool memo had served the second bench
@@ -221,9 +222,9 @@ TRIPWIRE_EXEMPT_VS_ORACLE = {
     # in-memory DuckDB equi-join, i.e. >5x by stage latency, not plan
     # defect. The r13 bm25-leg cut (query-term filter before the
     # (doc, term) exchange) is in both plans; at 10x data the ratios
-    # converge to 4.0x/4.7x (tools/sf1_ratio.py, same convergence
-    # argument as event_attribution's exemption). Hard abs ceilings
-    # below keep a real 2x plan regression firing.
+    # converge to 4.0x/4.7x (`tools/profile.py --scale 10`, same
+    # convergence argument as event_attribution's exemption). Hard abs
+    # ceilings below keep a real 2x plan regression firing.
     "hybrid_rrf_topk": "two-leg stage-latency floor ~1.4s; 4.0x at 10x",
     "retrieval_eval": "two legs + metric pass floor ~1.7s; 4.7x at 10x",
 }

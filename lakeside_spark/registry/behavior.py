@@ -563,7 +563,8 @@ def event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly-earlier touches in-place, the lookback filter prunes the
     array, and the credit rows explode straight into the final
     (model, channel) aggregate. 10x-data ratio vs the DuckDB twin:
-    2.50x quiet (tools/sf1_ratio.py --n 5).
+    2.50x quiet (``tools/profile.py event_attribution --scale 10
+    --runs 5``).
 
     Key-width note: the operator runs on the raw events projection with
     user_id LONG rather than the telemetry view's string cast —

@@ -1336,18 +1336,22 @@ def _stamp_replay_dirs(src: str) -> None:
                 os.utime(os.path.join(root, fname), (base + k, base + k))
 
 
-def _replay_micro_batches(
-    spark: SparkSession, df: DataFrame, ts_col: str, n_batches: int = 2
-) -> str:
-    """Write ``df`` as ``n_batches`` time-sliced parquet directories under
+#: recorded micro-batches per replay: the MINIMUM count that still proves
+#: state crosses a micro-batch boundary; each extra batch costs ~1s of
+#: trigger overhead per replay key at sf0.1 and proves nothing more
+REPLAY_BATCHES = 2
+#: ``spark.sql.shuffle.partitions`` for a replay query's lifetime (see
+#: _run_replay)
+REPLAY_SHUFFLE_PARTITIONS = 8
+
+
+def _replay_micro_batches(spark: SparkSession, df: DataFrame, ts_col: str) -> str:
+    """Write ``df`` as REPLAY_BATCHES time-sliced parquet directories under
     a temp dir — a deterministic recorded micro-batch sequence. Slices
     are contiguous time ranges (so a keyed stateful fold sees every key's
     rows in event-time order across batches). ONE write job: rows are
     tagged with their slice index and written partitionBy — the per-slice
-    loop paid n_batches separate jobs (r8 verdict item 9). Default is the
-    MINIMUM batch count that still proves state crosses a micro-batch
-    boundary (2); each extra batch costs ~1s of trigger overhead per
-    replay key at sf0.1 and proves nothing more."""
+    loop paid one job per batch (r8 verdict item 9)."""
     import tempfile
 
     # NOTE (r12, measured): persisting ``df`` here to fuse the bounds job
@@ -1366,10 +1370,10 @@ def _replay_micro_batches(
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
         _stamp_replay_dirs(src)
         return src
-    span = max(int(hi) - int(lo) + 1, n_batches)
+    span = max(int(hi) - int(lo) + 1, REPLAY_BATCHES)
     slice_idx = F.least(
-        F.lit(n_batches - 1),
-        ((F.col(ts_col) - F.lit(int(lo))) * n_batches / F.lit(span)).cast(
+        F.lit(REPLAY_BATCHES - 1),
+        ((F.col(ts_col) - F.lit(int(lo))) * REPLAY_BATCHES / F.lit(span)).cast(
             "long"
         ),
     )
@@ -1384,33 +1388,26 @@ def _replay_micro_batches(
     return src
 
 
-def _run_replay(
-    spark: SparkSession,
-    src: str,
-    schema: str,
-    twin,
-    output_mode: str = "append",
-    shuffle_partitions: int = 8,
-) -> DataFrame:
+def _run_replay(spark: SparkSession, src: str, schema: str, twin) -> DataFrame:
     """Drive a stateful streaming twin over the recorded micro-batches
-    (one file per trigger = one micro-batch) into a memory sink and
-    return the sink table — the hash-checkable final artifact. The sink
-    holds materialized rows, so the temp source dir is deleted before
-    returning.
+    (one file per trigger = one micro-batch) into an append-mode memory
+    sink and return the sink table — the hash-checkable final artifact.
+    The sink holds materialized rows, so the temp source dir is deleted
+    before returning.
 
     Cost controls (the r10 verdict's ≤2.5s/key bar): the query runs with
     ``trigger(availableNow=True)`` — it drains the recorded batches
     (still one file per trigger, so state provably crosses micro-batch
     boundaries) and terminates on its own, instead of processAllAvailable
     poll-waiting on an open continuous query — and with
-    ``spark.sql.shuffle.partitions`` dropped to 8 for the query's
-    lifetime: stateful streaming pins one state-store instance per
-    shuffle partition PER MICRO-BATCH (no AQE coalescing in streaming),
-    so 32 partitions paid 32 state-store opens+commits+snapshot files ×
-    batches for a recording whose keyed volume fills 8. This is a
-    replay-artifact knob, not the scale path — the production streaming
-    pipeline (streaming/) inherits the session conf sized to the
-    cluster.
+    ``spark.sql.shuffle.partitions`` dropped to REPLAY_SHUFFLE_PARTITIONS
+    (8) for the query's lifetime: stateful streaming pins one state-store
+    instance per shuffle partition PER MICRO-BATCH (no AQE coalescing in
+    streaming), so 32 partitions paid 32 state-store opens+commits+
+    snapshot files × batches for a recording whose keyed volume fills 8.
+    This is a replay-artifact knob, not the scale path — the production
+    streaming pipeline (streaming/) inherits the session conf sized to
+    the cluster.
 
     Thread-safety note (single-threaded replay assumption): the
     shuffle-partition override mutates the SHARED session conf for the
@@ -1430,13 +1427,13 @@ def _run_replay(
     )
     qname = f"replay_{uuid.uuid4().hex[:10]}"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS))
     try:
         q = (
             twin(stream)
             .writeStream.format("memory")
             .queryName(qname)
-            .outputMode(output_mode)
+            .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )

@@ -5,8 +5,9 @@ The reference reads parquet segments from a partitioned lake layout
 core Commons.scala:160-177) with DuckDB ``read_parquet(union_by_name=True)``.
 Spark equivalents used here:
 
-- plain `spark.read.parquet(path)` — schema merge via
-  ``mergeSchema`` when segments disagree (union_by_name parity)
+- plain `spark.read.parquet(path)` for the fixed-schema tables; lakes
+  whose segments disagree get their merged schema from parquet footers
+  (sources/footers.lake_footers, union_by_name parity)
 - hive-partitioned reads get partition pruning for free when the path
   embeds ``dateint=/hour=`` directories; time-range predicates on the
   partition columns never touch excluded files (replaces the trigram
@@ -37,7 +38,7 @@ _TS_COLUMNS = {
 # the logical plan is immutable so reuse is safe (keyed on the session's
 # applicationId — stable for the session's lifetime, unlike id(spark) which
 # CPython can recycle after a stopped session is garbage-collected)
-_PLAN_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
+_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _ensure_nanos_readable(spark: SparkSession) -> None:
@@ -71,18 +72,13 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
         )
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, merge_schema: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_nanos_readable(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name, merge_schema)
+    key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _PLAN_CACHE.get(key)
     if cached is not None:
         return cached
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _TS_COLUMNS.get(name, ()):
         if col not in df.columns:
             continue

@@ -14,6 +14,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+#: key groups of the bucketed operators: each stateful group call handles
+#: every key that hashes into it, so the Python boundary pays KEY_GROUPS
+#: calls per trigger however many keys the stream has
+KEY_GROUPS = 64
+
 
 def _one_frame(pdfs) -> pd.DataFrame:
     """Collapse the per-group chunk iterator to one frame, skipping the
@@ -70,74 +75,6 @@ def streaming_ema(
     )
 
 
-def streaming_funnel(
-    stream: DataFrame,
-    steps: list[str],
-    window_ms: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts_ms",
-    name_col: str = "name",
-) -> DataFrame:
-    """Streaming twin of operators/behavior.funnel: per-user funnel
-    progress as events arrive, emitting one row per newly-completed step.
-
-    State per user = (deepest completed step, its completion ts) — two
-    scalars regardless of stream length, the smallest state a strict-
-    order funnel can carry. A step completes at the first matching event
-    STRICTLY after the previous step's completion and within
-    ``window_ms`` of it (the cascading-window rule of the batch
-    operator); rows inside a micro-batch are processed in event-time
-    order so batch boundaries cannot reorder a user's funnel.
-
-    Semantics note vs the batch operator: the batch funnel anchors every
-    step on the previous step's FIRST completion; the streaming fold
-    advances the anchor greedily in arrival order, which matches batch
-    whenever events arrive watermark-ordered (asserted by the
-    equivalence test on sorted replays)."""
-
-    if len(set(steps)) != len(steps):
-        raise ValueError(f"funnel step names must be distinct: {steps}")
-    output_schema = f"{user_col} long, step bigint, step_name string, ts long"
-    state_schema = "step long, t long"
-    step_of = {s: i + 1 for i, s in enumerate(steps)}
-
-    def update(key, pdfs, state: GroupState):
-        cur_step, cur_t = state.get if state.exists else (0, 0)
-        rows = _one_frame(pdfs)
-        ts_a = rows[ts_col].to_numpy()
-        nm_a = rows[name_col].to_numpy()
-        out_steps, out_names, out_ts = [], [], []
-        for i in np.argsort(ts_a, kind="stable"):
-            name = nm_a[i]
-            nxt = cur_step + 1
-            if step_of.get(name) != nxt:
-                continue
-            ts = int(ts_a[i])
-            if cur_step == 0 or (cur_t < ts <= cur_t + window_ms):
-                cur_step, cur_t = nxt, ts
-                out_steps.append(nxt)
-                out_names.append(name)
-                out_ts.append(ts)
-        state.update((cur_step, cur_t))
-        if out_steps:
-            yield pd.DataFrame(
-                {
-                    user_col: np.full(len(out_steps), key[0], dtype=np.int64),
-                    "step": np.asarray(out_steps, dtype=np.int64),
-                    "step_name": out_names,
-                    "ts": np.asarray(out_ts, dtype=np.int64),
-                }
-            )
-
-    return stream.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_holt(
     stream: DataFrame,
     alpha: float = 0.5,
@@ -157,7 +94,7 @@ def streaming_holt(
     with the first smoothed update starting at the second point), so a
     watermark-ordered replay reproduces the batch operator's state
     bit-for-bit (asserted by the equivalence test, the same contract as
-    streaming_funnel vs the batch funnel)."""
+    streaming_funnel_bucketed vs the batch funnel)."""
 
     output_schema = (
         f"{key_col} string, {ts_col} long, {value_col} double, "
@@ -207,7 +144,7 @@ def streaming_holt(
     )
 
 
-def streaming_service_edges(
+def streaming_service_edge_partials(
     stream: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "timestamp_ms",
@@ -216,92 +153,41 @@ def streaming_service_edges(
 ) -> DataFrame:
     """Streaming twin of operators/behavior.next_event_edges — the live
     path of the span-adjacency service-dependency graph panel
-    (trace_service_graph): as spans arrive, each trace emits its
-    (previous span → span, gap) transition edge.
+    (trace_service_graph): as spans arrive, each trace's
+    (previous span → span, gap) transition edges are emitted as
+    per-trigger (src, dst, n, gap_sum) partials.
 
     State per trace = (last span name, its ts) — two scalars regardless
     of trace length, checkpointed in the state store; the first span of
     a trace ever seen emits nothing and primes the state, so an edge
-    crossing a micro-batch boundary is emitted exactly once. Rows inside
-    a micro-batch are processed in (ts, tiebreak) order — the same
-    ordering as the batch operator's keyed window — so a watermark-
-    ordered replay reproduces the batch edge multiset exactly (pinned by
-    the equivalence test). The (src, dst, n, avg_gap) rollup is a plain
-    downstream streaming aggregation over the emitted edges; keeping it
-    out of this operator leaves the stateful stage append-mode."""
-
-    output_schema = "src string, dst string, gap_ms long"
-    state_schema = "last_name string, last_ts long"
-
-    def update(key, pdfs, state: GroupState):
-        last_name, last_ts = state.get if state.exists else (None, None)
-        rows = _one_frame(pdfs)
-        ts_a = rows[ts_col].to_numpy()
-        nm_a = rows[name_col].to_numpy()
-        tb_a = rows[tiebreak_col].to_numpy()
-        srcs, dsts, gaps = [], [], []
-        for i in np.lexsort((tb_a, ts_a)):
-            name = nm_a[i]
-            ts = int(ts_a[i])
-            if last_name is not None:
-                srcs.append(last_name)
-                dsts.append(name)
-                gaps.append(ts - last_ts)
-            last_name, last_ts = name, ts
-        state.update((last_name, int(last_ts)))
-        if srcs:
-            yield pd.DataFrame(
-                {
-                    "src": srcs,
-                    "dst": dsts,
-                    "gap_ms": np.asarray(gaps, dtype=np.int64),
-                }
-            )
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_service_edge_partials(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "timestamp_ms",
-    name_col: str = "name",
-    tiebreak_col: str = "event_id",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """streaming_service_edges with KEY-GROUP BUCKETING and MAP-SIDE
-    COMBINE. Two changes vs the per-trace twin, both standard
-    high-cardinality streaming-state techniques (Flink's key groups are
+    crossing a micro-batch boundary is counted exactly once. Rows inside
+    a micro-batch are processed in (trace, ts, tiebreak) order — per
+    trace, the batch operator's window order — so a watermark-ordered
+    replay reproduces the batch edge multiset exactly (pinned by the
+    equivalence test). Two standard high-cardinality streaming-state
+    techniques keep the Python boundary small (Flink's key groups are
     the same idea):
 
-    1. The stateful operator is keyed by ``crc32(trace key) % n_buckets``
-       rather than by the trace itself; per-trace (last span, last ts)
-       state is packed into three parallel ARRAYS in the bucket's state
-       row. State volume is unchanged — two scalars per trace — but the
-       Python boundary pays n_buckets group calls per trigger instead of
-       one per trace (1500 pandas constructions → 64 at sf0.1), and the
-       per-bucket edge extraction vectorizes over all of the bucket's
-       traces at once (one lexsort + shifted-compare, no per-row loop).
-    2. Each bucket emits per-trigger (src, dst, n, gap_sum) PARTIALS —
-       at most |span vocabulary|² rows per bucket per trigger — instead
-       of one row per transition edge. gap_sum is an exact int64 sum, so
+    1. KEY-GROUP BUCKETING: the stateful operator is keyed by
+       ``crc32(trace key) % KEY_GROUPS`` rather than by the trace
+       itself; per-trace state is packed into three parallel ARRAYS in
+       the bucket's state row. State volume is unchanged, but the
+       Python boundary pays KEY_GROUPS group calls per trigger instead
+       of one per trace (1500 pandas constructions → 64 at sf0.1), and
+       the per-bucket edge extraction vectorizes over all of the
+       bucket's traces at once (one lexsort + shifted-compare, no
+       per-row loop).
+    2. MAP-SIDE COMBINE: each bucket emits per-trigger PARTIALS — at
+       most |span vocabulary|² rows per bucket per trigger — instead of
+       one row per transition edge. gap_sum is an exact int64 sum, so
        the downstream rollup's SUM(gap_sum)/SUM(n) equals the batch
-       AVG(gap_ms) bit-for-bit (one double division either way).
+       AVG(gap_ms) bit-for-bit (one double division either way). The
+       (src, dst) rollup stays outside this operator, so the stateful
+       stage is append-mode.
 
-    Rows inside a micro-batch are processed in (trace, ts, tiebreak)
-    order — per trace, exactly the order streaming_service_edges and the
-    batch window use — and a trace's carried state seeds the first row
-    of its run, so the emitted edge MULTISET is identical to the
-    per-trace twin's (pinned by the equivalence test). At 100 TB the
-    knobs scale independently: n_buckets grows with the cluster (state
-    per bucket stays bounded), emitted volume stays at the
-    transition-type grain."""
+    At 100 TB the two scale independently: KEY_GROUPS grows with the
+    cluster (state per bucket stays bounded), emitted volume stays at
+    the transition-type grain."""
 
     output_schema = "src string, dst string, n long, gap_sum long"
     state_schema = (
@@ -395,7 +281,7 @@ def streaming_service_edge_partials(
 
     bucketed = stream.withColumn(
         bucket_col,
-        F.pmod(F.crc32(F.col(key_col).cast("string")), F.lit(n_buckets)),
+        F.pmod(F.crc32(F.col(key_col).cast("string")), F.lit(KEY_GROUPS)),
     )
     return bucketed.groupBy(bucket_col).applyInPandasWithState(
         update,
@@ -413,19 +299,28 @@ def streaming_funnel_bucketed(
     user_col: str = "user_id",
     ts_col: str = "ts_ms",
     name_col: str = "name",
-    n_buckets: int = 64,
 ) -> DataFrame:
-    """streaming_funnel with KEY-GROUP BUCKETING (the same technique as
-    streaming_service_edge_partials): the stateful operator is keyed by
-    ``crc32(user) % n_buckets`` and per-user (deepest step, its ts)
-    state is packed into parallel arrays in the bucket's state row.
-    State volume and funnel semantics are unchanged — rows are
-    processed in event-time order per user, with arrival order breaking
-    ts ties exactly like the per-user twin's stable argsort — but the
-    Python boundary pays n_buckets group calls per trigger instead of
-    one per user (1500 → 64 at sf0.1). Emits the same
-    (user, step, step_name, ts) newly-completed-step rows; equivalence
-    to the per-user twin is pinned by the bucketed funnel test."""
+    """Streaming twin of operators/behavior.funnel: per-user funnel
+    progress as events arrive, emitting one (user, step, step_name, ts)
+    row per newly-completed step.
+
+    State per user = (deepest completed step, its completion ts) — two
+    scalars regardless of stream length, the smallest state a strict-
+    order funnel can carry. A step completes at the first matching event
+    STRICTLY after the previous step's completion and within
+    ``window_ms`` of it (the cascading-window rule of the batch
+    operator); rows inside a micro-batch are processed in event-time
+    order per user, ties in arrival order, so batch boundaries cannot
+    reorder a user's funnel. The batch funnel anchors every step on the
+    previous step's FIRST completion; this fold advances the anchor
+    greedily in arrival order, which matches batch whenever events
+    arrive watermark-ordered (pinned by the equivalence test).
+
+    KEY-GROUP BUCKETING (as in streaming_service_edge_partials): the
+    stateful operator is keyed by ``crc32(user) % KEY_GROUPS`` and the
+    per-user state is packed into parallel arrays in the bucket's state
+    row, so the Python boundary pays KEY_GROUPS group calls per trigger
+    instead of one per user (1500 → 64 at sf0.1)."""
 
     if len(set(steps)) != len(steps):
         raise ValueError(f"funnel step names must be distinct: {steps}")
@@ -445,8 +340,7 @@ def streaming_funnel_bucketed(
         ts_a = rows[ts_col].to_numpy(dtype=np.int64)
         nm_a = rows[name_col].to_numpy()
         codes, uniques = pd.factorize(u_a)
-        # stable (user, ts) order: ties keep arrival order, matching the
-        # per-user twin's kind="stable" argsort
+        # stable (user, ts) order: ties keep arrival order
         order = np.lexsort((ts_a, codes))
         out_u: list[int] = []
         out_steps: list[int] = []
@@ -495,7 +389,7 @@ def streaming_funnel_bucketed(
 
     bucketed = stream.withColumn(
         bucket_col,
-        F.pmod(F.crc32(F.col(user_col).cast("string")), F.lit(n_buckets)),
+        F.pmod(F.crc32(F.col(user_col).cast("string")), F.lit(KEY_GROUPS)),
     )
     return bucketed.groupBy(bucket_col).applyInPandasWithState(
         update,

@@ -8,14 +8,16 @@ leaks from the pytest session) running registry queries end-to-end.
 
 from __future__ import annotations
 
+import pathlib
 import subprocess
 import sys
 
-SF_DIR = "/root/testdata/sf0.001"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
+#: formatted with the checkout root and the testdata dir
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from pyspark.sql import SparkSession
 
 # exactly what the driver does: its own session, none of our confs
@@ -52,7 +54,7 @@ for key in [
     "rfm_segmentation", "text_char_entropy", "trace_concurrency",
     "service_pagerank", "funnel_time_to_convert", "ts_gap_report",
 ]:
-    df = qs[key](spark, "%s")
+    df = qs[key](spark, %r)
     n = df.count()
     assert n >= 0, key
     print(key, "OK", n)
@@ -62,12 +64,13 @@ out = e.entry(spark)
 assert out.count() > 0
 print("entry OK")
 spark.stop()
-""" % SF_DIR
+"""
 
 
-def test_vanilla_session_reads_nanos_parquet():
+def test_vanilla_session_reads_nanos_parquet(sf_dir):
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT % (str(ROOT), sf_dir)],
+        cwd=ROOT,
         capture_output=True,
         text=True,
         timeout=600,

@@ -1,8 +1,13 @@
-"""applyInPandasWithState EMA: state persists across micro-batches."""
+"""Stateful streaming operators: state persists across micro-batches, and
+ordered replays match the batch operators."""
 
 import shutil
 import tempfile
+import uuid
 
+import pytest
+
+from lakeside_spark.streaming import stateful
 from lakeside_spark.streaming.stateful import streaming_ema
 
 
@@ -43,70 +48,6 @@ def test_streaming_ema_state_across_batches(spark):
         assert got[("a", 1)] == 15.0
         assert got[("a", 2)] == 7.5
         assert got[("b", 0)] == 4.0
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-
-
-def test_streaming_funnel_matches_batch_on_ordered_replay(spark):
-    """Replaying events watermark-ordered across micro-batches, the
-    stateful funnel's per-step completion counts equal the batch
-    operator's (operators/behavior.funnel)."""
-    from lakeside_spark.operators.behavior import funnel
-    from lakeside_spark.streaming.stateful import streaming_funnel
-
-    schema = "user_id long, ts_ms long, name string"
-    rows = [
-        # u1 full funnel; u2 wrong order; u3 step2 outside window;
-        # u4 step1 only; u5 same-ts click (must not advance)
-        (1, 100, "view"), (1, 200, "click"), (1, 300, "purchase"),
-        (2, 100, "click"), (2, 200, "view"),
-        (3, 100, "view"), (3, 700, "click"),
-        (4, 100, "view"),
-        (5, 100, "view"), (5, 100, "click"),
-    ]
-    steps = ["view", "click", "purchase"]
-
-    src = tempfile.mkdtemp(prefix="funnel_src_")
-    try:
-        # two event-time-ordered micro-batches: state must carry u1's
-        # step-1/2 progress into the batch holding the purchase
-        first = [r for r in rows if r[1] <= 200]
-        second = [r for r in rows if r[1] > 200]
-        spark.createDataFrame(first, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        spark.createDataFrame(second, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/b1")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            streaming_funnel(stream, steps, window_ms=500)
-            .writeStream.format("memory")
-            .queryName("funnel_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = spark.sql(
-            "SELECT step, count(*) AS users FROM funnel_out GROUP BY step"
-        ).collect()
-        streaming_counts = {r["step"]: r["users"] for r in got}
-
-        batch = funnel(
-            spark.createDataFrame(rows, schema), steps, window_ms=500,
-            user_col="user_id", ts_col="ts_ms", name_col="name",
-        )
-        batch_counts = {r["step"]: r["users"] for r in batch.collect()}
-        assert streaming_counts == batch_counts == {1: 5, 2: 1, 3: 1}
     finally:
         shutil.rmtree(src, ignore_errors=True)
 
@@ -162,225 +103,158 @@ def test_streaming_holt_matches_batch_on_ordered_replay(spark):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def test_streaming_service_edges_matches_batch_across_batches(spark):
+def _replay_two_batches(spark, rows, schema, op):
+    """Rows of ``op`` over ``rows`` replayed as two event-time-ordered
+    micro-batches (ts <= 200, then the rest; ts is each row's second
+    field), read back from the memory sink."""
+    src = tempfile.mkdtemp(prefix="replay_src_")
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    try:
+        spark.createDataFrame([r for r in rows if r[1] <= 200], schema).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{src}/b0")
+        spark.createDataFrame([r for r in rows if r[1] > 200], schema).coalesce(
+            1
+        ).write.mode("append").parquet(f"{src}/b1")
+        stream = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        q = (
+            op(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return spark.table(name).collect()
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
+SPAN_SCHEMA = "user_id long, timestamp_ms long, name string, event_id long"
+SPANS = [
+    # trace 1: gateway -> auth -> db, with the db span in batch 2
+    (1, 100, "gateway", 1), (1, 150, "auth", 2), (1, 400, "db", 3),
+    # trace 2: gateway -> cache twice (repeat edge, same batch split)
+    (2, 100, "gateway", 4), (2, 120, "cache", 5),
+    (2, 300, "gateway", 6), (2, 320, "cache", 7),
+    # trace 3: single span — no edge
+    (3, 100, "gateway", 8),
+    # trace 4: same-ts spans ordered by the tiebreak
+    (4, 100, "a", 10), (4, 100, "b", 9),
+]
+#: trace 5 is present ONLY in batch 1 — its carried state must ride along
+#: in a key group whose other traces appear in batch 2
+SPANS_BATCH1_ONLY = [(5, 110, "auth", 11), (5, 130, "db", 12)]
+
+
+@pytest.mark.parametrize(
+    "extra, auth_db",
+    [([], (1, 250.0)), (SPANS_BATCH1_ONLY, (2, 135.0))],
+    ids=["boundary_edge", "batch1_only_trace"],
+)
+def test_streaming_service_edge_partials_matches_batch_across_batches(
+    spark, monkeypatch, extra, auth_db
+):
     """Replaying spans watermark-ordered across micro-batches, the
-    stateful edge stream aggregates to exactly the batch service graph
+    key-group partials aggregate to exactly the batch service graph
     (operators/behavior.next_event_edges) — including the edge that
-    crosses the micro-batch boundary, which state must bridge."""
+    crosses the micro-batch boundary, which state must bridge. Two key
+    groups put several traces into one packed state row."""
     from lakeside_spark.operators.behavior import next_event_edges
-    from lakeside_spark.streaming.stateful import streaming_service_edges
 
-    schema = "user_id long, timestamp_ms long, name string, event_id long"
-    rows = [
-        # trace 1: gateway -> auth -> db, with the db span in batch 2
-        (1, 100, "gateway", 1), (1, 150, "auth", 2), (1, 400, "db", 3),
-        # trace 2: gateway -> cache twice (repeat edge, same batch split)
-        (2, 100, "gateway", 4), (2, 120, "cache", 5),
-        (2, 300, "gateway", 6), (2, 320, "cache", 7),
-        # trace 3: single span — no edge
-        (3, 100, "gateway", 8),
-        # trace 4: same-ts spans ordered by the tiebreak
-        (4, 100, "a", 10), (4, 100, "b", 9),
-    ]
-    src = tempfile.mkdtemp(prefix="svc_src_")
-    try:
-        first = [r for r in rows if r[1] <= 200]
-        second = [r for r in rows if r[1] > 200]
-        spark.createDataFrame(first, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        spark.createDataFrame(second, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/b1")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            streaming_service_edges(stream)
-            .writeStream.format("memory")
-            .queryName("svc_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {
-            (r["src"], r["dst"]): (r["n"], r["avg_gap"])
-            for r in spark.sql(
-                "SELECT src, dst, count(*) AS n, avg(gap_ms) AS avg_gap"
-                " FROM svc_out GROUP BY src, dst"
-            ).collect()
-        }
-        batch = {
-            (r["src"], r["dst"]): (r["n"], r["avg_gap_ms"])
-            for r in next_event_edges(
-                spark.createDataFrame(rows, schema)
-            ).collect()
-        }
-        assert got == batch
-        # the cross-batch edge (auth -> db) survived the boundary, and the
-        # tiebreak ordered trace 4 as b -> a
-        assert got[("auth", "db")] == (1, 250.0)
-        assert got[("b", "a")] == (1, 0.0)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-
-
-def test_streaming_service_edge_partials_matches_per_trace_twin(spark):
-    """The key-group-bucketed partial twin aggregates to exactly the
-    per-trace twin's edge multiset — same fixture as above, plus a few
-    buckets so multiple traces share a bucket's packed state, and the
-    carried state must bridge the micro-batch boundary per trace."""
-    from lakeside_spark.operators.behavior import next_event_edges
-    from lakeside_spark.streaming.stateful import (
-        streaming_service_edge_partials,
+    monkeypatch.setattr(stateful, "KEY_GROUPS", 2)
+    rows = SPANS + extra
+    out = _replay_two_batches(
+        spark, rows, SPAN_SCHEMA, stateful.streaming_service_edge_partials
     )
-
-    schema = "user_id long, timestamp_ms long, name string, event_id long"
-    rows = [
-        (1, 100, "gateway", 1), (1, 150, "auth", 2), (1, 400, "db", 3),
-        (2, 100, "gateway", 4), (2, 120, "cache", 5),
-        (2, 300, "gateway", 6), (2, 320, "cache", 7),
-        (3, 100, "gateway", 8),
-        (4, 100, "a", 10), (4, 100, "b", 9),
-        # trace 5: present ONLY in batch 1 — its carried state must ride
-        # along in a bucket whose other traces appear in batch 2
-        (5, 110, "auth", 11), (5, 130, "db", 12),
-    ]
-    src = tempfile.mkdtemp(prefix="svcp_src_")
-    try:
-        first = [r for r in rows if r[1] <= 200]
-        second = [r for r in rows if r[1] > 200]
-        spark.createDataFrame(first, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        spark.createDataFrame(second, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/b1")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        # n_buckets=2 forces several traces into one packed state row
-        q = (
-            streaming_service_edge_partials(stream, n_buckets=2)
-            .writeStream.format("memory")
-            .queryName("svcp_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {
-            (r["src"], r["dst"]): (r["n"], r["avg_gap"])
-            for r in spark.sql(
-                "SELECT src, dst, sum(n) AS n,"
-                " sum(gap_sum) / sum(n) AS avg_gap"
-                " FROM svcp_out GROUP BY src, dst"
-            ).collect()
-        }
-        batch = {
-            (r["src"], r["dst"]): (r["n"], r["avg_gap_ms"])
-            for r in next_event_edges(
-                spark.createDataFrame(rows, schema)
-            ).collect()
-        }
-        assert got == batch
-        assert got[("auth", "db")] == (2, 135.0)
-        assert got[("b", "a")] == (1, 0.0)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sums: dict = {}
+    for r in out:
+        n, gap = sums.get((r["src"], r["dst"]), (0, 0))
+        sums[(r["src"], r["dst"])] = (n + r["n"], gap + r["gap_sum"])
+    got = {edge: (n, gap / n) for edge, (n, gap) in sums.items()}
+    batch = {
+        (r["src"], r["dst"]): (r["n"], r["avg_gap_ms"])
+        for r in next_event_edges(
+            spark.createDataFrame(rows, SPAN_SCHEMA)
+        ).collect()
+    }
+    assert got == batch
+    # trace 1's auth -> db (150 -> 400) crosses the batch boundary, and the
+    # tiebreak orders trace 4 as b -> a
+    assert got[("auth", "db")] == auth_db
+    assert got[("b", "a")] == (1, 0.0)
 
 
-def test_streaming_funnel_bucketed_matches_per_user_twin(spark):
-    """The key-group-bucketed funnel emits exactly the per-user twin's
-    completion rows — same fixture as the ordered-replay test, with
-    n_buckets=2 so several users share one packed state row and state
-    must bridge the batch boundary per user inside a shared bucket."""
+FUNNEL_SCHEMA = "user_id long, ts_ms long, name string"
+FUNNEL_STEPS = ["view", "click", "purchase"]
+FUNNEL_EVENTS = [
+    # u1 full funnel; u2 wrong order; u3 step2 outside window;
+    # u4 step1 only; u5 same-ts click (must not advance)
+    (1, 100, "view"), (1, 200, "click"), (1, 300, "purchase"),
+    (2, 100, "click"), (2, 200, "view"),
+    (3, 100, "view"), (3, 700, "click"),
+    (4, 100, "view"),
+    (5, 100, "view"), (5, 100, "click"),
+]
+FUNNEL_COMPLETIONS = {
+    (1, 1): 100, (1, 2): 200, (1, 3): 300,
+    (2, 1): 200,
+    (3, 1): 100,
+    (4, 1): 100,
+    (5, 1): 100,
+}
+#: u6 is present only in batch 1: its state rides along in a key group
+#: whose other users appear in batch 2
+FUNNEL_BATCH1_ONLY = [(6, 150, "view"), (6, 180, "click")]
+
+
+@pytest.mark.parametrize(
+    "extra, extra_done, counts",
+    [
+        ([], {}, {1: 5, 2: 1, 3: 1}),
+        (FUNNEL_BATCH1_ONLY, {(6, 1): 150, (6, 2): 180}, {1: 6, 2: 2, 3: 1}),
+    ],
+    ids=["boundary_purchase", "batch1_only_user"],
+)
+def test_streaming_funnel_bucketed_matches_batch_across_batches(
+    spark, monkeypatch, extra, extra_done, counts
+):
+    """Replaying events watermark-ordered across micro-batches, the
+    key-group funnel emits each user's step completions, and its
+    per-step counts equal the batch operator's (operators/behavior.funnel).
+    Two key groups put several users into one packed state row, so state
+    must bridge the batch boundary per user inside a shared group."""
     from lakeside_spark.operators.behavior import funnel
-    from lakeside_spark.streaming.stateful import streaming_funnel_bucketed
 
-    schema = "user_id long, ts_ms long, name string"
-    rows = [
-        (1, 100, "view"), (1, 200, "click"), (1, 300, "purchase"),
-        (2, 100, "click"), (2, 200, "view"),
-        (3, 100, "view"), (3, 700, "click"),
-        (4, 100, "view"),
-        (5, 100, "view"), (5, 100, "click"),
-        # u6 present only in batch 1: its state rides along in a bucket
-        # whose other users appear in batch 2
-        (6, 150, "view"), (6, 180, "click"),
-    ]
-    steps = ["view", "click", "purchase"]
-
-    src = tempfile.mkdtemp(prefix="funnelb_src_")
-    try:
-        first = [r for r in rows if r[1] <= 200]
-        second = [r for r in rows if r[1] > 200]
-        spark.createDataFrame(first, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        spark.createDataFrame(second, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/b1")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            streaming_funnel_bucketed(
-                stream, steps, window_ms=500, n_buckets=2
-            )
-            .writeStream.format("memory")
-            .queryName("funnelb_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {
-            (r["user_id"], r["step"]): r["ts"]
-            for r in spark.sql("SELECT * FROM funnelb_out").collect()
-        }
-        # per-row equality against the per-user semantics: u1 completes
-        # all three steps (purchase lands in batch 2 via carried state),
-        # u6 completes two inside batch 1, u5's same-ts click must not
-        # advance (strict <)
-        assert got == {
-            (1, 1): 100, (1, 2): 200, (1, 3): 300,
-            (2, 1): 200,
-            (3, 1): 100,
-            (4, 1): 100,
-            (5, 1): 100,
-            (6, 1): 150, (6, 2): 180,
-        }
-        batch = funnel(
-            spark.createDataFrame(rows, schema), steps, window_ms=500,
-            user_col="user_id", ts_col="ts_ms", name_col="name",
-        )
-        batch_counts = {r["step"]: r["users"] for r in batch.collect()}
-        step_counts = {}
-        for (_, s) in got:
-            step_counts[s] = step_counts.get(s, 0) + 1
-        assert step_counts == batch_counts
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    monkeypatch.setattr(stateful, "KEY_GROUPS", 2)
+    rows = FUNNEL_EVENTS + extra
+    out = _replay_two_batches(
+        spark, rows, FUNNEL_SCHEMA,
+        lambda s: stateful.streaming_funnel_bucketed(
+            s, FUNNEL_STEPS, window_ms=500
+        ),
+    )
+    got = {(r["user_id"], r["step"]): r["ts"] for r in out}
+    # u1 completes all three steps (purchase lands in batch 2 via carried
+    # state), u5's same-ts click must not advance (strict <)
+    assert got == {**FUNNEL_COMPLETIONS, **extra_done}
+    batch = funnel(
+        spark.createDataFrame(rows, FUNNEL_SCHEMA), FUNNEL_STEPS, window_ms=500,
+        user_col="user_id", ts_col="ts_ms", name_col="name",
+    )
+    batch_counts = {r["step"]: r["users"] for r in batch.collect()}
+    step_counts: dict = {}
+    for (_, s) in got:
+        step_counts[s] = step_counts.get(s, 0) + 1
+    assert step_counts == batch_counts == counts
 
 
 def test_late_data_fused_bounds_match_direct_bounds(spark):
