@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import words
+from lakeside_spark.operators.similarity import _parallelize
 from lakeside_spark.sources.footers import footer_row_count
 
 #: bm25_topk takes the matched-postings plan above this many corpus docs
@@ -128,12 +129,10 @@ def _bm25_scored_full(
     (measured 1.2→2.0s at sf0.1), while re-exploding a cached array is
     cheap. Bounded by the full-plan gate (≤ SCALE_THRESHOLD docs; the
     matched plan covers large corpora)."""
-    from lakeside_spark.operators.textstats import _parallelize_sized
-
     # under-parallel gate, same as the matched plan: a single-file
     # corpus is ONE split and pins the codegen tokenize/explode to one
     # core (the r8 probe bug class)
-    corpus = _parallelize_sized(corpus)
+    corpus = _parallelize(corpus, bytes_per_task=4 << 20)
     w = words(text_col)
     toks = M.checkpointed(
         corpus.select(
@@ -218,12 +217,10 @@ def _bm25_scored_matched(
     """(q_id, doc_id, score): matched-postings plan — the corpus token
     stream is cut to query-term matches BEFORE any aggregation, so the
     one shuffle is the matched postings, never the full token table."""
-    from lakeside_spark.operators.textstats import _parallelize_sized
-
     spark = corpus.sparkSession
     # under-parallel gate, same as the full plan: a single-file corpus
     # is ONE split and pins the codegen tokenize/explode to one core
-    corpus = _parallelize_sized(corpus)
+    corpus = _parallelize(corpus, bytes_per_task=4 << 20)
     qterms = _qterms(queries, text_col, id_col)
     w = words(text_col)
     doclen = corpus.select(

@@ -34,7 +34,7 @@ def _doc_grams(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame
     slice/concat lambdas per gram (~1 ms/doc measured at sf0.1); the
     kernel is one linear Python pass per Arrow batch, same pattern as
     dedup._shingled_rows."""
-    from lakeside_spark.operators.dedup import _parallelize
+    from lakeside_spark.operators.similarity import _parallelize
 
     src = _parallelize(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -266,7 +266,7 @@ def bloom_decontam(
                 }
             )
 
-    from lakeside_spark.operators.dedup import _parallelize
+    from lakeside_spark.operators.similarity import _parallelize
 
     src = _parallelize(
         corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import md5_long, normalized
+from lakeside_spark.operators.similarity import _parallelize
 
 #: MinHash hash family: h_i(s) = (A_i * h31(s) + B_i) mod P where h31 is the
 #: 60-bit md5 integer of the shingle reduced mod P. One md5 per shingle
@@ -77,12 +78,6 @@ CONTAINMENT_EXACT_MAX_DOCS = 50_000
 #: connected_components answers with one collect + union-find up to this
 #: many edges and with distributed star-contraction rounds above it.
 CC_LOCAL_MAX_EDGES = 1_000_000
-
-
-# Single shared under-parallel gate: one implementation (the kernels in
-# multimodal/audiofp/chunking import it from similarity too) so the
-# repartition policy cannot silently diverge between operator families.
-from lakeside_spark.operators.similarity import _parallelize  # noqa: E402,F401
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -36,12 +36,19 @@ from lakeside_spark.operators.kmeans_replay import (
     unit9,
 )
 from lakeside_spark.operators.pq_replay import pq_train_snapped
+from lakeside_spark.sources.footers import input_file_bytes, local_parquet_meta, plan_nodes_within
 
 #: self_knn and embedding_dup_pairs take their exact broadcast side up to
 #: this many vectors and their bucketed / LSH scale side above it. Read at
 #: call time, so a test forces either side by patching the module
 #: attribute.
 BROADCAST_LIMIT = 100_000
+
+
+#: logical plan nodes that keep a file scan's partitioning
+_SCAN_PRESERVING = frozenset(
+    ("Project", "Filter", "Generate", "MapInPandas", "Relation", "LogicalRelation")
+)
 
 
 def _effective_input_parallelism(df: DataFrame) -> int:
@@ -69,15 +76,8 @@ def _effective_input_parallelism(df: DataFrame) -> int:
         # node (Repartition, Join, Aggregate, ...) the partition count
         # is real and must be trusted — only scan-partition-preserving
         # nodes may sit above the relation
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        preserving = ("Project", "Filter", "Generate", "MapInPandas",
-                      "Relation", "LogicalRelation")
-        for line in plan.splitlines():
-            node = line.lstrip(" +-:").split(" ", 1)[0]
-            if node and node not in preserving:
-                return parts
-        from lakeside_spark.sources.footers import local_parquet_meta
-
+        if not plan_nodes_within(df, _SCAN_PRESERVING):
+            return parts
         groups = 0
         for uri in files:
             meta = local_parquet_meta(uri)
@@ -103,26 +103,24 @@ def _parallelize(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     with no Exchange at all, and ``spark.sql.files.maxPartitionBytes``
     stays in charge of scan sizing.
 
-    ``bytes_per_task`` caps the fan-out by estimated input size for
-    LIGHT kernels (one matmul per batch): a Python task costs ~30ms of
-    dispatch regardless of payload, so blowing a 1 MB input to 32 tasks
-    pays 32 dispatches to parallelize microseconds of BLAS. The cap uses
-    Catalyst's plan-size estimate — unknown sizes estimate huge and keep
-    full parallelism (the safe direction), and the cap never RAISES the
-    target, so a 100 TB scan is untouched. Heavy per-row kernels
-    (winnow, codecs) should not pass it: they want every core even on
-    small inputs."""
+    ``bytes_per_task`` caps the fan-out by input size for LIGHT kernels:
+    a Python task costs ~30ms of dispatch regardless of payload, so
+    blowing a kilobyte input to 32 tasks pays 32 dispatches to do ~ms of
+    work each (measured ~0.3s of vocab_pmi's sub-second floor at sf0.1).
+    The size is the on-disk bytes of the plan's input files: Catalyst's
+    estimate of a projection is smaller (28 KB for the doc_id and text
+    columns of sf0.01's 65 KB documents file) and would give the 64 KB
+    per task text kernels fewer tasks. An input with no local files
+    keeps full parallelism (the safe direction), and the cap never
+    RAISES the target, so a 100 TB scan is untouched. Heavy per-row
+    kernels (winnow, codecs) should not pass it: they want every core
+    even on small inputs."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if bytes_per_task:
-        try:
-            raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            # py4j auto-converts small BigInts to int; huge unknown-size
-            # defaults come back as JavaObjects with toString
-            size = raw if isinstance(raw, int) else int(raw.toString())
+        size = input_file_bytes(df)
+        if size is not None:
             target = max(1, min(target, -(-size // bytes_per_task)))
-        except Exception:
-            pass
     if _effective_input_parallelism(df) >= target:
         return df
     return df.repartition(target)

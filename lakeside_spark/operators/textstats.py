@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
 from lakeside_spark.functions.text import normalized, shingles, words
+from lakeside_spark.operators.similarity import _parallelize
 
 # marker stopwords per language; priority order breaks score ties
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -121,7 +122,6 @@ def fingerprints(
 
     import pandas as pd
 
-    from lakeside_spark.operators.dedup import _parallelize
     from lakeside_spark.operators.repetition import _normalize_py
 
     src = _parallelize(
@@ -184,7 +184,7 @@ def ngram_novelty(
     # NULL text would collapse to a bogus '' shingle via concat_ws; drop
     # such docs, matching the oracle's unnest (which yields no rows for a
     # NULL split) and the documented "every doc with a non-null text"
-    src = _parallelize_sized(
+    src = _parallelize(
         docs.filter(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")
         ),
@@ -241,7 +241,7 @@ def char_entropy(
     # Pre-spread the scan: the per-doc distinct×len counting codegen is
     # the dominant cost, not I/O, so a single-split file must not pin
     # the whole corpus to one core.
-    raw = _parallelize_sized(
+    raw = _parallelize(
         docs.filter(F.length(text_col) > 0).select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")
         ),
@@ -344,7 +344,7 @@ def bigram_nll(
 
     Output: (doc_id, n_words, nll, ppl) for every doc with ≥1 word.
     """
-    raw = _parallelize_sized(
+    raw = _parallelize(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")),
         bytes_per_task=64 << 10,
     )
@@ -459,38 +459,6 @@ def compression_ratio(
     )
 
 
-def _parallelize_sized(df: DataFrame, bytes_per_task: int = 4 << 20) -> DataFrame:
-    """Size-aware variant of dedup._parallelize: spread an under-parallel
-    scan to ~bytes_per_task-sized partitions, capped at defaultParallelism.
-    The unconditional spread-to-all-cores gate is right for CPU-heavy
-    per-doc kernels at real scale, but on a kilobyte-sized single-split
-    input it fans out defaultParallelism Python workers to do ~ms of work
-    each — pure scheduling overhead (measured ~0.3s of vocab_pmi's
-    sub-second floor at sf0.1). When the input's file sizes are unknowable
-    (non-file source) this degrades to the plain gate."""
-    sc = df.sparkSession.sparkContext
-    want = sc.defaultParallelism
-    try:
-        import os as _os
-
-        files = df.inputFiles()
-        if files:
-            total = sum(
-                _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-                for f in files
-            )
-            want = max(1, min(want, -(-total // bytes_per_task)))
-    except Exception:
-        pass
-    from lakeside_spark.operators.similarity import (
-        _effective_input_parallelism,
-    )
-
-    if _effective_input_parallelism(df) >= want:
-        return df
-    return df.repartition(want)
-
-
 def _pmi_count_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The lazy (a, b, c) unigram/bigram count table behind collocations —
     split out so plan tests can assert its physical shape (Arrow kernel fed
@@ -506,7 +474,7 @@ def _pmi_count_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     import pandas as pd
 
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")  # Java/RE2 \s, not unicode \s
-    src = _parallelize_sized(docs.select(F.col(text_col).alias("text")))
+    src = _parallelize(docs.select(F.col(text_col).alias("text")), bytes_per_task=4 << 20)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # mirrors functions/text.words() EXACTLY: trim strips ASCII SPACE

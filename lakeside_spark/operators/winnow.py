@@ -76,7 +76,7 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, fp) distinct winnowed fingerprints — map-only kernel."""
-    from lakeside_spark.operators.dedup import _parallelize
+    from lakeside_spark.operators.similarity import _parallelize
 
     src = _parallelize(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

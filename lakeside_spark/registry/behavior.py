@@ -563,8 +563,9 @@ def event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly-earlier touches in-place, the lookback filter prunes the
     array, and the credit rows explode straight into the final
     (model, channel) aggregate. 10x-data ratio vs the DuckDB twin:
-    2.50x quiet (``tools/profile.py event_attribution --scale 10
-    --runs 5``).
+    2.50x on 32 cores (r12, timed with ``count()``); 6.5-8.1x on 4
+    cores (``tools/profile.py event_attribution --scale 10 --runs 5``:
+    8.14s against 1.01-1.26s).
 
     Key-width note: the operator runs on the raw events projection with
     user_id LONG rather than the telemetry view's string cast —

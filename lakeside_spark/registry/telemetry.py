@@ -1444,7 +1444,11 @@ def _run_replay(spark: SparkSession, src: str, schema: str, twin) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(src, ignore_errors=True)
-    return spark.table(qname)
+    # the frame's analyzed plan holds the sink's rows; the session-wide
+    # view that names them would keep every replay's rows on the driver
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out
 
 
 def streaming_replay_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2336,12 +2340,15 @@ _TRIGRAM_IDX = dict(indexed_dims=("message",), full_value_dims=("name",))
 
 def _trigram_lake(spark: SparkSession, sf_dir: str) -> str:
     """Seal the telemetry stream into a partitioned lake + trigram sidecar
-    once per (process, sf_dir); queries then exercise index-pruned reads."""
+    once per version of ``events.parquet`` (its path, size and mtime), so
+    testdata regenerated at the same path gets a new lake; queries then
+    exercise index-pruned reads."""
     import hashlib
     import os
     import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    st = os.stat(os.path.join(sf_dir, "events.parquet"))
+    tag = hashlib.md5(f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"lakeside_triglake_{tag}")
     done = os.path.join(path, "_trigram_index", "_SUCCESS")
     if not os.path.exists(done):

@@ -631,10 +631,11 @@ def text_msttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     two word-keyed aggs (doc- and segment-grained), map-side combined;
     everything stays in whole-stage codegen."""
     from lakeside_spark.functions.text import words
-    from lakeside_spark.operators.textstats import _parallelize_sized
+    from lakeside_spark.operators.similarity import _parallelize
 
-    docs = _parallelize_sized(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _parallelize(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        bytes_per_task=4 << 20,
     )
     ex = (
         docs.select(

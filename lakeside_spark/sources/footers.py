@@ -5,9 +5,11 @@ under-parallel repartition gate (operators/similarity.
 _effective_input_parallelism caps achievable scan parallelism by row-
 group count) and the row counts of bare file scans
 (:func:`footer_row_count`: BM25's strategy gate, the derived partsupp
-table's supplier count). The
-segment lake reads its merged schema, row counts and data bytes the same
-way (:func:`lake_footers`). All encode the same policy — LOCAL
+table's supplier count); both first walk the optimized plan's nodes with
+:func:`plan_nodes_within`. The repartition gate's size cap reads the
+input files' on-disk bytes (:func:`input_file_bytes`). The segment lake
+reads its merged schema, row counts and data bytes from footers too
+(:func:`lake_footers`). All encode the same policy — LOCAL
 plain-parquet files only, anything else falls back to the caller's
 Spark-side path — so the policy lives here once.
 """
@@ -40,6 +42,35 @@ def local_parquet_meta(uri: str):
     return pq.read_metadata(unquote(parsed.path) if parsed.path else uri)
 
 
+def plan_nodes_within(df, nodes: frozenset[str]) -> bool:
+    """True when every node of ``df``'s optimized logical plan is named in
+    ``nodes`` (e.g. only scan-preserving or row-preserving operators)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for line in plan.splitlines():
+        node = line.lstrip(" +-:").split(" ", 1)[0]
+        if node and node not in nodes:
+            return False
+    return True
+
+
+def input_file_bytes(df) -> int | None:
+    """On-disk bytes of ``df``'s input files, or None when it reads no
+    files or any of them is not local."""
+    try:
+        files = df.inputFiles()
+        if not files:
+            return None
+        total = 0
+        for uri in files:
+            parsed = urlparse(uri)
+            if parsed.scheme not in ("file", ""):
+                return None
+            total += os.path.getsize(unquote(parsed.path))
+        return total
+    except Exception:  # any metadata failure: the caller keeps its default
+        return None
+
+
 def footer_row_count(df) -> int | None:
     """Row count of ``df`` from parquet footers, with no Spark job, when
     its optimized plan cannot drop rows (only Project/Relation nodes) and
@@ -47,11 +78,8 @@ def footer_row_count(df) -> int | None:
     non-file relations, remote storage, more than 4096 files): the caller
     then runs ``count()``."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            node = line.lstrip(" +-:").split(" ", 1)[0]
-            if node and node not in ("Project", "Relation", "LogicalRelation"):
-                return None
+        if not plan_nodes_within(df, frozenset(("Project", "Relation", "LogicalRelation"))):
+            return None
         files = df.inputFiles()
         if not files or len(files) > 4096:
             return None

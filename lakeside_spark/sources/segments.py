@@ -91,7 +91,8 @@ def compact_segments(
     ``lake/p``). A failure before the swap leaves the lake untouched; a
     failure during it moves every partition already swapped back before
     re-raising. A rewrite drops the lake's trigram index, whose entries
-    name the replaced files (rebuild it after compacting).
+    name the replaced files; indexed reads then read every file until
+    the index is rebuilt.
     """
     import math
     import os

@@ -29,29 +29,29 @@ Spark-native equivalent implemented here:
   has/exists probe the exists fingerprint, NOT and range ops degrade
   soundly to match-all/exists. Pruning is always *sound*: a segment
   containing any matching row is never skipped.
-- **pruned read** (:func:`read_segments_indexed`): probes the sidecar
-  with an IN-list of fingerprints (pushed to the parquet dictionary /
-  row-group stats), evaluates the AND/OR tree driver-side exactly like
-  computeSegmentIds, and hands Spark the surviving file list — excluded
-  segments are never listed, footer-read, or scanned. At 100 TB this is
-  the difference between "scan everything and filter" and "read the ~30
-  segments that can possibly match a needle regex": the index is
-  O(distinct trigrams × segments), ~1e4 smaller than the data, and the
-  probe collects only rows for the query's own fingerprints.
+- **pruned read** (:func:`read_segments_indexed`): one aggregation over
+  the sidecar evaluates the AND/OR tree per indexed file exactly like
+  computeSegmentIds, and Spark reads every live file that the index
+  either kept or does not know — excluded segments are never
+  footer-read or scanned. At 100 TB this is the difference between
+  "scan everything and filter" and "read the ~30 segments that can
+  possibly match a needle regex": the index is O(distinct trigrams ×
+  segments), ~1e4 smaller than the data.
 """
 
 from __future__ import annotations
 
-import json
+import operator
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lakeside_spark import schema as S
 from lakeside_spark.ast.model import BinaryClause, Filter, NotClause, QueryClause
+from lakeside_spark.sources.footers import lake_footers
 
 try:  # python 3.11+: re._parser; older: sre_parse
     from re import _parser as sre_parse  # type: ignore[attr-defined]
@@ -60,7 +60,10 @@ except ImportError:  # pragma: no cover
 
 EXISTS_VALUE = ".*"  # reference EXISTS_REGEX (Commons.scala:61)
 INDEX_DIR = "_trigram_index"
-SCHEMA_FILE = "_schema.json"
+#: the sidecar's columns: a data file's path relative to the lake root and
+#: one xxhash64 fingerprint it contains (given explicitly, so opening the
+#: index infers nothing)
+INDEX_SCHEMA = "file string, fp long"
 
 # operator tags mirroring TrigramQuery.Op (NLPUtils.scala:35):
 # reference 0=match-all, 2=and, 3=or
@@ -254,10 +257,7 @@ def build_trigram_index(
     set (exists + full-value + trigram), stored as xxhash64 longs in the
     ``_trigram_index`` sidecar. Incremental production ingest would append
     one small index file per sealed segment instead of rebuilding."""
-    from lakeside_spark.sources.footers import lake_footers
-
-    schema = lake_footers(spark, path).schema
-    lake = spark.read.schema(schema).parquet(path)
+    lake = spark.read.schema(lake_footers(spark, path).schema).parquet(path)
     # input_file_name() yields a file: URI; store the path relative to the
     # lake root so the lake (and its sidecar) can move together
     base = os.path.abspath(path).rstrip("/")
@@ -312,20 +312,6 @@ def build_trigram_index(
         .write.mode("overwrite")
         .parquet(os.path.join(path, INDEX_DIR))
     )
-    # Persist the lake's merged schema beside the index: the pruned read
-    # can then hand Spark an explicit schema without re-reading EVERY
-    # segment footer at plan-build time (~2ms per file through Spark's
-    # schema merge — fatal at a million segments). The index build is the
-    # natural place: it already read the lake's footers, and a segment
-    # added without reindexing is stale for pruning anyway, so schema
-    # staleness has the same remedy (rebuild).
-    # atomic (tmp+rename): a reader racing a rebuild must see either the
-    # old complete schema or the new one, never a truncated file
-    schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
-    tmp_path = schema_path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        fh.write(schema.json())
-    os.replace(tmp_path, schema_path)
 
 
 # ---------------------------------------------------------------------------
@@ -338,102 +324,63 @@ def prune_segments(
     clause: QueryClause,
     indexed_dims: tuple[str, ...],
     full_value_dims: tuple[str, ...] = (),
-    collect_all: bool = True,
-) -> tuple[list[str] | None, int]:
-    """(surviving absolute file paths, total indexed files). Mirrors
-    computeSegmentIds (NLPUtils.scala:156-188): leaf = intersection over
-    the leaf's fingerprint segment-sets, AND = intersect children,
-    OR = union children, match-all = every file.
+) -> tuple[set[str], set[str]] | None:
+    """(kept, indexed): the absolute paths of the files the index keeps for
+    ``clause`` and of every file it indexes, from ONE aggregation over the
+    index; None, with no Spark work at all, when the trigram tree is
+    constant True (match-all), where nothing can be pruned. A lake with no
+    index indexes nothing. Mirrors computeSegmentIds (NLPUtils.scala:
+    156-188): leaf = intersection over the leaf's fingerprint segment-sets,
+    AND = intersect children, OR = union children.
 
-    The boolean tree is evaluated DISTRIBUTED: one hash aggregation over
-    the index computes a has-fingerprint flag per (file, probe) and the
-    AND/OR tree becomes a boolean Column over those flags, so only the
-    surviving file names ever reach the driver (sized for millions of
-    segments; the old path collected a file-set per fingerprint).
-
-    Two cheap jobs, no cache churn: the probe aggregation scans ONLY the
-    index rows whose fp matches a probed fingerprint (an OR-of-equals
-    predicate pushed to the parquet dictionary/row-group stats — files
-    with no probe hit simply have no per-file row, which for the monotone
-    AND/OR algebra means not-kept), and the indexed-file total is a
-    separate file-column-only count. Because the tree algebra is MONOTONE
-    (AND/OR over presence flags; ALL ≡ True, empty OR ≡ False), a tree
-    that evaluates True with every flag false is constant True — that
-    match-all case short-circuits driver-side: with ``collect_all=False``
-    it returns (None, total) without probing anything, so the full name
-    list (as big as the lake listing itself at a million segments) never
-    reaches the driver."""
-    index = spark.read.parquet(os.path.join(path, INDEX_DIR))
+    The boolean tree is evaluated DISTRIBUTED: the aggregation computes a
+    has-fingerprint flag per (file, probe) and the AND/OR tree is a boolean
+    Column over those flags, so the driver receives one (file, kept) row
+    per indexed file, never the fingerprints."""
     tq = clause_to_trigram_query(clause, indexed_dims, full_value_dims)
     probe_strs = sorted(_leaf_fps(tq))
-    base = os.path.abspath(path).rstrip("/")
-    files_only = index.select("file").distinct()
-    if not probe_strs or _const_true(tq):
-        # constant-True tree (match-all, or every leaf unconstrained):
-        # nothing can be pruned, no probe needed
-        if collect_all:
-            keep = sorted(r[0] for r in files_only.collect())
-            return [os.path.join(base, f) for f in keep], len(keep)
-        return None, files_only.count()
+    keep = _fold(tq, {s: F.col(f"_fp{i}") for i, s in enumerate(probe_strs)})
+    if keep is True:
+        return None
+    index_dir = os.path.join(path, INDEX_DIR)
+    if not os.path.isdir(index_dir):
+        return set(), set()
     # hash probe literals with the SAME jvm xxhash64 used at build time
-    # (constant-folded by Catalyst); the OR-of-equals fp filter prunes
-    # the scan to probe hits before the ONE map-side-combined aggregation
-    probe_hash = {s: F.xxhash64(F.lit(s)) for s in probe_strs}
-    hit = None
-    for s in probe_strs:
-        eq = F.col("fp") == probe_hash[s]
-        hit = eq if hit is None else (hit | eq)
-    flags = [
-        F.max(F.when(F.col("fp") == probe_hash[s], True)).alias(f"_fp{i}")
-        for i, s in enumerate(probe_strs)
-    ]
-    per_file = index.filter(hit).groupBy("file").agg(*flags)
-    fp_col = {
-        s: F.coalesce(F.col(f"_fp{i}"), F.lit(False))
-        for i, s in enumerate(probe_strs)
-    }
-    keep_col = _eval_expr(tq, fp_col)
-    keep = [r[0] for r in per_file.filter(keep_col).select("file").collect()]
-    total = files_only.count()
-    if not keep:
-        return [], total
-    if len(keep) == total and not collect_all:
-        return None, total
-    return [os.path.join(base, f) for f in sorted(keep)], total
+    # (constant-folded by Catalyst)
+    per_file = (
+        spark.read.schema(INDEX_SCHEMA)
+        .parquet(index_dir)
+        .groupBy("file")
+        .agg(*[
+            F.max(F.col("fp") == F.xxhash64(F.lit(s))).alias(f"_fp{i}")
+            for i, s in enumerate(probe_strs)
+        ])
+    )
+    base = os.path.abspath(path)
+    rows = per_file.select("file", F.lit(False) if keep is False else keep).collect()
+    return (
+        {os.path.join(base, f) for f, k in rows if k},
+        {os.path.join(base, f) for f, _ in rows},
+    )
 
 
-def _const_true(q: TrigramQuery) -> bool:
-    """True iff the tree evaluates True with EVERY presence flag false.
-    The algebra is monotone (AND/OR over flags, ALL ≡ True), so that is
-    exactly the constant-True (match-all) case."""
+def _fold(q: TrigramQuery, leaf: dict[str, Column]) -> bool | Column:
+    """Fold the trigram query tree into one boolean Column over per-file
+    fingerprint flags (``leaf``), or into True / False when the tree is
+    constant. ALL and an empty AND are match-all, an empty OR is
+    match-none — the reference's set algebra. The algebra is monotone,
+    so a tree is constant True exactly when it holds with every flag
+    false."""
     if q.op == ALL:
         return True
-    terms = [_const_true(s) for s in q.sub] + [False for _ in q.fps]
-    if q.op == AND:
-        return all(terms) if terms else True
-    return any(terms) if terms else False
-
-
-def _eval_expr(q: TrigramQuery, fp_col: dict[str, Column]) -> Column:
-    """Fold the trigram query tree into one boolean Column over per-file
-    fingerprint flags. Empty AND = match-all, empty OR = match-none —
-    same semantics as the reference's set algebra."""
-    if q.op == ALL:
-        return F.lit(True)
-    terms = [_eval_expr(s, fp_col) for s in q.sub] + [fp_col[fp] for fp in q.fps]
-    if q.op == AND:
-        if not terms:
-            return F.lit(True)
-        out = terms[0]
-        for t in terms[1:]:
-            out = out & t
-        return out
-    if not terms:
-        return F.lit(False)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out | t
-    return out
+    terms = [_fold(s, leaf) for s in q.sub] + [leaf[fp] for fp in q.fps]
+    absorbing, neutral = (False, True) if q.op == AND else (True, False)
+    if any(t is absorbing for t in terms):
+        return absorbing
+    cols = [t for t in terms if t is not neutral]
+    if not cols:
+        return neutral
+    return reduce(operator.and_ if q.op == AND else operator.or_, cols)
 
 
 def read_segments_indexed(
@@ -443,43 +390,34 @@ def read_segments_indexed(
     indexed_dims: tuple[str, ...],
     full_value_dims: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Index-pruned read: only segments that can possibly match are handed
-    to the scan; the exact row filter still applies on top (the index is a
-    may-contain structure, like the reference's — QueryEngineV2 re-filters
-    rows inside each fetched segment)."""
+    """Index-pruned read: Spark reads each live data file that the index
+    kept or does not index, and the exact row filter applies on top (the
+    index is a may-contain structure, like the reference's — QueryEngineV2
+    re-filters rows inside each fetched segment).
+
+    The schema and the live files come from the lake's footers, as for
+    ``read_segments``, so both readers see the same columns. Reading the
+    files the index does not know keeps a stale or missing index sound:
+    a file sealed after the last build, an hour ingest replaced (its new
+    file; the index's old name is no longer live) and a lake whose index
+    compaction dropped are all read in full."""
     from lakeside_spark.ast.filters import filter_to_column
 
-    files, _total = prune_segments(
-        spark, path, clause, indexed_dims, full_value_dims, collect_all=False
-    )
-
-    # explicit schema (persisted at index-build time) skips the per-file
-    # footer reads at plan time; absent (pre-existing lake, index built by
-    # an older version) read the lake's footers like read_segments does
-    def reader():
-        schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
-        try:
-            with open(schema_path) as fh:
-                schema = T.StructType.fromJson(json.load(fh))
-        except (OSError, ValueError, KeyError):
-            # missing, corrupt, or wrong-shape sidecar — degrade to the
-            # footer-merged schema rather than failing the query
-            from lakeside_spark.sources.footers import lake_footers
-
-            schema = lake_footers(spark, path).schema
-        return spark.read.schema(schema)
-
-    if files is None:
-        # nothing pruned: one directory listing, no driver-side file
-        # list. On a STALE index (segments sealed after the last
-        # build) this path also reads the unindexed segments — sound,
-        # since the exact row filter reapplies below; the pruned path
-        # can only see indexed files, so index freshness is the
-        # caller's contract (rebuild after sealing), same as the
-        # reference's segment index.
-        df = reader().parquet(path)
-    elif not files:
-        return reader().parquet(path).filter(F.lit(False))
+    meta = lake_footers(spark, path)
+    reader = spark.read.schema(meta.schema)
+    pruned = None
+    if meta.file_rows is not None:  # a lake that is not local is read whole
+        pruned = prune_segments(spark, path, clause, indexed_dims, full_value_dims)
+    if pruned is None:
+        df = reader.parquet(path)
     else:
-        df = reader().option("basePath", path).parquet(*files)
+        kept, indexed = pruned
+        live = [os.path.abspath(f) for f in meta.file_rows]
+        files = [f for f in live if f in kept or f not in indexed]
+        if len(files) == len(live):
+            df = reader.parquet(path)
+        elif not files:
+            df = reader.parquet(path).filter(F.lit(False))
+        else:
+            df = reader.option("basePath", path).parquet(*files)
     return df.filter(filter_to_column(clause, set(df.columns)))

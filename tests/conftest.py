@@ -19,6 +19,23 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def sql_executions(spark):
+    """``sql_executions(description)``: the SQL executions the session's
+    status store holds under a job description, once the listener bus has
+    drained."""
+
+    def count(description: str) -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        store = spark._jsparkSession.sharedState().statusStore()
+        executions = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionsList()
+        )
+        return sum(e.description() == description for e in executions)
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def gate_sides():
     """``gate_sides(module, const, call)`` runs ``call()`` on both sides of
     an auto-gate: with ``module.const`` at 0 (the scale side), then very

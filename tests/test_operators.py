@@ -2905,8 +2905,8 @@ def test_exact_substr_scrub_planted(spark):
 
 
 def test_parallelize_size_cap(spark, sf_dir):
-    """_parallelize(bytes_per_task=...) caps fan-out by Catalyst's size
-    estimate for light kernels (a tiny input must not pay core-count
+    """_parallelize(bytes_per_task=...) caps fan-out by the input files'
+    on-disk bytes for light kernels (a tiny input must not pay core-count
     Python dispatches) and NEVER raises the target above
     defaultParallelism; without the cap the under-parallel input is
     still blown up to full parallelism (heavy kernels want every core).

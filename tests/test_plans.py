@@ -453,10 +453,8 @@ def test_vocab_pmi_arrow_kernel_parallel_no_hof(spark, sf_dir):
     kilobyte corpus stays on few tasks (no 32-worker fan-out for ms of
     work), a big one spreads to all cores (pinned on a synthetic
     many-byte input below)."""
-    from lakeside_spark.operators.textstats import (
-        _parallelize_sized,
-        _pmi_count_table,
-    )
+    from lakeside_spark.operators.similarity import _parallelize
+    from lakeside_spark.operators.textstats import _pmi_count_table
     from lakeside_spark.sources.tables import load_table
 
     counts = _pmi_count_table(load_table(spark, sf_dir, "documents"))
@@ -473,11 +471,11 @@ def test_vocab_pmi_arrow_kernel_parallel_no_hof(spark, sf_dir):
     )
     dp = spark.sparkContext.defaultParallelism
     want = max(1, min(dp, -(-total // (4 << 20))))
-    got = _parallelize_sized(docs).rdd.getNumPartitions()
+    got = _parallelize(docs, bytes_per_task=4 << 20).rdd.getNumPartitions()
     assert got >= want, (got, want)
     # an already-parallel input passes through with no extra Exchange
     wide = spark.range(0, 1 << 20, 1, dp).selectExpr("repeat('x', 64) AS text")
-    assert _parallelize_sized(wide).rdd.getNumPartitions() >= dp
+    assert _parallelize(wide, bytes_per_task=4 << 20).rdd.getNumPartitions() >= dp
 
 
 def test_stickiness_no_nested_loop_join(spark, sf_dir):

@@ -179,19 +179,7 @@ def test_csv_ingest(spark, tmp_path):
     assert got == {("error", "us"), ("info", "eu")}
 
 
-def _sql_executions(spark, description: str) -> int:
-    """SQL executions the session's status store holds under a job
-    description, once the listener bus has drained."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    executions = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
-        store.executionsList()
-    )
-    return sum(e.description() == description for e in executions)
-
-
-def test_ingest_counts_rows_in_its_write_pass(spark, tmp_path):
+def test_ingest_counts_rows_in_its_write_pass(spark, tmp_path, sql_executions):
     """ingest_files counts the rows it writes in the write itself: one SQL
     execution, and the count excludes the malformed and ts/name-less lines."""
     from lakeside_spark.sources.ingest import ingest_files
@@ -205,7 +193,7 @@ def test_ingest_counts_rows_in_its_write_pass(spark, tmp_path):
     finally:
         sc.setJobDescription(None)
     assert n == 6
-    assert _sql_executions(spark, desc) == 1
+    assert sql_executions(desc) == 1
     assert read_segments(spark, str(tmp_path / "lake")).count() == 6
 
 

@@ -135,6 +135,7 @@ def _replay_two_batches(spark, rows, schema, op):
             q.stop()
         return spark.table(name).collect()
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(src, ignore_errors=True)
 
 

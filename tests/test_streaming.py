@@ -509,3 +509,19 @@ def test_streaming_replay_late_data_evicts(spark, sf_dir):
     }
     assert got == ontime
     assert got != allrows  # the late subset really was evicted
+
+
+def test_replay_drops_its_sink_view(spark, sf_dir):
+    """A replay key leaves no ``replay_`` memory-sink view in the session
+    (the view would keep every replay's rows on the driver); the frame it
+    returns still holds the sink's rows."""
+    from lakeside_spark.registry import QUERIES
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("replay_")}
+
+    before = views()
+    out = QUERIES["streaming_replay_late_data"](spark, sf_dir)
+    assert views() == before
+    rows = out.collect()
+    assert rows and out.count() == len(rows)

@@ -2,6 +2,7 @@
 effectiveness (selective predicates actually skip files), and the
 regex→required-literal compiler (reference NLPUtils.scala:90-131)."""
 
+import os
 import shutil
 import tempfile
 
@@ -12,7 +13,8 @@ from lakeside_spark import schema as S
 from lakeside_spark.ast.filters import filter_to_column
 from lakeside_spark.ast.model import BinaryClause, Filter, NotClause
 from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.segments import write_segments
+from lakeside_spark.sources.footers import lake_footers
+from lakeside_spark.sources.segments import compact_segments, write_segments
 from lakeside_spark.sources.trigram_index import (
     build_trigram_index,
     clause_to_trigram_query,
@@ -66,23 +68,132 @@ def test_pruned_read_matches_full_scan(spark, indexed_lake, label):
 
 def test_selective_predicates_skip_files(spark, indexed_lake):
     path, _ = indexed_lake
-    files, total = prune_segments(
-        spark, path, CLAUSES["contains"], **IDX
-    )
+    kept, indexed = prune_segments(spark, path, CLAUSES["contains"], **IDX)
+    live = {os.path.abspath(f) for f in lake_footers(spark, path).file_rows}
+    total = len(live)
+    assert indexed == live
     assert total > 50
-    assert len(files) < total / 4  # a needle literal must skip most files
+    assert len(kept) < total / 4  # a needle literal must skip most files
 
 
 def test_missing_column_prunes_everything(spark, indexed_lake):
     path, _ = indexed_lake
-    files, _ = prune_segments(spark, path, CLAUSES["missing_column"], **IDX)
-    assert files == []
+    kept, _ = prune_segments(spark, path, CLAUSES["missing_column"], **IDX)
+    assert kept == set()
 
 
 def test_not_clause_is_sound_match_all(spark, indexed_lake):
     path, _ = indexed_lake
-    files, total = prune_segments(spark, path, CLAUSES["not"], **IDX)
+    total = len(lake_footers(spark, path).file_rows)
+    assert prune_segments(spark, path, CLAUSES["not"], **IDX) is None
+    files = read_segments_indexed(spark, path, CLAUSES["not"], **IDX).inputFiles()
     assert len(files) == total
+
+
+def test_indexed_read_plans_in_at_most_one_execution(spark, indexed_lake, sql_executions):
+    """Building the pruned frame runs one SQL execution (the index
+    aggregation) for a selective clause and none for a match-all one."""
+    path, _ = indexed_lake
+    sc = spark.sparkContext
+    for label, expected in (("contains", 1), ("not", 0)):
+        desc = f"indexed read {label} {path}"
+        sc.setJobDescription(desc)
+        try:
+            read_segments_indexed(spark, path, CLAUSES[label], **IDX)
+        finally:
+            sc.setJobDescription(None)
+        assert sql_executions(desc) == expected, label
+
+
+# ---------------------------------------------------------------------------
+# stale and missing indexes: files the index does not know are read
+
+HOUR = 3_600_000
+T0 = 1_704_412_800_000  # 2024-01-05T00:00Z
+NEEDLE = Filter(k=S.MESSAGE, v=("needle",), op=S.CONTAINS)
+
+
+def _hours(spark, hours, word, host=None):
+    """Three telemetry rows per hour whose messages carry ``word``; with
+    ``host``, a tag column the lake did not have."""
+    cols = f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, {S.MESSAGE} string"
+    rows = [(T0 + h * HOUR + i, "error", float(i), f"{word} {h}.{i}") for h in hours for i in range(3)]
+    df = spark.createDataFrame(rows, cols)
+    return df if host is None else df.withColumn("host", F.lit(host))
+
+
+@pytest.fixture
+def small_lake(spark, tmp_path):
+    """Four indexed hours, the needle in hour 1 only."""
+    lake = str(tmp_path / "lake")
+    write_segments(_hours(spark, (0, 2, 3), "hay"), lake, dataset="logs")
+    write_segments(_hours(spark, (1,), "needle"), lake, dataset="logs")
+    build_trigram_index(spark, lake, **IDX)
+    return lake
+
+
+def _assert_matches_full_scan(spark, lake, clause):
+    full = spark.read.option("mergeSchema", "true").parquet(lake)
+    exp = full.filter(filter_to_column(clause, set(full.columns)))
+    got = read_segments_indexed(spark, lake, clause, **IDX)
+
+    def rows(df):
+        return sorted((r[S.TIMESTAMP], r[S.MESSAGE]) for r in df.collect())
+
+    assert rows(got) == rows(exp)
+    assert rows(exp)
+
+
+def test_hour_ingested_after_build_is_read(spark, small_lake):
+    write_segments(_hours(spark, (5,), "needle"), small_lake, dataset="logs")
+    _assert_matches_full_scan(spark, small_lake, NEEDLE)
+
+
+def test_indexed_hour_replaced_after_build_is_read(spark, small_lake):
+    write_segments(_hours(spark, (1,), "needle again"), small_lake, dataset="logs")
+    _assert_matches_full_scan(spark, small_lake, NEEDLE)
+
+
+def test_lake_whose_index_compaction_dropped_reads_every_file(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    df = _hours(spark, (0, 1), "hay").unionByName(_hours(spark, (1,), "needle"))
+    ts = F.timestamp_millis(F.col(S.TIMESTAMP))
+    (
+        df.withColumn("dataset", F.lit("logs"))
+        .withColumn("dateint", F.date_format(ts, "yyyyMMdd").cast("int"))
+        .withColumn("hour", F.date_format(ts, "H").cast("int"))
+        .repartition(2)  # two files per hour: compaction rewrites both hours
+        .write.partitionBy("dataset", "dateint", "hour")
+        .parquet(lake)
+    )
+    build_trigram_index(spark, lake, **IDX)
+    compact_segments(spark, lake)
+    assert not os.path.exists(os.path.join(lake, "_trigram_index"))
+    _assert_matches_full_scan(spark, lake, NEEDLE)
+
+
+def test_tag_column_added_after_build_is_read(spark, small_lake):
+    write_segments(_hours(spark, (6,), "hay", host="h1"), small_lake, dataset="logs")
+    _assert_matches_full_scan(spark, small_lake, Filter(k="host", v=("h1",), op=S.EQ))
+
+
+def test_registry_lake_follows_rewritten_events(spark, sf_dir, tmp_path, monkeypatch):
+    """The registry's trigram lake is keyed on the events file's version:
+    events rewritten in place get a new lake, not the one sealed before."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from lakeside_spark.registry import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = str(sf / "events.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "events.parquet"), events)
+    assert [r["name"] for r in QUERIES["trigram_prune"](spark, str(sf)).collect()] == ["error"]
+    table = pq.read_table(events)
+    pq.write_table(table.filter(pc.not_equal(table["event_type"], "error")), events)
+    assert QUERIES["trigram_prune"](spark, str(sf)).collect() == []
 
 
 def test_required_literals():
