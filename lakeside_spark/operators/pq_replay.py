@@ -56,19 +56,21 @@ def pq_train_snapped(
     books = np.empty((m_subs, k, sub), dtype=np.int64)
     for j in range(m_subs):
         x = u6[:, j * sub : (j + 1) * sub]
+        x2 = (x * x).sum(axis=1)
         cents = x[init_rows].copy()
         for _ in range(iters):
-            # exact int64: terms ≤4e12, sub-dim sums ≤1.6e13 — order-free
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            # ‖x−c‖² = ‖x‖² + ‖c‖² − 2x·c, exact in int64 (every term
+            # ≤1.6e13) — the same integers as the squared-difference sum,
+            # without the n×k×sub temporary
+            d2 = x2[:, None] + (cents * cents).sum(axis=1)[None, :] - 2 * (x @ cents.T)
             best = d2.argmin(axis=1)  # first-min: ties to lowest code
-            for c in range(k):
-                members = x[best == c]
-                if not len(members):
-                    continue
-                v = members.sum(axis=0, dtype=np.int64).astype(
-                    np.float64
-                ) / 1e6 / float(len(members))
-                cents[c] = _snap6i(v)
+            counts = np.bincount(best, minlength=k)
+            sums = np.zeros((k, sub), dtype=np.int64)
+            np.add.at(sums, best, x)  # exact int64, order-free
+            live = counts > 0  # empty cells keep their centroid
+            cents[live] = _snap6i(
+                sums[live].astype(np.float64) / 1e6 / counts[live, None].astype(np.float64)
+            )
         books[j] = cents
     return books
 

@@ -126,16 +126,20 @@ def _parallelize(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def _unit(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm in float64; zero rows stay zero."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return mat / norms
+
+
 def _collect_unit_matrix(df: DataFrame, vec_col: str, id_col: str):
     """Small side → (ids: int64[n], unit vectors: float64[n, d])."""
     rows = df.select(id_col, vec_col).collect()
     if not rows:
         return np.empty(0, dtype=np.int64), np.empty((0, 0), dtype=np.float64)
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms
+    return ids, _unit(np.array([r[1] for r in rows], dtype=np.float64))
 
 
 def _scored_against(
@@ -162,9 +166,7 @@ def _scored_against(
                 continue
             n_ids = pdf[id_col].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cos = (mat / norms) @ unit_q.T  # [block, n_queries] in BLAS
+            cos = _unit(mat) @ unit_q.T  # [block, n_queries] in BLAS
             qq, nn = np.meshgrid(np.arange(len(ids_q)), np.arange(len(n_ids)))
             q_flat, n_flat = ids_q[qq.ravel()], n_ids[nn.ravel()]
             c_flat = cos.ravel()
@@ -696,51 +698,22 @@ def ann_lsh(
         )
         .select(F.col("id").alias("n_id"), F.col("v").alias("nv"), "bucket")
     )
-    # query side: the panel is broadcast-joined below, i.e. already
-    # assumed executor-memory-small — bucketize it DRIVER-side with the
-    # same numpy matmul when it is (one collect of an already-bounded
-    # frame) instead of paying a whole Python-worker stage for a handful
-    # of rows; a panel too large to collect falls back to the
-    # distributed kernel (and the broadcast below is then the caller's
-    # scale decision, unchanged from before). The cutoff is sized by the
-    # EXPANDED frame — rows × probe fan-out × (vector + key) bytes, not
-    # raw rows: at probe_bits=2 a 65k-row panel expands to ~10M
-    # vector-carrying rows, which is a driver OOM, so the budget keeps
-    # the materialized expansion under ~64 MB whatever the knobs say.
-    n_probes = 1
-    if probe_bits >= 1:
-        n_probes += num_planes
-    if probe_bits >= 2:
-        n_probes += num_planes * (num_planes - 1) // 2
-    fan_out = n_tables * n_probes
-    row_bytes = 8 * dim + num_planes + 16
-    max_driver_rows = max(256, (64 << 20) // (fan_out * row_bytes))
+    # query side: the panel is broadcast-joined below, so it is collected
+    # to the driver whichever side expands it; bucketize it there with the
+    # same numpy matmul instead of paying a Python-worker stage for a
+    # handful of rows
     q_rows = queries.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
-    ).take(max_driver_rows + 1)
-    if len(q_rows) <= max_driver_rows:
-        probe_kernel = bucketize(probe=True)
-        if q_rows:
-            q_pdf = pd.DataFrame(
-                {"id": [r["id"] for r in q_rows], "v": [r["v"] for r in q_rows]}
-            )
-            q_out = next(iter(probe_kernel(iter([q_pdf]))))
-        else:
-            q_out = pd.DataFrame({"id": [], "v": [], "bucket": []})
-        q = spark.createDataFrame(
-            q_out, schema="id bigint, v array<double>, bucket string"
-        ).select(F.col("id").alias("q_id"), F.col("v").alias("qv"), "bucket")
-    else:
-        q = (
-            queries.select(
-                F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
-            )
-            .mapInPandas(
-                bucketize(probe=True),
-                schema="id bigint, v array<double>, bucket string",
-            )
-            .select(F.col("id").alias("q_id"), F.col("v").alias("qv"), "bucket")
+    ).collect()
+    q_out = pd.DataFrame({"id": [], "v": [], "bucket": []})
+    if q_rows:
+        q_pdf = pd.DataFrame(
+            {"id": [r["id"] for r in q_rows], "v": [r["v"] for r in q_rows]}
         )
+        q_out = next(iter(bucketize(probe=True)(iter([q_pdf]))))
+    q = spark.createDataFrame(
+        q_out, schema="id bigint, v array<double>, bucket string"
+    ).select(F.col("id").alias("q_id"), F.col("v").alias("qv"), "bucket")
     cand = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("q_id") != F.col("n_id"))
@@ -757,31 +730,6 @@ def ann_lsh(
     )
 
 
-def _lloyd_kmeans(
-    sample: np.ndarray, k: int, max_iter: int = 20, seed: int = 42
-) -> np.ndarray:
-    """Deterministic plain (L2) k-means for PQ sub-quantizer training —
-    runs on a driver-side sample."""
-    rng = np.random.default_rng(seed)
-    cents = sample[rng.choice(len(sample), size=min(k, len(sample)), replace=False)]
-    x2 = (sample**2).sum(axis=1)[:, None]
-    for _ in range(max_iter):
-        # ||x-c||² = ||x||² + ||c||² - 2x·c — one BLAS matmul instead of an
-        # n×k×d broadcast (≈10× faster at n_codes=64)
-        d2 = x2 + (cents**2).sum(axis=1)[None, :] - 2.0 * (sample @ cents.T)
-        assign = d2.argmin(axis=1)
-        new = np.vstack(
-            [
-                sample[assign == j].mean(axis=0) if (assign == j).any() else cents[j]
-                for j in range(len(cents))
-            ]
-        )
-        if np.allclose(new, cents):
-            break
-        cents = new
-    return cents
-
-
 def _opq_rotation(unit_sample: np.ndarray, m_subs: int) -> np.ndarray:
     """OPQ-style orthogonal pre-rotation (Ge et al. 2013's parametric
     variant): PCA of the training sample with greedy eigenvalue allocation
@@ -789,19 +737,19 @@ def _opq_rotation(unit_sample: np.ndarray, m_subs: int) -> np.ndarray:
     a balanced share of the variance (balanced log-eigenvalue products),
     which is what the independent sub-quantizers assume. Orthogonal, so
     rotated dot products equal original dot products and ADC still
-    approximates the true cosine. Reuses the eigh machinery of
-    embedding_whitening on the same driver-side d×d covariance.
+    approximates the true cosine. The eigensolve is numpy's float
+    ``eigh`` of the driver-side d×d covariance, so a rotated index is
+    panel-pinned, not replayed by an oracle.
 
-    Measured honestly: on the isotropic worst-case panel this is ±0.05
-    recall (nothing to re-balance); it earns its keep on anisotropic
-    corpora where a few directions carry most variance."""
-    d = unit_sample.shape[1]
-    if unit_sample.shape[0] < 2:
+    Raises ValueError on fewer than 2 training vectors or a dimension
+    that m_subs does not divide."""
+    n, d = unit_sample.shape
+    if n < 2:
         # np.cov of a single observation is NaN — eigh would silently
         # produce NaN codebooks and garbage scores downstream
-        raise ValueError(
-            f"OPQ rotation needs >=2 training vectors, got {unit_sample.shape[0]}"
-        )
+        raise ValueError(f"OPQ rotation needs >=2 training vectors, got {n}")
+    if d % m_subs:
+        raise ValueError(f"dim {d} not divisible by m_subs {m_subs}")
     cov = np.cov(unit_sample.T)
     if not np.all(np.isfinite(cov)):
         raise ValueError("OPQ rotation: non-finite training covariance")
@@ -820,21 +768,6 @@ def _opq_rotation(unit_sample: np.ndarray, m_subs: int) -> np.ndarray:
         loads[j] += np.log(max(lam[i], 1e-12))
     order = [i for b in buckets for i in b]
     return v[:, order].T  # rows are the new basis: x_rot = x @ R.T
-
-
-def _train_unit_sample(
-    corpus: DataFrame, vec_col: str, train_sample: int
-) -> np.ndarray | None:
-    """Bounded driver-side training sample, L2-normalized — a function of
-    the corpus head, never corpus-sized. Returns None for an empty
-    corpus."""
-    sample = corpus.select(vec_col).limit(train_sample).collect()
-    if not sample:
-        return None
-    mat = np.array([r[0] for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return mat / norms
 
 
 def ann_pq(
@@ -863,10 +796,14 @@ def ann_pq(
       shortlist — a task contributes at most rerank rows to the global
       top-rerank — so the result is partitioning-independent. Lifts
       panel recall@5 from 0.23 (round-5 defaults) to ~0.8.
-    - ``rotation="opq"``: orthogonal OPQ-style pre-rotation
-      (_opq_rotation) applied before chopping, for anisotropic corpora;
-      measured ±0.05 on the isotropic panel (honest: nothing to balance
-      there), so defaults keep it off.
+    - ``rotation="opq"``: the orthogonal OPQ-style pre-rotation R
+      (_opq_rotation), trained on the same sample as the codebooks. The
+      training sample, the corpus and the queries all enter the pipeline
+      below as unit6(unit(x) @ Rᵀ) instead of unit6(x); everything else
+      is the same code, so the ann_recall_report rows ``pq`` and
+      ``pq_opq`` differ by the rotation alone. ``"none"`` (the default)
+      and ``"opq"`` are the only values; anything else raises
+      ValueError, as does OPQ on fewer than 2 training vectors.
 
     100 TB shape: the corpus is reduced to m_subs small ints per vector
     (64-dim float32 → 8 bytes here, a 32× compression), encoding and
@@ -875,51 +812,28 @@ def ann_pq(
     shortlist window sees tasks×queries×rerank rows, never the corpus.
     Approximate by design: brute-force cosine_topk is the exact baseline.
 
-    ORACLE-EXACT since r10 (rotation="none", the default): codebooks are
-    the replayable snapped per-subspace L2 k-means at 1e-6 fixed point
+    ORACLE-EXACT since r10 (rotation="none"): codebooks are the
+    replayable snapped per-subspace L2 k-means at 1e-6 fixed point
     (operators/pq_replay — id-ordered sample, strided init, fixed
     iterations), and encoding / ADC scoring / shortlist / exact rerank
     are ALL order-free int64 arithmetic with (score desc, id asc) ties —
     so ANN_PQ_SQL (registry/_pq_sql) replays the entire pipeline
-    bit-for-bit. The OPQ variant keeps the float eigh rotation and stays
-    panel-pinned only.
+    bit-for-bit. The OPQ rotation is a float eigensolve and a float
+    matmul ahead of the snapping, so that variant is panel-pinned only.
 
-    ``train_mat`` is the snapped codebooks' id-ordered training sample
-    (the first ``train_sample`` rows by ``id_col``), already collected by
-    a caller that shares it between index builds; None collects it per
-    call. The OPQ variant trains on its own sample."""
-    if rotation == "none":
-        return _ann_pq_snapped(
-            corpus, queries, k, m_subs, n_codes, train_sample, rerank,
-            vec_col, id_col, train_mat,
-        )
-    return _ann_pq_opq(
-        corpus, queries, k, m_subs, n_codes, train_sample, rerank,
-        rotation, vec_col, id_col,
-    )
-
-
-def _ann_pq_snapped(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m_subs: int,
-    n_codes: int,
-    train_sample: int,
-    rerank: int,
-    vec_col: str,
-    id_col: str,
-    train_mat: np.ndarray | None,
-) -> DataFrame:
-    """The replayable PQ pipeline (see ann_pq). Everything after unit6
-    snapping is exact int64: codebooks, codes, ADC lookup sums, the
-    global shortlist order and the rerank dot products."""
+    ``train_mat`` is the id-ordered training sample (the first
+    ``train_sample`` rows by ``id_col``, :func:`_train_mat_sample`),
+    already collected by a caller that shares it between index builds;
+    None collects it per call. An empty corpus or query panel returns
+    no rows."""
     from lakeside_spark.operators.pq_replay import (
         pq_encode6,
         pq_luts6,
         unit6,
     )
 
+    if rotation not in ("none", "opq"):
+        raise ValueError(f"rotation must be 'none' or 'opq', got {rotation!r}")
     spark = corpus.sparkSession
     empty = "q_id bigint, n_id bigint, cos_pq double, rank int"
     mat = train_mat
@@ -927,14 +841,21 @@ def _ann_pq_snapped(
         mat = _train_mat_sample(corpus, id_col, vec_col, train_sample)
         if mat is None:
             return spark.createDataFrame([], schema=empty)
-    books6 = pq_train_snapped(unit6(mat), m_subs, n_codes)
+    rot = _opq_rotation(_unit(mat), m_subs) if rotation == "opq" else None
+
+    def snapped(m: np.ndarray) -> np.ndarray:
+        # everything after this is exact int64: codebooks, codes, ADC
+        # lookup sums, the global shortlist order and the rerank dots
+        return unit6(m) if rot is None else unit6(_unit(m) @ rot.T)
+
+    books6 = pq_train_snapped(snapped(mat), m_subs, n_codes)
     bc_books = spark.sparkContext.broadcast(books6)
 
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
         return spark.createDataFrame([], schema=empty)
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q6 = unit6(np.array([r[1] for r in q_rows], dtype=np.float64))
+    q6 = snapped(np.array([r[1] for r in q_rows], dtype=np.float64))
     luts6 = pq_luts6(q6, books6)  # [nq, m_subs, k] int64
     bc_q = spark.sparkContext.broadcast((q_ids, luts6))
     take = max(rerank, k + 1)
@@ -947,7 +868,7 @@ def _ann_pq_snapped(
             if not len(pdf):
                 continue
             n_ids = pdf[id_col].to_numpy(np.int64)
-            u6m = unit6(np.array(list(pdf[vec_col]), dtype=np.float64))
+            u6m = snapped(np.array(list(pdf[vec_col]), dtype=np.float64))
             codes = pq_encode6(u6m, B)  # [n, m_subs]
             adc = np.zeros((nq, len(n_ids)), dtype=np.int64)
             for j in range(B.shape[0]):
@@ -1029,132 +950,6 @@ def _ann_pq_snapped(
     )
 
 
-def _ann_pq_opq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m_subs: int = 8,
-    n_codes: int = 32,
-    train_sample: int = 10_000,
-    rerank: int = 32,
-    rotation: str = "opq",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The float OPQ-rotated PQ variant (see ann_pq's docstring) — kept on
-    the original per-task-refine path; its recall sits in the
-    ann_recall_report panel, not behind an oracle (the eigh rotation is
-    float-valued by nature)."""
-    spark = corpus.sparkSession
-    empty = "q_id bigint, n_id bigint, cos_pq double, rank int"
-    unit = _train_unit_sample(corpus, vec_col, train_sample)
-    if unit is None:
-        return spark.createDataFrame([], schema=empty)
-    dim = unit.shape[1]
-    if dim % m_subs:
-        raise ValueError(f"dim {dim} not divisible by m_subs {m_subs}")
-    sub = dim // m_subs
-    rot = _opq_rotation(unit, m_subs) if rotation == "opq" else None
-    xs = unit @ rot.T if rot is not None else unit
-    books = np.stack(
-        [
-            _lloyd_kmeans(xs[:, j * sub : (j + 1) * sub], n_codes)
-            for j in range(m_subs)
-        ]
-    )  # [m_subs, n_codes, sub]
-    bc_books = spark.sparkContext.broadcast((books, rot))
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B, R = bc_books.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            u = m / n
-            x = u @ R.T if R is not None else u
-            codes = np.empty((len(x), m_subs), dtype=np.int32)
-            for j in range(m_subs):
-                block = x[:, j * sub : (j + 1) * sub]
-                d2 = ((block[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            out = {
-                "n_id": pdf[id_col].to_numpy(np.int64),
-                "codes": list(codes),
-            }
-            if rerank > 0:
-                out["v"] = list(u)  # exact-refine source, unrotated unit
-            yield pd.DataFrame(out)
-
-    enc_schema = "n_id bigint, codes array<int>" + (
-        ", v array<double>" if rerank > 0 else ""
-    )
-    encoded = _parallelize(corpus.select(id_col, vec_col), bytes_per_task=8 << 20).mapInPandas(
-        encode, schema=enc_schema
-    )
-
-    q_ids, q_unit = _collect_unit_matrix(queries, vec_col, id_col)
-    if not len(q_ids):
-        return spark.createDataFrame([], schema=empty)
-    q_rot = q_unit @ rot.T if rot is not None else q_unit
-    # ADC tables: LUT[q, j, c] = <q_subvector_j, codebook_j[c]> — summing
-    # over j approximates cos(q, v) for unit v (rotation is orthogonal, so
-    # rotated dots equal original dots)
-    luts = np.einsum("qjs,jcs->qjc", q_rot.reshape(len(q_ids), m_subs, sub), books)
-    bc_q = spark.sparkContext.broadcast((q_ids, q_unit, luts))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, qu, lut = bc_q.value
-        nq = len(ids_q)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["n_id"].to_numpy(np.int64)
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # [n, m]
-            vs = (
-                np.array(list(pdf["v"]), dtype=np.float64) if rerank > 0 else None
-            )
-            scores = np.zeros((nq, len(n_ids)))
-            for j in range(m_subs):
-                scores += lut[:, j, codes[:, j]]  # [nq, n]
-            take = min(max(rerank, k + 1), len(n_ids))
-            part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
-            rows_q, rows_n, rows_s = [], [], []
-            for qi in range(nq):
-                cand = part[qi]
-                if vs is not None:
-                    # refine: exact cosine over the ADC shortlist, then
-                    # keep this task's local top-(k+1) by the exact score
-                    ex = vs[cand] @ qu[qi]
-                    order = np.argsort(-ex)[: k + 1]
-                    chosen = cand[order]
-                    vals = ex[order]
-                else:
-                    chosen, vals = cand, scores[qi, cand]
-                for ni, sc in zip(chosen, vals):
-                    if ids_q[qi] == n_ids[ni]:
-                        continue
-                    rows_q.append(ids_q[qi])
-                    rows_n.append(n_ids[ni])
-                    rows_s.append(sc)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.array(rows_q, dtype=np.int64),
-                    "n_id": np.array(rows_n, dtype=np.int64),
-                    "cos_pq": np.array(rows_s, dtype=np.float64),
-                }
-            )
-
-    scored = encoded.mapInPandas(score, schema="q_id bigint, n_id bigint, cos_pq double")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_pq").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cos_pq", 6).alias("cos_pq"), "rank")
-    )
-
-
 def ann_sq8(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1165,9 +960,12 @@ def ann_sq8(
 ) -> DataFrame:
     """Scalar-quantization ANN (the FAISS `SQ8` index): each unit vector
     is stored as one byte per dimension — codes = round(255·(x−min)/
-    (max−min)) against per-dimension min/max learned from a bounded
-    sample — and queries score against the dequantized codes with the
-    same BLAS block kernel as cosine_topk.
+    (max−min)) against per-dimension min/max learned from the id-ordered
+    training sample (the first ``train_sample`` rows by ``id_col``,
+    :func:`_train_mat_sample`, so the bounds do not depend on partition
+    order) — and queries score against the dequantized codes with the
+    same BLAS block kernel as cosine_topk. An empty corpus or query
+    panel returns no rows.
 
     Where it sits in the family: 8× compression vs float64 with much
     higher fidelity than PQ's 32× (SQ8 recall is near-exact; PQ trades
@@ -1182,13 +980,10 @@ def ann_sq8(
     """
     spark = corpus.sparkSession
     empty = "q_id bigint, n_id bigint, cos_sq double, rank int"
-    sample = corpus.select(vec_col).limit(train_sample).collect()
-    if not sample:
+    mat = _train_mat_sample(corpus, id_col, vec_col, train_sample)
+    if mat is None:
         return spark.createDataFrame([], schema=empty)
-    mat = np.array([r[0] for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    unit = mat / norms
+    unit = _unit(mat)
     vmin = unit.min(axis=0)
     span = unit.max(axis=0) - vmin
     span[span == 0] = 1.0
@@ -1199,10 +994,7 @@ def ann_sq8(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            u = m / n
+            u = _unit(np.array(list(pdf[vec_col]), dtype=np.float64))
             codes = np.clip(np.rint((u - lo) / sp * 255.0), 0, 255).astype(
                 np.uint8
             )
@@ -1398,78 +1190,44 @@ def _first_vector_dim(df: DataFrame, vec_col: str) -> int | None:
 def _moment_pass9(
     df: DataFrame, vec_col: str, label_col: str
 ) -> tuple | None:
-    """Packed per-task moment pass for the ORACLE-EXACT linear probe:
-    every per-row moment contribution is snapped to 1e-9 fixed-point
-    int64 BEFORE summation, so the reduced moments are integers —
-    summation-order-proof across tasks, engines and retries (the same
-    recipe as the TPC-H fixed-sum money aggregates).
-
-    Each task yields ONE partial over all its Arrow batches, so the
-    reduce grows with task count, not corpus size:
-    [n, Σy, yᵀy, Xᵀy (d+1), XᵀX ((d+1)²)] over bias-augmented rows,
-    int64 in the kernel (safe to ~9e10 rows/task at these magnitudes),
-    reduced as decimal(38,0) so the global sums never overflow.
-    Returns (n, sy9, yy9, xty9 list[int], xtx9 (d+1)² ints)."""
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: np.ndarray | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            x = np.hstack([m, np.ones((len(m), 1))])
-            y = pdf[label_col].to_numpy(dtype=np.float64)
-            da = x.shape[1]
-            if acc is None:
-                acc = np.zeros(3 + da + da * da, dtype=np.int64)
-            acc[0] += len(x)
-            acc[1] += int(_snap9i(y).sum())
-            acc[2] += int(_snap9i(y * y).sum())
-            # chunk the per-row outer products: rows x (d+1)² doubles
-            # would be GBs on a full Arrow batch
-            for lo in range(0, len(x), 256):
-                xb = x[lo : lo + 256]
-                yb = y[lo : lo + 256]
-                acc[3 : 3 + da] += _snap9i(xb * yb[:, None]).sum(axis=0)
-                acc[3 + da :] += (
-                    _snap9i(xb[:, :, None] * xb[:, None, :])
-                    .sum(axis=0)
-                    .ravel()
-                )
-        if acc is not None:
-            yield pd.DataFrame({"p": [acc]})
-
-    d_probe = _first_vector_dim(df, vec_col)
-    da_probe = None if d_probe is None else d_probe + 1
-    packed = _reduce_packed9(
-        _parallelize(
-            df.select(vec_col, label_col).filter(
-                F.col(label_col).isNotNull()
-            )
-        ).mapInPandas(partials, schema="p array<long>"),
-        packed_len=(
-            None if da_probe is None else 3 + da_probe + da_probe * da_probe
-        ),
+    """Fixed-point moments for the ORACLE-EXACT linear probe: the
+    covariance pass (_cov_packed9) over z = [x, 1, y] on the rows whose
+    label is not null. Every per-row product is snapped to 1e-9 int64
+    before summation, so Σ snap(z zᵀ) holds XᵀX of the bias-augmented
+    rows, Xᵀy and yᵀy, and Σ snap(z) holds Σy — exact integers,
+    summation-order-proof across tasks, engines and retries. Returns
+    (n, Σy, yᵀy, Xᵀy (d+1 ints), XᵀX ((d+1)² ints, row-major)) as
+    Python ints, or None when no row has a label."""
+    z = F.concat(
+        as_double_array(vec_col),
+        F.array(F.lit(1.0), F.col(label_col).cast("double")),
     )
-    if packed is None:
+    out = _cov_packed9(
+        df.filter(F.col(label_col).isNotNull()).select(z.alias("z")), "z"
+    )
+    if out is None:
         return None
-    da = int((math.isqrt(4 * (len(packed) - 3) + 1) - 1) // 2)
-    assert 3 + da + da * da == len(packed), len(packed)
+    dz, p = out
+    da = dz - 1  # the vector and the bias; y is z's last coordinate
+    g = p[1 + dz :]  # Σ snap(z zᵀ), row-major
     return (
-        packed[0],
-        packed[1],
-        packed[2],
-        packed[3 : 3 + da],
-        packed[3 + da :],
+        p[0],
+        p[1 + da],
+        g[da * dz + da],
+        g[da::dz][:da],
+        [g[i * dz + j] for i in range(da) for j in range(da)],
     )
 
 
-def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
-    """Fixed-point covariance moments for the ORACLE-EXACT eigensolve
-    keys (PCA/whitening): per-row contributions snapped to 1e-9 int64
-    BEFORE summation (round-half-away, kmeans_replay._snap9i), reduced as
-    decimal(38,0) — summation-order-proof, the same recipe as
-    _moment_pass9 minus the label/bias. Returns (n, s9[d], g9[d,d])."""
+def _cov_packed9(df: DataFrame, vec_col: str) -> tuple[int, list[int]] | None:
+    """The fixed-point moment pass: per-row contributions snapped to 1e-9
+    int64 BEFORE summation (round-half-away, kmeans_replay._snap9i),
+    reduced as exact Python integers (_reduce_packed9), so the global
+    sums never overflow — summation-order-proof. Each task yields ONE
+    partial [n, Σx (d), XᵀX (d²)] over all its Arrow batches, so the
+    reduce grows with task count, not corpus size; int64 in the kernel
+    (safe to ~9e10 rows/task at these magnitudes). Returns (d, packed),
+    or None on an empty frame."""
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: np.ndarray | None = None
@@ -1505,6 +1263,16 @@ def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
         return None
     d = int((math.isqrt(4 * (len(packed) - 1) + 1) - 1) // 2)
     assert 1 + d + d * d == len(packed), len(packed)
+    return d, packed
+
+
+def _cov_moments9(df: DataFrame, vec_col: str) -> tuple | None:
+    """Fixed-point covariance moments (_cov_packed9) for the ORACLE-EXACT
+    eigensolve keys (PCA/whitening): (n, s9[d], g9[d,d]) as int64."""
+    out = _cov_packed9(df, vec_col)
+    if out is None:
+        return None
+    d, packed = out
     return (
         packed[0],
         np.array(packed[1 : 1 + d], dtype=np.int64),
@@ -1819,18 +1587,17 @@ def embedding_linear_probe(
     predicts a label from frozen embeddings; Alain & Bengio 2016): how
     linearly decodable is the metadata from the vectors?
 
-    100 TB shape, identical to embedding_whitening's covariance pass:
-    ONE moment pass accumulates per TASK the packed partial
-    [n, Σy, yᵀy, Xᵀy (d+1), XᵀX ((d+1)²)] over bias-augmented vectors,
-    reduced element-wise (posexplode + sum, map-side combined — nothing
-    grows with corpus size), the (d+1)² ridge system solves on the
-    driver in microseconds, and predictions broadcast back as a
+    100 TB shape: embedding_whitening's covariance pass, run over
+    [x, 1, y] (_moment_pass9), yields XᵀX and Xᵀy of the bias-augmented
+    vectors, yᵀy and Σy in ONE per-task packed partial reduced
+    element-wise (nothing grows with corpus size), the (d+1)² ridge
+    system solves on the driver in microseconds, and predictions broadcast back as a
     map-only Arrow kernel. R²/SSE come from the SAME moments (SSE =
     yᵀy − 2wᵀXᵀy + wᵀXᵀXw), so the metrics cost no extra pass.
 
     Output: (vec_id, label, pred, resid) per labeled vector; r2 is
     attached as a constant column so a single report row carries the
-    probe quality. ORACLE-EXACT (r8, upgraded from rows-only): the
+    probe quality; no rows when no label is set. ORACLE-EXACT (r8, upgraded from rows-only): the
     moments are 1e-9 fixed-point integer sums (_moment_pass9,
     order-free), the solve is a deterministic no-pivot Gaussian
     elimination with snapped back-substitution (_ge_solve_det), and

@@ -1,4 +1,4 @@
-"""DuckDB twin of operators/pq_replay + similarity._ann_pq_snapped: the
+"""DuckDB twin of operators/pq_replay + similarity.ann_pq: the
 snapped product-quantization ANN replayed end-to-end as recursive CTEs.
 
 1:1 with the Python pipeline at the registry's parameters (m_subs=16,

@@ -191,7 +191,9 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     point (operators/pq_replay) and encoding/ADC/shortlist/rerank are
     all exact int64 arithmetic, so ANN_PQ_SQL (registry/_pq_sql) replays
     the whole pipeline bit-for-bit; recall floors stay pytest-pinned
-    (the float OPQ variant remains panel-only)."""
+    (the OPQ-rotated variant runs the same pipeline on rotated vectors;
+    its float rotation keeps it panel-only, the ann_recall_report row
+    ``pq_opq``)."""
     from lakeside_spark.operators.similarity import ann_pq as _ann_pq
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -806,11 +808,15 @@ def embedding_pca_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rows-only: the ANN index-selection report — recall@5 and mean
     |cos error| vs the exact baseline for every approximate index the
-    engine ships (lsh / ivf / pq / sq8), over a 20-query panel. The
-    one-key answer to "which index do I build for this corpus?"; each
-    variant's own scale contract is documented at its operator. Exact
-    top-k is the ground truth, so this is self-validating (no oracle —
-    the comparison IS against the in-engine exact path)."""
+    engine ships (lsh / ivf / ivf_ma / pq / pq_opq / sq8), over a
+    20-query panel. The one-key answer to "which index do I build for
+    this corpus?"; each variant's own scale contract is documented at
+    its operator. ``pq_opq`` is ``pq``'s pipeline and training sample on
+    OPQ-rotated vectors, so the two rows differ by the rotation alone.
+    The ivf and pq rows share one id-ordered training sample collected
+    once per call (sq8 collects the same rows for itself). Exact top-k is the ground truth, so this is
+    self-validating (no oracle — the comparison IS against the
+    in-engine exact path)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from lakeside_spark.operators.similarity import (
@@ -828,7 +834,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # train the shared state SYNCHRONOUSLY, once per call, so every
     # builder below is independent and the pool runs all seven jobs truly
     # concurrently: the id-ordered training sample (fed to the snapped
-    # ivf quantizer and the pq codebooks) and the ivf coarse quantizer
+    # ivf quantizer and both pq rows' codebooks) and the ivf coarse quantizer
     # that ivf and ivf_ma share. Chaining ivf_ma behind ivf (the r11
     # shape) put ~2s of index build on the critical path to protect a
     # 0.5s driver-side k-means (r13 profile: ivf+ivf_ma serial 3.6s was
@@ -844,10 +850,9 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SPANN-style boundary replication: x2 index, same probe fan-out
         "ivf_ma": lambda: _ivf(emb, qs, k=5, n_assign=2, centroids9=cents9),
         "pq": lambda: _pq(emb, qs, k=5, train_mat=mat),
-        # the OPQ pre-rotation variant, reported side-by-side so the
-        # rotation's (non-)benefit on this corpus is a measured row, not
-        # a docstring claim (isotropic panels: ±0.05; anisotropic: wins)
-        "pq_opq": lambda: _pq(emb, qs, k=5, rotation="opq"),
+        # the same PQ pipeline on OPQ-rotated vectors, trained on the
+        # same sample: the row's distance from "pq" is the rotation alone
+        "pq_opq": lambda: _pq(emb, qs, k=5, rotation="opq", train_mat=mat),
         "sq8": lambda: _sq8(emb, qs, k=5),
     }
 
@@ -895,10 +900,11 @@ def ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-exact since round 8: the quantizer is MIN/MAX over unit
     vectors and encode/dequantize/score are pure arithmetic, so the
     DuckDB twin replays the whole pipeline. Validity condition: the
-    train sample (limit 10000) covers the corpus at every test SF, so
-    the learned bounds ARE the global per-dim bounds the SQL computes —
-    at a larger corpus the quantizer becomes sample-dependent again and
-    the key reverts to its recall contract."""
+    id-ordered train sample (the first 10000 vec_ids) covers the corpus
+    at every test SF, so the learned bounds ARE the global per-dim
+    bounds the SQL computes — at a larger corpus the quantizer is a
+    function of that fixed sample (not of partition order) but no longer
+    the global bounds, and the key reverts to its recall contract."""
     from lakeside_spark.operators.similarity import ann_sq8 as _sq8
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -965,21 +965,163 @@ def test_ann_self_only_corpus_yields_no_pairs(spark, sf_dir):
 
 
 def test_ann_pq_recall_and_determinism(spark, sf_dir):
+    """Both rotations run the one snapped PQ pipeline: deterministic
+    (strided codebook init, no RNG), recall above the floor, k rows per
+    query."""
+    from collections import Counter
+
     from lakeside_spark.operators.similarity import ann_pq, cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    r1 = sorted(tuple(r) for r in ann_pq(emb, q, k=5, m_subs=16, n_codes=64).collect())
-    r2 = sorted(tuple(r) for r in ann_pq(emb, q, k=5, m_subs=16, n_codes=64).collect())
-    assert r1 == r2, "PQ must be deterministic (seeded codebooks)"
     exact = {(r["q_id"], r["n_id"]) for r in cosine_topk(emb, q, k=5).collect()}
-    got = {(a, b) for a, b, _, _ in r1}
-    assert len(got & exact) / len(exact) >= 0.4, "PQ recall collapsed"
-    # every query returns exactly k ranked rows
-    from collections import Counter
+    for rotation in ("none", "opq"):
 
-    per_q = Counter(a for a, _, _, _ in r1)
-    assert all(v == 5 for v in per_q.values())
+        def run():
+            out = ann_pq(emb, q, k=5, m_subs=16, n_codes=64, rotation=rotation)
+            return sorted(tuple(r) for r in out.collect())
+
+        r1, r2 = run(), run()
+        assert r1 == r2, f"PQ ({rotation}) must be deterministic"
+        got = {(a, b) for a, b, _, _ in r1}
+        assert len(got & exact) / len(exact) >= 0.4, f"PQ ({rotation}) recall collapsed"
+        per_q = Counter(a for a, _, _, _ in r1)
+        assert all(v == 5 for v in per_q.values()), rotation
+
+
+def test_pq_train_snapped_matches_loop_reference(sf_dir):
+    """The snapped PQ trainer's exact-int64 distance expansion and
+    vectorised centroid sums give the codebooks of the direct
+    squared-difference and per-cell loop: same integers, same argmin,
+    same float division."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from lakeside_spark.operators.pq_replay import _snap6i, pq_train_snapped, unit6
+
+    def reference(u6, m_subs, n_codes, iters):
+        n, d = u6.shape
+        sub, k = d // m_subs, min(n_codes, n)
+        stride = max(n // k, 1)
+        books = np.empty((m_subs, k, sub), dtype=np.int64)
+        for j in range(m_subs):
+            x = u6[:, j * sub : (j + 1) * sub]
+            cents = x[[c * stride for c in range(k)]].copy()
+            for _ in range(iters):
+                d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+                best = d2.argmin(axis=1)
+                for c in range(k):
+                    members = x[best == c]
+                    if len(members):
+                        v = members.sum(axis=0, dtype=np.int64).astype(np.float64)
+                        cents[c] = _snap6i(v / 1e6 / float(len(members)))
+            books[j] = cents
+        return books
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet").sort_by("vec_id")
+    u6 = unit6(np.array(t.column("embedding").to_pylist(), dtype=np.float64))
+    # repeated rows make duplicate initial centroids, whose cells stay
+    # empty (ties go to the lowest code) and keep their centroid
+    cases = ((u6, 16, 64), (u6, 8, 32), (u6[:3], 8, 32), (u6[:1], 16, 64),
+             (np.repeat(u6[:2], 3, axis=0), 8, 32))
+    for i, (x, m_subs, n_codes) in enumerate(cases):
+        assert np.array_equal(
+            pq_train_snapped(x, m_subs, n_codes, iters=5), reference(x, m_subs, n_codes, 5)
+        ), i
+
+
+def test_ann_pq_rejects_unknown_rotation(spark, sf_dir):
+    from lakeside_spark.operators.similarity import ann_pq
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="'none' or 'opq'"):
+        ann_pq(emb, emb.filter(F.col("vec_id") < 5), rotation="pca")
+
+
+def test_moment_pass9_matches_numpy_reference(spark, sf_dir):
+    """The linear probe's moments (the covariance pass over [x, 1, y])
+    equal a plain-numpy sum of the same 1e-9-snapped products, element
+    for element: the probe's oracle hash rounds to 6 digits and would
+    not see one unit of drift in one moment."""
+    import numpy as np
+
+    from lakeside_spark.operators.kmeans_replay import _snap9i
+    from lakeside_spark.operators.similarity import _moment_pass9
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = emb.filter(F.col("label").isNotNull()).select("embedding", "label").collect()
+    x = np.hstack(
+        [
+            np.array([r["embedding"] for r in rows], dtype=np.float64),
+            np.ones((len(rows), 1)),
+        ]
+    )
+    y = np.array([r["label"] for r in rows], dtype=np.float64)
+    da = x.shape[1]
+    xty = np.zeros(da, dtype=np.int64)
+    xtx = np.zeros((da, da), dtype=np.int64)
+    for lo in range(0, len(x), 256):
+        xb, yb = x[lo : lo + 256], y[lo : lo + 256]
+        xty += _snap9i(xb * yb[:, None]).sum(axis=0)
+        xtx += _snap9i(xb[:, :, None] * xb[:, None, :]).sum(axis=0)
+    n, sy9, yy9, xty9, xtx9 = _moment_pass9(emb, "embedding", "label")
+    assert n == len(rows)
+    assert sy9 == int(_snap9i(y).sum())
+    assert yy9 == int(_snap9i(y * y).sum())
+    assert xty9 == xty.tolist()
+    assert xtx9 == xtx.ravel().tolist()
+
+
+def _ann_edge_call(name, corpus, queries):
+    from lakeside_spark.operators import similarity as sim
+
+    if name == "ann_pq_opq":
+        return sim.ann_pq(corpus, queries, k=5, rotation="opq")
+    return getattr(sim, name)(corpus, queries, k=5)
+
+
+SIMILARITY_EDGE_CASES = [
+    (name, case)
+    for name in ("ann_pq", "ann_pq_opq", "ann_sq8", "ann_lsh")
+    for case in ("empty_corpus", "single_row_corpus", "empty_queries")
+] + [("embedding_linear_probe", "all_labels_null")]
+
+
+@pytest.mark.parametrize("name,case", SIMILARITY_EDGE_CASES)
+def test_similarity_edge_inputs(spark, sf_dir, name, case):
+    """Each operator returns rows or its documented error on edge
+    inputs: the ANN operators on an empty corpus, a one-row corpus and
+    an empty query panel (OPQ cannot rotate from one training vector:
+    _opq_rotation's ValueError), the linear probe with no label set."""
+    from lakeside_spark.operators.similarity import embedding_linear_probe
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    if name == "embedding_linear_probe":
+        out = embedding_linear_probe(emb.withColumn("label", F.lit(None).cast("int")))
+        assert out.columns == ["vec_id", "label", "pred", "resid", "r2"]
+        assert out.collect() == []
+        return
+    corpus = {
+        "empty_corpus": emb.filter("vec_id < 0"),
+        "single_row_corpus": emb.filter("vec_id = 7"),
+        "empty_queries": emb,
+    }[case]
+    queries = emb.filter("vec_id < 0" if case == "empty_queries" else "vec_id < 3")
+    if name == "ann_pq_opq" and case == "single_row_corpus":
+        with pytest.raises(ValueError, match=">=2 training vectors"):
+            _ann_edge_call(name, corpus, queries)
+        return
+    out = _ann_edge_call(name, corpus, queries)
+    assert out.columns[:2] == ["q_id", "n_id"] and out.columns[-1] == "rank"
+    rows = out.collect()
+    if case != "single_row_corpus":
+        assert rows == []
+        return
+    # the one vector is every query's only neighbor; LSH finds it only
+    # when it shares a probed bucket with the query
+    assert {(r["n_id"], r["rank"]) for r in rows} <= {(7, 1)}
+    if name != "ann_lsh":
+        assert sorted(r["q_id"] for r in rows) == [0, 1, 2]
 
 
 def test_ann_trained_state_skips_retraining(spark, sf_dir, monkeypatch):
