@@ -27,6 +27,9 @@ containing these terms" need at segment granularity, this scores them.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -238,11 +241,12 @@ def _bm25_scored_matched(
     # back to the fully lazy distributed broadcast semi-join.
     term_filter = n_docs = avgdl = None
     if QTERM_INLINE_LIMIT:
-        from concurrent.futures import ThreadPoolExecutor
-
+        # the pool's jobs carry the caller's job description, local
+        # properties and tags
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(2) as ex:
-            fq = ex.submit(qterms.limit(QTERM_INLINE_LIMIT + 1).collect)
-            fs = ex.submit(stats_df.collect)
+            fq = ex.submit(inherit(qterms.limit(QTERM_INLINE_LIMIT + 1).collect))
+            fs = ex.submit(inherit(stats_df.collect))
             q_rows, stats_rows = fq.result(), fs.result()
         if len(q_rows) <= QTERM_INLINE_LIMIT:
             n_docs = stats_rows[0]["n_docs"]
@@ -387,25 +391,28 @@ def _leg_pools(
     collected pools to retrieval_eval — and to the bench's second timed
     iteration of either key — so neither key's reported time was its own
     cost."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from lakeside_spark.operators.similarity import cosine_topk
 
+    def cs():
+        return cosine_topk(
+            emb.filter(F.col("vec_id") >= query_ids_below),
+            emb.filter(F.col("vec_id") < query_ids_below),
+            k=pool,
+        ).collect()
+
+    def bm():
+        return bm25_topk(
+            docs.filter(F.col("doc_id") >= query_ids_below),
+            docs.filter(F.col("doc_id") < query_ids_below),
+            k=pool,
+        ).collect()
+
     with ThreadPoolExecutor(2) as ex:
-        f_cs = ex.submit(
-            lambda: cosine_topk(
-                emb.filter(F.col("vec_id") >= query_ids_below),
-                emb.filter(F.col("vec_id") < query_ids_below),
-                k=pool,
-            ).collect()
-        )
-        f_bm = ex.submit(
-            lambda: bm25_topk(
-                docs.filter(F.col("doc_id") >= query_ids_below),
-                docs.filter(F.col("doc_id") < query_ids_below),
-                k=pool,
-            ).collect()
-        )
+        # the pool's jobs carry the caller's job description, local
+        # properties and tags
+        inherit = inheritable_thread_target(docs.sparkSession)
+        f_cs = ex.submit(inherit(cs))
+        f_bm = ex.submit(inherit(bm))
         return f_cs.result(), f_bm.result()
 
 

@@ -1,12 +1,18 @@
-"""Document deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash.
+"""Document deduplication operators: exact, n-gram Jaccard and containment,
+MinHash+LSH, SimHash.
 
 Scale design (100 TB):
 - exact: one hash-groupBy on a 16-byte key — the minimal shuffle.
-- jaccard: explode(shingles) self-join blocks only docs sharing a shingle;
-  ultra-frequent shingles create skew, so at scale pair generation goes
-  through MinHash LSH (bounded candidates per band bucket) and exact Jaccard
-  only verifies candidates. Both paths share the verification code.
+- jaccard / containment (and winnow's shared-print count,
+  operators/winnow.py): one shingle-pair counter, _shingle_pair_counts.
+  One exact count of the (doc_id, shingle) rows picks the side: up to
+  GRAM_KERNEL_MAX_NNZ rows the driver collects them for the sparse Gram
+  kernel, which itself declines when the exact product count Σ df² is
+  over GRAM_KERNEL_MAX_PRODUCTS; otherwise one xxhash64-keyed shingle
+  self-join counts the pairs. Ultra-frequent shingles make that join
+  quadratic, so at scale pair generation goes through MinHash LSH
+  (bounded candidates per band bucket) and the same counter only
+  verifies candidates.
 - minhash: signatures are per-doc map work (no shuffle); the only shuffle is
   the band-bucket join. Bands are computed as one array column and exploded,
   so a doc moves bands-times, not signature-length-times.
@@ -59,21 +65,20 @@ MINHASH_AB = [
     (33_614, 95_070_637),
 ]
 
-#: Collect gate for the sparse Gram pair kernel (_gram_pair_counts): the
-#: maximum (doc_id, shingle) row count the driver will pull before the
-#: kernel path is even considered. ONE constant shared by every gate site
-#: (jaccard auto-probe, containment exact path, winnow pair stage) so a
-#: retune cannot leave the sites disagreeing (r12 ADVICE).
+#: The one gate of _shingle_pair_counts: up to this many (doc_id, shingle)
+#: rows the driver collects them for the sparse Gram kernel; above it the
+#: shingle self-join runs. Every doc yields at least one shingle, so this
+#: also bounds the doc count. Gate constants in this module are read at
+#: call time, so a test forces either side by patching the module attribute.
 GRAM_KERNEL_MAX_NNZ = 4 * 1024 * 1024
 
-#: Doc-count half of the jaccard kernel gate (the nnz half is
-#: GRAM_KERNEL_MAX_NNZ). Gate constants in this module are read at call
-#: time, so a test forces either side by patching the module attribute.
-JACCARD_KERNEL_MAX_DOCS = 50_000
+#: The kernel declines (and the self-join runs) when the exact product
+#: count Σ_shingle df² is over this: a hot shingle row-block numpy must
+#: not absorb.
+GRAM_KERNEL_MAX_PRODUCTS = 256 * 1024 * 1024
 
-#: ngram_containment_pairs runs the exact pair join up to this many docs
-#: and lossless prefix filtering above it.
-CONTAINMENT_EXACT_MAX_DOCS = 50_000
+#: Kernel products per task: bounds each task's arrays to tens of MB.
+GRAM_KERNEL_PRODUCTS_PER_TASK = 2 * 1024 * 1024
 
 #: connected_components answers with one collect + union-find up to this
 #: many edges and with distributed star-contraction rounds above it.
@@ -127,12 +132,7 @@ def _shingled_rows(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataF
 
 
 def _gram_pair_counts(
-    sh: DataFrame,
-    threshold: float,
-    products_cap: int = 256 * 1024 * 1024,
-    measure: str = "jaccard",
-    max_df: int | None = None,
-    products_per_task: int = 2 * 1024 * 1024,
+    sh: DataFrame, threshold: float, measure: str, max_df: int | None = None
 ) -> DataFrame | None:
     """Exact all-pairs shingle intersections via a row-block-parallel
     SPARSE Gram: per doc-block, a vectorized merge-join on the shingle
@@ -149,26 +149,22 @@ def _gram_pair_counts(
     only int arrays move, never strings) and broadcast grouped by
     shingle run; every task walks ITS doc block's entries, np.repeat-
     expands each against its full shingle run, counts pairs with one
-    np.unique, applies the jaccard threshold in-task, and only
+    np.unique, applies the measure's threshold in-task, and only
     qualifying pairs leave — no pair shuffle at all.
 
     Work and memory are bounded by the TRUE product count: Σf² is
     computed exactly driver-side before broadcasting, and if it exceeds
-    ``products_cap`` the function returns **None** and the caller falls
-    back to the distributed explode-join (a pathological hot shingle —
-    f ≈ corpus — is exactly the case row-block numpy must not absorb).
-    This stays the small/medium-corpus exact path (docs/nnz gates in
-    ngram_jaccard_pairs); the real 100 TB path is MinHash LSH.
-    ``measure`` picks the in-task threshold filter — "jaccard"
-    (|A∩B|/|A∪B|), "containment" (|A∩B|/min(|A|,|B|)), or "count"
-    (|A∩B| ≥ threshold, the winnow shared-fingerprint rule) — all exact
-    integer counts through the identical expression their SQL oracles
-    use. ``max_df`` (count measure only) drops whole shingle runs with
-    document frequency above the cut BEFORE the products bound — the
-    boilerplate guard the winnow join applies distributed, done here on
-    the driver's run-length array for free.
-    Output: (id_a, id_b, n_common, n_a, n_b); final measure math is
-    re-done by the caller with the same expression (bit-identical).
+    ``GRAM_KERNEL_MAX_PRODUCTS`` the function returns **None** and
+    _shingle_pair_counts falls back to the distributed self-join (a
+    pathological hot shingle — f ≈ corpus — is exactly the case
+    row-block numpy must not absorb). This stays the small/medium-corpus
+    exact path (the nnz gate in _shingle_pair_counts); the real 100 TB
+    path is MinHash LSH. ``measure`` picks the in-task threshold filter
+    (see _measure) — all exact integer counts through the identical
+    expression their SQL oracles use. ``max_df`` drops whole shingle
+    runs with document frequency above the cut BEFORE the products
+    bound, on the driver's run-length array.
+    Output: (id_a, id_b, n_common, n_a, n_b).
     """
     spark = sh.sparkSession
     schema = "id_a bigint, id_b bigint, n_common bigint, n_a bigint, n_b bigint"
@@ -190,7 +186,6 @@ def _gram_pair_counts(
     run_starts = np.flatnonzero(run_head)
     run_lens = np.diff(np.append(run_starts, len(s_sorted)))
     if max_df is not None:
-        assert measure == "count", "max_df composes with the count measure"
         keep_runs = run_lens <= max_df
         entry_keep = np.repeat(keep_runs, run_lens)
         s_sorted = s_sorted[entry_keep]
@@ -202,14 +197,15 @@ def _gram_pair_counts(
         )
         run_lens = np.diff(np.append(run_starts, len(s_sorted)))
     products = int((run_lens.astype(np.int64) ** 2).sum())
-    if products > products_cap:
+    if products > GRAM_KERNEL_MAX_PRODUCTS:
         return None
     start_of = np.repeat(run_starts, run_lens)
     len_of = np.repeat(run_lens, run_lens).astype(np.int64)
     sizes = np.bincount(d_codes, minlength=n).astype(np.int64)
     par = spark.sparkContext.defaultParallelism
-    # ~2M products per task bounds per-task arrays to tens of MB
-    n_tasks = int(max(1, min(par, products // products_per_task + 1, n)))
+    n_tasks = int(
+        max(1, min(par, products // GRAM_KERNEL_PRODUCTS_PER_TASK + 1, n))
+    )
     # block boundaries by cumulative per-doc PRODUCT MASS (Σ run_len of
     # the doc's entries), not equal doc counts (r12 ADVICE): with equal
     # doc ranges one skewed block — e.g. a doc holding most entries of
@@ -284,12 +280,61 @@ def _gram_pair_counts(
     return blocks.mapInPandas(kernel, schema=schema)
 
 
-def _jaccard_from_counts(counts: DataFrame, threshold: float) -> DataFrame:
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        counts.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+def _measure(measure: str) -> Column:
+    """A pair's score over (n_common, n_a, n_b): "jaccard" |A∩B|/|A∪B|,
+    "containment" |A∩B|/min(|A|,|B|), or "count" |A∩B| (the winnow
+    shared-print rule). The kernel computes the same float64 (or integer)
+    expression in-task, so both sides keep the same pairs."""
+    n, na, nb = F.col("n_common"), F.col("n_a"), F.col("n_b")
+    if measure == "jaccard":
+        return n / (na + nb - n)
+    if measure == "containment":
+        return n / F.least(na, nb)
+    return n
+
+
+def _shingle_pair_counts(
+    ex: DataFrame, threshold: float, measure: str, max_df: int | None = None
+) -> DataFrame:
+    """Doc pairs over (doc_id, shingle) rows whose ``measure`` (see
+    _measure) is ≥ ``threshold``: (id_a, id_b, n_common, n_a, n_b) with
+    id_a < id_b — (id_a, id_b, n_common) for "count", which reads no
+    sizes. ``max_df`` drops shingles held by more than that many docs
+    before pairing; sizes still count them.
+
+    One exact count of the rows is the only probe. Up to
+    GRAM_KERNEL_MAX_NNZ rows the sparse Gram kernel (_gram_pair_counts)
+    runs, unless it declines on Σ df²; otherwise the shingle self-join
+    does, keyed on a 64-bit hash of the shingle: narrower shuffle rows,
+    cheaper key compares, and the same ~n_distinct²/2^65 collision odds
+    as the kernel, which intersects on the same hash."""
+    cols = ["id_a", "id_b", "n_common"] + ([] if measure == "count" else ["n_a", "n_b"])
+    if ex.count() <= GRAM_KERNEL_MAX_NNZ:
+        counts = _gram_pair_counts(ex, threshold, measure, max_df)
+        if counts is not None:
+            return counts.select(*cols)
+    h = ex.select("doc_id", F.xxhash64("shingle").alias("h"))
+    kept = h
+    if max_df is not None:
+        doc_freq = h.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        kept = h.join(doc_freq.filter(F.col("df") <= max_df).select("h"), "h")
+    a, b = kept.alias("a"), kept.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    if measure != "count":
+        sizes = h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
+        sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
+        pairs = pairs.join(sa, "id_a").join(sb, "id_b")
+    return pairs.filter(_measure(measure) >= threshold).select(*cols)
+
+
+def _jaccard_from_counts(counts: DataFrame) -> DataFrame:
+    return counts.select(
+        "id_a", "id_b", F.round(_measure("jaccard"), 6).alias("jaccard")
     )
 
 
@@ -302,69 +347,16 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs (id_a < id_b, jaccard ≥ threshold).
 
-    Kernel side: row-block-parallel sparse Gram (see _gram_pair_counts)
-    — the in-task numpy merge-join whose work is the true product count
-    Σ_shingle f², gated by what must be collected and broadcast
-    (n_docs ≤ JACCARD_KERNEL_MAX_DOCS, shingle rows ≤
-    GRAM_KERNEL_MAX_NNZ) and self-capped on Σf² with a join fallback.
-    Join side: explode → join on shingle → count — distributed, the
-    path for anything over the kernel's collect gate. One small agg over
-    the held shingle rows probes (n_docs, nnz) and picks. Neither is
-    the 100 TB answer — that's minhash_lsh_pairs, which bounds
-    candidates before verifying. The shingle rows are held for the
-    call; the pair-sized result is checkpointed.
+    Pairs come from _shingle_pair_counts: the sparse Gram kernel up to
+    GRAM_KERNEL_MAX_NNZ shingle rows, the distributed shingle self-join
+    above. Neither is the 100 TB answer — that's minhash_lsh_pairs,
+    which bounds candidates before verifying. The shingle rows are held
+    for the call; the pair-sized result is checkpointed.
     """
     with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
-        return M.checkpointed(_jaccard_pairs_from_shingles(ex, threshold))
-
-
-def _jaccard_pairs_from_shingles(ex: DataFrame, threshold: float) -> DataFrame:
-    """Exact jaccard pairs from pre-computed (doc_id, shingle) rows — the
-    size probe + kernel/join split shared by ngram_jaccard_pairs and
-    the MinHash-LSH verification stage (which already owns shingle rows
-    from the signature pass and must not re-shingle).
-
-    The auto gate bounds what the kernel COLLECTS (docs and nnz — the
-    (doc, shingle) row count, i.e. the broadcast size); the kernel
-    itself then bounds the WORK (exact Σf² product count, computed
-    driver-side on the collected codes) and declines — returns None —
-    past its cap, falling back to the distributed explode-join. The r5
-    dense gate bounded n_docs·n_dict cells instead, which kept the
-    kernel off every real-vocabulary corpus regardless of how sparse it
-    was."""
-    n_docs, nnz = ex.agg(
-        F.approx_count_distinct("doc_id"), F.count(F.lit(1))
-    ).first()
-    if n_docs <= JACCARD_KERNEL_MAX_DOCS and nnz <= GRAM_KERNEL_MAX_NNZ:
-        counts = _gram_pair_counts(ex, threshold)
-        if counts is not None:
-            return _jaccard_from_counts(counts, threshold)
-        # Σf² over the kernel's products cap (a hot-shingle corpus):
-        # fall through to the distributed explode-join below
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # join on a 64-bit hash of the shingle, not the string: narrower shuffle
-    # rows and cheaper key compares; intersection counts are unchanged
-    # (collision odds ~n_distinct²/2^65 — immaterial at any corpus size that
-    # can run this exact path)
-    ex = ex.select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    a, b = ex.alias("a"), ex.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        return M.checkpointed(
+            _jaccard_from_counts(_shingle_pair_counts(ex, threshold, "jaccard"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 def minhash_signatures(
@@ -461,9 +453,10 @@ def minhash_lsh_pairs(
             # verify ONLY the candidate pairs (this bounded verification is
             # the whole point of LSH at scale — never the all-pairs join).
             # The candidate doc set grows with the corpus, so verification
-            # goes through ngram_jaccard_pairs' size gate: small
-            # candidate sets take the dense Gram kernel, large ones the
-            # distributed explode-join — never an unconditional single task.
+            # goes through _shingle_pair_counts' nnz gate: candidate shingle
+            # rows within GRAM_KERNEL_MAX_NNZ take the sparse Gram kernel,
+            # more take the distributed self-join — never an unconditional
+            # single task.
             cand_ids = (
                 candidates.select(F.col("id_a").alias("__cand_id"))
                 .union(candidates.select(F.col("id_b").alias("__cand_id")))
@@ -475,7 +468,9 @@ def minhash_lsh_pairs(
                 F.broadcast(cand_ids), F.col("doc_id") == F.col("__cand_id"), "leftsemi"
             )
             with M.held(cand_sh) as cand_sh:
-                exact = _jaccard_pairs_from_shingles(cand_sh, threshold)
+                exact = _jaccard_from_counts(
+                    _shingle_pair_counts(cand_sh, threshold, "jaccard")
+                )
                 return M.checkpointed(
                     exact.join(candidates, ["id_a", "id_b"], "leftsemi")
                 )
@@ -1003,79 +998,6 @@ def simhash_best_match(
     )
 
 
-
-
-def _containment_pairs_from_shingles(
-    ex: DataFrame, threshold: float, candidates: DataFrame | None = None
-) -> DataFrame:
-    """Containment pairs from (doc_id, shingle) rows. With ``candidates``
-    (an (id_a, id_b) frame), the shingle pair join runs ONLY over
-    candidate docs and the output is semi-joined back to the candidate
-    pairs — the bounded verify stage of the scale path.
-
-    The exact (no-candidates) path routes through the sparse Gram kernel
-    when the shingle rows fit its collect gate (the r12
-    _gram_pair_counts upgrade — same counts, containment filter), with
-    the explode-join below as the distributed/hot-shingle fallback."""
-    if candidates is None:
-        nnz = ex.count()
-        if nnz <= GRAM_KERNEL_MAX_NNZ:
-            counts = _gram_pair_counts(ex, threshold, measure="containment")
-            if counts is not None:
-                cont = F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
-                return (
-                    counts.filter(cont >= threshold)
-                    .select(
-                        "id_a",
-                        "id_b",
-                        "n_common",
-                        F.round(cont, 6).alias("containment"),
-                    )
-                )
-    if candidates is not None:
-        cand_ids = (
-            candidates.select(F.col("id_a").alias("__cand_id"))
-            .union(candidates.select(F.col("id_b").alias("__cand_id")))
-            .distinct()
-        )
-        ex = ex.join(
-            F.broadcast(cand_ids), F.col("doc_id") == F.col("__cand_id"), "leftsemi"
-        )
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    # join on the 64-bit shingle hash, not the string (r13, the jaccard
-    # fallback's rule): narrower shuffle rows and cheaper key compares,
-    # and BOTH strategies (kernel and join) now share the same accepted
-    # ~n²/2^65 collision tolerance — previously the kernel intersected on
-    # xxhash64 while this fallback joined raw strings, an asymmetry a
-    # collision could have exposed as a strategy-dependent count
-    ex = ex.select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    if candidates is not None:
-        inter = inter.join(candidates, ["id_a", "id_b"], "leftsemi")
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("_sa"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("_sb"))
-    cont = F.col("n_common") / F.least(F.col("_sa"), F.col("_sb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(cont >= threshold)
-        .select(
-            "id_a", "id_b", "n_common", F.round(cont, 6).alias("containment")
-        )
-    )
-
-
 def ngram_containment_pairs(
     docs: DataFrame,
     threshold: float,
@@ -1092,64 +1014,22 @@ def ngram_containment_pairs(
     misses (Broder 1997 distinguishes resemblance from containment for
     exactly this case).
 
-    Exact side: the full shingle-keyed pair join — exact, but its
-    cost is bounded only by true containment-pair volume, which on a
-    boilerplate-heavy corpus is quadratic in the duplicate mass.
-    Prefix side: frequency-ordered PREFIX FILTERING (the lossless
-    set-similarity-join candidate scheme of Chaudhuri/Ganti/Kaushik,
-    ICDE 2006, and Bayardo et al., WWW 2007). For a true pair with
-    sizes sa ≤ sb, the overlap is ≥ ⌈t·sa⌉, so at most ⌊(1-t)·sa⌋ of
-    the SMALLER doc's shingles fall outside it — its ⌊(1-t)·sa⌋+1
-    globally-rarest shingles must include a shared one. Candidates =
-    (doc prefix shingles) ⋈ (all shingles of other docs): recall is
-    EXACTLY 1 at ANY size ratio — a paragraph inside a book is caught
-    through the paragraph's own short prefix, the case one-row-band
-    MinHash candidates structurally under-recall (P ≈ 1-(1-ρ)^k → ~15%
-    at ρ=0.01). Cost is candidate-bounded: prefixes are rarest-first,
-    so high-df boilerplate shingles almost never enter a prefix and the
-    join volume is Σ_s df_prefix(s)·df(s), collapsing toward true-pair
-    volume. Candidates then feed the same bounded exact verify.
-    One agg over the held shingle rows probes the corpus size and takes
-    the prefix side above ``CONTAINMENT_EXACT_MAX_DOCS``.
-
-    Shingle rows are held for the call and the pair-sized result is
-    checkpointed (the ngram_jaccard_pairs idiom). The candidate frame is
-    not held: both of its consumers sit in one final plan, where Catalyst
-    reuses the candidate exchange, and recomputation starts from the
-    held shingles anyway.
+    Exact at any size ratio: pairs come from _shingle_pair_counts (the
+    sparse Gram kernel up to GRAM_KERNEL_MAX_NNZ shingle rows, the
+    shingle self-join above), whose cost is Σ df² — quadratic in the
+    duplicate mass on a boilerplate-heavy corpus. A frequency-ordered
+    prefix filter (Chaudhuri/Ganti/Kaushik, ICDE 2006) was measured
+    slower than this exact path on 1× and 10× sf0.1 replicas (4 cores),
+    so there is no second path. Shingle rows are held for the call and
+    the pair-sized result is checkpointed.
     """
     with M.held(_shingled_rows(docs, text_col, id_col, n)) as ex:
-        return M.checkpointed(_containment_pairs_gated(ex, threshold))
-
-
-def _containment_pairs_gated(ex: DataFrame, threshold: float) -> DataFrame:
-    """ngram_containment_pairs' lazy plan over (doc_id, shingle) rows."""
-    n_docs = ex.agg(F.approx_count_distinct("doc_id")).first()[0]
-    if n_docs <= CONTAINMENT_EXACT_MAX_DOCS:
-        return _containment_pairs_from_shingles(ex, threshold)
-    df_counts = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w_rank = Window.partitionBy("doc_id").orderBy("__df", "shingle")
-    w_doc = Window.partitionBy("doc_id")
-    ranked = (
-        ex.join(df_counts, "shingle")
-        .withColumn("__rn", F.row_number().over(w_rank))
-        .withColumn("__sz", F.count(F.lit(1)).over(w_doc))
-    )
-    prefix = ranked.filter(
-        F.col("__rn")
-        <= F.floor(F.lit(1.0 - threshold) * F.col("__sz")).cast("long") + 1
-    ).select("doc_id", "shingle")
-    p, f = prefix.alias("p"), ex.alias("f")
-    candidates = (
-        p.join(
-            f,
-            (F.col("p.shingle") == F.col("f.shingle"))
-            & (F.col("p.doc_id") != F.col("f.doc_id")),
+        counts = _shingle_pair_counts(ex, threshold, "containment")
+        return M.checkpointed(
+            counts.select(
+                "id_a",
+                "id_b",
+                "n_common",
+                F.round(_measure("containment"), 6).alias("containment"),
+            )
         )
-        .select(
-            F.least("p.doc_id", "f.doc_id").alias("id_a"),
-            F.greatest("p.doc_id", "f.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    return _containment_pairs_from_shingles(ex, threshold, candidates=candidates)

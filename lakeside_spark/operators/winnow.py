@@ -17,12 +17,13 @@ w-window over the hash stream and select the MINIMUM of each window
 the document's fingerprint set is the distinct selected hashes.
 
 Scale shape: fingerprinting is a map-only Arrow kernel (routed through
-the under-parallel repartition gate); the overlap join keys on the
-fingerprint hash with a ``max_df`` guard dropping fingerprints shared by
-more than ``max_df`` documents — ubiquitous boilerplate prints carry no
-pair information and would otherwise fan out quadratically (the same
-hot-key reasoning as the banded-LSH probes); the pair aggregation is
-bounded by true shared-print volume.
+the under-parallel repartition gate); pairs come from dedup's one
+shingle-pair counter (sparse Gram kernel or fingerprint-hash self-join)
+with a ``max_df`` guard dropping fingerprints shared by more than
+``max_df`` documents — ubiquitous boilerplate prints carry no pair
+information and would otherwise fan out quadratically (the same hot-key
+reasoning as the banded-LSH probes); the pair count is bounded by true
+shared-print volume.
 
 Cross-engine determinism: the k-gram hash is the repo's standard
 md5-hex-prefix integer (functions/text.md5_long recipe), so the DuckDB
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakeside_spark import materialize as M
+from lakeside_spark.operators.dedup import _shingle_pair_counts
 from lakeside_spark.operators.repetition import _normalize_py
 
 
@@ -115,56 +117,19 @@ def winnow_overlap(
     are dropped before pairing (boilerplate guard; a print shared by
     thousands of docs identifies a template, not a pair — the df-cut is
     the published practice in MOSS-scale deployments)."""
-    # checkpoint the thin (doc_id, fp) frame: the df-cut aggregation and
-    # BOTH sides of the fp self-join reference it, and without it each
-    # consumer re-runs the Python winnow kernel from the text scan (4
-    # MapInPandas nodes in the r12 before-plan). Fingerprint density is
+    # checkpoint the thin (doc_id, fp) frame: the pair counter's size probe
+    # and its kernel or self-join each read it, and without it each re-runs
+    # the Python winnow kernel from the text scan. Fingerprint density is
     # ~2/(w+1) of the gram stream, so the blocks are a small fraction of
     # corpus text.
     fps = M.checkpointed(winnow_fingerprints(docs, k, w, text_col, id_col))
-    # r12: the df-cut + fp self-join + pair groupBy collapse into the
-    # shared sparse Gram kernel (operators/dedup._gram_pair_counts,
-    # measure="count": |shared prints| ≥ min_shared, max_df applied to
-    # the driver's run-length array) whenever the fingerprint rows fit
-    # its collect gate — fingerprint density is ~2/(w+1) of the gram
-    # stream, so they usually do. Identical pair multiset (pinned by
-    # the kernel-vs-join pytest); the distributed join below remains
-    # the over-gate / kernel-declined fallback.
-    from lakeside_spark.operators.dedup import (
-        GRAM_KERNEL_MAX_NNZ,
-        _gram_pair_counts,
+    # fingerprints are the shingles of dedup's one pair counter: the
+    # sparse Gram kernel up to GRAM_KERNEL_MAX_NNZ print rows, the
+    # distributed self-join above; max_df cuts hot prints on either side
+    counts = _shingle_pair_counts(
+        fps.select("doc_id", F.col("fp").alias("shingle")),
+        float(min_shared),
+        "count",
+        max_df=max_df,
     )
-
-    nnz = fps.count()
-    if nnz <= GRAM_KERNEL_MAX_NNZ:
-        counts = _gram_pair_counts(
-            fps.select("doc_id", F.col("fp").alias("shingle")),
-            float(min_shared),
-            measure="count",
-            max_df=max_df,
-        )
-        if counts is not None:
-            return counts.select(
-                "id_a", "id_b", F.col("n_common").alias("n_shared")
-            )
-    df_ok = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("fp")
-    )
-    pruned = fps.join(df_ok, "fp")
-    a, b = pruned.alias("a"), pruned.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    return pairs
+    return counts.withColumnRenamed("n_common", "n_shared")

@@ -819,6 +819,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-engine exact path)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from lakeside_spark.operators.similarity import (
         _train_mat_sample,
         ann_ivf as _ivf,
@@ -860,9 +862,12 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = builders[name]()
         return df.columns, df.collect()
 
+    # the builders' jobs carry the caller's job description, local
+    # properties and tags
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=7) as pool:
-        f_exact = pool.submit(lambda: cosine_topk(emb, qs, k=5).collect())
-        futs = {m: pool.submit(run, m) for m in builders}
+        f_exact = pool.submit(inherit(lambda: cosine_topk(emb, qs, k=5).collect()))
+        futs = {m: pool.submit(inherit(run), m) for m in builders}
         exact = {(r["q_id"], r["n_id"]): r["cos"] for r in f_exact.result()}
         results = {m: f.result() for m, f in futs.items()}
 

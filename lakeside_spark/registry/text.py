@@ -2087,9 +2087,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A∩B| / min(|A|,|B|) ≥ 0.5 pairs (operators/dedup.
     ngram_containment_pairs — Broder 1997's containment, the measure
     that catches a short doc quoted wholesale inside a long one where
-    Jaccard stays tiny). Shared shingle pass + one shingle-keyed join;
-    the 100 TB path feeds lossless prefix-filter candidates (recall 1 at
-    any size ratio) into the same bounded verify."""
+    Jaccard stays tiny). One shingle pass, then dedup's shingle-pair
+    counter (sparse Gram kernel or shingle self-join): exact at any size
+    ratio."""
     from lakeside_spark.operators.dedup import ngram_containment_pairs
 
     return ngram_containment_pairs(

@@ -10,7 +10,7 @@ import random
 
 import pytest
 
-from lakeside_spark.operators import bm25, chunking, dedup, graph, similarity, textstats
+from lakeside_spark.operators import bm25, chunking, dedup, graph, similarity, textstats, winnow
 from lakeside_spark.sources.tables import load_table
 
 
@@ -42,6 +42,12 @@ def _containment(spark, sf_dir):
         (r["id_a"], r["id_b"]): r["containment"]
         for r in dedup.ngram_containment_pairs(df, threshold=0.5).collect()
     }
+
+
+def _winnow(spark, sf_dir):
+    # a low max_df so the hot-print cut drops prints on both sides
+    docs = _docs(spark, sf_dir)
+    return lambda: _rows(winnow.winnow_overlap(docs, max_df=8))
 
 
 def _bm25(spark, sf_dir):
@@ -137,13 +143,6 @@ def _equal(scale, small):
     assert scale and scale == small
 
 
-def _containment_subset(scale, small):
-    # prefix candidates ⊆ exact, the planted contained-doc pair kept
-    # with the identical containment value
-    assert set(scale) <= set(small)
-    assert (1, 2) in scale and scale[(1, 2)] == small[(1, 2)]
-
-
 def _lsh_subset(scale, small):
     # exact verify: LSH candidates never add a pair or move a value
     assert small and set(scale) <= set(small)
@@ -159,10 +158,11 @@ def _knn_top1_bounded(scale, small):
 
 # name: (module, gate constant, extra constants held fixed, input, relation)
 GATES = {
-    "jaccard_kernel_join": (dedup, "JACCARD_KERNEL_MAX_DOCS", {}, _jaccard, _equal),
-    "containment_exact_prefix": (
-        dedup, "CONTAINMENT_EXACT_MAX_DOCS", {}, _containment, _containment_subset,
+    "pair_counter_jaccard": (dedup, "GRAM_KERNEL_MAX_NNZ", {}, _jaccard, _equal),
+    "pair_counter_containment": (
+        dedup, "GRAM_KERNEL_MAX_NNZ", {}, _containment, _equal,
     ),
+    "pair_counter_winnow_count": (dedup, "GRAM_KERNEL_MAX_NNZ", {}, _winnow, _equal),
     "bm25_full_matched": (bm25, "SCALE_THRESHOLD", {}, _bm25, _equal),
     "bm25_qterm_inline": (
         bm25, "QTERM_INLINE_LIMIT", {"SCALE_THRESHOLD": 0}, _bm25, _equal,

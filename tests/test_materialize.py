@@ -19,6 +19,7 @@ PLAN_FORCING_PARAMS = {
     "strategy", "salt_partitions", "order_by_step", "fake",
     "kernel_max_docs", "kernel_max_nnz", "exact_max_docs", "scale_threshold",
     "qterm_inline_limit", "broadcast_limit", "local_max_edges", "driver_gate",
+    "products_cap", "products_per_task", "candidates",
 }
 
 

@@ -1124,6 +1124,49 @@ def test_similarity_edge_inputs(spark, sf_dir, name, case):
         assert sorted(r["q_id"] for r in rows) == [0, 1, 2]
 
 
+#: the pair operators on dedup's one shingle-pair counter, with the output
+#: schema each documents
+_PAIR = [("id_a", "bigint"), ("id_b", "bigint")]
+PAIR_EDGE_OPS = {
+    "ngram_jaccard_pairs": _PAIR + [("jaccard", "double")],
+    "ngram_containment_pairs": _PAIR + [("n_common", "bigint"), ("containment", "double")],
+    "winnow_overlap": _PAIR + [("n_shared", "bigint")],
+    "minhash_lsh_pairs": _PAIR + [("jaccard", "double")],
+}
+#: corpora with no pair: a null or empty text shares no shingle with a
+#: real one (two of them would pair on the one empty shingle)
+PAIR_EDGE_CORPORA = {
+    "empty_corpus": [],
+    "one_document": [(1, "a single document with a handful of words")],
+    "null_text": [(1, None), (2, "a real document with a handful of words")],
+    "empty_text": [(1, ""), (2, "a real document with a handful of words")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(PAIR_EDGE_CORPORA))
+@pytest.mark.parametrize("name", sorted(PAIR_EDGE_OPS))
+def test_pair_operators_edge_inputs(spark, gate_sides, name, case):
+    """Both sides of GRAM_KERNEL_MAX_NNZ (self-join, then kernel) return
+    no rows with the documented schema on corpora that hold no pair."""
+    from lakeside_spark.operators import dedup, winnow
+
+    op = {
+        "ngram_jaccard_pairs": lambda d: dedup.ngram_jaccard_pairs(d, 0.1),
+        "ngram_containment_pairs": lambda d: dedup.ngram_containment_pairs(d, 0.1),
+        "winnow_overlap": lambda d: winnow.winnow_overlap(d, min_shared=1),
+        "minhash_lsh_pairs": lambda d: dedup.minhash_lsh_pairs(d, 0.1),
+    }[name]
+    docs = spark.createDataFrame(PAIR_EDGE_CORPORA[case], "doc_id long, text string")
+
+    def run():
+        out = op(docs)
+        assert out.dtypes == PAIR_EDGE_OPS[name]
+        return out.collect()
+
+    join, kernel = gate_sides(dedup, "GRAM_KERNEL_MAX_NNZ", run)
+    assert join == kernel == []
+
+
 def test_ann_trained_state_skips_retraining(spark, sf_dir, monkeypatch):
     """ann_pq/ann_ivf given their trained state (the id-ordered training
     sample, the coarse quantizer) must not train again and must answer
@@ -2740,32 +2783,6 @@ def test_containment_catches_doc_inside_doc(spark):
     assert jac.get((1, 2), 0.0) < 0.12  # below the dedup threshold
 
 
-def test_containment_prefix_gate(spark, monkeypatch):
-    """Above the corpus-size gate the prefix-filter candidates feed a
-    bounded verify: the verify's pair join is candidate-bounded (LeftSemi
-    in the plan) — no full shingle-pair join at scale. Its rows stay
-    inside the exact side's: tests/test_gate_parity.py."""
-    from lakeside_spark import materialize
-    from lakeside_spark.operators import dedup
-
-    filler = " ".join(f"word{i} item{i} thing{i}" for i in range(40))
-    short = " ".join(f"quote{i} body{i}" for i in range(25))
-    rows = [
-        (1, short),
-        (2, filler + " " + short),
-        (3, "unrelated stuff entirely different tokens throughout here"),
-        (4, " ".join(f"decoy{i} filler{i}" for i in range(30))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(dedup, "CONTAINMENT_EXACT_MAX_DOCS", 0)
-    # an identity checkpoint keeps the lazy plan inspectable (the
-    # checkpoint would truncate it to a checkpoint scan)
-    monkeypatch.setattr(materialize, "checkpointed", lambda df: df)
-    gated = dedup.ngram_containment_pairs(df, threshold=0.5)
-    plan = gated._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, plan
-
-
 def test_ts_autocorrelation_matches_pandas(spark, sf_dir):
     """ACF rows must equal pandas' Series.autocorr semantics (Pearson of
     grid-aligned lag pairs) recomputed from the same hourly series —
@@ -2900,12 +2917,12 @@ def test_text_msttr_hand_computed(spark, sf_dir):
     assert len(got) == expected
 
 
-def test_containment_prefix_recalls_extreme_size_ratio(spark, gate_sides):
+def test_containment_recalls_extreme_size_ratio_on_both_sides(spark, gate_sides):
     """The headline case the one-row-band MinHash candidates missed: a
     paragraph contained in a ~100x larger document (size ratio ρ≈0.01,
-    where band-collision recall was ~15%). Prefix filtering is lossless
-    at ANY ratio — the planted pair must surface with the containment
-    value the exact path computes."""
+    where band-collision recall was ~15%). Both sides of the pair
+    counter are exact at ANY ratio — the planted pair must surface, and
+    the self-join must return the kernel's pairs and values."""
     from lakeside_spark.operators import dedup
 
     para = " ".join(f"needle{i} token{i}" for i in range(15))  # ~28 shingles
@@ -2917,16 +2934,16 @@ def test_containment_prefix_recalls_extreme_size_ratio(spark, gate_sides):
         (4, " ".join(f"decoy{i} filler{i}" for i in range(400))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pref, exact = gate_sides(
+    join, kernel = gate_sides(
         dedup,
-        "CONTAINMENT_EXACT_MAX_DOCS",
+        "GRAM_KERNEL_MAX_NNZ",
         lambda: {
             (r["id_a"], r["id_b"]): r["containment"]
             for r in dedup.ngram_containment_pairs(df, 0.8).collect()
         },
     )
-    assert (1, 2) in exact and exact[(1, 2)] >= 0.9  # the planted pair
-    assert pref == exact  # lossless: identical pairs AND values
+    assert (1, 2) in kernel and kernel[(1, 2)] >= 0.9  # the planted pair
+    assert join == kernel  # identical pairs AND values
 
 
 def test_jacobi_eigh_snapped_accuracy_and_schedule():
@@ -3115,7 +3132,7 @@ def test_avi_frames_extracts_mjpeg_chunks():
     assert frames[0][1] == payload
 
 
-def test_jaccard_sparse_kernel_parity_and_products_cap(spark, gate_sides):
+def test_jaccard_sparse_kernel_parity_and_products_cap(spark, gate_sides, monkeypatch):
     """r12 sparse Gram kernel: (a) kernel and join sides agree exactly on
     pairs AND jaccard values, (b) the kernel computes exact Σf²
     driver-side and declines (returns None → the kernel side falls back
@@ -3142,57 +3159,43 @@ def test_jaccard_sparse_kernel_parity_and_products_cap(spark, gate_sides):
             for r in ngram_jaccard_pairs(df, 0.1).collect()
         }
 
-    j, k = gate_sides(_D, "JACCARD_KERNEL_MAX_DOCS", jac)
+    j, k = gate_sides(_D, "GRAM_KERNEL_MAX_NNZ", jac)
     assert k == j and (1, 5) in k and k[(1, 5)] == 1.0
     # hot-shingle corpus: every doc shares one shingle -> Σf² = n² blows
     # a tiny cap; the kernel must decline rather than absorb the blow-up
     ex = _shingled_rows(df, "text", "doc_id", 3)
-    assert _gram_pair_counts(ex, 0.1, products_cap=1) is None
-    # and when the kernel declines, the kernel side of the public path
-    # falls back to the join and still answers identically
-    orig = _D._gram_pair_counts
-    _D._gram_pair_counts = lambda ex, t, products_cap=0: orig(
-        ex, t, products_cap=1
-    )
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(_D, "GRAM_KERNEL_MAX_PRODUCTS", 1)
+        assert _gram_pair_counts(ex, 0.1, "jaccard") is None
+        # and when the kernel declines, the kernel side of the public path
+        # falls back to the join and still answers identically
         via_fallback = jac()
-    finally:
-        _D._gram_pair_counts = orig
     assert via_fallback == j
     # containment measure: kernel path (exact, small corpus) vs the
     # forced explode-join produce identical (n_common, containment)
     from lakeside_spark.operators.dedup import ngram_containment_pairs
+    from lakeside_spark.operators.winnow import winnow_overlap
 
-    ck = {
-        (r["id_a"], r["id_b"]): (r["n_common"], r["containment"])
-        for r in ngram_containment_pairs(df, 0.5).collect()
-    }
-    _D._gram_pair_counts = lambda *a, **kw: None
-    try:
-        cj = {
+    def cont():
+        return {
             (r["id_a"], r["id_b"]): (r["n_common"], r["containment"])
             for r in ngram_containment_pairs(df, 0.5).collect()
         }
-    finally:
-        _D._gram_pair_counts = orig
-    assert ck == cj and (1, 5) in ck
+
     # count measure + max_df: the winnow routing — shared-print counts
     # with hot prints dropped on the driver's run-length array must
     # equal the distributed df-cut join
-    from lakeside_spark.operators.winnow import winnow_overlap
-
-    wk = {
-        (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in winnow_overlap(df, max_df=2).collect()
-    }
-    _D._gram_pair_counts = lambda *a, **kw: None
-    try:
-        wj = {
+    def winnow():
+        return {
             (r["id_a"], r["id_b"]): r["n_shared"]
             for r in winnow_overlap(df, max_df=2).collect()
         }
-    finally:
-        _D._gram_pair_counts = orig
+
+    ck, wk = cont(), winnow()
+    with monkeypatch.context() as mp:
+        mp.setattr(_D, "_gram_pair_counts", lambda *a, **kw: None)
+        cj, wj = cont(), winnow()
+    assert ck == cj and (1, 5) in ck
     assert wk == wj
 
 
@@ -3202,7 +3205,8 @@ def test_jaccard_sparse_kernel_mass_balanced_blocks(spark, monkeypatch):
     carry all the hot-shingle mass and the high-id docs are near-unique
     must still produce join-identical pairs — the boundary math (prefix
     sum + searchsorted, empty-block skip) is what this pins, with
-    products_per_task shrunk so the boundaries really cut many blocks."""
+    GRAM_KERNEL_PRODUCTS_PER_TASK shrunk so the boundaries really cut
+    many blocks."""
     from lakeside_spark.operators import dedup
     from lakeside_spark.operators.dedup import (
         _gram_pair_counts,
@@ -3218,13 +3222,14 @@ def test_jaccard_sparse_kernel_mass_balanced_blocks(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     ex = _shingled_rows(df, "text", "doc_id", 3)
-    counts = _gram_pair_counts(ex, 0.2, products_per_task=20)
+    monkeypatch.setattr(dedup, "GRAM_KERNEL_PRODUCTS_PER_TASK", 20)
+    counts = _gram_pair_counts(ex, 0.2, "jaccard")
     assert counts is not None
     k = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in _jaccard_from_counts(counts, 0.2).collect()
+        for r in _jaccard_from_counts(counts).collect()
     }
-    monkeypatch.setattr(dedup, "JACCARD_KERNEL_MAX_DOCS", 0)  # the join side
+    monkeypatch.setattr(dedup, "GRAM_KERNEL_MAX_NNZ", 0)  # the join side
     j = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(df, 0.2).collect()

@@ -83,7 +83,7 @@ def test_jaccard_join_path_no_cartesian(spark, sf_dir, monkeypatch):
     # inspect the real join plan (the checkpoint would truncate the
     # lineage to a checkpoint scan)
     _lazy_checkpoints(monkeypatch)
-    monkeypatch.setattr(dedup, "JACCARD_KERNEL_MAX_DOCS", 0)
+    monkeypatch.setattr(dedup, "GRAM_KERNEL_MAX_NNZ", 0)
     df = dedup.ngram_jaccard_pairs(docs, 0.12)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -52,3 +52,13 @@ def test_profile_scale_replica_grows_output_linearly(spark, sf_dir, tmp_path):
     assert line["duckdb_s"] > 0 and line["ratio"] > 0
     assert (tmp_path / "x1" / "_BUILD_DONE").exists()
 
+
+
+def test_profile_counts_pool_thread_executions(spark, sf_dir):
+    # ann_recall_report runs its exact top-k and six index builders on 7
+    # pool threads. Their jobs carry the key's job description, so each
+    # adds at least one execution to the calling thread's two (the
+    # training sample and the noop write).
+    line = tool.profile(spark, "ann_recall_report", sf_dir, runs=1)
+    _check_split(line)
+    assert line["executions"] >= 2 + 7
