@@ -22,7 +22,9 @@ Every emission rule mirrors one Spark compilation rule:
 - extract/compute staging per engine._apply_extract/_apply_compute
   (regexp_matches gate, per-referenced-label IS NOT NULL guards);
 - chart aggregation per engine._run_chart (step snapping, implicit
-  ``name`` key, rate↔count transform, value normalization).
+  ``name`` key), its target per engine._chart_target (value
+  normalization, rollup column, field NOT NULL guard) and its measure per
+  engine._chart_measure (aggregation, rate↔count transform).
 """
 
 from __future__ import annotations
@@ -212,15 +214,15 @@ def chart_sql(
 ) -> str:
     """Chart aggregation (reference getChartSql, BaseExpr.scala:181-236):
     step-snapped, keyed on the implicit ``name`` plus group_bys, value
-    ROUND(…, 6) like registry._rounded. The twin of engine._run_chart
-    (exact-aggregation mode)."""
+    ROUND(…, 6) like registry._rounded. The twin of engine._run_chart,
+    _chart_target and _chart_measure (exact-aggregation mode)."""
     chart = expr.chart
     conjuncts, subs, names = _staging(expr, existing)
     conjuncts.append(clause_to_sql(expr.filter, names, subs))
 
     if expr.dataset == S.DATASET_METRICS and chart.rollup:
         # metrics arrive pre-rolled-up; the chart re-aggregates the
-        # ingest-side rollup column (engine._run_chart metrics branch,
+        # ingest-side rollup column (engine._chart_target metrics branch,
         # reference BaseExpr.scala:376-395)
         target = f"rollup_{chart.rollup}"
     elif chart.field_name and chart.field_name != S.VALUE:
@@ -234,9 +236,9 @@ def chart_sql(
         target = S.VALUE
     if chart.field_name and chart.field_name != S.VALUE:
         # the engine filters the field NOT NULL unconditionally — even
-        # when a rollup target overrides it (engine._run_chart applies
-        # the filter after target selection); keeping the conjunct
-        # outside the target branch mirrors that exactly
+        # when a rollup target overrides it (engine._chart_target returns
+        # the guard with every target); keeping the conjunct outside the
+        # target branch mirrors that exactly
         conjuncts.append(
             f"({subs.get(chart.field_name, chart.field_name)} IS NOT NULL)"
         )
@@ -249,7 +251,7 @@ def chart_sql(
         value = f"{agg.upper()}({target})"
     elif agg == S.CARDINALITY_ESTIMATE_AGGREGATION:
         # ces consumes the group_bys as the ':'-joined distinct key and
-        # emits one global estimate per step (engine._run_chart /
+        # emits one global estimate per step (engine._chart_measure /
         # reference HLLAggregator); exact mode = COUNT(DISTINCT …).
         # concat_ws skips NULL arguments identically in both engines.
         if group_bys:
@@ -269,7 +271,7 @@ def chart_sql(
     else:
         raise ValueError(f"Invalid aggregation {agg}")
     value = f"CAST({value} AS DOUBLE)"
-    # rate↔count transform (engine._chart_transform / reference
+    # rate↔count transform (engine._chart_measure / reference
     # getTransformerFunc ASTUtils.scala:190-219): metrics normalize the
     # stored metric_type to the requested chart_type; raw datasets only
     # divide counts down to a rate

@@ -28,6 +28,8 @@ that need order sort within their own window specs).
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -42,31 +44,9 @@ from lakeside_spark.ast.model import BaseExpr
 _PERCENTILE_RE = re.compile(r"^p(\d{1,2}(\.\d+)?)$")
 
 
-def _agg_column(
-    aggregation: str, target: Column, group_bys: tuple[str, ...], approx: bool
-) -> Column:
-    """Aggregation name → Column (reference: getChartSql + getFromSketch,
-    BaseExpr.scala:47-95: min/max/sum/count/avg, pNN via DDSketch, ces via
-    HLL). Approx mode = the sketch path, exact mode = the oracle path."""
-    m = _PERCENTILE_RE.match(aggregation)
-    if m:
-        q = float(m.group(1)) / 100.0
-        return (
-            F.percentile_approx(target, q, 10_000) if approx else F.percentile(target, q)
-        )
-    if aggregation == S.CARDINALITY_ESTIMATE_AGGREGATION:
-        # reference HLLAggregator keys on the ':'-joined groupBys values
-        key = (
-            F.concat_ws(":", *[F.col(g) for g in group_bys])
-            if group_bys
-            else target.cast("string")
-        )
-        return F.approx_count_distinct(key) if approx else F.countDistinct(key)
-    if aggregation == S.COUNT:
-        return F.count(target)
-    if aggregation in (S.SUM, S.AVG, S.MIN, S.MAX):
-        return getattr(F, aggregation if aggregation != S.AVG else "avg")(target)
-    raise ValueError(f"Invalid aggregation {aggregation}")
+def _snap(ts: Column, step_ms: int) -> Column:
+    """``ts`` floored to its ``step_ms`` grain."""
+    return ts - ts % F.lit(step_ms)
 
 
 class QueryEngine:
@@ -119,32 +99,55 @@ class QueryEngine:
         df = self._apply_compute(self._apply_extract(df, expr), expr)
         return df.filter(filter_to_column(expr.filter, existing))
 
-    def _chart_value_column(self, expr: BaseExpr) -> Column:
-        """Aggregation target (reference: getChartSql calc, BaseExpr.scala:
-        350-369): VALUE by default; else try_cast(field as double) with
-        duration ns→ms (/1e6) and datasize →KB (/1000) normalization."""
+    def _chart_target(self, expr: BaseExpr) -> tuple[Column, Column | None]:
+        """The column a chart aggregates, and the NOT NULL guard its rows
+        pass (reference: getChartSql calc, BaseExpr.scala:350-395). Metrics
+        with a rollup arrive pre-rolled-up per ingest step (rollup_sum,
+        rollup_avg, ...) and re-aggregate that column at the query step;
+        else VALUE by default, or try_cast(field as double) with duration
+        ns→ms (/1e6) and datasize →KB (/1000). A named field keeps only the
+        rows where it is NOT NULL, under a rollup target too."""
         chart = expr.chart
-        if not chart.field_name or chart.field_name == S.VALUE:
-            return F.col(S.VALUE)
-        base = F.col(chart.field_name).cast("double")
+        field = chart.field_name if chart.field_name != S.VALUE else None
+        guard = F.col(field).isNotNull() if field else None
+        if expr.dataset == S.DATASET_METRICS and chart.rollup:
+            return F.col(f"rollup_{chart.rollup}"), guard
+        if not field:
+            return F.col(S.VALUE), guard
+        target = F.col(field).cast("double")
         if chart.field_type == S.DURATION_TYPE:
-            base = base / 1_000_000.0
+            target = target / 1_000_000.0
         elif chart.field_type == S.DATA_SIZE_TYPE:
-            base = base / 1000.0
-        return base
+            target = target / 1000.0
+        return target, guard
 
-    def _chart_transform(self, expr: BaseExpr, value: Column, step_ms: int) -> Column:
-        """rate↔count normalization (reference: getTransformerFunc,
-        ASTUtils.scala:190-219)."""
-        step_seconds = step_ms / 1000.0
-        ct, mt = expr.chart.chart_type, expr.metric_type
-        if expr.dataset == S.DATASET_METRICS:
-            if ct == "count" and mt == "rate":
-                return value * step_seconds
-            if ct == "rate" and mt == "count":
-                return value / step_seconds
-            return value
-        if ct == "rate":
+    def _chart_measure(
+        self, expr: BaseExpr, aggregation: str, target: Column, group_bys: tuple, step_ms: int
+    ) -> Column:
+        """One chart measure: ``aggregation`` of ``target`` (reference:
+        getChartSql + getFromSketch, BaseExpr.scala:47-95: min/max/sum/
+        count/avg, pNN via DDSketch, ces via HLL; approx mode = the sketch
+        path, exact mode = the oracle path) as a double, then the
+        rate↔count normalization (getTransformerFunc, ASTUtils.scala:
+        190-219): raw datasets only divide counts down to a rate."""
+        m = _PERCENTILE_RE.match(aggregation)
+        if m:
+            q = float(m.group(1)) / 100.0
+            agg = F.percentile_approx(target, q, 10_000) if self.approx else F.percentile(target, q)
+        elif aggregation == S.CARDINALITY_ESTIMATE_AGGREGATION:
+            # reference HLLAggregator keys on the ':'-joined groupBys values
+            key = F.concat_ws(":", *map(F.col, group_bys)) if group_bys else target.cast("string")
+            agg = F.approx_count_distinct(key) if self.approx else F.countDistinct(key)
+        elif aggregation in (S.COUNT, S.SUM, S.AVG, S.MIN, S.MAX):
+            agg = getattr(F, aggregation)(target)
+        else:
+            raise ValueError(f"Invalid aggregation {aggregation}")
+        value, step_seconds = agg.cast("double"), step_ms / 1000.0
+        ct = expr.chart.chart_type
+        mt = expr.metric_type if expr.dataset == S.DATASET_METRICS else "count"
+        if ct == "count" and mt == "rate":
+            return value * step_seconds
+        if ct == "rate" and mt == "count":
             return value / step_seconds
         return value
 
@@ -166,8 +169,7 @@ class QueryEngine:
         """The chart groupBy keys (step_ts, name, *group_bys), with the
         group-bys cut to the columns ``df`` has."""
         group_bys = tuple(g for g in group_bys if g in df.columns)
-        step_col = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(step_ms)
-        keys = [step_col.alias(S.STEP_TS)]
+        keys = [_snap(F.col(S.TIMESTAMP), step_ms).alias(S.STEP_TS)]
         if S.NAME in df.columns:
             keys.append(F.col(S.NAME))
         return group_bys, keys + [F.col(g) for g in group_bys]
@@ -189,30 +191,32 @@ class QueryEngine:
         df = self._prepared(expr, self._windowed(df, start_ts, end_ts))
 
         if expr.chart:
-            return self._run_chart(expr, df, step_ms)
+            return self._run_chart(expr, df, step_ms, {S.VALUE: expr.chart.aggregation})
         return self._run_exemplars(expr, df)
 
-    def _run_chart(self, expr: BaseExpr, df: DataFrame, step_ms: int) -> DataFrame:
-        chart = expr.chart
-        group_bys, keys = self._chart_keys(df, chart.group_bys, step_ms)
-        if expr.dataset == S.DATASET_METRICS and chart.rollup:
-            # metrics arrive pre-rolled-up per ingest step (rollup_sum,
-            # rollup_avg, ...); the chart re-aggregates the rollup column at
-            # the query step (BaseExpr.scala:376-395)
-            target = F.col(f"rollup_{chart.rollup}")
-        else:
-            target = self._chart_value_column(expr)
-        if chart.field_name and chart.field_name != S.VALUE:
-            df = df.filter(F.col(chart.field_name).isNotNull())
-
-        agg = _agg_column(chart.aggregation, target, group_bys, self.approx)
-        value = self._chart_transform(expr, agg.cast("double"), step_ms)
-        if chart.aggregation == S.CARDINALITY_ESTIMATE_AGGREGATION:
+    def _run_chart(
+        self, expr: BaseExpr, df: DataFrame, step_ms: int, measures: dict[str, str]
+    ) -> DataFrame:
+        """The chart of ``expr`` as one groupBy with a ``{column:
+        aggregation}`` measure per column (reference: getChartSql,
+        BaseExpr.scala:181-236)."""
+        target, guard = self._chart_target(expr)
+        if guard is not None:
+            df = df.filter(guard)
+        group_bys, keys = self._chart_keys(df, expr.chart.group_bys, step_ms)
+        ces = [a == S.CARDINALITY_ESTIMATE_AGGREGATION for a in measures.values()]
+        if all(ces):
             # ces consumes the groupBys as the distinct key; the estimate is
             # global per step (reference: HLLAggregator emits empty tags,
             # PushDownAggregatorStage keys only on moduloTs)
             keys = keys[:1]
-        return df.groupBy(*keys).agg(value.alias(S.VALUE))
+        elif any(ces):
+            raise ValueError("ces is one estimate per step: it cannot share "
+                             "a groupBy with aggregations keyed on the chart group")
+        return df.groupBy(*keys).agg(
+            *[self._chart_measure(expr, a, target, group_bys, step_ms).alias(c)
+              for c, a in measures.items()]
+        )
 
     def multi_agg(
         self,
@@ -221,38 +225,29 @@ class QueryEngine:
         aggregations: tuple[str, ...] = (S.SUM, S.AVG, S.MIN, S.MAX),
         step_ms: int | None = None,
     ) -> DataFrame:
-        """All requested simple aggregations of one chart expr in a SINGLE
-        groupBy (one scan, one shuffle). The reference evaluates one
-        aggregation per request (getChartSql); batching N panels over the
-        same metric here collapses N scans into one — at 100 TB that is the
-        difference between one pass over the fact table and four. Columns
-        come out as ``{agg}_value``; partial aggregation computes every
-        measure map-side in the same buffer."""
-        step_ms = step_ms or self.step_ms
-        df = self._prepared(expr, df)
-        group_bys, keys = self._chart_keys(df, expr.chart.group_bys, step_ms)
-        target = self._chart_value_column(expr)
-        measures = [
-            self._chart_transform(
-                expr, _agg_column(a, target, group_bys, self.approx).cast("double"), step_ms
-            ).alias(f"{a}_value")
-            for a in aggregations
-        ]
-        return df.groupBy(*keys).agg(*measures)
+        """All requested aggregations of one chart expr in a SINGLE groupBy
+        (one scan, one shuffle); each ``{agg}_value`` column equals
+        :meth:`run` of the expr with that aggregation. The reference
+        evaluates one aggregation per request (getChartSql); batching N
+        panels over the same metric here collapses N scans into one — at
+        100 TB that is the difference between one pass over the fact table
+        and four. Partial aggregation computes every measure map-side in
+        the same buffer. ``ces`` charts alone: mixed with keyed
+        aggregations it raises ValueError."""
+        measures = {f"{a}_value": a for a in aggregations}
+        return self._run_chart(expr, self._prepared(expr, df), step_ms or self.step_ms, measures)
 
     _FUSABLE_AGGS = (S.COUNT, S.SUM, S.MIN, S.MAX, S.AVG)
 
     def _fusable(self, e: BaseExpr) -> bool:
         """A branch can join a single-scan fused aggregation when it is a
-        plain simple-agg chart over the raw value column (no extractor/
-        compute/rollup/sketch agg)."""
+        simple-agg chart with no extractor or compute (their columns exist
+        only in the branch's own plan)."""
         return (
             e.chart is not None
             and e.chart.aggregation in self._FUSABLE_AGGS
             and e.extractor is None
             and e.compute is None
-            and e.chart.rollup is None
-            and (e.chart.field_name in (None, S.VALUE))
         )
 
     def _run_chart_fused(
@@ -266,39 +261,27 @@ class QueryEngine:
         The unfused path scans the fact table once per labeled expression
         (the reference evaluates each BaseExpr's SQL separately) — at
         100 TB a two-branch formula is two full passes. Here each branch
-        becomes a conditional aggregate ``agg(when(branch_filter, value))``
-        over the OR of all branch filters, plus a matched-row count whose
-        ``> 0`` filter reconstructs exactly the per-branch group
-        presence/absence the separate runs would produce (a step where
-        only the other branch matched must stay missing, not zero)."""
+        becomes a conditional measure ``measure(when(cond, target))`` over
+        the OR of all branch conditions (its filter and its field's NOT
+        NULL guard), plus a matched-row count whose ``> 0`` filter
+        reconstructs exactly the per-branch group presence/absence the
+        separate runs would produce (a step where only the other branch
+        matched must stay missing, not zero)."""
         cols = set(df.columns)
-        conds = {
-            label: filter_to_column(e.filter, cols) for label, e in branches
-        }
-        combined = conds[branches[0][0]]
-        for label, _ in branches[1:]:
-            combined = combined | conds[label]
-        df = df.filter(combined)
-        _, keys = self._chart_keys(df, branches[0][1].chart.group_bys, step_ms)
-        aggs = []
-        for i, (label, e) in enumerate(branches):
-            target = self._chart_value_column(e)
-            w = F.when(conds[label], target)
-            agg = {
-                S.COUNT: F.count(w),
-                S.SUM: F.sum(w),
-                S.MIN: F.min(w),
-                S.MAX: F.max(w),
-                S.AVG: F.avg(w),
-            }[e.chart.aggregation]
+        group_bys, keys = self._chart_keys(df, branches[0][1].chart.group_bys, step_ms)
+        conds, aggs = [], []
+        for i, (_, e) in enumerate(branches):
+            target, guard = self._chart_target(e)
+            cond = filter_to_column(e.filter, cols)
+            if guard is not None:
+                cond = cond & guard
+            conds.append(cond)
             aggs.append(
-                self._chart_transform(e, agg.cast("double"), step_ms).alias(
-                    f"__v{i}"
-                )
+                self._chart_measure(
+                    e, e.chart.aggregation, F.when(cond, target), group_bys, step_ms
+                ).alias(f"__v{i}")
             )
-            aggs.append(
-                F.count(F.when(conds[label], F.lit(1))).alias(f"__n{i}")
-            )
+            aggs.append(F.count(F.when(cond, F.lit(1))).alias(f"__n{i}"))
         # materialized once on the driver (M.on_driver): every label (and
         # each formula referencing it) consumes this frame, and exchange
         # reuse does not reliably dedupe the subtrees across union branches
@@ -306,7 +289,8 @@ class QueryEngine:
         # frame is post-aggregation (steps × names rows, KBs), so the
         # per-label filter/select folds into the local relation and a
         # label's collect runs no job.
-        agged = M.on_driver(df.groupBy(*keys).agg(*aggs))
+        combined = functools.reduce(operator.or_, conds)
+        agged = M.on_driver(df.filter(combined).groupBy(*keys).agg(*aggs))
         sel_keys = agged.columns[: len(keys)]
         return {
             label: agged.filter(F.col(f"__n{i}") > 0).select(
@@ -402,6 +386,14 @@ class QueryEngine:
                 out[f] = eval_formula(ast, global_series)
         return out
 
+    @staticmethod
+    def _distinct_key(expr: BaseExpr, df: DataFrame) -> Column:
+        """The tuple whose distinct count is a query's cardinality: the
+        chart group-bys ``df`` has, '|'-joined, else the name."""
+        chart_keys = expr.chart.group_bys if expr.chart else ()
+        group_bys = [g for g in chart_keys if g in df.columns]
+        return F.concat_ws("|", *map(F.col, group_bys)) if group_bys else F.col(S.NAME)
+
     def query_cardinality(
         self,
         expr: BaseExpr,
@@ -416,10 +408,24 @@ class QueryEngine:
         map-side exactly like the reference's union, or exact countDistinct
         for the oracle gate). Output: a single (value) row."""
         df = self._prepared(expr, self._windowed(df, start_ts, end_ts))
-        group_bys = tuple(g for g in (expr.chart.group_bys if expr.chart else ()) if g in df.columns)
-        key = F.concat_ws("|", *[F.col(g) for g in group_bys]) if group_bys else F.col(S.NAME)
+        key = self._distinct_key(expr, df)
         agg = F.approx_count_distinct(key) if self.approx else F.countDistinct(key)
         return df.agg(agg.cast("double").alias(S.VALUE))
+
+    @staticmethod
+    def _sketch_rollup(
+        df: DataFrame, keys: list[str], sketch: Column, read, ingest_ms: int, query_ms: int
+    ) -> DataFrame:
+        """Two-grain sketch rollup (reference: TimeGroupedSketchAggregator):
+        one ``sketch`` per ingest step and ``keys`` group, then per query
+        step ``read`` of those sketches merged, not recomputed. Sketch
+        bytes, not raw values, cross the query-time shuffle. Output:
+        (step_ts, *keys, value) ordered by step."""
+        sealed = df.groupBy(_snap(F.col(S.TIMESTAMP), ingest_ms).alias("ingest_ts"), *keys)
+        merged = sealed.agg(sketch.alias("sketch")).groupBy(
+            _snap(F.col("ingest_ts"), query_ms).alias(S.STEP_TS), *keys
+        )
+        return merged.agg(read(F.col("sketch")).cast("double").alias(S.VALUE)).orderBy(S.STEP_TS)
 
     def cardinality_sketch_rollup(
         self,
@@ -437,27 +443,9 @@ class QueryEngine:
         are tiny pre-aggregated state (bytes per series-hour), so the
         query-time shuffle moves sketches, never raw rows."""
         df = self._prepared(expr, df)
-        group_bys = tuple(
-            g for g in (expr.chart.group_bys if expr.chart else ()) if g in df.columns
-        )
-        key = (
-            F.concat_ws("|", *[F.col(g) for g in group_bys])
-            if group_bys
-            else F.col(S.NAME)
-        )
-        ingest_step = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(ingest_step_ms)
-        sealed = df.groupBy(ingest_step.alias("ingest_ts")).agg(
-            F.hll_sketch_agg(key).alias("hll")
-        )
-        query_step = F.col("ingest_ts") - F.col("ingest_ts") % F.lit(query_step_ms)
-        return (
-            sealed.groupBy(query_step.alias(S.STEP_TS))
-            .agg(
-                F.hll_sketch_estimate(F.hll_union_agg("hll"))
-                .cast("double")
-                .alias(S.VALUE)
-            )
-            .orderBy(S.STEP_TS)
+        return self._sketch_rollup(
+            df, [], F.hll_sketch_agg(self._distinct_key(expr, df)),
+            lambda s: F.hll_sketch_estimate(F.hll_union_agg(s)), ingest_step_ms, query_step_ms,
         )
 
     def percentile_sketch_rollup(
@@ -473,25 +461,38 @@ class QueryEngine:
         DDSketches per step; getFromSketch reads the quantile). Spark's
         Datasketches KLL aggregates give the same shape natively:
         kll_sketch_agg at ingest grain, kll_merge_agg at query grain, then
-        one quantile read per step. Sketch bytes, not raw values, cross
-        the query-time shuffle."""
+        one quantile read per step and name."""
         df = self._prepared(expr, df)
-        ingest_step = F.col(S.TIMESTAMP) - F.col(S.TIMESTAMP) % F.lit(ingest_step_ms)
-        keys = [F.col(S.NAME)] if S.NAME in df.columns else []
-        sealed = df.groupBy(ingest_step.alias("ingest_ts"), *keys).agg(
-            F.kll_sketch_agg_double(F.col(S.VALUE).cast("double")).alias("kll")
+
+        def read(sketch: Column) -> Column:
+            # a group whose values are all null has an empty sketch, whose
+            # quantile read raises; like an exact percentile it reads null
+            merged = F.kll_merge_agg_double(sketch)
+            quantile_of = F.kll_sketch_get_quantile_double(merged, F.lit(quantile))
+            return F.when(F.kll_sketch_get_n_double(merged) > 0, quantile_of)
+
+        kll = F.kll_sketch_agg_double(F.col(S.VALUE).cast("double"))
+        keys = [S.NAME] if S.NAME in df.columns else []
+        return self._sketch_rollup(df, keys, kll, read, ingest_step_ms, query_step_ms)
+
+    @staticmethod
+    def _per_column(df: DataFrame, cols: list[str], agg, name: str) -> DataFrame:
+        """One ``agg`` per column of ``cols`` in a single map-side-combinable
+        aggregate over the scan, exploded to (tag_name, ``name``) rows with
+        a positive ``name``."""
+        if not cols:
+            return df.sparkSession.createDataFrame(
+                [], schema=f"tag_name string, {name} bigint"
+            )
+        counts = df.agg(*[agg(c).alias(c) for c in cols])
+        pairs = F.array(
+            *[F.struct(F.lit(c).alias("tag_name"), F.col(c).alias(name)) for c in cols]
         )
-        query_step = F.col("ingest_ts") - F.col("ingest_ts") % F.lit(query_step_ms)
-        merged = sealed.groupBy(query_step.alias(S.STEP_TS), *keys).agg(
-            F.kll_merge_agg_double("kll").alias("kll")
+        return (
+            counts.select(F.explode(pairs).alias("p"))
+            .select("p.tag_name", f"p.{name}")
+            .filter(F.col(name) > 0)
         )
-        return merged.select(
-            S.STEP_TS,
-            *[k.alias(S.NAME) for k in keys],
-            F.kll_sketch_get_quantile_double("kll", F.lit(quantile))
-            .cast("double")
-            .alias(S.VALUE),
-        ).orderBy(S.STEP_TS)
 
     def tag_names(
         self, expr: BaseExpr, df: DataFrame, drop_noisy: bool = False
@@ -510,18 +511,7 @@ class QueryEngine:
             from lakeside_spark.functions.noisytags import is_noisy_tag_name
 
             tags = [t for t in tags if not is_noisy_tag_name(t)]
-        counts = df.agg(*[F.count(t).alias(t) for t in tags])
-        pairs = F.array(
-            *[
-                F.struct(F.lit(t).alias("tag_name"), F.col(t).alias("count"))
-                for t in tags
-            ]
-        )
-        return (
-            counts.select(F.explode(pairs).alias("p"))
-            .select("p.tag_name", "p.count")
-            .filter(F.col("count") > 0)
-        )
+        return self._per_column(df, tags, F.count, "count")
 
     def tag_values(
         self, expr: BaseExpr, df: DataFrame, tag_name: str, drop_noisy: bool = False
@@ -545,19 +535,4 @@ class QueryEngine:
         actually present in the data, with distinct-value counts — one
         map-side-combinable aggregate over the scan."""
         dims = [d for d in scope_dims if d in df.columns]
-        if not dims:
-            return df.sparkSession.createDataFrame(
-                [], schema="tag_name string, n_values bigint"
-            )
-        counts = df.agg(*[F.countDistinct(d).alias(d) for d in dims])
-        pairs = F.array(
-            *[
-                F.struct(F.lit(d).alias("tag_name"), F.col(d).alias("n_values"))
-                for d in dims
-            ]
-        )
-        return (
-            counts.select(F.explode(pairs).alias("p"))
-            .select("p.tag_name", "p.n_values")
-            .filter(F.col("n_values") > 0)
-        )
+        return self._per_column(df, dims, F.countDistinct, "n_values")

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeside_spark.sources.tables import load_table
@@ -632,7 +632,14 @@ def embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _whiten(load_table(spark, sf_dir, "embeddings"))
     return out.select(
         "vec_id", F.posexplode("embedding").alias("dim", "val")
-    ).withColumn("val", F.round("val", 6))
+    ).withColumn("val", _round6_as_duckdb(F.col("val")))
+
+
+def _round6_as_duckdb(val: Column) -> Column:
+    """DuckDB's ROUND(x, 6): std::round(x·1e6)/1e6 in doubles, where Spark's
+    round(x, 6) takes x = -1.0451255 (x·1e6 = -1045125.4999999999) the other
+    way. ``+ 0.0`` clears a negative zero."""
+    return F.round(val * 1e6) / 1e6 + 0.0
 
 
 def embedding_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

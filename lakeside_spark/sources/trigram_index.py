@@ -217,9 +217,9 @@ def clause_to_trigram_query(
                 _value_query(f.k, v, indexed_dims, full_value_dims) for v in f.v
             ),
         )
-    if f.op == S.CONTAINS and f.k in indexed_dims:
-        return _and_trigrams(f.k, f.v[0])
-    if f.op == S.REGEX and f.k in indexed_dims:
+    if f.op in (S.CONTAINS, S.REGEX) and f.k in indexed_dims:
+        # contains compiles to the regex ``.*v.*`` (ast/filters.py), so its
+        # value is a pattern too: "a.c" requires no literal "a.c"
         return _regex_query(f.k, f.v[0])
     # !=, not_in, ranges, contains/regex on unindexed dims: the row filter
     # still needs the column to exist (missing column → FALSE, filters.py)

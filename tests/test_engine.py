@@ -1,5 +1,7 @@
 """Engine correctness against DuckDB on sf0.001 (fast local oracle)."""
 
+import dataclasses
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -310,32 +312,46 @@ def test_run_graph_fused_matches_unfused_exactly(spark):
     """The fused single-scan path must reproduce per-branch group
     presence exactly: a step where only the OTHER branch matched stays
     missing (not zero), and values/aggregations agree with separate
-    run() calls for every fusable aggregation."""
+    run() calls for every fusable aggregation — over the value column, a
+    metrics rollup column and a named field whose nulls drop rows."""
     rows = [
-        (0, "error", 1.0), (0, "error", 3.0),          # step 0: only error
-        (10_000, "ok", 5.0),                           # step 1: only ok
-        (20_000, "error", 2.0), (20_000, "ok", 7.0),   # step 2: both
+        (0, "error", 1.0, 10.0, 4.0), (0, "error", 3.0, 30.0, None),  # step 0: only error
+        (10_000, "ok", 5.0, 50.0, None),                              # step 1: only ok
+        (20_000, "error", 2.0, 20.0, 8.0), (20_000, "ok", 7.0, 70.0, 6.0),  # step 2: both
     ]
     tele = spark.createDataFrame(
-        rows, f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double"
+        rows,
+        f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, "
+        "rollup_sum double, took double",
     )
     eng = QueryEngine(spark, step_ms=10_000)
-    for agg in ("count", "sum", "min", "max", "avg"):
-        exprs = {
-            "a": BaseExpr(
-                filter=Filter(k=S.NAME, v=("error",), op=S.EQ),
-                chart=ChartOptions(aggregation=agg),
-            ),
-            "b": BaseExpr(
-                filter=Filter(k=S.NAME, v=("ok",), op=S.EQ),
-                chart=ChartOptions(aggregation=agg),
-            ),
-        }
-        fused = eng.run_graph(exprs, [], tele)
-        for label, e in exprs.items():
-            assert rows_set(fused[label]) == rows_set(eng.run(e, tele)), (
-                agg, label,
-            )
+    fused_batches = []
+    run_fused = eng._run_chart_fused
+    eng._run_chart_fused = lambda batch, *a: (
+        fused_batches.append({label for label, _ in batch}) or run_fused(batch, *a)
+    )
+    pairs = {
+        "value": (S.DATASET_LOGS, {}),
+        "rollup": (S.DATASET_METRICS, {"rollup": "sum"}),
+        "field": (S.DATASET_LOGS, {"field_name": "took"}),
+    }
+    for kind, (dataset, opts) in pairs.items():
+        for agg in ("count", "sum", "min", "max", "avg"):
+            exprs = {
+                label: BaseExpr(
+                    dataset=dataset,
+                    filter=Filter(k=S.NAME, v=(name,), op=S.EQ),
+                    chart=ChartOptions(aggregation=agg, **opts),
+                )
+                for label, name in (("a", "error"), ("b", "ok"))
+            }
+            fused_batches.clear()
+            fused = eng.run_graph(exprs, [], tele)
+            assert fused_batches == [{"a", "b"}], (kind, agg)
+            for label, e in exprs.items():
+                assert rows_set(fused[label]) == rows_set(eng.run(e, tele)), (
+                    kind, agg, label,
+                )
     # presence check made explicit: branch a has no step-1 row at all
     got_a = rows_set(eng.run_graph(
         {
@@ -352,6 +368,104 @@ def test_run_graph_fused_matches_unfused_exactly(spark):
         tele,
     )["a"])
     assert {r[0] for r in got_a} == {0, 20_000}
+    # the field's NOT NULL guard joins the branch condition: b's only
+    # step-1 row has a null field, so b has no step-1 row either
+    got_b = rows_set(eng.run_graph(
+        {
+            label: BaseExpr(
+                filter=Filter(k=S.NAME, v=(name,), op=S.EQ),
+                chart=ChartOptions(aggregation="count", field_name="took"),
+            )
+            for label, name in (("a", "error"), ("b", "ok"))
+        },
+        [],
+        tele,
+    )["b"])
+    assert got_b == {(20_000, "ok", 1.0)}
+
+
+def _keyed(rows, measure_cols):
+    """{chart key: {measure column: value}} of collected chart rows."""
+    out = {}
+    for r in rows:
+        d = r.asDict()
+        out[tuple(sorted((k, v) for k, v in d.items() if k not in measure_cols))] = {
+            c: d[c] for c in measure_cols
+        }
+    return out
+
+
+def _runs_merged(eng, expr, df, aggs):
+    """run() once per aggregation, merged on the chart keys — multi_agg's
+    definition (the benchmark twin builds it the same way)."""
+    merged = {}
+    for a in aggs:
+        e = dataclasses.replace(expr, chart=dataclasses.replace(expr.chart, aggregation=a))
+        for keys, m in _keyed(eng.run(e, df).collect(), [S.VALUE]).items():
+            merged.setdefault(keys, {})[f"{a}_value"] = m[S.VALUE]
+    return merged
+
+
+_MULTI_AGG_CASES = {
+    # metrics arrive pre-rolled-up: every measure aggregates rollup_sum
+    "metrics_rollup": (
+        [(0, "cpu", 1.0, 10.0, None), (1_000, "cpu", 2.0, 30.0, None)],
+        BaseExpr(
+            dataset=S.DATASET_METRICS,
+            chart=ChartOptions(aggregation="sum", rollup="sum"),
+        ),
+    ),
+    # a group whose field is null everywhere is not charted
+    "field_with_nulls": (
+        [(0, "a", 1.0, None, 5.0), (0, "b", 2.0, None, None)],
+        BaseExpr(chart=ChartOptions(aggregation="sum", field_name="took")),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MULTI_AGG_CASES))
+def test_multi_agg_equals_run_per_aggregation(spark, case):
+    rows, expr = _MULTI_AGG_CASES[case]
+    df = spark.createDataFrame(
+        rows,
+        f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, "
+        "rollup_sum double, took double",
+    )
+    eng = QueryEngine(spark, step_ms=10_000)
+    aggs = ("sum", "avg", "min", "max", "count")
+    got = _keyed(eng.multi_agg(expr, df, aggs).collect(), [f"{a}_value" for a in aggs])
+    assert got == _runs_merged(eng, expr, df, aggs)
+    assert got, case
+
+
+def test_multi_agg_ces_alone_equals_run_and_mixed_raises(spark):
+    df = spark.createDataFrame(
+        [(0, "a", 1.0, "u1"), (1_000, "b", 2.0, "u2")],
+        f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, user_id string",
+    )
+    expr = BaseExpr(chart=ChartOptions(aggregation="ces", group_bys=("user_id",)))
+    eng = QueryEngine(spark, step_ms=10_000)
+    assert _keyed(eng.multi_agg(expr, df, ("ces",)).collect(), ["ces_value"]) == {
+        k: {"ces_value": m[S.VALUE]}
+        for k, m in _keyed(eng.run(expr, df).collect(), [S.VALUE]).items()
+    } == {((S.STEP_TS, 0),): {"ces_value": 2.0}}
+    with pytest.raises(ValueError, match="ces"):
+        eng.multi_agg(expr, df, ("ces", "count"))
+
+
+def test_multi_agg_is_one_scan_and_one_exchange(spark, sf_dir):
+    """Four aggregations of one chart share one scan and one shuffle."""
+    expr = BaseExpr(chart=ChartOptions(group_bys=("user_id",)))
+    plan = (
+        QueryEngine(spark)
+        .multi_agg(expr, load_telemetry(spark, sf_dir), ("sum", "avg", "min", "max"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .splitlines()
+    )
+    assert sum("Scan " in line for line in plan) == 1, plan
+    assert sum("Exchange" in line for line in plan) == 1, plan
 
 
 def _graph_request():
@@ -420,3 +534,86 @@ def test_run_graph_empty_window_keeps_columns(spark, sf_dir):
         assert out[label].schema == lazy.schema, label
     for f in formulae:
         assert out[f].collect() == [] and S.VALUE in out[f].columns, f
+
+
+# ---------------------------------------------------------------------------
+# edge inputs: every entry point on zero rows, one row and all-null columns
+
+_EDGE_SCHEMA = (
+    f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double, "
+    f"{S.MESSAGE} string, user_id string"
+)
+_EDGE_ROWS = {
+    "zero_rows": [],
+    "one_row": [(0, "error", 1.0, "status=500", "u1")],
+    "all_null": [(0, None, None, None, None), (10_000, None, None, None, None)],
+}
+_EVERY_ROW = Filter(k=S.TIMESTAMP, op=S.EXISTS)
+
+
+def _chart(agg, group_bys=("user_id",)):
+    return BaseExpr(filter=_EVERY_ROW, chart=ChartOptions(aggregation=agg, group_bys=group_bys))
+
+
+_CHART = [S.STEP_TS, S.NAME, "user_id", S.VALUE]
+_EDGE_CALLS = {
+    "run_chart": (lambda eng, df: eng.run(_chart("avg"), df), _CHART),
+    "run_exemplar": (
+        lambda eng, df: eng.run(BaseExpr(filter=_EVERY_ROW, limit=5), df),
+        [S.TIMESTAMP, S.VALUE, S.NAME, S.MESSAGE, "user_id"],
+    ),
+    "multi_agg": (
+        lambda eng, df: eng.multi_agg(_chart("sum"), df, ("sum", "p95")),
+        [S.STEP_TS, S.NAME, "user_id", "sum_value", "p95_value"],
+    ),
+    "run_graph_fused": (
+        lambda eng, df: eng.run_graph({"a": _chart("sum"), "b": _chart("count")}, [], df)["b"],
+        _CHART,
+    ),
+    "run_graph_solo": (
+        lambda eng, df: eng.run_graph({"a": _chart("p95")}, [], df)["a"], _CHART,
+    ),
+    "run_graph_formula": (
+        lambda eng, df: eng.run_graph(
+            {"a": _chart("max"), "b": _chart("ces")}, ["a / b"], df
+        )["a / b"],
+        [S.STEP_TS, S.VALUE],
+    ),
+    "query_cardinality": (
+        lambda eng, df: eng.query_cardinality(_chart("count"), df), [S.VALUE],
+    ),
+    "cardinality_sketch_rollup": (
+        lambda eng, df: eng.cardinality_sketch_rollup(_chart("count"), df, 10_000, 20_000),
+        [S.STEP_TS, S.VALUE],
+    ),
+    "percentile_sketch_rollup": (
+        lambda eng, df: eng.percentile_sketch_rollup(_chart("count"), df, 10_000, 20_000),
+        [S.STEP_TS, S.NAME, S.VALUE],
+    ),
+    "tag_names": (
+        lambda eng, df: eng.tag_names(BaseExpr(filter=_EVERY_ROW), df), ["tag_name", "count"],
+    ),
+    "tag_values": (
+        lambda eng, df: eng.tag_values(BaseExpr(filter=_EVERY_ROW), df, "user_id"),
+        ["user_id", "count"],
+    ),
+    "scope_tags": (
+        lambda eng, df: eng.scope_tags(df, ("user_id", "host")), ["tag_name", "n_values"],
+    ),
+}
+
+
+@pytest.mark.parametrize("rows", sorted(_EDGE_ROWS))
+@pytest.mark.parametrize("call", sorted(_EDGE_CALLS))
+def test_entry_points_on_edge_inputs(spark, call, rows):
+    """Every QueryEngine entry point returns its documented columns, and
+    no rows where there is nothing to report, without raising."""
+    build, columns = _EDGE_CALLS[call]
+    df = spark.createDataFrame(_EDGE_ROWS[rows], _EDGE_SCHEMA)
+    out = build(QueryEngine(spark, step_ms=10_000), df)
+    assert out.columns == columns
+    got = out.collect()
+    if rows == "zero_rows" and call != "query_cardinality":
+        assert got == []
+    if call == "query_cardinality":
+        assert len(got) == 1

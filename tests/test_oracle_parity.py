@@ -97,3 +97,26 @@ def test_gate_rejects_dtype_and_sub_hash_drift():
     assert gate_mismatches(base[["x", "k"]].iloc[::-1], base) == []
     assert gate_mismatches(base.astype({"k": "int32"}), base.astype({"k": "int64"}))
     assert gate_mismatches(base.assign(x=[0.5, 2e-8, 2.0]), base)
+
+
+def test_whitening_rounds_ties_like_duckdb(spark):
+    """embedding_whitening's values are integers over 1e9, so some end in
+    …500; rounded to 6 places they must resolve as DuckDB's ROUND does
+    (Spark's own round took -1.045126 and -0.522645 for these two)."""
+    from pyspark.sql import functions as F
+
+    from lakeside_spark.registry.embedding import _round6_as_duckdb
+
+    s9 = [-1045125500, -522644500, -400]
+    got = [
+        r.val
+        for r in spark.createDataFrame([(v,) for v in s9], "s9 long")
+        .select(_round6_as_duckdb(F.col("s9") / 1e9).alias("val"))
+        .collect()
+    ]
+    want = [
+        duckdb.sql(f"SELECT ROUND(CAST({v} AS DOUBLE) / 1e9, 6) + 0.0").fetchone()[0]
+        for v in s9
+    ]
+    assert got == want == [-1.045125, -0.522644, 0.0]
+    assert math.copysign(1.0, got[2]) == 1.0

@@ -177,6 +177,16 @@ def test_tag_column_added_after_build_is_read(spark, small_lake):
     _assert_matches_full_scan(spark, small_lake, Filter(k="host", v=("h1",), op=S.EQ))
 
 
+def test_contains_value_with_regex_metacharacters_is_read(spark, tmp_path):
+    """contains compiles to a regex, so "a.c" matches "xabcx": the index
+    must not require the literal trigrams of "a.c"."""
+    lake = str(tmp_path / "lake")
+    write_segments(_hours(spark, (0,), "xabcx"), lake, dataset="logs")
+    write_segments(_hours(spark, (1,), "hay"), lake, dataset="logs")
+    build_trigram_index(spark, lake, **IDX)
+    _assert_matches_full_scan(spark, lake, Filter(k=S.MESSAGE, v=("a.c",), op=S.CONTAINS))
+
+
 def test_registry_lake_follows_rewritten_events(spark, sf_dir, tmp_path, monkeypatch):
     """The registry's trigram lake is keyed on the events file's version:
     events rewritten in place get a new lake, not the one sealed before."""
