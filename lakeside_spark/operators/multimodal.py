@@ -2,29 +2,42 @@
 
 Media are opaque ``binary`` columns with a typed metadata struct alongside
 (modality, byte_size, format sniffed from magic bytes). Heavy per-item work
-(decode, resize, frame-sample, feature-extract) runs through mapInPandas:
-Arrow-batched, columnar, and scale-out by partition — the pattern a 100 TB
-media pipeline needs (reshuffle by size class first if items are skewed).
+(decode, resize, frame-sample, hash) runs through one row runner,
+``_map_rows``: an Arrow-batched mapInPandas that scales out by partition —
+the pattern a 100 TB media pipeline needs (reshuffle by size class first
+if items are skewed).
 
 The codec step is REAL for the formats pure stdlib can express — PNG and
 BMP pixel decode + PNG re-encode, WAV PCM decode, JPEG/GIF header dims,
-and (r12) AVI video: RIFF chunk walk + uncompressed-DIB frame decode
+and AVI video: RIFF chunk walk + uncompressed-DIB frame decode
 (operators/codecs.py) — so ``decode_features`` / ``resize_media`` /
 ``sample_frames`` / ``video_phash`` do genuine pixel/sample math with no
 external libs. Formats needing entropy decoders we don't have (JPEG
 pixels inside MJPEG) fall back to raw frame bytes + header dims.
+
+Each media type's stages — synthesize, perturb edit, hash — are written
+once on numpy values, and every kernel composes them. The fused
+``synth_*`` kernels hash synthesized pixels directly, which equals the
+synthesize → [perturb →] hash chain because the PNG and AVI/DIB
+roundtrips are lossless for uint8.
+
+Null and undecodable media: a null blob reads as empty bytes, so it takes
+the undecodable path of each kernel — hash and perturb kernels drop the
+row, ``decode_features`` emits its byte-statistics vector, ``resize_media``
+returns empty media, and ``sample_frames`` raises ValueError naming the id.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from wave import Error as wave_error
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from lakeside_spark.operators import codecs
 from lakeside_spark.operators.similarity import _parallelize
@@ -37,6 +50,60 @@ _MAGIC = {
     b"BM": "bmp",
     b"GIF8": "gif",
 }
+#: the perturb kernels (near-duplicate generators) shift the id by this
+PERTURB_ID_OFFSET = 1_000_000
+#: the image edit brightens the top IMAGE_EDIT_ROWS_FRAC of the rows
+IMAGE_EDIT_BRIGHTNESS = 60
+IMAGE_EDIT_ROWS_FRAC = 0.25
+#: the video edit brightens every frame
+VIDEO_EDIT_BRIGHTNESS = 40
+#: synthesized video frames are VIDEO_FRAME_SIZE² RGB
+VIDEO_FRAME_SIZE = 16
+#: a video's pHash votes over every VIDEO_HASH_EVERY_N-th frame, at most
+#: VIDEO_HASH_MAX_FRAMES of them
+VIDEO_HASH_EVERY_N = 2
+VIDEO_HASH_MAX_FRAMES = 4
+#: what a WAV decode raises on bytes that are not a readable WAV
+_WAV_ERRORS = (ValueError, EOFError, wave_error)
+#: pandas dtype of an output column by its SQL type; the rest are objects
+_DTYPES = {"bigint": "int64", "int": "int32"}
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: list[str],
+    schema: dict[str, str],
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """The one mapInPandas of the media kernels: select ``cols``, spread
+    them with ``_parallelize`` and call ``fn(*row)`` per input row. ``fn``
+    yields zero or more output tuples in the order of ``schema``
+    ({column: SQL type}): none drops the row, several fan it out. Binary
+    input columns arrive as ``bytes``, a null one as ``b""``. The output
+    frame is typed from ``schema``, so an empty batch keeps its dtypes."""
+    src = df.select(*cols)
+    blobs = {f.name for f in src.schema if isinstance(f.dataType, BinaryType)}
+    dtypes = [_DTYPES.get(t, object) for t in schema.values()]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            args = [
+                [b"" if v is None else bytes(v) for v in pdf[c]]
+                if c in blobs
+                else pdf[c]
+                for c in cols
+            ]
+            rows = [out for row in zip(*args) for out in fn(*row)]
+            values = list(zip(*rows)) if rows else [()] * len(schema)
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(list(v), dtype=dt)
+                    for name, v, dt in zip(schema, values, dtypes)
+                }
+            )
+
+    ddl = ", ".join(f"{name} {t}" for name, t in schema.items())
+    return _parallelize(src).mapInPandas(batches, ddl)
 
 
 def with_media_metadata(df: DataFrame, binary_col: str = "media") -> DataFrame:
@@ -62,12 +129,13 @@ def synthesize_media(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("media", F.encode(F.col(text_col), "UTF-8"))
 
 
+# ---------------------------------------------------------------------------
+# image stages
+
+
 def _synth_gray(text: str | None, width: int, height: int) -> np.ndarray:
-    """The pixel stage of synthesize_images: md5 stream of the text seeds
-    a (height, width) uint8 gray image. Split out so the fused text→hash
-    kernel (synth_phash64) and the PNG-emitting synthesize_images share
-    one definition — the two must stay byte-identical for the fusion's
-    parity contract."""
+    """(height, width, 1) uint8 gray pixels seeded by the md5 stream of
+    the text."""
     n = width * height
     seed = (text or "").encode()
     stream = bytearray()
@@ -75,7 +143,64 @@ def _synth_gray(text: str | None, width: int, height: int) -> np.ndarray:
     while len(stream) < n:
         stream += hashlib.md5(seed + counter.to_bytes(4, "big")).digest()
         counter += 1
-    return np.frombuffer(bytes(stream[:n]), dtype=np.uint8).reshape(height, width)
+    return np.frombuffer(bytes(stream[:n]), dtype=np.uint8).reshape(height, width, 1)
+
+
+def _decode_image(buf: bytes) -> np.ndarray | None:
+    """(h, w, channels) uint8 pixels of a PNG/BMP blob, else None."""
+    try:
+        return codecs.decode_pixels(buf)
+    except ValueError:
+        return None
+
+
+def _brighten_rows(px: np.ndarray) -> np.ndarray:
+    """The image perturb edit: brighten the top rows, clipped."""
+    n = max(1, int(px.shape[0] * IMAGE_EDIT_ROWS_FRAC))
+    edited = px.astype(np.int16)
+    edited[:n] = np.clip(edited[:n] + IMAGE_EDIT_BRIGHTNESS, 0, 255)
+    return edited.astype(np.uint8)
+
+
+def _nearest(px: np.ndarray, height: int, width: int) -> np.ndarray:
+    """Nearest-neighbor resample of the first two axes."""
+    h, w = px.shape[:2]
+    ys = (np.arange(height) * h // height).clip(0, h - 1)
+    xs = (np.arange(width) * w // width).clip(0, w - 1)
+    return px[ys][:, xs]
+
+
+def _dct_matrix(n: int) -> np.ndarray:
+    """Orthonormal DCT-II basis: D @ X @ D.T is the 2-D transform."""
+    k = np.arange(n)[:, None]
+    x = np.arange(n)[None, :]
+    d = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * x + 1) * k / (2 * n))
+    d[0] /= np.sqrt(2.0)
+    return d
+
+
+_D = _dct_matrix(32)
+
+
+def _phash_bits(px: np.ndarray) -> np.ndarray:
+    """63 pHash bits of (h, w, channels) pixels: channel-mean gray →
+    32×32 nearest-resize → 2-D DCT → 8×8 low-frequency block minus DC,
+    thresholded at its median."""
+    small = _nearest(px.astype(np.float64).mean(axis=2), 32, 32)
+    coef = (_D @ small @ _D.T)[:8, :8].flatten()[1:]  # drop DC
+    return coef > np.median(coef)
+
+
+def _pack_bits(bits: np.ndarray) -> int:
+    val = 0
+    for i, b in enumerate(bits):
+        if b:
+            val |= 1 << i
+    return val
+
+
+def _phash_val(px: np.ndarray) -> int:
+    return _pack_bits(_phash_bits(px))
 
 
 def synthesize_images(
@@ -89,21 +214,12 @@ def synthesize_images(
     stream of the text seeds a gray image, encoded with the stdlib PNG
     encoder. Gives the decode/resize kernels genuine compressed images to
     chew on without any external media files."""
-    schema = f"{id_col} bigint, {text_col} string, media binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = [
-                codecs.png_encode(_synth_gray(text, width, height))
-                for text in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], text_col: pdf[text_col], "media": blobs}
-            )
+    def row(did, text):
+        yield did, text, codecs.png_encode(_synth_gray(text, width, height))
 
-    return _parallelize(df.select(id_col, text_col)).mapInPandas(
-        batches, schema=schema
-    )
+    schema = {id_col: "bigint", text_col: "string", "media": "binary"}
+    return _map_rows(df, [id_col, text_col], schema, row)
 
 
 def decode_features(
@@ -112,7 +228,7 @@ def decode_features(
     id_col: str = "doc_id",
     dim: int = 8,
 ) -> DataFrame:
-    """binary → feature vector via Arrow-batched mapInPandas.
+    """binary → feature vector.
 
     Real path: PNG/BMP are pixel-decoded and WAV sample-decoded with the
     stdlib codecs; the feature vector is [width, height, channels,
@@ -122,18 +238,12 @@ def decode_features(
     header dims where parseable plus byte-level statistics — decode never
     throws mid-batch.
     """
-    schema = f"{id_col} bigint, features array<double>"
 
     def _fit(vals: list[float]) -> list[float]:
         return (vals + [0.0] * dim)[:dim]
 
-    def real_features(buf: bytes) -> list[float]:
-        buf = bytes(buf)
-        px = None
-        try:
-            px = codecs.decode_pixels(buf)
-        except ValueError:
-            px = None
+    def features(buf: bytes) -> list[float]:
+        px = _decode_image(buf)
         if px is not None:
             h, w, c = px.shape
             flat = px.astype(np.float64) / 255.0
@@ -153,7 +263,7 @@ def decode_features(
                      float(np.sqrt((mono ** 2).mean())) if len(mono) else 0.0,
                      zc, *map(float, q)]
                 )
-            except (ValueError, EOFError, wave_error):
+            except _WAV_ERRORS:
                 pass
         # no stdlib pixel/sample decoder: header dims + byte statistics
         dims = codecs.image_dims(buf)
@@ -165,14 +275,11 @@ def decode_features(
              float(arr.std()) if len(arr) else 0.0, *map(float, q)]
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [real_features(buf) for buf in pdf[binary_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
+    def row(did, buf):
+        yield did, features(buf)
 
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(
-        batches, schema=schema
-    )
+    schema = {id_col: "bigint", "features": "array<double>"}
+    return _map_rows(df, [id_col, binary_col], schema, row)
 
 
 def resize_media(
@@ -182,77 +289,21 @@ def resize_media(
     binary_col: str = "media",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """binary → resized binary + output dims, Arrow-batched.
+    """binary → resized binary + output dims.
 
     PNG/BMP pixels are decoded with the stdlib codecs, resampled with
     nearest-neighbor index math in numpy, and re-encoded as PNG; items in
     formats without a stdlib pixel decoder come back with empty media
     (callers filter on octet_length).
     """
-    schema = f"{id_col} bigint, media binary, width int, height int"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for buf in pdf[binary_col]:
-                try:
-                    px = codecs.decode_pixels(bytes(buf))
-                except ValueError:
-                    px = None
-                if px is None:
-                    out.append(b"")
-                    continue
-                h, w, _c = px.shape
-                ys = (np.arange(height) * h // height).clip(0, h - 1)
-                xs = (np.arange(width) * w // width).clip(0, w - 1)
-                out.append(codecs.png_encode(px[ys][:, xs]))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media": out,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                }
-            )
+    def row(did, buf):
+        px = _decode_image(buf)
+        out = b"" if px is None else codecs.png_encode(_nearest(px, height, width))
+        yield did, out, width, height
 
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(
-        batches, schema=schema
-    )
-
-
-def _dct_matrix(n: int) -> np.ndarray:
-    """Orthonormal DCT-II basis: D @ X @ D.T is the 2-D transform."""
-    k = np.arange(n)[:, None]
-    x = np.arange(n)[None, :]
-    d = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * x + 1) * k / (2 * n))
-    d[0] /= np.sqrt(2.0)
-    return d
-
-
-def _phash_bits(gray: np.ndarray, D: np.ndarray) -> np.ndarray:
-    """63 pHash bits of a 2-D float gray image: 32×32 nearest-resize →
-    2-D DCT → 8×8 low-frequency block minus DC, thresholded at its
-    median. One definition shared by phash64/video_phash (decoded media)
-    and the fused synth_* kernels (synthesized pixels) so their bits can
-    never drift apart."""
-    h, w = gray.shape
-    ys = (np.arange(32) * h // 32).clip(0, h - 1)
-    xs = (np.arange(32) * w // 32).clip(0, w - 1)
-    small = gray[ys][:, xs]
-    coef = (D @ small @ D.T)[:8, :8].flatten()[1:]  # drop DC
-    return coef > np.median(coef)
-
-
-def _pack_bits(bits: np.ndarray) -> int:
-    val = 0
-    for i, b in enumerate(bits):
-        if b:
-            val |= 1 << i
-    return val
-
-
-def _phash_val(gray: np.ndarray, D: np.ndarray) -> int:
-    return _pack_bits(_phash_bits(gray, D))
+    schema = {id_col: "bigint", "media": "binary", "width": "int", "height": "int"}
+    return _map_rows(df, [id_col, binary_col], schema, row)
 
 
 def phash64(
@@ -262,33 +313,15 @@ def phash64(
     32×32 gray nearest-resize → 2-D DCT → 63 low-frequency coefficients
     (8×8 block minus DC) thresholded at their median → 63-bit signature.
     Visually similar images land within a small hamming distance, so the
-    banded dedup machinery (dedup.hamming_pairs) applies unchanged.
+    banded dedup machinery (dedup.hamming_pairs) applies unchanged."""
 
-    Map-only Arrow kernel; undecodable items hash to null and drop."""
-    D = _dct_matrix(32)
-    schema = f"{id_col} bigint, phash bigint"
+    def row(did, buf):
+        px = _decode_image(buf)
+        if px is not None:
+            yield did, _phash_val(px)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    px = codecs.decode_pixels(bytes(buf))
-                except ValueError:
-                    px = None
-                if px is None:
-                    continue
-                gray = px.astype(np.float64).mean(axis=2)
-                ids.append(int(did))
-                hashes.append(_phash_val(gray, D))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
+    schema = {id_col: "bigint", "phash": "bigint"}
+    return _map_rows(df, [id_col, binary_col], schema, row)
 
 
 def synth_phash64(
@@ -298,76 +331,80 @@ def synth_phash64(
     text_col: str = "text",
     id_col: str = "doc_id",
     perturb: bool = False,
-    brightness: int = 60,
-    rows_frac: float = 0.25,
-    id_offset: int = 1_000_000,
 ) -> DataFrame:
     """text → 63-bit pHash in ONE Arrow kernel: the fused form of
     synthesize_images → [perturb_images →] phash64 for synthetic corpora
     (guide §4 — eliminate the Python↔JVM boundary). The chained shape
     ships ~1KB of PNG per doc to the JVM, checkpoints it, then ships it
-    back to a second Python kernel that immediately decodes it; PNG
-    encode/decode is LOSSLESS for uint8 gray, so hashing the synthesized
-    pixels directly yields bit-identical signatures while the blobs never
-    exist (pinned by the fused-vs-chained parity pytest). ``perturb=True``
-    applies perturb_images' exact edit (top-rows brighten on the int16
-    widening, clipped) and id shift before hashing."""
-    D = _dct_matrix(32)
-    schema = f"{id_col} bigint, phash bigint"
+    back to a second Python kernel that immediately decodes it; the
+    fused kernel runs the same stages without the lossless PNG roundtrip
+    between them, so the blobs never exist."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                px = _synth_gray(text, width, height)
-                if perturb:
-                    n = max(1, int(px.shape[0] * rows_frac))
-                    edited = px.astype(np.int16)
-                    edited[:n] = np.clip(edited[:n] + brightness, 0, 255)
-                    px = edited.astype(np.uint8)
-                ids.append(int(did) + (id_offset if perturb else 0))
-                hashes.append(_phash_val(px.astype(np.float64), D))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
+    def row(did, text):
+        px = _synth_gray(text, width, height)
+        if perturb:
+            px = _brighten_rows(px)
+            did += PERTURB_ID_OFFSET
+        yield did, _phash_val(px)
 
-    return _parallelize(df.select(id_col, text_col)).mapInPandas(batches, schema)
+    return _map_rows(df, [id_col, text_col], {id_col: "bigint", "phash": "bigint"}, row)
 
 
 def perturb_images(
-    df: DataFrame,
-    brightness: int = 60,
-    rows_frac: float = 0.25,
-    id_offset: int = 1_000_000,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
+    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic visible edit per image (brighten the top rows) with a
     shifted id — a near-duplicate generator for exercising perceptual-hash
     dedup on corpora that have no natural image dups."""
-    schema = f"{id_col} bigint, media binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    px = codecs.decode_pixels(bytes(buf))
-                except ValueError:
-                    continue
-                n = max(1, int(px.shape[0] * rows_frac))
-                edited = px.astype(np.int16)
-                edited[:n] = np.clip(edited[:n] + brightness, 0, 255)
-                ids.append(int(did) + id_offset)
-                blobs.append(codecs.png_encode(edited.astype(np.uint8)))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "media": blobs}
-            )
+    def row(did, buf):
+        px = _decode_image(buf)
+        if px is not None:
+            yield did + PERTURB_ID_OFFSET, codecs.png_encode(_brighten_rows(px))
 
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
+    schema = {id_col: "bigint", "media": "binary"}
+    return _map_rows(df, [id_col, binary_col], schema, row)
+
+
+# ---------------------------------------------------------------------------
+# video stages
+
+
+def _frame_indices(n_frames: int, every_n: int, max_frames: int) -> range:
+    """Every ``every_n``-th frame index, at most ``max_frames`` of them."""
+    return range(0, min(n_frames, every_n * max_frames), every_n)
+
+
+def _synth_video_frame(did: int, fi: int, text: str | None) -> np.ndarray:
+    """Frame ``fi`` of a synthesized video: RGB noise seeded by
+    (doc_id, frame_idx, text length)."""
+    rng = np.random.default_rng(
+        (int(did) * 1_000_003 + fi) % (2**63) + len(text or "") % 97
+    )
+    return rng.integers(
+        0, 256, (VIDEO_FRAME_SIZE, VIDEO_FRAME_SIZE, 3), dtype=np.uint8
+    )
+
+
+def _brighten_frame(px: np.ndarray) -> np.ndarray:
+    """The video perturb edit: brighten the whole frame, clipped."""
+    return np.clip(px.astype(np.int16) + VIDEO_EDIT_BRIGHTNESS, 0, 255).astype(
+        np.uint8
+    )
+
+
+def _video_phash_val(
+    n_frames: int, frame: Callable[[int], np.ndarray]
+) -> int | None:
+    """Temporally pooled pHash: the per-bit strict MAJORITY of the pHash
+    bits of the sampled frames (``frame(fi)`` gives frame ``fi`` of
+    ``n_frames``); None when no frame is sampled."""
+    votes = np.zeros(63, dtype=np.int64)
+    n_sampled = 0
+    for fi in _frame_indices(n_frames, VIDEO_HASH_EVERY_N, VIDEO_HASH_MAX_FRAMES):
+        votes += _phash_bits(frame(fi))
+        n_sampled += 1
+    return _pack_bits(votes * 2 > n_sampled) if n_sampled else None
 
 
 def sample_frames(
@@ -377,57 +414,35 @@ def sample_frames(
     binary_col: str = "media",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """video binary → exploded (id, frame_idx, width, height, frame) rows,
-    Arrow-batched. REAL frame extraction (r12 — previously the one stub
-    in the repo): a pure-stdlib RIFF chunk walk (codecs.avi_frames) pulls
-    the '00db'/'00dc' frame payloads out of uncompressed-DIB or MJPEG
-    AVI containers, keeping every ``every_n``-th frame up to
-    ``max_frames`` per video. frame_idx is the frame's index in the
-    source stream (0, every_n, 2·every_n, ...), so downstream joins can
-    reason about source timing. Non-AVI bytes raise ValueError with the
-    offending id — same strict contract as decode_features' real path.
+    """video binary → exploded (id, frame_idx, width, height, frame) rows.
+    REAL frame extraction: a pure-stdlib RIFF chunk walk
+    (codecs.avi_frames) pulls the '00db'/'00dc' frame payloads out of
+    uncompressed-DIB or MJPEG AVI containers, keeping every
+    ``every_n``-th frame up to ``max_frames`` per video. frame_idx is the
+    frame's index in the source stream (0, every_n, 2·every_n, ...), so
+    downstream joins can reason about source timing. Non-AVI bytes raise
+    ValueError with the offending id.
 
     The fan-out (one input row → up to max_frames output rows) is the
-    part that matters at scale: mapInPandas lets the batch emit a
-    different row count than it received, so frame sampling never needs
-    a driver-side explode, and the RIFF walk is one linear pass per
-    video regardless of how many frames are kept.
+    part that matters at scale: the kernel emits a different row count
+    than it received, so frame sampling never needs a driver-side
+    explode, and the RIFF walk is one linear pass per video regardless of
+    how many frames are kept.
     """
-    from lakeside_spark.operators.codecs import avi_frames
 
-    schema = (
-        f"{id_col} bigint, frame_idx int, width int, height int, frame binary"
-    )
+    def row(did, buf):
+        try:
+            w, h, _bpp, chunks = codecs.avi_frames(buf)
+        except ValueError as exc:
+            raise ValueError(f"{id_col}={did}: {exc}") from None
+        for fi in _frame_indices(len(chunks), every_n, max_frames):
+            yield did, fi, w, h, chunks[fi][1]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, frames = [], [], [], [], []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    w, h, _bpp, chunks = avi_frames(bytes(buf))
-                except ValueError as exc:
-                    raise ValueError(f"{id_col}={did}: {exc}") from None
-                for fi in range(
-                    0, min(len(chunks), every_n * max_frames), every_n
-                ):
-                    ids.append(did)
-                    idxs.append(fi)
-                    ws.append(w)
-                    hs.append(h)
-                    frames.append(chunks[fi][1])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
-
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(
-        batches, schema=schema
-    )
+    schema = {
+        id_col: "bigint", "frame_idx": "int", "width": "int", "height": "int",
+        "frame": "binary",
+    }
+    return _map_rows(df, [id_col, binary_col], schema, row)
 
 
 def synthesize_videos(
@@ -435,197 +450,92 @@ def synthesize_videos(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_frames: int = 8,
-    size: int = 16,
 ) -> DataFrame:
     """Deterministic real AVI bytes per row (test/bench fixture for the
     video path, same role synthesize_images plays for PNG): each doc
     gets an uncompressed-DIB AVI whose frames are seeded by
     (doc_id, frame_idx, text length), so frame extraction is
     replayable across engines and runs."""
-    from lakeside_spark.operators.codecs import avi_encode
 
-    schema = f"{id_col} bigint, media binary"
+    def row(did, text):
+        frames = [_synth_video_frame(did, fi, text) for fi in range(n_frames)]
+        yield did, codecs.avi_encode(frames)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                frames = [
-                    _synth_video_frame(did, fi, text, size)
-                    for fi in range(n_frames)
-                ]
-                ids.append(did)
-                blobs.append(avi_encode(frames))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "media": blobs}
-            )
-
-    return _parallelize(df.select(id_col, text_col)).mapInPandas(
-        batches, schema=schema
-    )
+    return _map_rows(df, [id_col, text_col], {id_col: "bigint", "media": "binary"}, row)
 
 
 def video_phash(
-    df: DataFrame,
-    every_n: int = 2,
-    max_frames: int = 4,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
+    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
 ) -> DataFrame:
     """Perceptual VIDEO hash: RIFF-walk each AVI (codecs.avi_frames),
-    sample every ``every_n``-th frame up to ``max_frames``, pHash each
-    sampled frame (the same 32×32-DCT 63-bit math as the image path),
-    then pool to ONE 63-bit video signature by per-bit MAJORITY vote
-    across the sampled frames — the temporal pooling that makes the
-    signature robust to per-frame noise while two videos sharing most
-    of their visual content land within a small hamming distance.
+    sample every VIDEO_HASH_EVERY_N-th frame up to VIDEO_HASH_MAX_FRAMES,
+    pHash each sampled frame (the same 32×32-DCT 63-bit math as the image
+    path), then pool to ONE 63-bit video signature by per-bit MAJORITY
+    vote across the sampled frames — the temporal pooling that makes the
+    signature robust to per-frame noise while two videos sharing most of
+    their visual content land within a small hamming distance. One linear
+    RIFF pass + VIDEO_HASH_MAX_FRAMES DCTs per video; non-DIB frames are
+    undecodable."""
 
-    Map-only Arrow kernel, one linear RIFF pass + max_frames DCTs per
-    video; non-AVI or non-DIB items hash to null and drop (same
-    contract as phash64 on undecodable images)."""
-    from lakeside_spark.operators.codecs import avi_frames, dib_decode
-
-    D = _dct_matrix(32)
-    schema = f"{id_col} bigint, phash bigint"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    w, h, bpp, chunks = avi_frames(bytes(buf))
-                    votes = np.zeros(63, dtype=np.int64)
-                    n_sampled = 0
-                    for fi in range(
-                        0, min(len(chunks), every_n * max_frames), every_n
-                    ):
-                        px = dib_decode(chunks[fi][1], w, h, bpp)
-                        votes += _phash_bits(
-                            px.astype(np.float64).mean(axis=2), D
-                        )
-                        n_sampled += 1
-                except ValueError:
-                    continue
-                if not n_sampled:
-                    continue
-                bits = votes * 2 > n_sampled  # strict majority
-                ids.append(int(did))
-                hashes.append(_pack_bits(bits))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
+    def row(did, buf):
+        try:
+            w, h, bpp, chunks = codecs.avi_frames(buf)
+            val = _video_phash_val(
+                len(chunks), lambda fi: codecs.dib_decode(chunks[fi][1], w, h, bpp)
             )
+        except ValueError:
+            return
+        if val is not None:
+            yield did, val
 
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
-
-
-def _synth_video_frame(
-    did: int, fi: int, text: str | None, size: int
-) -> np.ndarray:
-    """One synthesized (size, size, 3) RGB frame — the frame stage of
-    synthesize_videos, split out so the fused text→hash kernel
-    (synth_video_phash) and the AVI-emitting synthesize_videos share one
-    definition."""
-    rng = np.random.default_rng(
-        (int(did) * 1_000_003 + fi) % (2**63) + len(text or "") % 97
-    )
-    return rng.integers(0, 256, (size, size, 3), dtype=np.uint8)
+    schema = {id_col: "bigint", "phash": "bigint"}
+    return _map_rows(df, [id_col, binary_col], schema, row)
 
 
 def synth_video_phash(
     df: DataFrame,
     n_frames: int,
-    size: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    every_n: int = 2,
-    max_frames: int = 4,
     perturb: bool = False,
-    brightness: int = 40,
-    id_offset: int = 1_000_000,
 ) -> DataFrame:
     """text → temporally-pooled 63-bit video pHash in ONE Arrow kernel:
     the fused form of synthesize_videos → [perturb_videos →] video_phash
     for synthetic corpora (guide §4). The chained shape ships an
-    uncompressed AVI per doc (n_frames · size² · 3 bytes) to the JVM,
+    uncompressed AVI per doc (n_frames · VIDEO_FRAME_SIZE² · 3 bytes) to the JVM,
     checkpoints it, then ships it back to a second kernel that RIFF-walks
-    and DIB-decodes it; the AVI/DIB roundtrip is lossless for uint8 RGB,
-    so hashing the synthesized frames directly is bit-identical (parity
-    pytest) — and only the SAMPLED frames (every_n/max_frames) are ever
-    synthesized, where the chain encodes all n_frames. ``perturb=True``
-    applies perturb_videos' exact edit (whole-frame brighten on the int16
-    widening, clipped) and id shift before hashing."""
-    D = _dct_matrix(32)
-    schema = f"{id_col} bigint, phash bigint"
+    and DIB-decodes it; the fused kernel runs the same stages without the
+    lossless AVI/DIB roundtrip, and synthesizes only the SAMPLED frames."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                votes = np.zeros(63, dtype=np.int64)
-                n_sampled = 0
-                for fi in range(0, min(n_frames, every_n * max_frames), every_n):
-                    px = _synth_video_frame(did, fi, text, size)
-                    if perturb:
-                        px = np.clip(
-                            px.astype(np.int16) + brightness, 0, 255
-                        ).astype(np.uint8)
-                    votes += _phash_bits(px.astype(np.float64).mean(axis=2), D)
-                    n_sampled += 1
-                if not n_sampled:
-                    continue
-                bits = votes * 2 > n_sampled  # strict majority
-                ids.append(int(did) + (id_offset if perturb else 0))
-                hashes.append(_pack_bits(bits))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
+    def row(did, text):
+        def frame(fi):
+            px = _synth_video_frame(did, fi, text)
+            return _brighten_frame(px) if perturb else px
 
-    return _parallelize(df.select(id_col, text_col)).mapInPandas(batches, schema)
+        val = _video_phash_val(n_frames, frame)
+        if val is not None:
+            yield did + (PERTURB_ID_OFFSET if perturb else 0), val
+
+    return _map_rows(df, [id_col, text_col], {id_col: "bigint", "phash": "bigint"}, row)
 
 
 def perturb_videos(
-    df: DataFrame,
-    brightness: int = 40,
-    id_offset: int = 1_000_000,
-    binary_col: str = "media",
-    id_col: str = "doc_id",
+    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic visible edit per video (brighten every frame,
     clipped) with a shifted id — the video twin of perturb_images, a
     near-duplicate generator for corpora with no natural video dups."""
-    from lakeside_spark.operators.codecs import avi_encode, avi_frames, dib_decode
 
-    schema = f"{id_col} bigint, media binary"
+    def row(did, buf):
+        try:
+            w, h, bpp, chunks = codecs.avi_frames(buf)
+            frames = [
+                _brighten_frame(codecs.dib_decode(c, w, h, bpp)) for _, c in chunks
+            ]
+        except ValueError:
+            return
+        if frames:
+            yield did + PERTURB_ID_OFFSET, codecs.avi_encode(frames)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    w, h, bpp, chunks = avi_frames(bytes(buf))
-                    frames = [
-                        np.clip(
-                            dib_decode(c[1], w, h, bpp).astype(np.int16)
-                            + brightness,
-                            0,
-                            255,
-                        ).astype(np.uint8)
-                        for c in chunks
-                    ]
-                except ValueError:
-                    continue
-                if not frames:
-                    continue
-                ids.append(int(did) + id_offset)
-                blobs.append(avi_encode(frames))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "media": blobs}
-            )
-
-    return _parallelize(df.select(id_col, binary_col)).mapInPandas(batches, schema)
+    schema = {id_col: "bigint", "media": "binary"}
+    return _map_rows(df, [id_col, binary_col], schema, row)

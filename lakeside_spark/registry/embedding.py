@@ -508,7 +508,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 20 == 0
     )
     frames = sample_frames(
-        synthesize_videos(docs, n_frames=6, size=16), every_n=3, max_frames=2
+        synthesize_videos(docs, n_frames=6), every_n=3, max_frames=2
     )
 
     def stats_kernel(batches):
@@ -563,9 +563,9 @@ def multimodal_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uint8 RGB, so hashing the synthesized frames directly is
     # bit-identical (parity pytest) — and only the SAMPLED frames are
     # synthesized (the chain encoded all 6)
-    base = synth_video_phash(docs, n_frames=6, size=16)
+    base = synth_video_phash(docs, n_frames=6)
     variants = synth_video_phash(
-        docs.filter(F.col("doc_id") % 100 == 0), n_frames=6, size=16, perturb=True
+        docs.filter(F.col("doc_id") % 100 == 0), n_frames=6, perturb=True
     )
     return hamming_pairs(
         base.unionByName(variants), max_hamming=6, bits=63, hash_col="phash"

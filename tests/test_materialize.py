@@ -1,6 +1,7 @@
 """Materialization lifetimes: only lakeside_spark.materialize persists or
 checkpoints, no module-level memo survives a call, and every call that
-holds a frame releases it when it raises."""
+holds a frame releases it when it raises. Alongside, the same call and
+parameter rules for the media kernels: one mapInPandas, no settings."""
 
 import ast
 import pathlib
@@ -22,6 +23,19 @@ PLAN_FORCING_PARAMS = {
     "products_cap", "products_per_task", "candidates",
 }
 
+#: the media kernel modules: their one mapInPandas is the row runner
+MEDIA = [PKG / "operators" / "multimodal.py", PKG / "operators" / "audiofp.py"]
+#: settings the media kernels keep as module constants; only frame
+#: sampling takes ``every_n``/``max_frames``, because its callers vary them
+MEDIA_KNOBS = {
+    "brightness", "rows_frac", "id_offset", "gain", "noise", "rate",
+    "seconds", "size", "every_n", "max_frames",
+}
+MEDIA_KNOBS_KEPT = {
+    "sample_frames": {"every_n", "max_frames"},
+    "_frame_indices": {"every_n", "max_frames"},
+}
+
 
 def _sources():
     return sorted(PKG.rglob("*.py"))
@@ -41,6 +55,17 @@ def test_only_materialize_module_persists_or_checkpoints():
         and node.func.attr in ("persist", "localCheckpoint", "cache")
     ]
     assert not offenders, offenders
+    # a media kernel is a row function handed to multimodal._map_rows
+    runner_calls = [
+        (getattr(owner, "name", "<module>"), f"{p.relative_to(ROOT)}:{node.lineno}")
+        for p in MEDIA
+        for owner in ast.parse(p.read_text()).body
+        for node in ast.walk(owner)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    ]
+    assert [name for name, _ in runner_calls] == ["_map_rows"], runner_calls
 
 
 def test_no_eager_or_cache_key_parameters_and_no_memos():
@@ -74,6 +99,15 @@ def test_no_plan_forcing_parameters():
     ]
     assert not params, params
     assert not hasattr(QueryEngine, "SALT_CONF")
+    knobs = [
+        f"{p.relative_to(PKG)}:{getattr(node, 'name', 'lambda')}({arg.arg})"
+        for p in MEDIA
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+        for arg in node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+        if arg.arg in MEDIA_KNOBS - MEDIA_KNOBS_KEPT.get(getattr(node, "name", ""), set())
+    ]
+    assert not knobs, knobs
 
 
 class Boom(RuntimeError):

@@ -434,7 +434,7 @@ def test_sample_frames_real_avi_round_trip(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(6)
-    media = synthesize_videos(docs, n_frames=8, size=16)
+    media = synthesize_videos(docs, n_frames=8)
     out = sample_frames(media, every_n=3, max_frames=2).collect()
     per_doc = {}
     for r in out:
@@ -449,7 +449,7 @@ def test_sample_frames_real_avi_round_trip(spark, sf_dir):
             assert px.shape == (16, 16, 3)
     # determinism: same synth + sample twice -> identical frame bytes
     again = sample_frames(
-        synthesize_videos(docs, n_frames=8, size=16), every_n=3, max_frames=2
+        synthesize_videos(docs, n_frames=8), every_n=3, max_frames=2
     ).collect()
     key = lambda r: (r["doc_id"], r["frame_idx"])  # noqa: E731
     assert sorted((bytes(r["frame"]) for r in out)) == sorted(
@@ -2037,11 +2037,11 @@ def test_fused_media_fingerprints_match_chained(spark):
     assert fused_v == chained_v and len(fused_v) == 8
 
     # video: base and perturbed
-    vids = synthesize_videos(docs, n_frames=6, size=16)
+    vids = synthesize_videos(docs, n_frames=6)
     chained = {(r["doc_id"], r["phash"]) for r in video_phash(vids).collect()}
     fused = {
         (r["doc_id"], r["phash"])
-        for r in synth_video_phash(docs, n_frames=6, size=16).collect()
+        for r in synth_video_phash(docs, n_frames=6).collect()
     }
     assert fused == chained and len(fused) == 24
     chained_v = {
@@ -2053,10 +2053,78 @@ def test_fused_media_fingerprints_match_chained(spark):
     fused_v = {
         (r["doc_id"], r["phash"])
         for r in synth_video_phash(
-            sub, n_frames=6, size=16, perturb=True
+            sub, n_frames=6, perturb=True
         ).collect()
     }
     assert fused_v == chained_v and len(fused_v) == 8
+
+
+#: the media kernels: kernel → (module, keyword arguments, what the input
+#: column holds — "text", or the format of the one-row case's valid blob —
+#: output columns, and rows a null or undecodable input leaves; None:
+#: sample_frames raises its documented ValueError)
+MEDIA_KERNELS = {
+    "synthesize_images": ("multimodal", {}, "text", "doc_id bigint, text string, media binary", 1),
+    "synth_phash64": ("multimodal", {"width": 8, "height": 8}, "text", "doc_id bigint, phash bigint", 1),
+    "synthesize_videos": ("multimodal", {"n_frames": 2}, "text", "doc_id bigint, media binary", 1),
+    "synth_video_phash": ("multimodal", {"n_frames": 2}, "text", "doc_id bigint, phash bigint", 1),
+    "synthesize_audio": ("audiofp", {}, "text", "doc_id bigint, media binary", 1),
+    "synth_audio_fingerprint": ("audiofp", {}, "text", "doc_id bigint, afp bigint", 1),
+    "decode_features": ("multimodal", {}, "png", "doc_id bigint, features array<double>", 1),
+    "resize_media": ("multimodal", {"width": 2, "height": 3}, "png", "doc_id bigint, media binary, width int, height int", 1),
+    "phash64": ("multimodal", {}, "png", "doc_id bigint, phash bigint", 0),
+    "perturb_images": ("multimodal", {}, "png", "doc_id bigint, media binary", 0),
+    "sample_frames": ("multimodal", {}, "avi", "doc_id bigint, frame_idx int, width int, height int, frame binary", None),
+    "video_phash": ("multimodal", {}, "avi", "doc_id bigint, phash bigint", 0),
+    "perturb_videos": ("multimodal", {}, "avi", "doc_id bigint, media binary", 0),
+    "audio_fingerprint": ("audiofp", {}, "wav", "doc_id bigint, afp bigint", 0),
+    "perturb_audio": ("audiofp", {}, "wav", "doc_id bigint, media binary", 0),
+}
+
+
+@pytest.mark.parametrize("case", ["empty", "one", "null", "garbage"])
+@pytest.mark.parametrize("kernel", sorted(MEDIA_KERNELS))
+def test_media_kernels_edge_inputs(spark, kernel, case):
+    """Every media kernel on an empty frame, one valid row, a null input
+    and undecodable bytes returns its documented columns and dtypes: a null
+    blob reads as empty bytes, so it takes the kernel's undecodable path."""
+    import importlib
+
+    import numpy as np
+
+    from lakeside_spark.operators import codecs
+
+    module, kwargs, holds, columns, undecodable_rows = MEDIA_KERNELS[kernel]
+    fn = getattr(importlib.import_module(f"lakeside_spark.operators.{module}"), kernel)
+    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
+    valid = {
+        "text": "one valid row",
+        "png": bytearray(codecs.png_encode(px)),
+        "avi": bytearray(codecs.avi_encode([px, px])),
+        "wav": bytearray(codecs.wav_encode(np.sin(np.linspace(0, 60, 4000)))),
+    }[holds]
+    garbage = "garbage" if holds == "text" else bytearray(b"garbage")
+    rows = {"empty": [], "one": [(1, valid)], "null": [(2, None)], "garbage": [(3, garbage)]}[case]
+    col = "text string" if holds == "text" else "media binary"
+    out = fn(spark.createDataFrame(rows, f"doc_id long, {col}"), **kwargs)
+    want = [tuple(c.split(" ", 1)) for c in columns.split(", ")]
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == want
+    if case in ("null", "garbage") and undecodable_rows is None:
+        with pytest.raises(Exception, match=r"doc_id=\d: not an AVI"):
+            out.toPandas()
+        return
+    pdf = out.toPandas()
+    assert list(pdf.columns) == [name for name, _ in want]
+    numeric = {"bigint": "int64", "int": "int32"}
+    assert {c: str(pdf[c].dtype) for c, t in want if t in numeric} == {
+        c: numeric[t] for c, t in want if t in numeric
+    }
+    expected = {"empty": 0, "one": 1}.get(case, undecodable_rows)
+    assert len(pdf) == expected
+    if kernel == "decode_features" and case != "empty":
+        assert all(len(v) == 8 for v in pdf["features"])
+    if kernel == "resize_media" and case in ("null", "garbage"):
+        assert bytes(pdf["media"][0]) == b""
 
 
 class TestBehavior:
@@ -3097,7 +3165,7 @@ def test_video_phash_dedup_recovers_planted_variants(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(30)
-    with materialize.held(synthesize_videos(docs, n_frames=6, size=16)) as base:
+    with materialize.held(synthesize_videos(docs, n_frames=6)) as base:
         planted = perturb_videos(base.filter(F.col("doc_id") % 5 == 0))
         n_planted = planted.count()
         assert n_planted >= 3
